@@ -515,14 +515,6 @@ object Streaming {
       .option("maxFilesPerTrigger", "1").parquet(work.resolve("in").toString)
   }
 
-  /** The shared preamble/epilogue of every staged runtime gate (held ONCE
-    * so a harness fix cannot silently diverge one gate): resolve/create
-    * the work dir, stage `df` as `orderCol`-ordered chunks, pin
-    * `spark.sql.shuffle.partitions=1` for the streaming lifecycle — the
-    * stateful agg + per-batch upserts move store-scale data (windows ×
-    * keys), not corpus-scale, so a wide micro-batch fan-out only adds
-    * state-store and task overhead per batch — and restore the session's
-    * width after, exception paths included. */
   /** The staged gates' online store: a [[graft.sources.LogUpsertSource]] —
     * each micro-batch APPENDS under a new generation and the final read
     * resolves keys to their latest emission. Chosen by measurement
@@ -570,6 +562,27 @@ object Streaming {
   private def gateCoalesce(df: DataFrame): DataFrame =
     if (parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH")) == 1) df.coalesce(1) else df
 
+  /** Run `body` with session confs pinned, restoring each key's previous
+    * value (unsetting it if it had none) on every exit, exceptions
+    * included. */
+  private def withConfs[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The shared preamble/epilogue of every staged runtime gate (held ONCE
+    * so a harness fix cannot silently diverge one gate): resolve/create
+    * the work dir, stage `df` as `orderCol`-ordered chunks, pin
+    * `spark.sql.shuffle.partitions=1` for the streaming lifecycle — the
+    * stateful agg + per-batch upserts move store-scale data (windows ×
+    * keys), not corpus-scale, so a wide micro-batch fan-out only adds
+    * state-store and task overhead per batch — and restore the session's
+    * width after, exception paths included. */
   private def withStagedGate[T](spark: SparkSession, df: DataFrame,
       orderCol: String, chunks: Int, workDir: Option[String])(
       body: StagedGate => T): T = {
@@ -578,7 +591,6 @@ object Streaming {
     java.nio.file.Files.createDirectories(work)
     val (lap, debugT) = gateLap()
     stageChunks(df, orderCol, chunks, work, lap)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     // Gate width: shuffle/state partitions for the streaming lifecycle.
     // Default 1 is right at driver-test scale (state is tiny; a wide
     // fan-out only adds state-store + task constants per batch). At
@@ -594,20 +606,23 @@ object Streaming {
     // deliberately trades away the single-partition determinism the oracle
     // gates pin — so only scale measurements should set this
     val gateWidth = parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH"))
-    spark.conf.set("spark.sql.shuffle.partitions", gateWidth.toString)
-    try body(new StagedGate(work, lap, debugT, spark, df.schema))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConfs(spark, "spark.sql.shuffle.partitions" -> gateWidth.toString) {
+      body(new StagedGate(work, lap, debugT, spark, df.schema))
+    }
   }
 
-  /** Run an update-mode streaming frame into a keyed parquet online store:
-    * per-batch `project`ed rows upsert through [[idempotentBatchSink]]
-    * (empty watermark-finalize batches skip the upsert job chain), the
-    * query drains with processAllAvailable, and the store source is
-    * returned. [[gateCoalesce]] on the batch: at the default width-1 gate
-    * the store is tiny and one task per upsert beats a fan-out; at scale
-    * widths a micro-batch is millions of rows and a forced coalesce(1)
-    * single-threads the whole sink chain — measured at ×100 state density
-    * as part of the q176/q177 residual (SCALE.md). */
+  /** Run a streaming frame into a keyed parquet online store: per-batch
+    * `project`ed rows upsert through [[idempotentBatchSink]] (empty
+    * watermark-finalize batches skip the upsert job chain), the query
+    * drains under `Trigger.AvailableNow` (still one micro-batch per staged
+    * chunk under `maxFilesPerTrigger=1`, and the watermark's trailing
+    * eviction batch runs before the query terminates, so no batch can
+    * race the drain), and the store source is returned. [[gateCoalesce]]
+    * on the batch: at the default width-1 gate the store is tiny and one
+    * task per upsert beats a fan-out; at scale widths a micro-batch is
+    * millions of rows and a forced coalesce(1) single-threads the whole
+    * sink chain — measured at ×100 state density as part of the q176/q177
+    * residual (SCALE.md). */
   private def runUpsertStream(spark: SparkSession, streamed: DataFrame,
       project: DataFrame => DataFrame, keys: Seq[String],
       work: java.nio.file.Path, lap: String => Unit,
@@ -630,14 +645,28 @@ object Streaming {
       if (debugT) System.err.println(f"[stream-gate]   upsert ${(System.nanoTime() - tV) / 1e9}%.2fs")
       },
       work.resolve("commitlog").toString)(spark)
-    val q = streamed.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        upsert(b, id); lap(s"batch-$id")
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
+    // Update mode runs no no-data micro-batch: there such a batch only
+    // EVICTS state and emits nothing, yet it still pays a state commit and
+    // a sink call. Every update-mode gate is a streaming aggregation (a
+    // window, register or counter re-emits its cumulative row in each
+    // batch that touches it, never on eviction) or a NoTimeout
+    // flatMapGroupsWithState (no timeout to fire). Append-mode gates keep
+    // the batch: their rows (sessions, outer-join nulls, …) emit exactly
+    // on eviction.
+    val noDataBatches =
+      if (outputMode == "update") Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil
+    withConfs(spark, noDataBatches: _*) {
+      val q = streamed.writeStream
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          upsert(b, id); lap(s"batch-$id")
+        }
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
     lap("stream")
     // an all-empty input never triggers an upsert, so the store path would
     // not exist and the final read would throw — materialize the empty
@@ -776,21 +805,8 @@ object Streaming {
     // provider-internal (same oracle, spec-gated recovery), cost is not:
     // measured on the q187b/q176b gates as part of optimization r16.
     val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(key, providerClass)
-    if (providerClass == RocksDbProvider) spark.conf.set(clKey, "true")
-    try body
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
-      }
-    }
+    val changelog = if (providerClass == RocksDbProvider) Seq(clKey -> "true") else Nil
+    withConfs(spark, (key -> providerClass) +: changelog: _*)(body)
   }
 
   /** CRASH RECOVERY — [[stagedRestartRecoveryRun]] hardened from a
@@ -1036,11 +1052,12 @@ object Streaming {
     * a REAL streaming job. Session aggregation only supports APPEND
     * output (Spark emits a session exactly once, when the watermark
     * passes its end), so a bounded test input needs what production gets
-    * for free from time passing: a far-future SENTINEL row (+30 days,
-    * staged as the final chunk) advances the watermark past every real
-    * session's end on the last micro-batch and flushes them all; the
-    * sentinel's own session never finalizes, so it cannot appear in the
-    * store.
+    * for free from time passing: a far-future SENTINEL row (+30 days)
+    * rides in the last staged chunk — the global ts sort puts it there —
+    * and advances the watermark past every real session's end; the
+    * trailing eviction batch, which `Trigger.AvailableNow` runs before the
+    * query terminates, then flushes them all. The sentinel's own session
+    * never finalizes, so it cannot appear in the store.
     *
     * Why the final state equals the static sessionization (the oracle):
     * arrival is globally ts-ordered, so a new event either extends the
@@ -1054,27 +1071,14 @@ object Streaming {
       tsCol: String, keyCol: String, valueCol: String, gap: String,
       lateness: String = "1 minute", chunks: Int = 3,
       workDir: Option[String] = None): DataFrame = {
-    val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
-      // the flush sentinel: one row 30 days past the corpus max — far past
-      // max + gap + lateness, so every REAL session end is behind the final
-      // watermark. Reusing a real row's key is safe: the sentinel opens a
-      // NEW far-future session for that key (30 days ≫ gap), which itself
-      // never finalizes.
-      val maxRow = events.agg(max(col(tsCol))).head()
-      // an empty input has no sessions to flush — skip the sentinel instead
-      // of NPEing on the null max
-      if (!maxRow.isNullAt(0)) {
-        val flushTs = new java.sql.Timestamp(
-          maxRow.getTimestamp(0).getTime + 30L * 86400000L)
-        val sentinel = events.limit(1).withColumn(tsCol, lit(flushTs))
-        stageExtraChunk(sentinel, g.work, chunks)
-        // staged twice for the same reason as the outer-join gate: session
-        // finalization under the advanced watermark runs in the batch
-        // AFTER the sentinel arrives, and a trailing no-data micro-batch
-        // races processAllAvailable — a second same-ts sentinel chunk
-        // makes that batch real data the drain must process
-        stageExtraChunk(sentinel, g.work, chunks + 1)
-      }
+    // the flush sentinel: one row at the flush instant — far past
+    // max + gap + lateness, so every REAL session end is behind the final
+    // watermark. Reusing a real row's key is safe: the sentinel opens a
+    // NEW far-future session for that key (30 days ≫ gap), which itself
+    // never finalizes.
+    val staged = flushTs(events, tsCol).fold(events)(ts =>
+      events.unionByName(events.limit(1).withColumn(tsCol, lit(ts))))
+    val store = withStagedGate(spark, staged, tsCol, chunks, workDir) { g =>
       val agg = g.source
         .withWatermark(tsCol, lateness)
         .groupBy(session_window(col(tsCol), gap), col(keyCol))
@@ -1090,19 +1094,13 @@ object Streaming {
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
   }
 
-  /** Write one more single-file chunk AFTER [[stageChunks]]' `chunks`
-    * files, with a later mtime, so the file source processes it last. */
-  private def stageExtraChunk(df: DataFrame, work: java.nio.file.Path,
-      afterChunks: Int): Unit = {
-    val stage = work.resolve(s"stage_extra")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = stage.toFile.listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no part file staged in $stage"))
-    val target = work.resolve("in").resolve(f"chunk_${afterChunks}%03d.parquet")
-    java.nio.file.Files.move(part.toPath, target)
-    target.toFile.setLastModified(System.currentTimeMillis() + afterChunks * 2000L)
-  }
+  /** The sentinel gates' flush instant: 30 days past the max `tsCol` —
+    * beyond any real gap, lateness or join bound, so a sentinel there
+    * advances the watermark past every real row's state. None for an
+    * empty input, which has nothing to flush. */
+  private def flushTs(events: DataFrame, tsCol: String): Option[java.sql.Timestamp] =
+    Option(events.agg(max(col(tsCol))).head().getTimestamp(0))
+      .map(t => new java.sql.Timestamp(t.getTime + 30L * 86400000L))
 
   /** STREAM-STREAM JOIN runtime gate (q175): [[intervalJoin]] — two
     * watermarked branches of one live source, inner-joined on entity keys
@@ -1148,16 +1146,20 @@ object Streaming {
     *
     * A bounded test input therefore needs what production gets free from
     * the clock: as with session windows, far-future SENTINEL rows (+30
-    * days, staged as the final chunk) — one per predicate branch, because
-    * each branch's watermark tracks only the rows passing ITS filter —
-    * advance both watermarks past every real left row's eviction bound,
-    * so every real left's verdict (its matched pairs, or the one null
-    * row) is in the store. Neither sentinel can pollute it: the left one
-    * never emits (the global watermark, pinned by the left branch to
-    * flushTs − lateness, never passes its own bound), the right one rides
-    * `after`+1h later still — strictly outside the left sentinel's match
-    * bound even when the two share a key, and no real left's bound
-    * reaches 30 days out.
+    * days) ride in the last staged chunk — one per predicate branch,
+    * because each branch's watermark tracks only the rows passing ITS
+    * filter — and advance both watermarks past every real left row's
+    * eviction bound. The runtime computes a batch's watermark from the
+    * previous batch's event times, so the evictions that emit the
+    * unmatched-null rows run in the trailing no-data batch, which
+    * `Trigger.AvailableNow` runs before the query terminates: every real
+    * left's verdict (its matched pairs, or the one null row) is in the
+    * store. Neither sentinel can pollute it: the left one never emits
+    * (the global watermark, pinned by the left branch to flushTs −
+    * lateness, never passes its own bound), the right one rides `after`+1h
+    * later still — strictly outside the left sentinel's match bound even
+    * when the two share a key, and no real left's bound reaches 30 days
+    * out.
     *
     * Emits keys + (a_id, b_id_key = coalesce(b_id, -1), lag_us nullable):
     * the -1 key materializes "did not convert" as an upsertable row —
@@ -1167,49 +1169,35 @@ object Streaming {
       tsCol: String, keys: Seq[String], idCol: String,
       leftPred: String, rightPred: String, after: String = "1 hour",
       chunks: Int = 3, workDir: Option[String] = None): DataFrame = {
-    val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
-      val maxRow = events.agg(max(col(tsCol))).head()
-      if (!maxRow.isNullAt(0)) {
-        // each sentinel is built FROM a row passing its branch's predicate
-        // (an arbitrary predicate cannot be satisfied synthetically). A
-        // left-matching row exists but no right-matching row ⇒ the right
-        // branch's watermark could never advance and every unmatched left
-        // would silently never flush — fail loudly instead: the caller
-        // must feed the gate at least one row per branch (production has
-        // no such constraint; real time advances real watermarks)
-        require(events.filter(expr(rightPred)).limit(1).count() > 0 ||
-            events.filter(expr(leftPred)).limit(1).count() == 0,
-          s"stagedOuterIntervalJoinRun: no row matches rightPred ($rightPred)" +
-            " — the right branch's watermark cannot advance and unmatched" +
-            " left rows would never emit; the bounded gate needs >= 1 row" +
-            " per predicate branch")
-        val flushTs = new java.sql.Timestamp(
-          maxRow.getTimestamp(0).getTime + 30L * 86400000L)
-        // the sentinels KEEP their real join keys: Catalyst infers
-        // IsNotNull filters on equi-join keys and pushes them below the
-        // watermark node, so a null-keyed sentinel is dropped before it
-        // can advance the watermark (observed: the last hour's unmatched
-        // clicks never flush). Sentinel-pair pollution — the two
-        // sentinels matching EACH OTHER if they share a key — is instead
-        // ruled out by TIME: the right sentinel rides `after`+1h past the
-        // left one, strictly outside the left sentinel's match bound.
-        val sentinels = events.filter(expr(leftPred)).limit(1)
-          .withColumn(tsCol, lit(flushTs))
-          .unionByName(events.filter(expr(rightPred)).limit(1)
-            .withColumn(tsCol,
-              lit(flushTs) + expr(s"INTERVAL $after") + expr("INTERVAL 1 HOUR")))
-        stageExtraChunk(sentinels, g.work, chunks)
-        // …and the SAME rows again as one more chunk: the runtime computes
-        // the batch-N watermark from batch N-1's event times, so the
-        // evictions that produce the unmatched-null rows run in the batch
-        // AFTER the sentinels arrive — with no further data that is a
-        // no-data micro-batch racing processAllAvailable (observed lost at
-        // sf0.01: exactly the last hour's unmatched clicks missing). A
-        // second sentinel chunk is real data the drain must process, so
-        // the eviction batch is deterministic. Same ts ⇒ the watermark
-        // does not advance further and sentinel state still never emits.
-        stageExtraChunk(sentinels, g.work, chunks + 1)
-      }
+    val staged = flushTs(events, tsCol).fold(events) { ts =>
+      // each sentinel is built FROM a row passing its branch's predicate
+      // (an arbitrary predicate cannot be satisfied synthetically). A
+      // left-matching row exists but no right-matching row ⇒ the right
+      // branch's watermark could never advance and every unmatched left
+      // would silently never flush — fail loudly instead: the caller
+      // must feed the gate at least one row per branch (production has
+      // no such constraint; real time advances real watermarks)
+      require(events.filter(expr(rightPred)).limit(1).count() > 0 ||
+          events.filter(expr(leftPred)).limit(1).count() == 0,
+        s"stagedOuterIntervalJoinRun: no row matches rightPred ($rightPred)" +
+          " — the right branch's watermark cannot advance and unmatched" +
+          " left rows would never emit; the bounded gate needs >= 1 row" +
+          " per predicate branch")
+      // the sentinels KEEP their real join keys: Catalyst infers
+      // IsNotNull filters on equi-join keys and pushes them below the
+      // watermark node, so a null-keyed sentinel is dropped before it
+      // can advance the watermark (observed: the last hour's unmatched
+      // clicks never flush). Sentinel-pair pollution — the two
+      // sentinels matching EACH OTHER if they share a key — is instead
+      // ruled out by TIME: the right sentinel rides `after`+1h past the
+      // left one, strictly outside the left sentinel's match bound.
+      events.unionByName(events.filter(expr(leftPred)).limit(1)
+        .withColumn(tsCol, lit(ts))
+        .unionByName(events.filter(expr(rightPred)).limit(1)
+          .withColumn(tsCol,
+            lit(ts) + expr(s"INTERVAL $after") + expr("INTERVAL 1 HOUR"))))
+    }
+    val store = withStagedGate(spark, staged, tsCol, chunks, workDir) { g =>
       val src = g.source
       val l = src.filter(expr(leftPred))
         .select(keys.map(col) :+ col(tsCol).as("a_ts") :+ col(idCol).as("a_id"): _*)

@@ -3159,6 +3159,111 @@ class StreamingOuterJoinGateSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("rightPred"))
   }
+
+  test("empty input yields an empty store with the projected schema, no sentinels") {
+    val empty = Seq.empty[(Long, Long, String, java.sql.Timestamp)]
+      .toDF("event_id", "user_id", "event_type", "ts")
+    val got = graft.streaming.Streaming.stagedOuterIntervalJoinRun(
+      spark, empty, tsCol = "ts", keys = Seq("user_id"), idCol = "event_id",
+      leftPred = "event_type = 'click'", rightPred = "event_type = 'purchase'")
+    assert(got.count() == 0L)
+    assert(got.columns.toSeq == Seq("user_id", "a_id", "b_id_key", "lag_us"))
+  }
+}
+
+/** The staged gates' micro-batch floor, pinned exactly: one batch per
+  * staged chunk, the sentinels riding in the last chunk, one trailing
+  * eviction batch for the append-mode gates and none in update mode —
+  * and the session confs the gate pins come back on every exit. */
+class StagedGateBatchCountSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+  private val shuffleKey = "spark.sql.shuffle.partitions"
+  private def confs = (spark.conf.getOption(noDataKey), spark.conf.getOption(shuffleKey))
+
+  private def marks(work: String): Int = new java.io.File(s"$work/commitlog").listFiles()
+    .count(_.getName.startsWith("batch-"))
+
+  private def tmp(): String =
+    java.nio.file.Files.createTempDirectory("graft_batch_count").toString
+
+  private val t0 = java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime
+
+  private def clicks = Seq(
+    (1L, 10L, "click", 0), (2L, 10L, "purchase", 30), (3L, 20L, "click", 60),
+    (4L, 30L, "click", 120), (5L, 30L, "purchase", 240), (6L, 10L, "click", 300),
+    (7L, 10L, "purchase", 310), (8L, 40L, "click", 330), (9L, 50L, "view", 340))
+    .map { case (id, u, t, m) => (id, u, t, new java.sql.Timestamp(t0 + m * 60000L)) }
+    .toDF("event_id", "user_id", "event_type", "ts")
+
+  test("window gate: 3 chunks run exactly 3 micro-batches (no empty update-mode tail)") {
+    val events = (0 until 300).map(i =>
+      (new java.sql.Timestamp(t0 + i * 60000L), if (i % 3 == 0) "click" else "view",
+        (i % 7).toDouble)).toDF("ts", "event_type", "value")
+    val before = confs
+    val work = tmp()
+    val got = graft.streaming.Streaming.stagedWindowAggRun(
+      spark, events, "ts", "event_type", "value", chunks = 3, workDir = Some(work))
+    assert(got.count() == 10L)
+    assert(marks(work) == 3)
+    assert(confs == before)
+  }
+
+  test("session gate: 3 chunks, sentinel in the last one, run exactly 4 micro-batches") {
+    val events = (0 until 60).map(i =>
+      (new java.sql.Timestamp(t0 + i * 7 * 60000L), (i % 3).toLong, (i % 4).toDouble))
+      .toDF("ts", "user_id", "value")
+    val before = confs
+    val work = tmp()
+    val got = graft.streaming.Streaming.stagedSessionAggRun(
+      spark, events, "ts", "user_id", "value", gap = "30 minutes", chunks = 3,
+      workDir = Some(work))
+    // every user's events sit 21 minutes apart: one session each, all flushed
+    assert(got.count() == 3L)
+    assert(marks(work) == 4)
+    assert(new java.io.File(s"$work/in").listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    assert(confs == before)
+  }
+
+  test("outer-join gate: 3 chunks, sentinels in the last one, run exactly 4 micro-batches") {
+    val before = confs
+    val work = tmp()
+    val got = graft.streaming.Streaming.stagedOuterIntervalJoinRun(
+      spark, clicks, tsCol = "ts", keys = Seq("user_id"), idCol = "event_id",
+      leftPred = "event_type = 'click'", rightPred = "event_type = 'purchase'",
+      after = "1 hour", chunks = 3, workDir = Some(work))
+    assert(got.count() == 5L) // 2 conversions + 3 unmatched clicks
+    assert(marks(work) == 4)
+    assert(new java.io.File(s"$work/in").listFiles().count(_.getName.endsWith(".parquet")) == 3)
+    assert(confs == before)
+  }
+
+  test("pinned confs come back when a gate throws") {
+    // the default, set explicitly so a pin leaked by an earlier test
+    // cannot pass for a restore here
+    spark.conf.set(noDataKey, "true")
+    val before = confs
+    intercept[IllegalArgumentException] {
+      graft.streaming.Streaming.stagedOuterIntervalJoinRun(
+        spark, clicks.filter(col("event_type") =!= "purchase"), tsCol = "ts",
+        keys = Seq("user_id"), idCol = "event_id",
+        leftPred = "event_type = 'click'", rightPred = "event_type = 'purchase'")
+    }
+    assert(confs == before)
+    // a failure inside the running update-mode query: both the shuffle
+    // width and the no-data-batch pin were set when it threw
+    val events = (0 until 30).map(i =>
+      (new java.sql.Timestamp(t0 + i * 60000L), "click", i.toDouble))
+      .toDF("ts", "event_type", "value")
+    intercept[Exception] {
+      graft.streaming.Streaming.stagedWindowAggRun(spark, events, "ts", "event_type",
+        "value", pipeline = _.withColumn("value",
+          raise_error(lit("graft-spec: injected failure")).cast("double")))
+    }
+    assert(confs == before)
+  }
 }
 
 /** q188/q189: contamination spans and excision — the quoted eval text

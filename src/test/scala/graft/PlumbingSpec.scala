@@ -1168,6 +1168,7 @@ class ContractJsonSpec extends AnyFunSuite {
       graft.sources.BucketedParquetSource("/data/b", Seq("id", "k"), 32),
       graft.sources.LogUpsertSource("/data/l", Seq("id")),
       graft.sources.LogUpsertSource("/data/l2", Seq("id"), autoCompactEvery = 7),
+      graft.sources.LogUpsertSource("/data/l3", Seq("id"), boundFiles = false),
       graft.sources.BucketedLogUpsertSource("/data/bl", Seq("id"), 16, 9))
     sources.foreach { src =>
       val v = view.copy(source = src, derived = Nil, aggregates = Nil)
