@@ -19,13 +19,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.local()
     // OPTIONAL split-size override for tools/scaleup.py's equal-parallelism
     // scale measurements: the test tables are single small parquet files,
     // so the codegen'd scan+kernel stage gets size/128MB tasks — at 100 TB
@@ -33,11 +27,9 @@ object Bench {
     // pins BOTH scales to small splits and measures per-row growth. Unset
     // (the driver's rounds), behavior is stock.
     sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").foreach { v =>
-      builder.config("spark.sql.files.maxPartitionBytes", v)
-        .config("spark.sql.files.openCostInBytes", "65536")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", v)
+      spark.conf.set("spark.sql.files.openCostInBytes", "65536")
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + parquet reader + codegen paths, so the first
     // timed query doesn't absorb session startup. EVERY table warms, not
     // just lineitem — the alphabetically-first query per table was
@@ -262,7 +254,7 @@ object Bench {
       // keys were shortened to the qNN prefix with 'q' stripped — restore
       // the prefix for the family lookup
       val fams = rest.groupBy { case (key, _) => SparkEntry.familyOf("q" + key) }
-      val others = Seq("stream", "recipe", "batch").flatMap { f =>
+      val others = SparkEntry.families.flatMap { f =>
         fams.get(f).map(es =>
           s""""$f":{"n":${es.size},"sec":${fmt2(es.map(_._2).sum)}}""")
       }.mkString("{", ",", "}")

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans of selected queries so plan shape
   * (pushdown, broadcast, shuffle count, codegen spans) can be reviewed.
   * Usage: runMain graft.PlanAudit [queryName ...]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    // strict positive-int parse: '*' or a typo would otherwise surface as
-    // an opaque error at first shuffle.partitions use (ADVICE r15)
-    val cpus = graft.streaming.Streaming.parsePositiveInt(
-      "SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"), default = 8).toString
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q1_pricing_summary", "q3_revenue_by_nation", "q9_asof_last_click",

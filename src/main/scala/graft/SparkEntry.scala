@@ -123,7 +123,31 @@ object SparkEntry {
 
   // ---------- query registry ----------
 
-  final case class Q(name: String, fn: (SparkSession, String) => DataFrame, oracle: Option[String])
+  /** Bench FAMILIES, with structurally different cost models:
+    *   - "stream": the staged streaming-runtime gates — wall-clock is
+    *     micro-batch lifecycle staging (seconds each, by design);
+    *   - "recipe": multi-stage curation-recipe composites (one shared
+    *     CC run + several corpus passes each);
+    *   - "batch": everything else (one Catalyst plan, sub-second core).
+    * Bench's rung-6 short line rolls its unkeyed remainder up PER FAMILY,
+    * in this order, so a slow streaming gate can never hide inside a
+    * "fast tail" aggregate. */
+  val families: Seq[String] = Seq("stream", "recipe", "batch")
+
+  final case class Q(name: String, fn: (SparkSession, String) => DataFrame, oracle: Option[String],
+      family: String = "batch") {
+    require(families.contains(family), s"$name: unknown family '$family'")
+  }
+
+  /** q37's constrained customer view (bound, required, domain). */
+  private[graft] def customerChecked(dir: String): FeatureView =
+    FeatureView("customer_checked", ParquetSource(s"$dir/customer.parquet"),
+      entities = Seq(Feature("c_custkey", FInt64)),
+      features = Seq(
+        Feature("c_acctbal", FFloat64, constraints = Seq(Constraint.LowerBound(0.0))),
+        Feature("c_name", FString, constraints = Seq(Constraint.Required)),
+        Feature("c_mktsegment", FString,
+          constraints = Seq(Constraint.InDomain(Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"))))))
 
   private val relational: Seq[Q] = Seq(
     // --- scan + filter + group-by aggregate (SURVEY §2.1, §2.6 shape 1) ---
@@ -906,17 +930,9 @@ object SparkEntry {
 
     // --- constraint validation: returnInvalid (SURVEY §2.3) ---
     Q("q37_invalid_rows",
-      (s, dir) => {
-        val v = FeatureView("customer_checked", ParquetSource(s"$dir/customer.parquet"),
-          entities = Seq(Feature("c_custkey", FInt64)),
-          features = Seq(
-            Feature("c_acctbal", FFloat64, constraints = Seq(Constraint.LowerBound(0.0))),
-            Feature("c_name", FString, constraints = Seq(Constraint.Required)),
-            Feature("c_mktsegment", FString,
-              constraints = Seq(Constraint.InDomain(Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"))))))
-        new ContractStore().addView(v).view("customer_checked").returnInvalid(s)
-          .select("c_custkey", "c_acctbal", "c_mktsegment")
-      },
+      (s, dir) => new ContractStore().addView(customerChecked(dir))
+        .view("customer_checked").returnInvalid(s)
+        .select("c_custkey", "c_acctbal", "c_mktsegment"),
       Some("""SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
         WHERE NOT ((c_acctbal IS NULL OR c_acctbal >= 0.0)
           AND c_name IS NOT NULL
@@ -4523,7 +4539,8 @@ object SparkEntry {
           AS window_start,
         event_type, CAST(count(*) AS BIGINT) AS n_events,
         CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2""")),
+      FROM events GROUP BY 1, 2"""),
+      family = "stream"),
 
     // --- The SECOND streaming-runtime modality under the gate: CUSTOM
     // KEYED STATE (flatMapGroupsWithState), not just built-in window
@@ -4545,7 +4562,8 @@ object SparkEntry {
         FROM (SELECT *, row_number() OVER (PARTITION BY user_id
             ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
           FROM events)
-        WHERE rn = 1""")),
+        WHERE rn = 1"""),
+      family = "stream"),
 
     // --- SHARD MANIFEST: the per-shard integrity card of an exported
     // training set — row count + an order-independent 32-bit-summand md5
@@ -4650,7 +4668,8 @@ object SparkEntry {
           CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
               AS BIGINT) % 100 < 80
             THEN 'train' ELSE 'test' END AS split
-        FROM canon JOIN sel USING (doc_id)""")),
+        FROM canon JOIN sel USING (doc_id)"""),
+      family = "recipe"),
 
     // --- CCNET LM-QUALITY TERCILES (Wenzek et al. 2020): unigram model
     // on the en reference slice, saturating fixed-point log2 magnitude
@@ -4781,7 +4800,8 @@ object SparkEntry {
           CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
               AS BIGINT) % 100 < 80
             THEN 'train' ELSE 'test' END AS split
-        FROM canon JOIN lmkeep USING (doc_id)""")),
+        FROM canon JOIN lmkeep USING (doc_id)"""),
+      family = "recipe"),
 
     // --- ONE LLOYD K-MEANS ROUND under the oracle gate — the distributed
     // content of [[graft.ops.Similarity.kmeansCentroids]]'s trainer loop
@@ -4849,7 +4869,8 @@ object SparkEntry {
       (s, dir) => graft.streaming.Streaming.stagedNearDupRun(
         s, t(s, dir, "documents"), "text", "doc_id",
         threshold = 0.5, bands = 4, k = 3),
-      Some(sqlNearDupEstimateOracle(0.5, bands = 4, k = 3))),
+      Some(sqlNearDupEstimateOracle(0.5, bands = 4, k = 3)),
+      family = "stream"),
 
     // --- The FOURTH streaming-runtime modality: STREAM-STREAM JOIN —
     // click⋈purchase attribution via Streaming.intervalJoin (two
@@ -4869,7 +4890,8 @@ object SparkEntry {
         FROM events a JOIN events b ON a.user_id = b.user_id
         WHERE a.event_type = 'click' AND b.event_type = 'purchase'
           AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
-          AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR""")),
+          AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR"""),
+      family = "stream"),
 
     // --- The EIGHTH streaming-runtime modality: WATERMARK-CLOSED LEFT
     // OUTER stream-stream join — which clicks did NOT convert. The
@@ -4897,7 +4919,8 @@ object SparkEntry {
           AND b.event_type = 'purchase'
           AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
           AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        WHERE a.event_type = 'click'""")),
+        WHERE a.event_type = 'click'"""),
+      family = "stream"),
 
     // --- The FIFTH streaming-runtime modality: Spark's BUILT-IN stateful
     // dedup (dropDuplicatesWithinWatermark) under the gate, in the
@@ -4915,7 +4938,8 @@ object SparkEntry {
             col("user_id"), col("event_type"), col("value"))
       },
       Some("""SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-          user_id, event_type, value FROM events""")),
+          user_id, event_type, value FROM events"""),
+      family = "stream"),
 
     // --- The SIXTH streaming-runtime modality: SESSION WINDOWS
     // (gap-based session_window — the beyond-reference SURVEY §2.9
@@ -4945,7 +4969,8 @@ object SparkEntry {
         SELECT CAST(epoch_us(min(ts)) AS BIGINT) AS session_start, user_id,
           CAST(count(*) AS BIGINT) AS n_events,
           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM s GROUP BY user_id, sid""")),
+        FROM s GROUP BY user_id, sid"""),
+      family = "stream"),
 
     // --- CURATION FUNNEL AUDIT: per-doc drop attribution across the FULL
     // recipe (all five stages + CCNet enabled — the maximal funnel): every
@@ -5060,7 +5085,8 @@ object SparkEntry {
         LEFT JOIN gm ON gm.doc_id = d.doc_id
         LEFT JOIN canon ON canon.doc_id = d.doc_id
         LEFT JOIN lmkeep ON lmkeep.doc_id = d.doc_id
-        LEFT JOIN sel ON sel.doc_id = d.doc_id""")),
+        LEFT JOIN sel ON sel.doc_id = d.doc_id"""),
+      family = "recipe"),
 
     // --- CURRICULUM ORDER: a materialized global training order (rank
     // 1..N) in (phase asc, md5-shuffle within phase) order — the
@@ -5128,7 +5154,8 @@ object SparkEntry {
         SELECT doc_id, component,
           CASE WHEN CAST(concat('0x', substr(md5(CAST(component AS VARCHAR)), 1, 8))
               AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test' END AS split
-        FROM canon""")),
+        FROM canon"""),
+      family = "recipe"),
 
     // --- INGEST FUNNEL AUDIT: runIncremental's drop attribution — every
     // batch doc labeled with the first ingest stage that dropped it
@@ -5158,7 +5185,8 @@ object SparkEntry {
           spl.split
         FROM nb LEFT JOIN gm USING (doc_id)
           LEFT JOIN cdrop cd USING (doc_id)
-          LEFT JOIN spl USING (doc_id)""")),
+          LEFT JOIN spl USING (doc_id)"""),
+      family = "recipe"),
 
     // --- TRAINING-EXPORT PLAN capstone: curriculum rank (q179's
     // distributed prefix sum) → equal-doc shards in curriculum order →
@@ -5186,7 +5214,8 @@ object SparkEntry {
           CAST(count(*) AS BIGINT) AS n_rows,
           CAST(sum(CAST(concat('0x', substr(md5(concat_ws(chr(1),
             CAST(doc_id AS VARCHAR), text)), 1, 8)) AS BIGINT)) AS BIGINT) AS checksum
-        FROM rk GROUP BY 1""")),
+        FROM rk GROUP BY 1"""),
+      family = "recipe"),
 
     // --- DECONTAMINATION-STAGED curation recipe under the gate: stage 0
     // enabled — the src19 slice is the EVAL SUITE (its rows leave the
@@ -5238,7 +5267,8 @@ object SparkEntry {
           CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
               AS BIGINT) % 100 < 80
             THEN 'train' ELSE 'test' END AS split
-        FROM canon""")),
+        FROM canon"""),
+      family = "recipe"),
 
     // --- EXCISION-MODE decontamination recipe: stage 0 with
     // decontamMode = "excise" — contaminated docs SURVIVE with the
@@ -5309,7 +5339,8 @@ object SparkEntry {
           CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
               AS BIGINT) % 100 < 80
             THEN 'train' ELSE 'test' END AS split
-        FROM canon JOIN kept USING (doc_id)""")),
+        FROM canon JOIN kept USING (doc_id)"""),
+      family = "recipe"),
 
     // --- The SEVENTH streaming-runtime modality: STREAM-STATIC
     // ENRICHMENT — orders stream joined per micro-batch against the
@@ -5329,7 +5360,8 @@ object SparkEntry {
           col("c_nationkey"), col("o_totalprice")),
       Some("""SELECT o.o_orderkey, o.o_custkey, c.c_mktsegment, c.c_nationkey,
           o.o_totalprice
-        FROM orders o LEFT JOIN customer c ON c.c_custkey = o.o_custkey""")),
+        FROM orders o LEFT JOIN customer c ON c.c_custkey = o.o_custkey"""),
+      family = "stream"),
 
     // --- MULTI-BENCHMARK decontamination MATRIX: which of N eval suites
     // does each corpus doc leak into — q62's gram algebra, but the
@@ -5865,7 +5897,8 @@ object SparkEntry {
       },
       Some("""SELECT event_id, event_type, value,
           CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS ts_epoch
-        FROM events WHERE value > 100.0""")),
+        FROM events WHERE value > 100.0"""),
+      family = "stream"),
         // floor, not a bare CAST: Spark's timestamp→long TRUNCATES the
         // fractional second while DuckDB's BIGINT cast rounds half-up —
         // raw event ts carries micros (unlike the whole-hour window_start
@@ -6335,7 +6368,8 @@ object SparkEntry {
             AS window_start,
           event_type, CAST(count(*) AS BIGINT) AS n_events,
           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2""")),
+        FROM events GROUP BY 1, 2"""),
+      family = "stream"),
 
     // --- ranked-retrieval quality (MLOps.rankingMetrics): nDCG@10, RR and
     // recall@10 per lang over a deterministic run (docs ranked by length,
@@ -6851,7 +6885,8 @@ object SparkEntry {
         prepare = d => d.select(col("source"),
           explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
           .filter(length(col("w")) > 0)),
-      Some(sqlHllPortableOracle(lgK = 8, includeAll = false))),
+      Some(sqlHllPortableOracle(lgK = 8, includeAll = false)),
+      family = "stream"),
 
     // --- GROUPED COVARIANCE MATRIX over the first 8 embedding dims via
     // the custom CovMoments TypedImperativeAggregate: one flat moment
@@ -6959,7 +6994,8 @@ object SparkEntry {
             FROM w CROSS JOIN dep)
         SELECT source, CAST(dep AS INTEGER) AS cms_depth, slot AS cms_slot,
           CAST(count(*) AS BIGINT) AS cms_n
-        FROM hx GROUP BY 1, 2, 3""")),
+        FROM hx GROUP BY 1, 2, 3"""),
+      family = "stream"),
 
     // --- GINI of DAILY VOLUMES per event type — the burstiness monitor
     // giniByGroup was built for (0 = steady traffic, →1 = one day holds
@@ -7288,7 +7324,8 @@ FROM q, g5 g""")),
           AND b.event_type = 'purchase'
           AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
           AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        WHERE a.event_type = 'click'""")),
+        WHERE a.event_type = 'click'"""),
+      family = "stream"),
 
     // --- The FOURTEENTH streaming-runtime modality: q212's restart gate
     // hardened from a graceful stop to a MID-BATCH CRASH — the injected
@@ -7306,7 +7343,8 @@ FROM q, g5 g""")),
             AS window_start,
           event_type, CAST(count(*) AS BIGINT) AS n_events,
           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2""")),
+        FROM events GROUP BY 1, 2"""),
+      family = "stream"),
 
     // --- SQL WRITE path (ContractStore.executeSqlWrite): two INSERTs
     // through SQL into a registered contract — the first omits an
@@ -7417,7 +7455,8 @@ FROM q, g5 g""")),
             col("user_id"), col("event_type"), col("value"))
       },
       Some("""SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-          user_id, event_type, value FROM events""")),
+          user_id, event_type, value FROM events"""),
+      family = "stream"),
 
     // --- LoadedAtSource (batch_data_source.py:1288-1338): the load-stamp
     // source, gated with a PINNED clock (the reproducible-backfill form;
@@ -7490,30 +7529,13 @@ FROM q, g5 g""")),
 
   // ---------- driver contract ----------
 
-  /** Bench FAMILY of a registered query, keyed by its unique qNN prefix.
-    * Three families with structurally different cost models:
-    *   - "stream": the staged streaming-runtime gates — wall-clock is
-    *     micro-batch lifecycle staging (seconds each, by design);
-    *   - "recipe": multi-stage curation-recipe composites (one shared
-    *     CC run + several corpus passes each);
-    *   - "batch": everything else (one Catalyst plan, sub-second core).
-    * Bench's rung-6 short line rolls its unkeyed remainder up PER FAMILY,
-    * so a slow streaming gate can never hide inside a "fast tail"
-    * aggregate — BenchLineSpec pins both set-membership (every prefix
-    * here names exactly one registered query) and the remainder bounds. */
-  private val streamGatePrefixes = Set("q165", "q167", "q172", "q175",
-    "q176", "q176b", "q177", "q183", "q187", "q187b", "q198", "q212",
-    "q212b", "q233", "q237")
-  private val recipeCompositePrefixes = Set("q166", "q171", "q178",
-    "q181", "q182", "q190", "q191", "q192")
-  def familyOf(name: String): String = {
-    val p = name.takeWhile(_ != '_')
-    if (streamGatePrefixes(p)) "stream"
-    else if (recipeCompositePrefixes(p)) "recipe"
-    else "batch"
-  }
-  private[graft] def familyPrefixes: (Set[String], Set[String]) =
-    (streamGatePrefixes, recipeCompositePrefixes)
+  private val familyByPrefix: Map[String, String] =
+    specs.map(q => q.name.takeWhile(_ != '_') -> q.family).toMap
+
+  /** Bench family of a query, keyed by its unique qNN prefix (Bench's
+    * short line only keeps the prefix); unregistered names are "batch". */
+  def familyOf(name: String): String =
+    familyByPrefix.getOrElse(name.takeWhile(_ != '_'), "batch")
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

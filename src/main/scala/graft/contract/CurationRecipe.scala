@@ -413,8 +413,4 @@ final case class CurationRecipe(
         col("__c").isNull -> "near_dup"))
     out.select(col(idCol), stage.as("stage"), col("split"))
   }
-
-  /** Execute against a registered source. */
-  def runOn(spark: SparkSession, source: graft.sources.BatchSource): DataFrame =
-    run(source.read(spark))
 }

@@ -88,7 +88,6 @@ object ExprJson {
   private[expr] final class P(s: String) {
     private var i = 0
     private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    def peek(): Char = { ws(); s.charAt(i) }
     def expect(c: Char): Unit = { ws(); require(s.charAt(i) == c, s"expected '$c' at $i in $s"); i += 1 }
     def tryConsume(c: Char): Boolean = { ws(); if (i < s.length && s.charAt(i) == c) { i += 1; true } else false }
     def string(): String = {

@@ -7,9 +7,6 @@ import org.apache.spark.sql.functions.{col, struct, when}
   */
 object Caching {
 
-  /** In-memory cache (InMemoryCacheJob, retrieval_job.py:1683-1702). */
-  def inMemory(df: DataFrame): DataFrame = df.cache()
-
   /** Write-through file cache (FileCachedJob / cached_at,
     * retrieval_job.py:2775-2817): if the cache path exists and is younger than
     * maxAge, read it; otherwise compute, write, and read back. Reading back

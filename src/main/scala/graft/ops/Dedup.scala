@@ -44,20 +44,6 @@ object Dedup {
       x => x.isNotNull)
   }
 
-  /** MinHash signature from a PRECOMPUTED shingle array attribute: for each of
-    * `numHashes` seeded hash functions, the min over shingle hashes. Pure
-    * expression (no UDF): xxhash64(shingle, seed).
-    *
-    * Callers must materialize the shingle array in its own projection first
-    * (see [[minhashCandidates]]): higher-order functions are interpreted, not
-    * codegen'd, so they get no common-subexpression elimination — an inline
-    * shingle expression would be recomputed `numHashes` times per row.
-    */
-  def minhashSignature(shingleArr: Column, numHashes: Int = 32): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleArr, s => xxhash64(s, lit(seed))))
-    }: _*)
-
   /** Fast minhash signature: ONE xxhash64 per shingle (string→long), then
     * `numHashes` universal hashes derived in a native single-pass kernel
     * (graft.functions.MinHashSig) — replaces numHashes interpreted
@@ -93,18 +79,6 @@ object Dedup {
     val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
     a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_bands"))
-  }
-
-  /** SimHash bit-assembly from a PRECOMPUTED shingle-hash array attribute:
-    * bit i of the signature is the sign of the +1/-1 vote sum over hash-bit i.
-    * shiftleft + bitwise OR: bit 63 would overflow any additive encoding. */
-  def simhashFromHashes(hashes: Column): Column = {
-    val bits = (0 until 64).map { i =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }
-    bits.reduce(_ bitwiseOR _)
   }
 
   /** SimHash: 64-bit signature where bit i is the sign of the weighted sum of
@@ -227,25 +201,13 @@ object Dedup {
   def hashedShingles(text: Column, k: Int = 3): Column =
     graft.functions.Native.wordShingleHashes(text, k, distinctSorted = false)
 
-  /** n-gram Jaccard similarity between two text columns (verification step for
-    * LSH candidates). Pure set expressions over shingle arrays. */
-  def ngramJaccard(a: Column, b: Column, k: Int = 3): Column =
-    jaccardFromSets(shingleSet(a, k), shingleSet(b, k))
-
   /** Full MinHash-LSH near-dup pipeline: candidates from banding, verified
     * with n-gram Jaccard ≥ threshold. Returns verified duplicate pairs. */
   def nearDuplicates(
       df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.8, numHashes: Int = 32, bands: Int = 8, k: Int = 3): DataFrame = {
-    val cands = minhashCandidates(df, textCol, idCol, numHashes, bands, k)
-    // verify with Jaccard over hashed+sorted shingle sets materialized once per
-    // doc (native merge-scan kernel per pair, not per-pair shingling)
-    val sets = df.select(col(idCol).as("__id"), hashedShingleSet(col(textCol), k).as("__set"))
-    cands
-      .join(sets.withColumnsRenamed(Map("__id" -> "id_a", "__set" -> "set_a")), "id_a")
-      .join(sets.withColumnsRenamed(Map("__id" -> "id_b", "__set" -> "set_b")), "id_b")
-      .withColumn("jaccard", graft.functions.Native.jaccardSortedLongs(col("set_a"), col("set_b")))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(minhashCandidates(df, textCol, idCol, numHashes, bands, k),
+      df, textCol, idCol, threshold, k)
       .select("id_a", "id_b", "shared_bands", "jaccard")
   }
 

@@ -39,12 +39,6 @@ object TextAnalysis {
       .otherwise(length(regexp_replace(text, "[^0-9]", "")).cast("double") / total)
   }
 
-  def upperRatio(text: Column): Column = {
-    val total = length(text).cast("double")
-    when(total === 0, 0.0)
-      .otherwise(length(regexp_replace(text, "[^A-Z]", "")).cast("double") / total)
-  }
-
   def meanWordLength(text: Column): Column = {
     val n = tokenCountWs(text)
     when(n === 0, 0.0)
@@ -145,11 +139,6 @@ object TextAnalysis {
       .when(fr > 0, "fr")
       .otherwise("unknown")
   }
-
-  /** Winnowing-style k-gram fingerprint set: hash every word k-gram, keep the
-    * per-document minimum `m` hashes (a compact shift-resistant signature). */
-  def kgramFingerprints(text: Column, k: Int = 5, m: Int = 8): Column =
-    slice(array_sort(transform(Dedup.shingles(text, k), s => xxhash64(s))), 1, m)
 
   /** PII scrubbing: replace emails, URLs and long digit runs with placeholder
     * tokens — the standard redaction pass of a training-data pipeline. Chained

@@ -27,21 +27,6 @@ final class ContractStore {
   @volatile private var modelsMap: Map[String, ModelContract] = Map.empty
   @volatile private var recipesMap: Map[String, graft.contract.CurationRecipe] = Map.empty
 
-  /** PIT physical strategy: "sorted" (default — union + one per-key window
-    * pass, O(facts+features) rows; the 100 TB path) or "join" (equi-join +
-    * rank dedup, the reference's own Spark shape, local/job.py:678-699).
-    * Both produce identical results (JoinsSpec equivalence tests); "join"
-    * can win when the feature side is a small broadcastable dimension.
-    * SPARK_GRAFT_PIT_STRATEGY overrides the default for a whole process —
-    * the scale-measurement A/B knob (SCALE.md's sorted-vs-join table), so
-    * the same registered queries time both physical forms unmodified. */
-  @volatile private var pitStrategyVal: String = ContractStore.defaultPitStrategy
-  def pitStrategy: String = pitStrategyVal
-  def withPitStrategy(s: String): ContractStore = {
-    require(s == "sorted" || s == "join", s"unknown PIT strategy: $s")
-    pitStrategyVal = s; this
-  }
-
   def addView(v: FeatureView): ContractStore =
     synchronized { viewsMap += v.name -> v; this }
   def addModel(m: ModelContract): ContractStore =
@@ -523,11 +508,7 @@ final class ContractStore {
           if (plainWanted.nonEmpty) {
             val feat = vs.baseWithDerived(spark)
               .select((keys :+ ts.name).map(col) ++ plainWanted.map(col): _*)
-            cur =
-              if (pitStrategyVal == "sorted")
-                Joins.pointInTimeSorted(cur, feat, keys, ts.name, factTs, ts.ttl)
-              else
-                Joins.pointInTimeJoin(cur, feat, keys, ts.name, factTs, ts.ttl)
+            cur = Joins.pointInTimeSorted(cur, feat, keys, ts.name, factTs, ts.ttl)
           }
           if (aggs.nonEmpty) {
             val base = vs.baseWithDerived(spark)
@@ -646,20 +627,6 @@ final class ContractStore {
       }
     }
   }
-}
-
-object ContractStore {
-  /** Process-wide default for new stores' PIT strategy. A `def`, evaluated
-    * at each store construction: a typo'd env value then throws the named
-    * IllegalArgumentException directly — a companion-val would surface as
-    * ExceptionInInitializerError once and opaque NoClassDefFoundError on
-    * every later use in the JVM (ADVICE r14). */
-  private[store] def defaultPitStrategy: String =
-    sys.env.get("SPARK_GRAFT_PIT_STRATEGY").map { v =>
-      require(v == "sorted" || v == "join",
-        s"SPARK_GRAFT_PIT_STRATEGY must be 'sorted' or 'join', got '$v'")
-      v
-    }.getOrElse("sorted")
 }
 
 /** Per-view query surface (reference: FeatureViewStore, feature_store.py:1461+). */

@@ -441,16 +441,6 @@ object Streaming {
 
   // ---- runtime-gate harness (q165/q167): TEST staging + store run ----
 
-  private def gateLap(): (String => Unit, Boolean) = {
-    val debugT = sys.env.contains("GRAFT_STREAM_DEBUG")
-    var t0 = System.nanoTime()
-    val lap = (tag: String) => if (debugT) {
-      System.err.println(f"[stream-gate] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
-    (lap, debugT)
-  }
-
   /** Stage `df` as a time-ordered multi-file parquet stream dir — the TEST
     * harness half of the runtime gates (a real deployment's stream arrives
     * time-ordered from the broker). Global sort with full-column tiebreak
@@ -459,7 +449,7 @@ object Streaming {
     * overtakes incoming data; ascending mtimes pin the file-source
     * processing order. */
   private def stageChunks(df: DataFrame, tsCol: String, chunks: Int,
-      work: java.nio.file.Path, lap: String => Unit): Unit = {
+      work: java.nio.file.Path): Unit = {
     import org.apache.spark.sql.expressions.Window
     val inDir = work.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     // localCheckpoint: each chunk filter re-reads the sorted frame instead
@@ -502,14 +492,12 @@ object Streaming {
       target.toFile.setLastModified(System.currentTimeMillis() + k * 2000L)
     }
     ranked.unpersist(blocking = false) // staged to disk; release the checkpoint blocks
-    lap("staging")
   }
 
   /** Handle the shared harness of one staged runtime gate hands its body:
-    * the work dir, the lap logger, and the staged file-stream source (one
-    * micro-batch per chunk, so state genuinely carries across batches). */
+    * the work dir and the staged file-stream source (one micro-batch per
+    * chunk, so state genuinely carries across batches). */
   private final class StagedGate(val work: java.nio.file.Path,
-      val lap: String => Unit, val debugT: Boolean,
       spark: SparkSession, schema: org.apache.spark.sql.types.StructType) {
     def source: DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(work.resolve("in").toString)
@@ -589,8 +577,7 @@ object Streaming {
     val work = workDir.map(d => java.nio.file.Paths.get(d))
       .getOrElse(java.nio.file.Files.createTempDirectory("graft_stream_gate"))
     java.nio.file.Files.createDirectories(work)
-    val (lap, debugT) = gateLap()
-    stageChunks(df, orderCol, chunks, work, lap)
+    stageChunks(df, orderCol, chunks, work)
     // Gate width: shuffle/state partitions for the streaming lifecycle.
     // Default 1 is right at driver-test scale (state is tiny; a wide
     // fan-out only adds state-store + task constants per batch). At
@@ -607,7 +594,7 @@ object Streaming {
     // gates pin — so only scale measurements should set this
     val gateWidth = parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH"))
     withConfs(spark, "spark.sql.shuffle.partitions" -> gateWidth.toString) {
-      body(new StagedGate(work, lap, debugT, spark, df.schema))
+      body(new StagedGate(work, spark, df.schema))
     }
   }
 
@@ -625,14 +612,13 @@ object Streaming {
     * residual (SCALE.md). */
   private def runUpsertStream(spark: SparkSession, streamed: DataFrame,
       project: DataFrame => DataFrame, keys: Seq[String],
-      work: java.nio.file.Path, lap: String => Unit,
-      debugT: Boolean, outputMode: String = "update"): graft.sources.WritableSource = {
+      work: java.nio.file.Path, outputMode: String = "update"): graft.sources.WritableSource = {
     val store = gateStore(work, "store", keys)
     val upsert = idempotentBatchSink({ (batch, _) =>
       // ONE action per micro-batch (optimization r15): the former
       // persist + isEmpty probe ran a whole extra job per batch — and the
       // probe's executeTake(1) re-computed the full stateful pipeline, so
-      // it COST more than the upsert it guarded (GRAFT_STREAM_DEBUG
+      // it COST more than the upsert it guarded (per-batch timing
       // decomposition: isEmpty 0.15-1.3 s/batch vs upsert 0.11-0.38 s).
       // Empty watermark-finalize batches are NO-OPS on the log stores
       // (GenLog.resolveEmptyGen: the empty generation is dropped and its
@@ -640,9 +626,7 @@ object Streaming {
       // as the schema donor), so they neither advance the log nor pull
       // the O(tail) auto-compaction forward, and the final read is
       // unchanged.
-      val tV = System.nanoTime()
       store.upsert(gateCoalesce(project(batch)), keys)
-      if (debugT) System.err.println(f"[stream-gate]   upsert ${(System.nanoTime() - tV) / 1e9}%.2fs")
       },
       work.resolve("commitlog").toString)(spark)
     // Update mode runs no no-data micro-batch: there such a batch only
@@ -661,13 +645,10 @@ object Streaming {
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          upsert(b, id); lap(s"batch-$id")
-        }
+        .foreachBatch { (b: DataFrame, id: Long) => upsert(b, id) }
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    lap("stream")
     // an all-empty input never triggers an upsert, so the store path would
     // not exist and the final read would throw — materialize the empty
     // store with the projected schema instead of crashing on zero events
@@ -711,19 +692,33 @@ object Streaming {
       workDir: Option[String] = None,
       pipeline: DataFrame => DataFrame = identity): DataFrame = {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
-      val agg = pipeline(g.source)
-        .withWatermark(tsCol, lateness)
-        .groupBy(window(col(tsCol), windowDur), col(keyCol))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col(valueCol).cast("decimal(18,4)")).as("__sum_dec"))
-      runUpsertStream(spark, agg,
-        b => b.select(col("window.start").cast("long").as("window_start"),
-          col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("window_start", keyCol), g.work, g.lap, g.debugT)
+      runUpsertStream(spark,
+        windowAgg(pipeline(g.source), tsCol, keyCol, valueCol, windowDur, lateness),
+        windowRows(keyCol), Seq("window_start", keyCol), g.work)
     }
+    windowResult(spark, store, keyCol)
+  }
+
+  /** The window gates' streaming aggregate over an already-`pipeline`d
+    * frame: event-time watermark, tumbling window × key, count and an
+    * exact DECIMAL(18,4) partial sum. */
+  private def windowAgg(df: DataFrame, tsCol: String, keyCol: String,
+      valueCol: String, windowDur: String, lateness: String): DataFrame =
+    df.withWatermark(tsCol, lateness)
+      .groupBy(window(col(tsCol), windowDur), col(keyCol))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col(valueCol).cast("decimal(18,4)")).as("__sum_dec"))
+
+  /** A [[windowAgg]] micro-batch as store rows keyed by (window_start, keyCol). */
+  private def windowRows(keyCol: String)(b: DataFrame): DataFrame =
+    b.select(col("window.start").cast("long").as("window_start"),
+      col(keyCol), col("n_events"), col("__sum_dec"))
+
+  /** A window gate's final store state; the exact sum casts to double once, here. */
+  private def windowResult(spark: SparkSession, store: graft.sources.WritableSource,
+      keyCol: String): DataFrame =
     store.read(spark).select(col("window_start"), col(keyCol),
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
-  }
 
   /** CHECKPOINT RESTART RECOVERY — the runtime modality none of the other
     * gates exercise: the stream STOPS mid-corpus and a NEW query resumes
@@ -760,22 +755,14 @@ object Streaming {
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).takeRight(holdBack)
       held.foreach(f => java.nio.file.Files.move(f.toPath, hold.resolve(f.getName)))
       def lifecycle() = runUpsertStream(spark,
-        g.source
-          .withWatermark(tsCol, lateness)
-          .groupBy(window(col(tsCol), windowDur), col(keyCol))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col(valueCol).cast("decimal(18,4)")).as("__sum_dec")),
-        b => b.select(col("window.start").cast("long").as("window_start"),
-          col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("window_start", keyCol), g.work, g.lap, g.debugT)
+        windowAgg(g.source, tsCol, keyCol, valueCol, windowDur, lateness),
+        windowRows(keyCol), Seq("window_start", keyCol), g.work)
       lifecycle() // phase 1: partial corpus, graceful stop
-      g.lap("phase1-down")
       // the outage: late chunks arrive while no query is running
       held.foreach(f => java.nio.file.Files.move(hold.resolve(f.getName), f.toPath))
       lifecycle() // phase 2: new query, same checkpoint — state recovers
     }
-    store.read(spark).select(col("window_start"), col(keyCol),
-      col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
+    windowResult(spark, store, keyCol)
   }
 
   /** Fully-qualified class of Spark's bundled RocksDB state store provider
@@ -836,14 +823,8 @@ object Streaming {
         s"crashAtBatch=$crashAtBatch chunks=$chunks — the crash must leave " +
         "work for phase 2 or the gate proves nothing")
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
-      def agg = g.source
-        .withWatermark(tsCol, lateness)
-        .groupBy(window(col(tsCol), windowDur), col(keyCol))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col(valueCol).cast("decimal(18,4)")).as("__sum_dec"))
-      val project = (b: DataFrame) => b.select(
-        col("window.start").cast("long").as("window_start"),
-        col(keyCol), col("n_events"), col("__sum_dec"))
+      def agg = windowAgg(g.source, tsCol, keyCol, valueCol, windowDur, lateness)
+      val project = windowRows(keyCol) _
       val keys = Seq("window_start", keyCol)
       val st = gateStore(g.work, "store", keys)
       val upsert = idempotentBatchSink({ (batch, _) =>
@@ -856,7 +837,7 @@ object Streaming {
       val q1 = agg.writeStream.outputMode("update")
         .option("checkpointLocation", g.work.resolve("ckpt").toString)
         .foreachBatch { (b: DataFrame, id: Long) =>
-          upsert(b, id); g.lap(s"p1-batch-$id")
+          upsert(b, id)
           if (id == crashAtBatch) {
             crashed.set(true)
             throw new RuntimeException(
@@ -871,14 +852,12 @@ object Streaming {
       }
       require(crashed.get(), "stagedCrashRecoveryRun: the injected crash " +
         s"never fired — fewer than ${crashAtBatch + 1} micro-batches ran")
-      g.lap("phase1-crashed")
       // phase 2: fresh query, same checkpoint/commitlog/store paths (all
       // derive from g.work) — replay of the torn batch is absorbed, the
       // rest of the corpus drains
-      runUpsertStream(spark, agg, project, keys, g.work, g.lap, g.debugT)
+      runUpsertStream(spark, agg, project, keys, g.work)
     }
-    store.read(spark).select(col("window_start"), col(keyCol),
-      col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
+    windowResult(spark, store, keyCol)
   }
 
   /** STREAMED MERGEABLE SKETCH under the oracle gate — the portable HLL
@@ -913,7 +892,7 @@ object Streaming {
         .groupBy(col(keyCol), col("hll_bucket"))
         .agg(max(col("__rho")).as("hll_reg"))
       runUpsertStream(spark, regs, identity,
-        Seq(keyCol, "hll_bucket"), g.work, g.lap, g.debugT)
+        Seq(keyCol, "hll_bucket"), g.work)
     }
     graft.ops.Aggregations.hllPortableEstimate(store.read(spark), Seq(keyCol), lgK)
   }
@@ -958,7 +937,7 @@ object Streaming {
         .groupBy(col(keyCol), col("cms_depth"), col("cms_slot"))
         .agg(count(lit(1)).as("cms_n"))
       runUpsertStream(spark, counters, identity,
-        Seq(keyCol, "cms_depth", "cms_slot"), g.work, g.lap, g.debugT)
+        Seq(keyCol, "cms_depth", "cms_slot"), g.work)
     }
     store.read(spark)
   }
@@ -977,7 +956,7 @@ object Streaming {
       chunks: Int = 3, workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, statefulLatest(g.source, keys, tsCol, tieCol),
-        identity, keys, g.work, g.lap, g.debugT)
+        identity, keys, g.work)
     }
     store.read(spark)
   }
@@ -1018,7 +997,7 @@ object Streaming {
       // incoming batch — dedup the batch itself (est is a pure function of
       // the pair, so any representative row is THE row)
       runUpsertStream(spark, pairs, _.dropDuplicates("id_a", "id_b"),
-        Seq("id_a", "id_b"), g.work, g.lap, g.debugT, outputMode = "append")
+        Seq("id_a", "id_b"), g.work, outputMode = "append")
     }
     require(acc.value == 0L, s"stagedNearDupRun: ${acc.value} bucket evictions " +
       s"at maxPerBucket=$maxPerBucket — the batch-oracle equivalence requires " +
@@ -1042,7 +1021,7 @@ object Streaming {
       workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, rows, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, dedupStream(g.source, keys, tsCol, delay),
-        identity, keys, g.work, g.lap, g.debugT, outputMode = "append")
+        identity, keys, g.work, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1087,8 +1066,7 @@ object Streaming {
       runUpsertStream(spark, agg,
         b => b.select(unix_micros(col("session_window.start")).as("session_start"),
           col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("session_start", keyCol), g.work, g.lap, g.debugT,
-        outputMode = "append")
+        Seq("session_start", keyCol), g.work, outputMode = "append")
     }
     store.read(spark).select(col("session_start"), col(keyCol),
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
@@ -1130,7 +1108,7 @@ object Streaming {
         .select(keys.map(col) :+ col("a_id") :+ col("b_id") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id"),
-        g.work, g.lap, g.debugT, outputMode = "append")
+        g.work, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1210,7 +1188,7 @@ object Streaming {
           coalesce(col("b_id"), lit(-1L)).as("b_id_key") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id_key"),
-        g.work, g.lap, g.debugT, outputMode = "append")
+        g.work, outputMode = "append")
     }
     // the sentinels cannot reach the store (see above): the left one never
     // evicts, the right one never matches — nothing to filter out
@@ -1258,7 +1236,7 @@ object Streaming {
         " version) before enriching")
     val store = withStagedGate(spark, rows, orderCol, chunks, workDir) { g =>
       runUpsertStream(spark, g.source.join(broadcast(dim), joinKeys, "left"),
-        identity, Seq(idCol), g.work, g.lap, g.debugT, outputMode = "append")
+        identity, Seq(idCol), g.work, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1303,7 +1281,6 @@ object Streaming {
         checkpointDir = Some(g.work.resolve("ckpt").toString),
         trigger = Trigger.ProcessingTime(0L))
       try q.processAllAvailable() finally q.stop()
-      g.lap("stream")
       // a run where nothing matched must yield an EMPTY frame with the
       // pipeline schema, not a missing-path read error; the main store is
       // the schema donor (it saw every batch). An all-empty INPUT is a

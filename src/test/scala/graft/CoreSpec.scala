@@ -11,14 +11,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 /** Type mapping goldens (reference mapping: schemas/feature.py:197-269). */
@@ -970,6 +963,26 @@ class PipelineOpsSpec extends AnyFunSuite {
       features = Seq(Feature("missing_col", FString)))
     val missing = new graft.store.ContractStore().addView(v).validateSchema(spark, "vv")
     assert(missing == Seq("missing_col"))
+  }
+
+  test("dropInvalid and returnInvalid split q37's customer_checked view exactly") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_invalid").toString
+    // one row per constraint outcome: valid, null-but-optional, and each violation
+    Seq[(Long, Option[Double], Option[String], String)](
+      (1L, Some(10.0), Some("a"), "BUILDING"),
+      (2L, None, Some("b"), "MACHINERY"),
+      (3L, Some(-1.0), Some("c"), "BUILDING"),
+      (4L, Some(5.0), None, "HOUSEHOLD"),
+      (5L, Some(5.0), Some("e"), "SPACE"))
+      .toDF("c_custkey", "c_acctbal", "c_name", "c_mktsegment")
+      .write.parquet(s"$dir/customer.parquet")
+    val vs = new graft.store.ContractStore().addView(SparkEntry.customerChecked(dir))
+      .view("customer_checked")
+    def ids(df: DataFrame) = df.select("c_custkey").as[Long].collect().toSeq
+    val valid = ids(vs.dropInvalid(spark))
+    val invalid = ids(vs.returnInvalid(spark))
+    assert(valid.sorted == Seq(1L, 2L) && invalid.sorted == Seq(3L, 4L, 5L))
+    assert((valid ++ invalid).sorted == ids(vs.all(spark)).sorted)
   }
 }
 

@@ -399,7 +399,7 @@ class ScalePathSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("ContractStore PIT strategies agree (sorted default vs join)") {
+  test("ContractStore PIT lookup agrees with the pointInTimeJoin reference") {
     val dir = "/root/testdata/sf0.001"
     val ev = SparkEntry.events(spark, dir)
     val viewSrc = graft.sources.TransformSource(
@@ -413,12 +413,14 @@ class ScalePathSpec extends AnyFunSuite {
       eventTimestamp = Some(EventTimestamp("ts", Some(java.time.Duration.ofDays(1)))))
     val facts = ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts".as("event_timestamp"))
-    def run(strategy: String) =
-      new graft.store.ContractStore().addView(v).withPitStrategy(strategy)
-        .featuresFor(spark, facts, Seq("sviews:value"))
-        .select("event_id", "value").collect()
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "value").collect()
         .map(r => (r.getLong(0), Option(r.get(1)))).toMap
-    assert(run("sorted") == run("join"))
+    val store = new graft.store.ContractStore().addView(v)
+    val reference = Joins.pointInTimeJoin(facts,
+      store.view("sviews").baseWithDerived(spark).select("user_id", "ts", "value"),
+      Seq("user_id"), "ts", "event_timestamp", v.eventTimestamp.get.ttl)
+    assert(canon(store.featuresFor(spark, facts, Seq("sviews:value"))) == canon(reference))
   }
 
   test("native kernels callable from SQL after registration") {
@@ -2915,6 +2917,11 @@ class AdviceRegressionSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](parseGateWidth(Some("abc")))
     intercept[IllegalArgumentException](parseGateWidth(Some("0")))
     intercept[IllegalArgumentException](parseGateWidth(Some("-4")))
+    // the session width parses the same way; unset means every core
+    assert(Session.parseCpus(None) == Runtime.getRuntime.availableProcessors)
+    assert(Session.parseCpus(Some("4")) == 4)
+    intercept[IllegalArgumentException](Session.parseCpus(Some("abc")))
+    intercept[IllegalArgumentException](Session.parseCpus(Some("0")))
   }
 }
 
