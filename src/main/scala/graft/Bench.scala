@@ -84,7 +84,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name: ${e.getMessage}"); false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }

@@ -56,32 +56,32 @@ object SparkEntry {
     else df
   }
 
-  /** (bytes, rows) from the parquet FOOTER only — no Spark job, cached per
-    * path for the session lifetime. Accepted staleness (ADVICE r15): a
-    * file REGENERATED at the same path within one JVM would reuse the old
-    * stats — that can only mis-size the fan-out partitioning, never change
-    * a result, and the test data is immutable per run; keying on
-    * (len, mtime) would pay a getFileStatus per t() call instead. */
-  private val tableStats =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  /** (bytes, rows, schema) from the parquet FOOTER only — no Spark job
+    * ([[graft.sources.ParquetFooter]]); single-file tables then read with
+    * that schema, so opening one runs no schema-inference job either.
+    * Cached per (path, len, mtime, nanosAsLong): a file regenerated at the
+    * same path gets a fresh entry — a stale schema would be a wrong
+    * result, not just a mis-sized fan-out — and the nanos conf decides
+    * how a TIMESTAMP(NANOS) column converts. Multi-file directory tables
+    * keep stock inference. */
+  private val tableStats = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long, Boolean), (Long, Long, Option[org.apache.spark.sql.types.StructType])]()
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val (bytes, rows) = tableStats.computeIfAbsent(path, { _ =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = p.getFileSystem(conf)
-        val status = fs.getFileStatus(p)
-        if (status.isDirectory) (0L, 0L) // multi-file tables: stock scan
-        else {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try (status.getLen, r.getRecordCount) finally r.close()
-        }
-      } catch { case _: Exception => (0L, 0L) }
-    })
-    fanOutUnsplittable(s, s.read.parquet(path), bytes, rows)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val (bytes, rows, schema) = scala.util.Try(
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)).toOption
+      .filterNot(_.isDirectory).map { st =>
+        tableStats.computeIfAbsent(
+          (path, st.getLen, st.getModificationTime, s.sessionState.conf.legacyParquetNanosAsLong), { _ =>
+            try {
+              val (rows, schema) = graft.sources.ParquetFooter.read(s, st)
+              (st.getLen, rows, Some(schema))
+            } catch { case _: Exception => (0L, 0L, None) }
+          })
+      }.getOrElse((0L, 0L, None))
+    fanOutUnsplittable(s, schema.fold(s.read)(s.read.schema(_)).parquet(path), bytes, rows)
   }
 
   /** events.parquet's `ts` physical type has varied across driver testdata

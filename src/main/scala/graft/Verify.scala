@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -45,7 +46,7 @@ object Verify {
       val fn = queries(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(500)
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg
@@ -55,7 +56,7 @@ object Verify {
           import spark.implicits._
           Seq((name, msg)).toDF("__graft_error_query", "__graft_error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
+        } catch { case NonFatal(e2) =>
           System.err.println(s"[verify] $name error-marker write failed: ${e2.getMessage}")
         }
       }

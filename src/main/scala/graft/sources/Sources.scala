@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Batch source abstraction (reference: BatchDataSource,
   * aligned/data_source/batch_data_source.py:136-344). A source produces a
@@ -179,8 +182,24 @@ final case class BucketedParquetSource(path: String, bucketKeys: Seq[String],
   }
 }
 
-/** Shared generation-log machinery for the log-structured stores
-  * ([[LogUpsertSource]], [[BucketedLogUpsertSource]]): monotonic per-path
+/** One parquet footer, opened on the driver — no Spark job: the file's row
+  * count and the Spark schema that stock inference derives from the same
+  * footer (Spark's own `readSchemaFromFooter` and converter, under this
+  * session's parquet confs: nanosAsLong, int96, binary-as-string, NTZ
+  * inference). Stock `spark.read.parquet(p)` runs a one-task job to do
+  * exactly this. */
+private[graft] object ParquetFooter {
+  def read(spark: SparkSession, file: FileStatus): (Long, StructType) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    try (r.getRecordCount, ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, r.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    finally r.close()
+  }
+}
+
+/** Shared generation-log machinery under [[GenLogStore]]: monotonic per-path
   * generation counters, writer-nonce stamps, and the single-writer guard. */
 private[graft] object GenLog {
   val G = "__gen"
@@ -277,7 +296,7 @@ private[graft] object GenLog {
   /** Fold provenance marker `_folded_<lo>_<hi>` (underscore prefix →
     * invisible to Spark's file index): a fold's dest generation records the
     * inclusive snapshot range it subsumed, which is what makes time travel
-    * ([[LogUpsertSource.readAt]]) HONEST — a request strictly inside a
+    * ([[GenLogStore.readAt]]) HONEST — a request strictly inside a
     * folded range fails loudly instead of silently returning the post-fold
     * state. Plain append generations carry no marker; their range is
     * [g, g]. Written AFTER the fold's rename and BEFORE its input deletes:
@@ -499,7 +518,7 @@ private[graft] object GenLog {
     ()
   }
 
-  /** The fold epilogue shared by all four fold sites: stamp the dest with
+  /** The epilogue of the one fold ([[GenLogStore]]): stamp the dest with
     * this process's nonce and the folded range (min lo / max hi over the
     * PINNED inputs), then delete exactly those inputs and release their
     * claims. Deleting only the pinned set — never a fresh listing — is
@@ -560,37 +579,38 @@ private[graft] object GenLog {
   private[graft] def resetCountersForTest(): Unit = { gens.clear(); sizes.clear() }
 }
 
-/** Log-structured upsert store: every upsert APPENDS its batch under a new
-  * `__gen=N` hive partition and the read resolves keys to their LATEST
-  * generation — the Delta/Iceberg commit-log idea (append + resolve, never
-  * read-modify-write) with no jar. Built for high-frequency upsert sinks
-  * (the staged streaming gates' online store): per-batch cost is O(batch)
-  * — one plain parquet append, no old-side read, no anti-join, no rewrite,
-  * no rename — where [[ParquetSource.upsert]] pays O(store) per batch and
-  * even [[BucketedParquetSource]] pays O(touched buckets). Measured at ×100
-  * state density this is the difference between a 47× and a single-digit
-  * gate ratio (SCALE.md round 14).
+/** The generation-log protocol of both log stores, written once:
+  * [[LogUpsertSource]] and [[BucketedLogUpsertSource]] differ only in the
+  * layout under each `__gen=N` dir — how one generation's rows are written
+  * ([[writeGen]]) and which hive partition columns nest under `__gen`
+  * ([[nested]]). Everything else has one owner here: the generation scan,
+  * the append, `overwrite`, `readAt`, and the fold that [[compact]] and
+  * [[compactTail]] run over different pinned input sets.
   *
-  * Semantics: upsert-by-key with latest-write-wins — exactly update-mode
-  * streaming's contract (each micro-batch re-emits a key's CUMULATIVE row,
-  * so the newest emission is the truth). Read = one window pass keeping
-  * row_number()==1 per key ordered by generation desc; duplicates of a key
-  * WITHIN one generation are not disambiguated (update-mode emissions are
-  * per-key unique by construction; documented, not guarded). Redelivered
-  * (at-least-once) batches append identical rows under a newer generation
-  * and resolve away. Generations are monotonic per path: a process-local
-  * counter seeded from the existing directory listing, so a restart
-  * (q212's recovery shape) continues above every persisted generation.
+  * Every upsert APPENDS its batch under a new `__gen=N` hive partition and
+  * the read resolves keys to their LATEST generation — the Delta/Iceberg
+  * commit-log idea (append + resolve, never read-modify-write) with no
+  * jar. Semantics: upsert-by-key with latest-write-wins — exactly
+  * update-mode streaming's contract (each micro-batch re-emits a key's
+  * CUMULATIVE row, so the newest emission is the truth). Read = one window
+  * pass keeping row_number()==1 per key ordered by generation desc;
+  * duplicates of a key WITHIN one generation are not disambiguated
+  * (update-mode emissions are per-key unique by construction; documented,
+  * not guarded). Redelivered (at-least-once) batches append identical rows
+  * under a newer generation and resolve away. Generations are monotonic
+  * per path: a process-local counter seeded from the existing directory
+  * listing, so a restart (q212's recovery shape) continues above every
+  * persisted generation.
   *
   * This is an UPSERT store, not an append log: `insert` fails loudly
-  * (see its scaladoc) rather than silently collapsing duplicate keys.
-  * NULL entity keys: the resolve window groups NULLs together, so
-  * null-keyed rows collapse to one latest row — a DIVERGENCE from the
-  * anti-join stores (ParquetSource/BucketedParquetSource), whose
-  * null-safe-less join never matches NULL keys and therefore accumulates
-  * them. Entity keys are non-null by contract; the divergence is
-  * spec-pinned (LogUpsertSourceSpec), not guarded — a per-batch null scan
-  * would tax every micro-batch for a contract violation.
+  * rather than silently collapsing duplicate keys. NULL entity keys: the
+  * resolve window groups NULLs together, so null-keyed rows collapse to
+  * one latest row — a DIVERGENCE from the anti-join stores
+  * (ParquetSource/BucketedParquetSource), whose null-safe-less join never
+  * matches NULL keys and therefore accumulates them. Entity keys are
+  * non-null by contract; the divergence is spec-pinned
+  * (LogUpsertSourceSpec), not guarded — a per-batch null scan would tax
+  * every micro-batch for a contract violation.
   *
   * Compaction bounds the read cost and file count, which otherwise grow
   * with total EMISSIONS. The ENGINE enforces it, TIERED like any LSM:
@@ -600,183 +620,104 @@ private[graft] object GenLog {
   * [[compactTail]] (merge only the recent tail runs, O(tail emissions),
   * the large base generation's files untouched), and the MAJOR [[compact]]
   * (full O(live keys) rewrite) only when the accumulated tail has grown to
-  * the base's size ([[GenLog.tieredTrigger]]) — so the expensive rewrite
-  * is amortized over base-sized progress, the classic size-ratio merge
-  * schedule. At 100 TB
-  * the same fold can also run as a detached periodic OPTIMIZE via
-  * [[compact]]. Cross-process APPENDS are safe where the filesystem
-  * provides atomic create-no-overwrite (HDFS/ABFS): a writer atomically
-  * CLAIMS its generation number before writing ([[GenLog.claimGen]] —
-  * create-exclusive `_claim_<N>` marker, honest atomicity caveats in its
-  * scaladoc), so two processes cannot interleave files in one generation;
-  * concurrent upserts land unique generations totally ordered by claim
-  * order, which is exactly latest-wins. The per-generation writer-nonce
-  * stamp remains as the detection backstop
-  * ([[GenLog.assertSingleWriter]]). Folds coexist with concurrent
-  * appends: a fold PINS its input set before reading, deletes exactly
-  * that set, and its dest ORDERS at the folded range's upper bound
+  * the base's size ([[GenLog.tieredTrigger]]) — the classic size-ratio
+  * merge schedule. At 100 TB the same fold can also run as a detached
+  * periodic OPTIMIZE via [[compact]]. Cross-process APPENDS are safe where
+  * the filesystem provides atomic create-no-overwrite (HDFS/ABFS): a
+  * writer atomically CLAIMS its generation number before writing
+  * ([[GenLog.claimGen]] — create-exclusive `_claim_<N>` marker, honest
+  * atomicity caveats in its scaladoc), so two processes cannot interleave
+  * files in one generation; concurrent upserts land unique generations
+  * totally ordered by claim order, which is exactly latest-wins. The
+  * per-generation writer-nonce stamp remains as the detection backstop
+  * ([[GenLog.assertSingleWriter]]). Folds coexist with concurrent appends:
+  * a fold PINS its input set before reading, deletes exactly that set, and
+  * its dest ORDERS at the folded range's upper bound
   * ([[GenLog.effectiveGens]]) — a foreign append landing mid-fold is
   * neither read, nor deleted, nor out-ordered. Concurrent FOLDS and
   * [[overwrite]] remain single-OPERATOR discipline: two racing folds
   * either fail loudly mid-read (inputs deleted under them — staging is
   * outside the store, nothing renamed, no corruption) or both land,
   * resolving to identical values by latest-wins. */
-final case class LogUpsertSource(path: String, keys: Seq[String],
-    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery,
-    // bound each generation's file count by batch BYTES
-    // (GenLog.boundGenFiles) — right for BATCH callers, whose frames
-    // arrive at scan/session parallelism regardless of size (the r15
-    // q245/q248 finding: a fanned 500-row frame minted 32 tiny files per
-    // generation). The streaming gates OPT OUT: their sink width is
-    // already layout-managed (width-1 gates coalesce(1); scale widths
-    // write exactly width files), and the bound's repartition added one
-    // exchange per micro-batch AND per fold — measured at the ×10 curve
-    // as +1-5 s on every gate before the opt-out.
-    boundFiles: Boolean = true) extends WritableSource {
-  require(autoCompactEvery >= 2,
-    s"autoCompactEvery must be >= 2 (1 would fold the whole store on every " +
-      s"append, re-creating the O(store)-per-batch cost this store removes), " +
-      s"got $autoCompactEvery")
+sealed abstract class GenLogStore extends WritableSource {
+  def path: String
+  def keys: Seq[String]
+  def autoCompactEvery: Int
+  /** Write `df` as one generation under `dir` in this store's layout. */
+  protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit
+  /** The hive partition columns this layout nests under `__gen`. */
+  protected def nested: Seq[StructField]
+
   private val G = GenLog.G
-  private def resolveLatest(raw: DataFrame, eff: Map[Long, Long]): DataFrame =
-    GenLog.resolveLatest(raw, eff, keys, Seq(G))
-  def read(spark: SparkSession): DataFrame = {
-    val infos = GenLog.scanStore(spark, path)
-    GenLog.assertSingleWriter(path, infos)
-    if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
-    resolveLatest(spark.read.option("basePath", path)
-      .parquet(infos.map(_.dir.toString): _*), GenLog.effectiveGens(infos))
-  }
+  private def layout = StructField(G, LongType) +: nested
+
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
+
   /** Fails loudly: the resolve collapses to ONE row per key, so an
     * append-style insert cannot keep duplicate keys — delegating to upsert
     * would silently turn "append these rows" into "replace by key" (rows
     * lost on generic contract paths that insert, e.g. incremental
-    * materialization's fresh-row insert or keyless prediction logging).
-    * Callers wanting upsert say upsert; append logs belong on
-    * ParquetSource/PartitionedParquetSource. */
+    * materialization's fresh-row insert or keyless prediction logging). */
   def insert(df: DataFrame): Unit =
     throw new UnsupportedOperationException(
-      s"LogUpsertSource($path) is an upsert-by-key store: its read resolves to one " +
+      s"${getClass.getSimpleName}($path) is an upsert-by-key store: its read resolves to one " +
         "row per key, so insert's append-all-rows contract cannot hold. Call " +
         "upsert(df, keys) explicitly, or configure an append-shaped source " +
         "(ParquetSource / PartitionedParquetSource) for insert-style views.")
-  def overwrite(df: DataFrame): Unit = StageAndSwap.locked(df.sparkSession, path) {
-    val spark = df.sparkSession
-    val dest = new org.apache.hadoop.fs.Path(path)
-    dest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dest, true)
-    // gen=0 written explicitly (works for the empty frame too, where
-    // partitionBy would emit no files and leave the dir schema-less)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$path/$G=0")
-    GenLog.markWriter(spark, s"$path/$G=0")
-    spark.catalog.refreshByPath(path)
-  }
-  def upsert(df: DataFrame, upsertKeys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
-    require(upsertKeys == keys,
-      s"LogUpsertSource($path) resolves reads by $keys; an upsert keyed by " +
-        s"$upsertKeys would not merge on read")
-    val spark = df.sparkSession
-    val gen = GenLog.claimGen(spark, path)
-    // file count bounded by batch BYTES, not writer parallelism (§6) —
-    // see GenLog.boundGenFiles
-    val bounded = if (boundFiles) GenLog.boundGenFiles(df) else df
-    bounded.write.mode(SaveMode.Append).parquet(s"$path/$G=$gen")
-    // an EMPTY batch writes no data files (or, from a zero-partition plan,
-    // none at all). Detected by ONE cheap listing — never a per-batch
-    // isEmpty job, whose executeTake(1) re-ran the whole upstream pipeline.
-    // An empty upsert is then a NO-OP: the dir is dropped and its claim
-    // released, so empty stream-finalize batches don't advance the log and
-    // can't trigger spurious O(tail) folds (measured at ×10: extra
-    // fold-per-gate from empty finalize generations). Exception: the
-    // store's FIRST generation is kept as the schema donor — a read of an
-    // all-empty store must return the empty frame WITH schema, not a
-    // schema-inference error.
-    val kept = GenLog.resolveEmptyGen(spark, path, gen) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row]
-        .repartition(1), df.schema)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/$G=$gen")
-    }
-    if (!kept) return
-    GenLog.markWriter(spark, s"$path/$G=$gen")
-    spark.catalog.refreshByPath(path)
-    // amortized auto-compaction bounds generations (and resolve cost) BY
-    // THE ENGINE — a production stream runs thousands of micro-batches and
-    // must not depend on the operator remembering the OPTIMIZE job
-    // (VERDICT r14 #1). Tiered, like any LSM: the routine fold is a MINOR
-    // one (merge only the small recent runs — O(tail), the large base
-    // generation's files untouched); a MAJOR fold (rewrite everything,
-    // O(live keys)) runs only when the accumulated tail has grown to the
-    // base's size, so its cost is amortized over tail-sized progress.
-    GenLog.tieredTrigger(spark, path, autoCompactEvery,
-      major = () => compact(spark), minor = () => compactTail(spark))
-  }
 
-  /** Fold the whole log into one resolved generation — the OPTIMIZE half
-    * of the LSM story. Read cost grows with total EMISSIONS (every
-    * generation's rows flow through the resolve window) until a compaction
-    * resets it to O(live keys); [[upsert]] triggers this automatically
-    * every `autoCompactEvery` generations, and a deployment can also run
-    * it as a detached periodic job. The fold lands under a NEW top
-    * generation (not gen=0) via stage-and-rename, so a crash between
-    * stages leaves every old generation intact and a half-written
-    * compaction is invisible to the resolve (its generation dir only
-    * appears on the final rename). */
-  def compact(spark: SparkSession): Unit = StageAndSwap.locked(spark, path) {
-    if (!exists(spark)) return
-    // PIN the input set in one scan: the fold reads exactly these dirs and
-    // later deletes exactly these dirs — a foreign append landing between
-    // pin and delete is neither folded nor destroyed (a fresh listing at
-    // delete time WOULD destroy it)
-    val inputs = GenLog.scanStore(spark, path)
-    if (inputs.isEmpty) return
-    GenLog.assertSingleWriter(path, inputs)
-    val resolved = resolveLatest(spark.read.option("basePath", path)
-      .parquet(inputs.map(_.dir.toString): _*), GenLog.effectiveGens(inputs))
-    val gen = GenLog.claimGen(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(s"$path/$G=$gen")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // staging lives OUTSIDE the store dir: a crash-leftover dir named
-    // "__gen=N__tmp" INSIDE it would parse as a string partition and
-    // corrupt the numeric generation ordering
-    val store = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + s"__graft_compact_g$gen")
-    // materialize the fold FULLY before dropping any input generation
-    // (self-overwrite discipline, same as Caching.compact)
-    (if (boundFiles) GenLog.boundGenFiles(resolved) else resolved)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (!fs.rename(staging, dest))
-      throw new java.io.IOException(s"compact: rename $staging -> $dest failed")
-    GenLog.retireInputs(spark, path, dest.toString, inputs)
-  }
-
-  /** The MINOR fold of the tiered schedule: merge every generation EXCEPT
-    * the base (lowest) into one new top generation — O(tail emissions),
-    * the base generation's files physically untouched (spec-pinned). Exact
-    * by the resolve order: the merged rows keep within-tail latest-wins,
-    * land under a generation ABOVE the base, and a key present in both
-    * still resolves to the tail copy — precisely what the unmerged log
-    * resolved to. Same crash-safe protocol as [[compact]]: staging outside
-    * the store, rename in, only then drop the inputs. */
-  def compactTail(spark: SparkSession): Unit = StageAndSwap.locked(spark, path) {
-    if (!exists(spark)) return
-    val infos = GenLog.scanStore(spark, path) // PINNED, same as compact
+  /** The store's generations, after the single-writer check every read and
+    * fold runs first. */
+  protected def scanChecked(spark: SparkSession): Seq[GenLog.GenInfo] = {
+    val infos = GenLog.scanStore(spark, path)
     GenLog.assertSingleWriter(path, infos)
-    val tail = infos.drop(1)
-    if (tail.length < 2) return // nothing to merge: fold would just rewrite one run
-    val resolved = resolveLatest(spark.read.option("basePath", path)
-      .parquet(tail.map(_.dir.toString): _*), GenLog.effectiveGens(tail))
-    val gen = GenLog.claimGen(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(s"$path/$G=$gen")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val store = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + s"__graft_compact_g$gen")
-    (if (boundFiles) GenLog.boundGenFiles(resolved) else resolved)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (!fs.rename(staging, dest))
-      throw new java.io.IOException(s"compactTail: rename $staging -> $dest failed")
-    GenLog.retireInputs(spark, path, dest.toString, tail)
+    infos
+  }
+
+  /** The stored data schema from ONE parquet footer — the first data file
+    * of the first generation holding one, opened on the driver, so no
+    * Spark job runs. Every generation shares the schema (the store has no
+    * cross-generation schema evolution; conformance casts live at the
+    * contract layer). None when no generation holds a data file. */
+  private def footerSchema(spark: SparkSession, infos: Seq[GenLog.GenInfo]): Option[StructType] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Spark's own file-index rule: `_`/`.` names are hidden, except hive
+    // partition dirs like `__bucket=0`
+    def visible(s: FileStatus) = {
+      val n = s.getPath.getName
+      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    }
+    def firstFile(dir: Path): Option[FileStatus] = {
+      val (files, dirs) = fs.listStatus(dir).filter(visible).partition(_.isFile)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    infos.iterator.flatMap(i => firstFile(i.dir)).nextOption()
+      .map(f => ParquetFooter.read(spark, f)._2)
+  }
+
+  /** The stored data schema without the layout columns; None when the
+    * store is empty/absent or the footer read races a fold. The
+    * point-lookup guard in ContractStore calls this per online lookup. */
+  private[graft] def storedSchema(spark: SparkSession): Option[StructType] =
+    scala.util.Try(footerSchema(spark, GenLog.scanStore(spark, path))).toOption.flatten
+
+  /** The ONE generation scan: `dirs` under the store root, read with the
+    * footer's data schema plus the layout columns, so no read, lookup or
+    * fold launches a schema-inference job. With no footer to read it falls
+    * back to stock inference and its loud error. */
+  protected def scan(spark: SparkSession, infos: Seq[GenLog.GenInfo], dirs: Seq[Path]): DataFrame = {
+    val reader = spark.read.option("basePath", path)
+    footerSchema(spark, infos).fold(reader)(s => reader.schema(StructType(s ++ layout)))
+      .parquet(dirs.map(_.toString): _*)
+  }
+
+  /** Latest-wins over a scan, layout columns dropped. */
+  protected def resolve(raw: DataFrame, infos: Seq[GenLog.GenInfo]): DataFrame =
+    GenLog.resolveLatest(raw, GenLog.effectiveGens(infos), keys, layout.map(_.name))
+
+  def read(spark: SparkSession): DataFrame = {
+    val infos = scanChecked(spark)
+    if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
+    resolve(scan(spark, infos, infos.map(_.dir)), infos)
   }
 
   /** TIME TRAVEL (the Delta `versionAsOf` idea on the generation log): the
@@ -790,15 +731,143 @@ final case class LogUpsertSource(path: String, keys: Seq[String],
     * VACUUM-retention trade. [[snapshots]] lists the points currently
     * readable. */
   def readAt(spark: SparkSession, gen: Long): DataFrame = {
-    val infos = GenLog.scanStore(spark, path)
-    GenLog.assertSingleWriter(path, infos)
-    resolveLatest(spark.read.option("basePath", path)
-      .parquet(GenLog.dirsAt(path, infos, gen).map(_.toString): _*),
-      GenLog.effectiveGens(infos))
+    val infos = scanChecked(spark)
+    resolve(scan(spark, infos, GenLog.dirsAt(path, infos, gen)), infos)
   }
 
   /** Exact snapshot points currently retained, ascending. */
   def snapshots(spark: SparkSession): Seq[Long] = GenLog.snapshotGens(spark, path)
+
+  /** Has a just-written dir landed any data? */
+  private def landed(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    GenLog.hasDataChildren(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** The schema donor for a generation that landed no data (partitionBy
+    * writes NO files for an empty frame, a zero-partition plan none at
+    * all): one empty schema-bearing file in the layout's all-zero leaf, so
+    * the generation stays readable. Built from an empty RDD, never from the
+    * written frame — re-running that would re-run its whole upstream. */
+  private def writeDonor(spark: SparkSession, schema: StructType, dir: String): Unit =
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
+      .write.mode(SaveMode.Overwrite).parquet(nested.foldLeft(dir)((d, f) => s"$d/${f.name}=0"))
+
+  def overwrite(df: DataFrame): Unit = StageAndSwap.locked(df.sparkSession, path) {
+    val spark = df.sparkSession
+    val dest = new Path(path)
+    dest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dest, true)
+    val dir = s"$path/$G=0"
+    writeGen(df, SaveMode.Overwrite, dir)
+    if (!landed(spark, dir)) writeDonor(spark, df.schema, dir)
+    GenLog.markWriter(spark, dir)
+    spark.catalog.refreshByPath(path)
+  }
+
+  def upsert(df: DataFrame, upsertKeys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
+    require(upsertKeys == keys,
+      s"${getClass.getSimpleName}($path) resolves reads by $keys; an upsert keyed by " +
+        s"$upsertKeys would not merge on read")
+    val spark = df.sparkSession
+    val gen = GenLog.claimGen(spark, path)
+    val dir = s"$path/$G=$gen"
+    writeGen(df, SaveMode.Append, dir)
+    // an EMPTY batch writes no data files. Detected by ONE cheap listing —
+    // never a per-batch isEmpty job, whose executeTake(1) re-ran the whole
+    // upstream pipeline. An empty upsert is then a NO-OP: the dir is
+    // dropped and its claim released, so empty stream-finalize batches
+    // don't advance the log and can't trigger spurious O(tail) folds
+    // (measured at ×10: extra fold-per-gate from empty finalize
+    // generations). Exception: the store's FIRST generation is kept as
+    // the schema donor — a read of an all-empty store must return the
+    // empty frame WITH schema, not a schema-inference error.
+    if (!GenLog.resolveEmptyGen(spark, path, gen)(writeDonor(spark, df.schema, dir))) return
+    GenLog.markWriter(spark, dir)
+    spark.catalog.refreshByPath(path)
+    // amortized auto-compaction bounds generations (and resolve cost) BY
+    // THE ENGINE — a production stream runs thousands of micro-batches and
+    // must not depend on the operator remembering the OPTIMIZE job
+    // (VERDICT r14 #1); tiered, see GenLog.tieredTrigger
+    GenLog.tieredTrigger(spark, path, autoCompactEvery,
+      major = () => compact(spark), minor = () => compactTail(spark))
+  }
+
+  /** The MAJOR fold: the whole log into one resolved generation — the
+    * OPTIMIZE half of the LSM story. Read cost grows with total EMISSIONS
+    * (every generation's rows flow through the resolve window) until a
+    * fold resets it to O(live keys); [[upsert]] triggers it through the
+    * tiered schedule, and a deployment can also run it as a detached
+    * periodic job. */
+  def compact(spark: SparkSession): Unit = fold(spark, "compact", 1)(identity)
+
+  /** The MINOR fold of the tiered schedule: merge every generation EXCEPT
+    * the base (lowest) into one new top generation — O(tail emissions),
+    * the base generation's files physically untouched (spec-pinned). Exact
+    * by the resolve order: the merged rows keep within-tail latest-wins,
+    * land under a generation ABOVE the base, and a key present in both
+    * still resolves to the tail copy — precisely what the unmerged log
+    * resolved to. Nothing to merge below two tail runs. */
+  def compactTail(spark: SparkSession): Unit = fold(spark, "compactTail", 2)(_.drop(1))
+
+  /** The one fold body. PIN the input set in one scan: the fold reads
+    * exactly these dirs and later deletes exactly these dirs — a foreign
+    * append landing between pin and delete is neither folded nor destroyed
+    * (a fresh listing at delete time WOULD destroy it). The fold lands
+    * under a NEW top generation via stage-and-rename, so a crash between
+    * stages leaves every old generation intact and a half-written fold is
+    * invisible to the resolve (its generation dir only appears on the
+    * final rename); the inputs go only after that ([[GenLog.retireInputs]]). */
+  private def fold(spark: SparkSession, op: String, minInputs: Int)(
+      pick: Seq[GenLog.GenInfo] => Seq[GenLog.GenInfo]): Unit = StageAndSwap.locked(spark, path) {
+    if (!exists(spark)) return
+    val infos = scanChecked(spark)
+    val inputs = pick(infos)
+    if (inputs.length < minInputs) return
+    val resolved = resolve(scan(spark, infos, inputs.map(_.dir)), infos)
+    val gen = GenLog.claimGen(spark, path)
+    val dest = new Path(s"$path/$G=$gen")
+    // staging lives OUTSIDE the store dir: a crash-leftover dir named
+    // "__gen=N__tmp" INSIDE it would parse as a string partition and
+    // corrupt the numeric generation ordering
+    val store = new Path(path)
+    val staging = new Path(store.getParent, store.getName + s"__graft_compact_g$gen")
+    // materialize the fold FULLY before dropping any input generation
+    // (self-overwrite discipline, same as Caching.compact)
+    writeGen(resolved, SaveMode.Overwrite, staging.toString)
+    if (!landed(spark, staging.toString)) writeDonor(spark, resolved.schema, staging.toString)
+    if (!dest.getFileSystem(spark.sparkContext.hadoopConfiguration).rename(staging, dest))
+      throw new java.io.IOException(s"$op: rename $staging -> $dest failed")
+    GenLog.retireInputs(spark, path, dest.toString, inputs)
+  }
+}
+
+/** Log-structured upsert store ([[GenLogStore]], one plain parquet dir per
+  * generation). Built for high-frequency upsert sinks (the staged streaming
+  * gates' online store): per-batch cost is O(batch) — one plain parquet
+  * append, no old-side read, no anti-join, no rewrite, no rename — where
+  * [[ParquetSource.upsert]] pays O(store) per batch and even
+  * [[BucketedParquetSource]] pays O(touched buckets). Measured at ×100
+  * state density this is the difference between a 47× and a single-digit
+  * gate ratio (SCALE.md round 14). */
+final case class LogUpsertSource(path: String, keys: Seq[String],
+    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery,
+    // bound each generation's file count by batch BYTES
+    // (GenLog.boundGenFiles) — right for BATCH callers, whose frames
+    // arrive at scan/session parallelism regardless of size (the r15
+    // q245/q248 finding: a fanned 500-row frame minted 32 tiny files per
+    // generation). The streaming gates OPT OUT: their sink width is
+    // already layout-managed (width-1 gates coalesce(1); scale widths
+    // write exactly width files), and the bound's repartition added one
+    // exchange per micro-batch AND per fold — measured at the ×10 curve
+    // as +1-5 s on every gate before the opt-out.
+    boundFiles: Boolean = true) extends GenLogStore {
+  require(autoCompactEvery >= 2,
+    s"autoCompactEvery must be >= 2 (1 would fold the whole store on every " +
+      s"append, re-creating the O(store)-per-batch cost this store removes), " +
+      s"got $autoCompactEvery")
+  protected def nested: Seq[StructField] = Nil
+  protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit =
+    (if (boundFiles) GenLog.boundGenFiles(df) else df).write.mode(mode).parquet(dir)
 }
 
 object LogUpsertSource {
@@ -808,7 +877,7 @@ object LogUpsertSource {
 }
 
 /** LSM-composed store: [[BucketedParquetSource]]'s hash-bucket layout nested
-  * under [[LogUpsertSource]]'s generation log — `path/__gen=N/__bucket=H/…`.
+  * under the generation log ([[GenLogStore]]) — `path/__gen=N/__bucket=H/…`.
   * Each half of the r14 store pair solved half of the problem: the log made
   * APPENDS O(batch) but left point lookups scanning every emission; the
   * buckets made lookups prune but put an old-side read back into every
@@ -818,34 +887,32 @@ object LogUpsertSource {
   * `__bucket`, with the bucket ids computed from the entity frame itself
   * and never more than `numBuckets` ints reaching the driver
   * ([[readForEntities]]). This is the memtable/SSTable split of an LSM
-  * tree; [[compact]] — auto-triggered by [[upsert]] every
-  * `autoCompactEvery` generations, like [[LogUpsertSource]] — is the merge
-  * that keeps both halves bounded, and it PRESERVES the bucket layout so
-  * lookups stay pruned after every fold. At 100 TB, size `numBuckets` so a
-  * bucket's live rows ≈ a few GB; lookup cost is then
+  * tree; the folds are the merge that keeps both halves bounded, and they
+  * PRESERVE the bucket layout (every generation is written through the same
+  * [[writeGen]]) so lookups stay pruned after every fold. At 100 TB, size
+  * `numBuckets` so a bucket's live rows ≈ a few GB; lookup cost is then
   * O(live-bucket + its log tail), flat in store size (spec-measured).
-  * Same single-writer nonce guard and null-key contract as
-  * [[LogUpsertSource]] (VERDICT r14 #3; reference upsert semantics:
-  * sources/local.py:317-340). */
+  * (VERDICT r14 #3; reference upsert semantics: sources/local.py:317-340.) */
 final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     numBuckets: Int = 8,
-    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery) extends WritableSource {
+    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery) extends GenLogStore {
   require(numBuckets > 0, s"numBuckets must be > 0, got $numBuckets")
   require(autoCompactEvery >= 2,
     s"autoCompactEvery must be >= 2, got $autoCompactEvery")
-  private val G = GenLog.G
   private val B = "__bucket"
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(B, pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int"))
-  private def resolve(raw: DataFrame, eff: Map[Long, Long]): DataFrame =
-    GenLog.resolveLatest(raw, eff, keys, Seq(G, B))
-  def read(spark: SparkSession): DataFrame = {
-    val infos = GenLog.scanStore(spark, path)
-    GenLog.assertSingleWriter(path, infos)
-    if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
-    resolve(spark.read.option("basePath", path)
-      .parquet(infos.map(_.dir.toString): _*), GenLog.effectiveGens(infos))
-  }
+  protected def nested: Seq[StructField] = Seq(StructField(B, IntegerType))
+  // hash write-distribution on the bucket (optimization r15; the Iceberg
+  // write.distribution-mode=hash default, guide §6): an N-partition batch
+  // written straight through partitionBy emits up to N files PER BUCKET
+  // per generation — file count (and every later fold/read/listing) grows
+  // with the writer's parallelism instead of the layout. One narrow
+  // shuffle on the tiny bucket id bounds it to ≤ numBuckets files per
+  // generation at any scale; the append stays O(batch).
+  protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit =
+    withBucket(df).repartition(col(B)).write.mode(mode).partitionBy(B).parquet(dir)
+
   /** The point-lookup path: latest rows for exactly the keys present in
     * `entities` — scans ONLY those keys' buckets (their ids derived by a
     * tiny distributed job over the entity frame; ≤ numBuckets ints collect)
@@ -856,157 +923,20 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     * join/predicate (onlineFeaturesFor layers its IN-list pushdown on
     * top). */
   def readForEntities(spark: SparkSession, entities: DataFrame): DataFrame = {
-    val infos = GenLog.scanStore(spark, path)
-    GenLog.assertSingleWriter(path, infos)
+    val infos = scanChecked(spark)
     if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
-    val raw = spark.read.option("basePath", path)
-      .parquet(infos.map(_.dir.toString): _*)
+    val raw = scan(spark, infos, infos.map(_.dir))
     // xxhash64 is TYPE-sensitive (hash(1: int) != hash(1L)): probe values
     // must hash with the STORE's own key types or the pruning silently
     // selects the wrong buckets — cast the probe frame to the stored
-    // schema before bucketing (footer-only schema read, no data scan)
+    // schema (the scan's footer schema) before bucketing
     val stored = raw.schema.map(f => f.name -> f.dataType).toMap
     val probes = keys.foldLeft(entities.select(keys.map(col): _*).distinct()) {
       (df, k) => stored.get(k).map(t => df.withColumn(k, col(k).cast(t))).getOrElse(df)
     }
     val ids = withBucket(probes).select(B).distinct().collect().map(_.getInt(0)).toIndexedSeq
-    if (ids.isEmpty) read(spark).filter(lit(false))
-    else resolve(raw.filter(col(B).isin(ids: _*)), GenLog.effectiveGens(infos))
+    resolve(raw.filter(if (ids.isEmpty) lit(false) else col(B).isin(ids: _*)), infos)
   }
-  override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
-  /** Fails loudly — same contract as [[LogUpsertSource.insert]]. */
-  def insert(df: DataFrame): Unit =
-    throw new UnsupportedOperationException(
-      s"BucketedLogUpsertSource($path) is an upsert-by-key store: its read resolves " +
-        "to one row per key, so insert's append-all-rows contract cannot hold. " +
-        "Call upsert(df, keys) explicitly, or configure an append-shaped source.")
-  def overwrite(df: DataFrame): Unit = StageAndSwap.locked(df.sparkSession, path) {
-    val spark = df.sparkSession
-    val dest = new org.apache.hadoop.fs.Path(path)
-    dest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dest, true)
-    if (df.isEmpty)
-      // partitionBy writes NO files for an empty frame (schema-less dir);
-      // materialize the schema in one concrete (gen, bucket) leaf instead
-      df.write.mode(SaveMode.Overwrite).parquet(s"$path/$G=0/$B=0")
-    else
-      withBucket(df).write.mode(SaveMode.Overwrite).partitionBy(B).parquet(s"$path/$G=0")
-    GenLog.markWriter(spark, s"$path/$G=0")
-    spark.catalog.refreshByPath(path)
-  }
-  def upsert(df: DataFrame, upsertKeys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
-    require(upsertKeys == keys,
-      s"BucketedLogUpsertSource($path) resolves reads by $keys; an upsert keyed " +
-        s"by $upsertKeys would not merge on read")
-    val spark = df.sparkSession
-    val gen = GenLog.claimGen(spark, path)
-    // hash write-distribution on the bucket (optimization r15; the Iceberg
-    // write.distribution-mode=hash default, guide §6): an N-partition batch
-    // written straight through partitionBy emits up to N files PER BUCKET
-    // per generation — file count (and every later fold/read/listing) grows
-    // with the writer's parallelism instead of the layout. One narrow
-    // shuffle on the tiny bucket id bounds it to ≤ numBuckets files per
-    // generation at any scale; the append stays O(batch) with no old-side
-    // read, no anti-join, no rename.
-    withBucket(df).repartition(col(B))
-      .write.mode(SaveMode.Append).partitionBy(B).parquet(s"$path/$G=$gen")
-    // an EMPTY batch through partitionBy writes no data files at all. One
-    // cheap listing (never a per-batch df.isEmpty job) detects it; the
-    // empty upsert is then a NO-OP — dropped generation, claim released —
-    // unless it is the store's first (schema-donor) generation. See
-    // [[GenLog.resolveEmptyGen]].
-    val kept = GenLog.resolveEmptyGen(spark, path, gen) {
-      df.drop(B).write.mode(SaveMode.Overwrite).parquet(s"$path/$G=$gen/$B=0")
-    }
-    if (!kept) return
-    GenLog.markWriter(spark, s"$path/$G=$gen")
-    spark.catalog.refreshByPath(path)
-    // tiered like LogUpsertSource: minor O(tail) folds routinely, major
-    // O(live keys) only once the tail reaches the base's size
-    GenLog.tieredTrigger(spark, path, autoCompactEvery,
-      major = () => compact(spark), minor = () => compactTail(spark))
-  }
-  /** The crash-safe LSM merge, bucket layout preserved: resolve, re-bucket,
-    * stage OUTSIDE the store, rename in as the new top generation, then
-    * drop the old ones (same protocol as [[LogUpsertSource.compact]]). */
-  def compact(spark: SparkSession): Unit = StageAndSwap.locked(spark, path) {
-    if (!exists(spark)) return
-    // PINNED input set, same protocol as LogUpsertSource.compact: read
-    // exactly these dirs, delete exactly these dirs
-    val inputs = GenLog.scanStore(spark, path)
-    if (inputs.isEmpty) return
-    GenLog.assertSingleWriter(path, inputs)
-    val resolved = resolve(spark.read.option("basePath", path)
-      .parquet(inputs.map(_.dir.toString): _*), GenLog.effectiveGens(inputs))
-    val gen = GenLog.claimGen(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(s"$path/$G=$gen")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val store = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + s"__graft_compact_g$gen")
-    withBucket(resolved).repartition(col(B)) // ≤ numBuckets files (see upsert)
-      .write.mode(SaveMode.Overwrite).partitionBy(B)
-      .parquet(staging.toString)
-    val hasData = GenLog.hasDataChildren(fs, staging)
-    if (!hasData)
-      // the store resolved to zero rows: partitionBy wrote no data files —
-      // materialize the schema so the renamed generation stays readable
-      resolved.write.mode(SaveMode.Overwrite).parquet(s"$staging/$B=0")
-    if (!fs.rename(staging, dest))
-      throw new java.io.IOException(s"compact: rename $staging -> $dest failed")
-    GenLog.retireInputs(spark, path, dest.toString, inputs)
-  }
-
-  /** MINOR fold, bucket layout preserved: merge every generation except
-    * the base into one new top generation — O(tail), base files untouched,
-    * lookups stay pruned afterwards. Same exactness argument and crash
-    * protocol as [[LogUpsertSource.compactTail]]. */
-  def compactTail(spark: SparkSession): Unit = StageAndSwap.locked(spark, path) {
-    if (!exists(spark)) return
-    val infos = GenLog.scanStore(spark, path) // PINNED, same as compact
-    GenLog.assertSingleWriter(path, infos)
-    val tail = infos.drop(1)
-    if (tail.length < 2) return
-    val resolved = resolve(spark.read.option("basePath", path)
-      .parquet(tail.map(_.dir.toString): _*), GenLog.effectiveGens(tail))
-    val gen = GenLog.claimGen(spark, path)
-    val dest = new org.apache.hadoop.fs.Path(s"$path/$G=$gen")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val store = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(
-      store.getParent, store.getName + s"__graft_compact_g$gen")
-    withBucket(resolved).repartition(col(B)) // ≤ numBuckets files (see upsert)
-      .write.mode(SaveMode.Overwrite).partitionBy(B)
-      .parquet(staging.toString)
-    val hasData = GenLog.hasDataChildren(fs, staging)
-    if (!hasData)
-      resolved.write.mode(SaveMode.Overwrite).parquet(s"$staging/$B=0")
-    if (!fs.rename(staging, dest))
-      throw new java.io.IOException(s"compactTail: rename $staging -> $dest failed")
-    GenLog.retireInputs(spark, path, dest.toString, tail)
-  }
-
-  /** The stored data schema from ONE generation dir (a single-dir footer
-    * read, not a whole-store partition discovery — the point-lookup guard
-    * in ContractStore calls this per online lookup): every generation
-    * shares the schema (the store has no cross-generation schema
-    * evolution; conformance casts live at the contract layer). None when
-    * the store is empty/absent or the probe read races a fold. */
-  private[graft] def storedSchema(spark: SparkSession): Option[org.apache.spark.sql.types.StructType] =
-    GenLog.scanStore(spark, path).headOption.flatMap(i =>
-      scala.util.Try(spark.read.parquet(i.dir.toString).schema).toOption)
-
-  /** TIME TRAVEL over the bucketed log — same contract, retention trade,
-    * and loud folded-range failure as [[LogUpsertSource.readAt]]. */
-  def readAt(spark: SparkSession, gen: Long): DataFrame = {
-    val infos = GenLog.scanStore(spark, path)
-    GenLog.assertSingleWriter(path, infos)
-    resolve(spark.read.option("basePath", path)
-      .parquet(GenLog.dirsAt(path, infos, gen).map(_.toString): _*),
-      GenLog.effectiveGens(infos))
-  }
-
-  /** Exact snapshot points currently retained, ascending. */
-  def snapshots(spark: SparkSession): Seq[Long] = GenLog.snapshotGens(spark, path)
 }
 
 final case class CsvSource(

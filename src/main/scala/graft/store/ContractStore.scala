@@ -575,8 +575,9 @@ final class ContractStore {
         // plain log store would window over every emission per lookup
         // (VERDICT r14 #3). Applies only when the store's keys are the
         // view's entity names untouched by renames AND the store's physical
-        // key types equal the declared entity types (ONE generation dir's
-        // footer via storedSchema — not a whole-store discovery): a store whose keys need a conformance cast could hold a
+        // key types equal the declared entity types (storedSchema: ONE
+        // parquet footer opened on the driver, no job): a store whose keys
+        // need a conformance cast could hold a
         // value ("01") whose cast image (1) hashes to a DIFFERENT bucket
         // than the probe's ("1") — pruning would silently miss it where the
         // full-scan path's post-cast filter matches.

@@ -3362,85 +3362,88 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
 class LogStoreClaimSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-  import graft.sources.LogUpsertSource
+  import graft.sources.{GenLog, LogUpsertSource}
 
-  test("a foreign in-flight claim forces the next writer PAST it; the foreign " +
-      "write then lands in its own generation and latest-wins spans both") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_claim1").toString + "/s"
-    val src = LogUpsertSource(dir, Seq("id"))
-    src.upsert(Seq((1L, "a")).toDF("id", "v"), Seq("id")) // gen 0
-    // another process has CLAIMED generation 1 but not yet written its data
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_claim_1"), false).close()
-    // this process 'restarts': its counter re-seeds from the dir listing
-    // (max __gen = 0), so WITHOUT the claim protocol it would mint 1 too
-    LogUpsertSource.resetCountersForTest()
-    src.upsert(Seq((2L, "b")).toDF("id", "v"), Seq("id"))
-    def gens() = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
-      .map(_.toString.split("/").last).filter(_.startsWith("__gen="))
-      .map(_.stripPrefix("__gen=").toLong).sorted.toSeq
-    assert(gens() == Seq(0L, 2L), s"the claimed generation must be skipped, got ${gens()}")
-    // the other process completes its write into its claimed generation
-    Seq((1L, "x")).toDF("id", "v").write.parquet(s"$dir/__gen=1")
-    assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
-      Map(1L -> "x", 2L -> "b"), "latest-wins must span both writers' generations")
-    // folds GC the claims of the generations they subsume
-    src.compact(spark)
-    val claims = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
-      .map(_.toString.split("/").last).filter(_.startsWith("_claim_")).sorted.toSeq
-    assert(claims == Seq("_claim_3"), s"stale claims must be GC'd with their dirs: $claims")
-    assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
-      Map(1L -> "x", 2L -> "b"))
-  }
+  for (l <- LogLayouts.both)
+    test(LogLayouts.named("a foreign in-flight claim forces the next writer PAST it; the foreign " +
+        "write then lands in its own generation and latest-wins spans both", l)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_claim1").toString + "/s"
+      val src = l.open(dir, GenLog.defaultAutoCompactEvery)
+      src.upsert(Seq((1L, "a")).toDF("id", "v"), Seq("id")) // gen 0
+      // another process has CLAIMED generation 1 but not yet written its data
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(new org.apache.hadoop.fs.Path(dir, "_claim_1"), false).close()
+      // this process 'restarts': its counter re-seeds from the dir listing
+      // (max __gen = 0), so WITHOUT the claim protocol it would mint 1 too
+      LogUpsertSource.resetCountersForTest()
+      src.upsert(Seq((2L, "b")).toDF("id", "v"), Seq("id"))
+      def gens() = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
+        .map(_.toString.split("/").last).filter(_.startsWith("__gen="))
+        .map(_.stripPrefix("__gen=").toLong).sorted.toSeq
+      assert(gens() == Seq(0L, 2L), s"the claimed generation must be skipped, got ${gens()}")
+      // the other process completes its write into its claimed generation
+      l.writeGen(Seq((1L, "x")).toDF("id", "v"), s"$dir/__gen=1")
+      assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        Map(1L -> "x", 2L -> "b"), "latest-wins must span both writers' generations")
+      // folds GC the claims of the generations they subsume
+      src.compact(spark)
+      val claims = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
+        .map(_.toString.split("/").last).filter(_.startsWith("_claim_")).sorted.toSeq
+      assert(claims == Seq("_claim_3"), s"stale claims must be GC'd with their dirs: $claims")
+      assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        Map(1L -> "x", 2L -> "b"))
+    }
 
-  test("a fold dest never out-orders a newer foreign append: the resolve orders " +
-      "by EFFECTIVE generation (the folded range's upper bound), not dir number") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_claim2").toString + "/s"
-    // the fold-vs-append race's end state, crafted directly: gen 0 is the
-    // base; a foreign append landed as gen 2 AFTER a fold pinned its input
-    // (gen 1) but BEFORE the fold's dest (gen 3, claimed above 2) renamed
-    // in — dest's marker says it holds history only up to gen 1
-    Seq((1L, "a0")).toDF("id", "v").write.parquet(s"$dir/__gen=0")
-    Seq((1L, "fresh")).toDF("id", "v").write.parquet(s"$dir/__gen=2")
-    Seq((1L, "stale")).toDF("id", "v").write.parquet(s"$dir/__gen=3")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=3", "_folded_1_1"), true).close()
-    val src = LogUpsertSource(dir, Seq("id"))
-    assert(src.read(spark).head().getString(1) == "fresh",
-      "dir-number ordering resurrected folded history over a newer foreign append")
-    // time travel agrees: state-at-1 is the folded value, state-at-2 the fresh one
-    assert(src.readAt(spark, 1L).head().getString(1) == "stale")
-    assert(src.readAt(spark, 2L).head().getString(1) == "fresh")
-  }
+  for (l <- LogLayouts.both)
+    test(LogLayouts.named("a fold dest never out-orders a newer foreign append: the resolve orders " +
+        "by EFFECTIVE generation (the folded range's upper bound), not dir number", l)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_claim2").toString + "/s"
+      // the fold-vs-append race's end state, crafted directly: gen 0 is the
+      // base; a foreign append landed as gen 2 AFTER a fold pinned its input
+      // (gen 1) but BEFORE the fold's dest (gen 3, claimed above 2) renamed
+      // in — dest's marker says it holds history only up to gen 1
+      l.writeGen(Seq((1L, "a0")).toDF("id", "v"), s"$dir/__gen=0")
+      l.writeGen(Seq((1L, "fresh")).toDF("id", "v"), s"$dir/__gen=2")
+      l.writeGen(Seq((1L, "stale")).toDF("id", "v"), s"$dir/__gen=3")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=3", "_folded_1_1"), true).close()
+      val src = l.open(dir, GenLog.defaultAutoCompactEvery)
+      assert(src.read(spark).head().getString(1) == "fresh",
+        "dir-number ordering resurrected folded history over a newer foreign append")
+      // time travel agrees: state-at-1 is the folded value, state-at-2 the fresh one
+      assert(src.readAt(spark, 1L).head().getString(1) == "stale")
+      assert(src.readAt(spark, 2L).head().getString(1) == "fresh")
+    }
 
-  test("the MINOR fold splits base/tail by EFFECTIVE order, so after a " +
-      "fold-vs-append race it neither excludes the foreign append as 'base' " +
-      "nor overclaims its range") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_claim3").toString + "/s"
-    // race end state: the fold dest (dir 3, effective 1) sits ABOVE the
-    // foreign append (dir 2, effective 2) by dir number but BELOW it
-    // effectively — a dir-number base/tail split would keep dir 2 as
-    // "base" and fold dir 3 into a dest marked up to the newest append,
-    // silently resurrecting the stale folded value over "fresh"
-    Seq((1L, "fresh")).toDF("id", "v").write.parquet(s"$dir/__gen=2")
-    Seq((1L, "stale")).toDF("id", "v").write.parquet(s"$dir/__gen=3")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=3", "_folded_0_1"), true).close()
-    val src = LogUpsertSource(dir, Seq("id"))
-    src.upsert(Seq((2L, "x1")).toDF("id", "v"), Seq("id"))
-    src.upsert(Seq((2L, "x2")).toDF("id", "v"), Seq("id"))
-    src.compactTail(spark)
-    val out = src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(1L -> "fresh", 2L -> "x2"),
-      s"the minor fold resurrected folded history over the foreign append: $out")
-    // the true base (the fold dest at effective 1) stayed unfolded, so its
-    // snapshot point is still exactly readable
-    assert(src.readAt(spark, 1L).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(1L -> "stale"))
-  }
+  for (l <- LogLayouts.both)
+    test(LogLayouts.named("the MINOR fold splits base/tail by EFFECTIVE order, so after a " +
+        "fold-vs-append race it neither excludes the foreign append as 'base' " +
+        "nor overclaims its range", l)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_claim3").toString + "/s"
+      // race end state: the fold dest (dir 3, effective 1) sits ABOVE the
+      // foreign append (dir 2, effective 2) by dir number but BELOW it
+      // effectively — a dir-number base/tail split would keep dir 2 as
+      // "base" and fold dir 3 into a dest marked up to the newest append,
+      // silently resurrecting the stale folded value over "fresh"
+      l.writeGen(Seq((1L, "fresh")).toDF("id", "v"), s"$dir/__gen=2")
+      l.writeGen(Seq((1L, "stale")).toDF("id", "v"), s"$dir/__gen=3")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=3", "_folded_0_1"), true).close()
+      val src = l.open(dir, GenLog.defaultAutoCompactEvery)
+      src.upsert(Seq((2L, "x1")).toDF("id", "v"), Seq("id"))
+      src.upsert(Seq((2L, "x2")).toDF("id", "v"), Seq("id"))
+      src.compactTail(spark)
+      val out = src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(out == Map(1L -> "fresh", 2L -> "x2"),
+        s"the minor fold resurrected folded history over the foreign append: $out")
+      // the true base (the fold dest at effective 1) stayed unfolded, so its
+      // snapshot point is still exactly readable
+      assert(src.readAt(spark, 1L).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(1L -> "stale"))
+    }
 }
 
 /** Time travel on the generation log (the Delta `versionAsOf` idea with no
@@ -3495,36 +3498,37 @@ class LogStoreTimeTravelSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("folded away"), e2.getMessage)
   }
 
-  test("a CRASHED fold's leftovers (marked dest + surviving inputs) stay fully " +
-      "consistent: reads resolve identically, straddled readAt points are " +
-      "TOLERATED while the inputs still cover them, and compact() recovers") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt4").toString + "/s"
-    val src = LogUpsertSource(dir, Seq("id"), autoCompactEvery = 100)
-    for (i <- 0 until 4)
-      src.upsert(Seq((i.toLong % 2, s"v$i")).toDF("id", "v"), Seq("id"))
-    val atTwo = src.readAt(spark, 2L).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    // simulate a compact that crashed AFTER rename+marker, BEFORE deleting
-    // its inputs: the resolved fold lands as gen 9 marked _folded_0_3 with
-    // gens 0..3 still alive
-    src.read(spark).write.parquet(s"$dir/__gen=9")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=9", "_folded_0_3"), true).close()
-    val expect = Map(0L -> "v2", 1L -> "v3")
-    assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1))
-      .toMap == expect, "duplicate coverage must resolve to identical values")
-    // gen 2 sits strictly inside the dest's folded range, but the surviving
-    // inputs still cover [0,2] — the read is exact and must be served
-    assert(src.readAt(spark, 2L).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap == atTwo)
-    src.compact(spark) // recovery: fold everything, leftovers included
-    assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1))
-      .toMap == expect)
-    // now the inputs are gone: the straddled point fails loudly, as designed
-    val e = intercept[IllegalArgumentException] { src.readAt(spark, 2L) }
-    assert(e.getMessage.contains("folded away"), e.getMessage)
-  }
+  for (l <- LogLayouts.both)
+    test(LogLayouts.named("a CRASHED fold's leftovers (marked dest + surviving inputs) stay fully " +
+        "consistent: reads resolve identically, straddled readAt points are " +
+        "TOLERATED while the inputs still cover them, and compact() recovers", l)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_tt4").toString + "/s"
+      val src = l.open(dir, 100)
+      for (i <- 0 until 4)
+        src.upsert(Seq((i.toLong % 2, s"v$i")).toDF("id", "v"), Seq("id"))
+      val atTwo = src.readAt(spark, 2L).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      // simulate a compact that crashed AFTER rename+marker, BEFORE deleting
+      // its inputs: the resolved fold lands as gen 9 marked _folded_0_3 with
+      // gens 0..3 still alive
+      l.writeGen(src.read(spark), s"$dir/__gen=9")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/__gen=9", "_folded_0_3"), true).close()
+      val expect = Map(0L -> "v2", 1L -> "v3")
+      assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1))
+        .toMap == expect, "duplicate coverage must resolve to identical values")
+      // gen 2 sits strictly inside the dest's folded range, but the surviving
+      // inputs still cover [0,2] — the read is exact and must be served
+      assert(src.readAt(spark, 2L).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap == atTwo)
+      src.compact(spark) // recovery: fold everything, leftovers included
+      assert(src.read(spark).collect().map(r => r.getLong(0) -> r.getString(1))
+        .toMap == expect)
+      // now the inputs are gone: the straddled point fails loudly, as designed
+      val e = intercept[IllegalArgumentException] { src.readAt(spark, 2L) }
+      assert(e.getMessage.contains("folded away"), e.getMessage)
+    }
 
   test("bucketed log: readAt stays exact across the ENGINE-triggered folds") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tt3").toString + "/s"
