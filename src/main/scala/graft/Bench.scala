@@ -1,4 +1,5 @@
 package graft
+import graft.expr.JsonValue.quote
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
@@ -175,12 +176,11 @@ object Bench {
 
   private[graft] def fullLine(entries: Seq[(String, Double)], sfDir: String,
       failed: Seq[String] = Nil): String = {
-    // sf path + failed names go through the shared JSON escaper
-    // (Verify.q) — raw interpolation corrupts the line on a quote or
-    // backslash in a path
+    // sf path + failed names go through the shared JSON quoter — raw
+    // interpolation corrupts the line on a quote or backslash in a path
     val failSuffix = if (failed.isEmpty) ""
-      else s""","failed":${failed.map(Verify.q).mkString("[", ",", "]")}"""
-    jsonLine(entries, fmt2, s""","sf":${Verify.q(sfDir)}$failSuffix""")
+      else s""","failed":${failed.map(quote).mkString("[", ",", "]")}"""
+    jsonLine(entries, fmt2, s""","sf":${quote(sfDir)}$failSuffix""")
   }
 
   /** The driver records only the LAST 2000 output chars (measured from

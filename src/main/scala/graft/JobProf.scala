@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import scala.util.control.NonFatal
 
 /** Dev tool: run selected queries once (noop sink, same session shape as
   * [[Bench]]) with a listener that prints every Spark JOB's wall time and
@@ -37,7 +38,7 @@ object JobProf {
     for (tbl <- Seq("orders", "lineitem", "events", "documents", "embeddings")) {
       try spark.read.parquet(s"$sfDir/$tbl.parquet")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     args.foreach { n =>
       System.err.println(s"\n########## $n ##########")

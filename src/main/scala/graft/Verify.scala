@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.expr.JsonValue.quote
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -18,19 +19,6 @@ import scala.util.control.NonFatal
   *   3. `errors.json` maps failed query → message for tooling.
   */
 object Verify {
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private[graft] def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** The dump pass, parameterized by the query registry so the
     * shrink-proofing contract itself is spec-gated (VerifyShrinkProofSpec)
     * — returns the failed-query → message map. */
@@ -40,7 +28,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val names = queries.keys.toSeq.sorted
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      names.map(q).mkString("[", ",", "]"))
+      names.map(quote).mkString("[", ",", "]"))
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     names.foreach { name =>
       val fn = queries(name)
@@ -62,9 +50,9 @@ object Verify {
       }
     }
     Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      errors.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}"))
     val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size}/${names.size} queries FAILED: " +

@@ -2,6 +2,7 @@ package graft.contract
 
 import graft.core.FeatureType
 import graft.expr.ExprJson
+import graft.expr.JsonValue.{quote => q}
 
 /** JSON serialization of feature-view contracts — the analog of the
   * reference's mashumaro-codable `CompiledFeatureView`
@@ -14,14 +15,6 @@ import graft.expr.ExprJson
   * `sources` map; `AggFunc.Custom` refuses serialization.
   */
 object ContractJson {
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def opt(o: Option[String]): String = o.fold("null")(q)
   private def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")

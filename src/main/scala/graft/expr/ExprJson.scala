@@ -1,30 +1,24 @@
 package graft.expr
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.JsonNodeType
 import graft.core.FeatureType
+import scala.jdk.CollectionConverters._
+import JsonValue.{quote => q}
 
 /** JSON serialization of the expression IR — the analog of the reference's
   * mashumaro-codable `Transformation` tree (schemas/transformation.py), which
   * lets contracts live in a registry independent of any process. Every node
   * except [[Raw]] (in-process Column escape hatch, by design not
-  * serializable — SURVEY §7.4) round-trips.
-  *
-  * Hand-rolled writer/parser: the build is offline with no JSON library on
-  * the classpath; the grammar here is the tiny subset we emit (objects,
-  * arrays, strings, numbers, booleans, null).
+  * serializable — SURVEY §7.4) round-trips. Parsing and string quoting go
+  * through [[JsonValue]].
   */
 object ExprJson {
 
   // ---------- writing ----------
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def lit(v: Any): String = v match {
     case null => "null"
@@ -85,81 +79,6 @@ object ExprJson {
   /** build an Expr from an already-parsed generic JSON object. */
   def fromValue(m: Map[String, Any]): Expr = build(m)
 
-  private[expr] final class P(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = { ws(); require(s.charAt(i) == c, s"expected '$c' at $i in $s"); i += 1 }
-    def tryConsume(c: Char): Boolean = { ws(); if (i < s.length && s.charAt(i) == c) { i += 1; true } else false }
-    def string(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        if (s.charAt(i) == '\\') {
-          i += 1
-          s.charAt(i) match {
-            case '"' => sb += '"'; case '\\' => sb += '\\'
-            case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case c => sb += c
-          }
-        } else sb += s.charAt(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    def scalar(): Any = {
-      ws()
-      s.charAt(i) match {
-        case '"' => string()
-        case '{' => value() // typed literal object
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ =>
-          val start = i
-          while (i < s.length && "-+.eE0123456789".indexOf(s.charAt(i)) >= 0) i += 1
-          val n = s.substring(start, i)
-          if (n.exists(c => c == '.' || c == 'e' || c == 'E')) n.toDouble else n.toLong
-      }
-    }
-    /** values are strings, typed-literal objects, arrays, numbers, bools, null */
-    def value(): Any = {
-      ws()
-      s.charAt(i) match {
-        case '{' =>
-          val m = objectFields()
-          m.get("t") match { // typed literal
-            case Some("i32") => m("v").asInstanceOf[Number].intValue()
-            case Some("i64") => m("v").asInstanceOf[Number].longValue()
-            case Some("f64") => m("v").asInstanceOf[Number].doubleValue()
-            case _ => m
-          }
-        case '[' =>
-          expect('[')
-          val buf = Seq.newBuilder[Any]
-          if (!tryConsume(']')) {
-            buf += value()
-            while (tryConsume(',')) buf += value()
-            expect(']')
-          }
-          buf.result()
-        case _ => scalar()
-      }
-    }
-    def objectFields(): Map[String, Any] = {
-      expect('{')
-      val m = Map.newBuilder[String, Any]
-      if (!tryConsume('}')) {
-        def field(): Unit = { val k = string(); expect(':'); m += k -> value() }
-        field()
-        while (tryConsume(',')) field()
-        expect('}')
-      }
-      m.result()
-    }
-  }
-
   private def build(m: Map[String, Any]): Expr = {
     def e(k: String): Expr = build(m(k).asInstanceOf[Map[String, Any]])
     def str(k: String): String = m(k).asInstanceOf[String]
@@ -207,8 +126,48 @@ object ExprJson {
   }
 }
 
-/** Minimal generic JSON parsing shared by the expression and contract codecs
-  * (the build is offline — no JSON library on the classpath). */
+/** The one JSON codec core of graft's writers and readers: Jackson (shipped
+  * with Spark) parses, and [[quote]] is the only string quoter. */
 object JsonValue {
-  def parseObject(json: String): Map[String, Any] = new ExprJson.P(json).objectFields()
+  // Double.toString writes NaN, Infinity and -Infinity for non-finite
+  // literals and bounds; reading them back needs the non-numeric tokens
+  private val mapper =
+    JsonMapper.builder().enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+
+  /** Parse a JSON object into the plain values the codecs consume: String,
+    * Boolean, null, Long (integers), Double (other numbers), Seq (arrays)
+    * and Map (objects). A nested typed-literal object `{"t":"i32|i64|f64",
+    * "v":n}` becomes the Int, Long or Double it encodes. */
+  def parseObject(json: String): Map[String, Any] = {
+    val root = mapper.readTree(json)
+    require(root.isObject, s"expected a JSON object: ${json.take(80)}")
+    fields(root)
+  }
+
+  private def fields(o: JsonNode): Map[String, Any] =
+    o.properties.asScala.map(e => e.getKey -> value(e.getValue)).toMap
+
+  private def value(n: JsonNode): Any = n.getNodeType match {
+    case JsonNodeType.OBJECT =>
+      val m = fields(n)
+      def v = m("v").asInstanceOf[Number]
+      m.get("t") match {
+        case Some("i32") => v.intValue()
+        case Some("i64") => v.longValue()
+        case Some("f64") => v.doubleValue()
+        case _ => m
+      }
+    case JsonNodeType.ARRAY => n.asScala.map(value).toList
+    case JsonNodeType.STRING => n.textValue
+    case JsonNodeType.BOOLEAN => n.booleanValue
+    case JsonNodeType.NUMBER =>
+      if (n.isIntegralNumber && n.canConvertToLong) n.longValue else n.doubleValue
+    case _ => null
+  }
+
+  /** `s` as a JSON string literal. Backslash, quote and every control
+    * character are escaped: a raw tab or CR in a query's SQL or a manifest
+    * value would make the file unparseable for any JSON reader. */
+  def quote(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 }

@@ -1,5 +1,7 @@
 package graft.ml
 
+import graft.expr.JsonValue.quote
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persisted train/test/validate dataset artifacts (reference:
@@ -19,14 +21,13 @@ final class DatasetStore(rootDir: String) {
     val counts = splits.map { case (name, _) =>
       name -> spark.read.parquet(dir(id, name)).count()
     }
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val json = (
-      Seq(s"${q("id")}: ${q(id)}", s"${q("splits")}: {" +
-        counts.map { case (n, c) => s"${q(n)}: $c" }.mkString(",") + "}") ++
-        meta.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      Seq(s"${quote("id")}: ${quote(id)}", s"${quote("splits")}: {" +
+        counts.map { case (n, c) => s"${quote(n)}: $c" }.mkString(",") + "}") ++
+        meta.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
       ).mkString("{", ",", "}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(manifestPath(id)), true)
+    val p = new Path(manifestPath(id))
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
@@ -34,8 +35,7 @@ final class DatasetStore(rootDir: String) {
     spark.read.parquet(dir(id, split))
 
   def exists(spark: SparkSession, id: String): Boolean =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(manifestPath(id)))
+    graft.sources.PathProbe.exists(spark, manifestPath(id))
 
   /** save once, then always reload the SAME split rows (split stability —
     * the reason the reference caches splits instead of recomputing). */

@@ -14,8 +14,8 @@ object Caching {
     * materialized files, like the reference. */
   def fileCached(spark: SparkSession, path: String,
       maxAge: Option[java.time.Duration] = None)(compute: => DataFrame): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = fs.exists(p) && maxAge.forall { age =>
       System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime < age.toMillis
     }

@@ -76,7 +76,6 @@ final case class PartitionedParquetSource(path: String, partitionKeys: Seq[Strin
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(path)
   def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
     val spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val merged =
       if (!exists(spark)) df
       else {
@@ -88,7 +87,10 @@ final case class PartitionedParquetSource(path: String, partitionKeys: Seq[Strin
           .join(df.select(keys.map(col): _*).distinct(), keys, "left_anti")
           .unionByName(df)
       }
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(path)
+    // scoped to this write: a session-global mode would leak into every later
+    // overwrite, which must drop the partitions its frame lacks
+    merged.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionKeys: _*).parquet(path)
   }
 }
 
@@ -551,9 +553,9 @@ private[graft] object GenLog {
     * appends to the shared generation survive as files, so the marker
     * count is evidence, not a race). Generations without markers (older
     * stores, foreign writers that crashed pre-stamp) pass: absence proves
-    * nothing, and latest-wins over them is still well-defined. */
-  /** Over an already-performed [[scanStore]] pass (the read paths scan
-    * once and feed both this and the resolve order). */
+    * nothing, and latest-wins over them is still well-defined. Runs over an
+    * already-performed [[scanStore]] pass (the read paths scan once and
+    * feed both this and the resolve order). */
   def assertSingleWriter(path: String, infos: Seq[GenInfo]): Unit =
     infos.foreach { i =>
       if (i.nonces.length > 1)

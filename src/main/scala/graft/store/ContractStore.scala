@@ -53,35 +53,27 @@ final class ContractStore {
     val recipes = recipesMap.values.toSeq.sortBy(_.name)
       .map(graft.contract.ContractJson.recipeToJson).mkString("[", ",\n", "]")
     val json = s"""{"views":$views,\n"models":$models,\n"recipes":$recipes}"""
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
   def loadFrom(spark: SparkSession, path: String,
       rebindSources: Map[String, graft.sources.BatchSource] = Map.empty,
       rebindModels: Map[String, graft.ml.ExposedModel] = Map.empty): ContractStore = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val trimmed = json.trim
-    if (trimmed.startsWith("[")) {
-      // legacy registry: a bare array of view objects, split on the ",\n"
-      // boundaries the old writer emitted
-      val body = trimmed.stripPrefix("[").stripSuffix("]")
-      if (body.trim.nonEmpty)
-        body.split(",\n").foreach(v =>
-          addView(graft.contract.ContractJson.fromJson(v.trim, rebindSources)))
-    } else {
-      val m = graft.expr.JsonValue.parseObject(trimmed)
-      m("views").asInstanceOf[Seq[Any]].foreach(v => addView(
-        graft.contract.ContractJson.fromValue(v.asInstanceOf[Map[String, Any]], rebindSources)))
-      m.get("models").toSeq.flatMap(_.asInstanceOf[Seq[Any]]).foreach(x => addModel(
-        graft.contract.ContractJson.modelFromValue(
-          x.asInstanceOf[Map[String, Any]], rebindSources, rebindModels)))
-      m.get("recipes").toSeq.flatMap(_.asInstanceOf[Seq[Any]]).foreach(x => addRecipe(
-        graft.contract.ContractJson.recipeFromValue(x.asInstanceOf[Map[String, Any]])))
-    }
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+    // a legacy registry is a bare array of view objects
+    val m = graft.expr.JsonValue.parseObject(
+      if (json.startsWith("[")) s"""{"views":$json}""" else json)
+    m("views").asInstanceOf[Seq[Any]].foreach(v => addView(
+      graft.contract.ContractJson.fromValue(v.asInstanceOf[Map[String, Any]], rebindSources)))
+    m.get("models").toSeq.flatMap(_.asInstanceOf[Seq[Any]]).foreach(x => addModel(
+      graft.contract.ContractJson.modelFromValue(
+        x.asInstanceOf[Map[String, Any]], rebindSources, rebindModels)))
+    m.get("recipes").toSeq.flatMap(_.asInstanceOf[Seq[Any]]).foreach(x => addRecipe(
+      graft.contract.ContractJson.recipeFromValue(x.asInstanceOf[Map[String, Any]])))
     this
   }
 
@@ -472,15 +464,10 @@ final class ContractStore {
     df
   }
 
-  /** Point-in-time feature lookup (SURVEY §3.1, feature_store.py:501-655):
-    * `refs` are "view:feature" strings; `entities` must carry the entity key
-    * columns and, when any referenced view has an event timestamp, an
-    * `event_timestamp` column for PIT correctness.
-    */
-  def featuresFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
-      factTs: String = "event_timestamp"): DataFrame = {
-    // 1. parse refs, group by view (RawStringFeatureRequest, feature_store.py:108-145)
-    val byView = refs.map { r =>
+  /** "view:feature" (or "project:view:feature") refs grouped by view
+    * (RawStringFeatureRequest, feature_store.py:108-145). */
+  private def featuresByView(refs: Seq[String]): Map[String, Seq[String]] =
+    refs.map { r =>
       r.split(":") match {
         case Array(v, f) => (v, f)
         case Array(_, v, f) => (v, f)
@@ -488,7 +475,16 @@ final class ContractStore {
       }
     }.groupBy(_._1).map { case (v, fs) => v -> fs.map(_._2) }
 
-    // 2. per view: assemble the needed frame and PIT-join onto the entity frame.
+  /** Point-in-time feature lookup (SURVEY §3.1, feature_store.py:501-655):
+    * `refs` are "view:feature" strings; `entities` must carry the entity key
+    * columns and, when any referenced view has an event timestamp, an
+    * `event_timestamp` column for PIT correctness.
+    */
+  def featuresFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
+      factTs: String = "event_timestamp"): DataFrame = {
+    val byView = featuresByView(refs)
+
+    // per view: assemble the needed frame and PIT-join onto the entity frame.
     // Features already present on the entity frame are satisfied — drop them
     // (request pruning, feature_store.py:703-728).
     byView.foldLeft(entities) { case (acc, (viewName, wantedRaw)) =>
@@ -551,13 +547,7 @@ final class ContractStore {
     * surface as nulls, like a missing HMGET key. */
   def onlineFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
       maxInlineKeys: Int = 1024): DataFrame = {
-    val byView = refs.map { r =>
-      r.split(":") match {
-        case Array(v, f) => (v, f)
-        case Array(_, v, f) => (v, f)
-        case _ => throw new IllegalArgumentException(s"bad feature ref: $r")
-      }
-    }.groupBy(_._1).map { case (v, fs) => v -> fs.map(_._2) }
+    val byView = featuresByView(refs)
 
     byView.foldLeft(entities) { case (acc, (viewName, wantedRaw)) =>
       val wanted = wantedRaw.filterNot(acc.columns.contains)

@@ -297,14 +297,6 @@ object Streaming {
     writer.start()
   }
 
-  /** EXACTLY-ONCE sink wrapper for foreachBatch: Structured Streaming
-    * re-delivers a whole micro-batch after a crash between sink write and
-    * checkpoint commit (at-least-once), so a non-idempotent sink double
-    * writes. This wrapper keeps a commit log of applied batch ids next to
-    * the sink data; a re-delivered id is skipped, and the log is written
-    * AFTER the sink call so a crash in between re-runs the batch (the sink
-    * itself must be atomic per batch — upsert-by-key is). The standard
-    * batchId-dedup recipe for non-transactional stores. */
   /** State for one MinHash LSH bucket of [[nearDupStream]]: the most recent
     * `maxPerBucket` (doc id, signature) entries seen in the bucket. */
   final case class BucketState(entries: Seq[(Long, Seq[Long])])
@@ -412,6 +404,14 @@ object Streaming {
       .toDF("id_a", "id_b", "est_jaccard")
   }
 
+  /** EXACTLY-ONCE sink wrapper for foreachBatch: Structured Streaming
+    * re-delivers a whole micro-batch after a crash between sink write and
+    * checkpoint commit (at-least-once), so a non-idempotent sink double
+    * writes. This wrapper keeps a commit log of applied batch ids next to
+    * the sink data; a re-delivered id is skipped, and the log is written
+    * AFTER the sink call so a crash in between re-runs the batch (the sink
+    * itself must be atomic per batch — upsert-by-key is). The standard
+    * batchId-dedup recipe for non-transactional stores. */
   def idempotentBatchSink(sink: (DataFrame, Long) => Unit, commitLogDir: String,
       retainMarks: Int = 100)(
       implicit spark: SparkSession): (DataFrame, Long) => Unit = {

@@ -230,6 +230,20 @@ class SourcesSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("partitioned parquet upsert leaves the session's overwrite mode alone") {
+    // a fresh session, so no earlier test's conf state shows through
+    val s = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = s.conf.getOption(key)
+    val src = graft.sources.PartitionedParquetSource(tmpDir() + "/pm", Seq("part"))
+    src.overwrite(s.createDataFrame(Seq((1L, "p1"), (2L, "p2"))).toDF("id", "part"))
+    src.upsert(s.createDataFrame(Seq((3L, "p2"))).toDF("id", "part"), Seq("id"))
+    assert(s.conf.getOption(key) == before)
+    // so a later overwrite still replaces the table, partitions the new frame lacks included
+    src.overwrite(s.createDataFrame(Seq((4L, "p3"))).toDF("id", "part"))
+    assert(src.read(s).collect().map(_.getLong(0)).toSeq == Seq(4L))
+  }
+
   test("csv round-trip with custom separator") {
     val dir = tmpDir() + "/c"
     val src = graft.sources.CsvSource(dir, sep = ";")

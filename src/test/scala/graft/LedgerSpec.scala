@@ -121,7 +121,7 @@ class VerifyShrinkProofSpec extends AnyFunSuite {
     val good: (SparkSession, String) => DataFrame =
       (s, _) => { import s.implicits._; Seq((1L, "a")).toDF("id", "v") }
     val bad: (SparkSession, String) => DataFrame =
-      (_, _) => throw new IllegalStateException("loader broke: ts encoding")
+      (_, _) => throw new IllegalStateException("loader broke: ts \"encoding\" \\ \t\r\u0001")
     val errors = Verify.run(spark, "/nonexistent", out,
       Map("q_good" -> good, "q_bad" -> bad), Map("q_good" -> "SELECT 1"))
     assert(errors.keySet == Set("q_bad"))
@@ -141,7 +141,7 @@ class VerifyShrinkProofSpec extends AnyFunSuite {
     // them; builder-authored SQL with tabs/newlines once risked this)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     assert(mapper.readTree(manifest).size == 2)
-    assert(mapper.readTree(errJson).get("q_bad").asText.contains("loader broke"))
+    assert(mapper.readTree(errJson).get("q_bad").asText == errors("q_bad"))
     val oracleJson = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$out/oracle_sql.json"))
     assert(mapper.readTree(oracleJson).get("q_good").asText == "SELECT 1")

@@ -1002,6 +1002,16 @@ class DatasetStoreSpec extends AnyFunSuite {
     assert(store.load(spark, "d1", "train").count() + store.load(spark, "d1", "test").count() == 100)
   }
 
+  test("a manifest meta value with control characters stays valid JSON") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ds_meta").toString
+    val meta = Map("note" -> "line one\nline two\t\"quoted\" \\ end")
+    new graft.ml.DatasetStore(root).save("d1", Map("all" -> Seq((1L, 0)).toDF("id", "y")), meta)
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$root/d1/manifest.json"))
+    assert(manifest.get("note").asText == meta("note"))
+    assert(manifest.get("splits").get("all").asLong == 1L)
+  }
+
   test("query listener observes completed actions") {
     val fresh = TestSpark.spark.newSession()
     @volatile var seen = 0
@@ -1051,12 +1061,23 @@ class ExprJsonSpec extends AnyFunSuite {
     ArrayAtIndex(Ref("arr"), 3),
     ArrayContainsAny(Ref("arr"), Seq(1, 2)),
     Clip(Ref("x"), -1.0, 1.0),
-    MultiExpr(Seq("tmp" -> Binary("mul", Ref("x"), Lit(2.0))), Ref("tmp")))
+    MultiExpr(Seq("tmp" -> Binary("mul", Ref("x"), Lit(2.0))), Ref("tmp")),
+    // Double.toString writes NaN / Infinity / -Infinity for these
+    Lit(Double.PositiveInfinity),
+    Clip(Ref("x"), Double.NegativeInfinity, Double.PositiveInfinity),
+    FillNa(Ref("x"), Double.PositiveInfinity),
+    Lit("tab\tcr\rctl\u0001 astral \ud83d\ude00"),
+    Contains(Ref("s"), "\t\r\u0001\ud83d\ude00"))
 
   test("round-trip preserves structure") {
     cases.foreach { e =>
       val back = ExprJson.fromJson(ExprJson.toJson(e))
       assert(back == e, s"round-trip mismatch for ${e.getClass.getSimpleName}:\n$e\n$back")
+    }
+    // NaN != NaN, so the NaN literal is checked by value
+    ExprJson.fromJson(ExprJson.toJson(Lit(Double.NaN))) match {
+      case Lit(d: Double) => assert(d.isNaN)
+      case other => fail(s"NaN literal came back as $other")
     }
   }
 
@@ -1144,6 +1165,10 @@ class ContractJsonSpec extends AnyFunSuite {
   test("FeatureView round-trips through JSON") {
     val back = ContractJson.fromJson(ContractJson.toJson(view))
     assert(back == view)
+    // an unbounded constraint writes -Infinity, which must read back
+    val unbounded = view.copy(features = Seq(Feature("o_totalprice", FFloat64,
+      constraints = Seq(Constraint.LowerBound(Double.NegativeInfinity)))))
+    assert(ContractJson.fromJson(ContractJson.toJson(unbounded)) == unbounded)
   }
 
   test("a reloaded contract executes like the original") {
