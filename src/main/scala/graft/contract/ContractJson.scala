@@ -173,14 +173,42 @@ object ContractJson {
         s"view '$viewName' has an opaque (code) source; pass a rebind entry"))
     }
 
+  // ---------- feature defaults ----------
+
+  /** A feature default as JSON: numbers and booleans bare, strings
+    * quoted, dates as quoted ISO days and timestamps as quoted ISO instants
+    * (zone-free, so a reader in another time zone reads back the same
+    * instant). Any other value (bytes, collections, durations) has no text
+    * that reads back to the value it fills, so the view is refused. */
+  private def defaultJson(feature: String, v: Any): String = v match {
+    case n @ (_: Number | _: Boolean) => n.toString
+    case s: String => q(s)
+    case t: java.sql.Timestamp => q(t.toInstant.toString)
+    case d: java.sql.Date => q(d.toLocalDate.toString)
+    case other => throw new IllegalArgumentException(
+      s"feature '$feature' has a default of ${other.getClass.getName}, which has no JSON form")
+  }
+
+  /** Read a default back so that the fill `lit(default).cast(dtype)` yields
+    * the value the original default filled: a date or timestamp feature's
+    * ISO text becomes the `java.sql` value it was written from; text that
+    * does not parse stays text (Spark's cast reads it as before). */
+  private def defaultFrom(dtype: FeatureType, v: Any): Any = {
+    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
+    (dtype.sparkType, v) match {
+      case (DateType, s: String) =>
+        scala.util.Try(java.sql.Date.valueOf(java.time.LocalDate.parse(s))).getOrElse(s)
+      case (TimestampType | TimestampNTZType, s: String) =>
+        scala.util.Try(java.sql.Timestamp.from(java.time.Instant.parse(s))).getOrElse(s)
+      case _ => v
+    }
+  }
+
   // ---------- feature view ----------
 
   def toJson(v: FeatureView): String = {
     def featureJson(f: Feature) = {
-      val default = f.defaultValue.fold("null") {
-        case s: String => q(s)
-        case other => other.toString
-      }
+      val default = f.defaultValue.fold("null")(defaultJson(f.name, _))
       s"""{"name":${q(f.name)},"dtype":${q(f.dtype.name)},"description":${opt(f.description)},""" +
         s""""constraints":${arr(f.constraints.map(constraintJson))},"default":$default}"""
     }
@@ -283,10 +311,11 @@ object ContractJson {
       rebindSources: Map[String, graft.sources.BatchSource]): FeatureView = {
     def feats(k: String): Seq[Feature] = m(k).asInstanceOf[Seq[Any]].map { x =>
       val f = x.asInstanceOf[Map[String, Any]]
-      Feature(f("name").toString, FeatureType.fromName(f("dtype").toString),
+      val dtype = FeatureType.fromName(f("dtype").toString)
+      Feature(f("name").toString, dtype,
         Option(f("description")).map(_.toString),
         f("constraints").asInstanceOf[Seq[Any]].map(c => constraintFrom(c.asInstanceOf[Map[String, Any]])),
-        Option(f("default")))
+        Option(f("default")).map(defaultFrom(dtype, _)))
     }
     val name = m("name").toString
     FeatureView(

@@ -541,7 +541,11 @@ final class ContractStore {
     * reference caps its redis pipeline batches the same way). Beyond
     * `maxInlineKeys` distinct keys the lookup degrades to a broadcast
     * semi-join: still one scan and no driver-side literals, just no
-    * row-group pruning. Rows carry the latest value per entity
+    * row-group pruning. An entity frame whose rows are already on the
+    * driver (`createDataFrame(rows)`, `Seq(...).toDF`) has its keys
+    * deduped and, on a bucketed-log store, its bucket ids derived there,
+    * with no job: the lookup runs only the jobs of its answer. Rows carry
+    * the latest value per entity
     * (last-writer-wins on the event timestamp, exact ties broken
     * arbitrarily — online-store semantics); entities absent from the view
     * surface as nulls, like a missing HMGET key. */
@@ -556,10 +560,27 @@ final class ContractStore {
         val vs = new ViewStore(this, v)
         val keys = v.entities.map(_.name)
         require(keys.nonEmpty, s"online lookup needs entity keys on view $viewName")
-        // bounded-by-contract: collect up to maxInlineKeys+1 distinct keys —
-        // the +1 detects overflow without counting the whole frame
-        val keyRows = acc.select(keys.map(col): _*).distinct()
-          .limit(maxInlineKeys + 1).collect()
+        val keyFrame = acc.select(keys.map(col): _*)
+        // bounded-by-contract: up to maxInlineKeys+1 distinct keys — the +1
+        // detects overflow without counting the whole frame. Key rows already
+        // on the driver (the serving shape, DriverRows) are collected by a
+        // local scan and deduped here, with no job; any other entity frame
+        // runs the distinct-limit-collect
+        val localKeys =
+          if (graft.sources.DriverRows.isLocal(keyFrame)) Some(keyFrame.collect().distinct)
+          else None
+        val keyRows = localKeys.fold(
+          keyFrame.distinct().limit(maxInlineKeys + 1).collect())(_.take(maxInlineKeys + 1))
+        val overflow = keyRows.length > maxInlineKeys
+        // every distinct probe key as a frame: the collected rows when they
+        // are all of them (a local frame, so neither the bucket-id
+        // derivation nor the semi-join re-runs the entity frame's lineage);
+        // an overflowing frame that is not local keeps its distributed
+        // distinct — its collected subset is incomplete
+        val probe =
+          if (overflow && localKeys.isEmpty) keyFrame.distinct()
+          else spark.createDataFrame(
+            java.util.Arrays.asList(localKeys.getOrElse(keyRows): _*), keyFrame.schema)
         // LSM point-lookup fast path: a bucketed-log store prunes the scan
         // to the probed keys' buckets BEFORE the latest-wins resolve — a
         // plain log store would window over every emission per lookup
@@ -581,26 +602,17 @@ final class ContractStore {
                   .exists(stored => keys.forall(k =>
                     stored.find(_.name == k).map(_.dataType).contains(
                       v.entities.find(_.name == k).get.dtype.sparkType))) =>
-            // probe with the already-collected key rows when they fit (a
-            // local frame: the bucket-id derivation then costs no re-run of
-            // the entity frame's lineage); overflow probes with the full
-            // frame — the collected subset is incomplete and pruning by it
-            // would miss keys beyond the cap
-            val probe =
-              if (keyRows.length > maxInlineKeys) acc.select(b.keys.map(col): _*)
-              else spark.createDataFrame(
-                new java.util.ArrayList(java.util.Arrays.asList(keyRows: _*)),
-                acc.select(keys.map(col): _*).schema)
             vs.derivedFrom(spark, b.readForEntities(spark, probe))
           case _ => vs.baseWithDerived(spark)
         }
         val filtered =
-          if (keyRows.length > maxInlineKeys)
-            base.join(broadcast(acc.select(keys.map(col): _*).distinct()), keys, "left_semi")
+          if (overflow)
+            base.join(broadcast(probe), keys, "left_semi")
           else if (keyRows.isEmpty) // empty entity frame: nothing to read
             base.filter(lit(false))
           else if (keys.lengthCompare(1) == 0)
-            base.filter(col(keys.head).isin(keyRows.map(_.get(0)).toIndexedSeq: _*))
+            base.filter(ContractStore.keyIn(keys.head, keyFrame.schema.head.dataType,
+              base.schema.find(_.name == keys.head).map(_.dataType), keyRows.map(_.get(0))))
           else
             base.filter(keyRows.map { r =>
               keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.get(i)) }
@@ -617,6 +629,32 @@ final class ContractStore {
         acc.join(latest.select((keys ++ wanted).map(col): _*), keys, "left")
       }
     }
+  }
+}
+
+object ContractStore {
+  import org.apache.spark.sql.types._
+
+  /** The single-key lookup predicate. When the probe's key type equals the
+    * view's (the conformed `base` column) and is a long, string or
+    * timestamp, an `InSet` of the collected values: its generated code
+    * references the value set instead of inlining it, so a new key set
+    * reuses the compiled classes (an `isin` of 10 or fewer values becomes
+    * an `In` that inlines every literal and compiles afresh per key set).
+    * It still pushes to the scan as `In(k, …)`. Every other case keeps
+    * `isin`: floating-point, binary and complex keys, whose driver-side
+    * equality can differ from Spark's; int-like and date keys, whose
+    * `InSet` code inlines the values as a switch; and probes whose type
+    * needs a coercion. */
+  private[store] def keyIn(key: String, probeType: DataType, baseType: Option[DataType],
+      values: Seq[Any]): Column = probeType match {
+    case LongType | StringType | TimestampType | TimestampNTZType
+        if baseType.contains(probeType) =>
+      org.apache.spark.sql.GraftColumnBridge.toColumn(
+        org.apache.spark.sql.catalyst.expressions.InSet(
+          org.apache.spark.sql.GraftColumnBridge.toExpr(col(key)),
+          values.map(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
+    case _ => col(key).isin(values: _*)
   }
 }
 

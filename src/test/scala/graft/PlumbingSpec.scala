@@ -1220,6 +1220,42 @@ class ContractJsonSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](ContractJson.toJson(view.copy(
       aggregates = Seq(AggregatedFeature("c", FFloat64, AggFunc.Custom(identity), "x")))))
   }
+
+  test("date and timestamp defaults round-trip through JSON and the registry " +
+      "file, and fill the same value") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_defaults").toString
+    graft.sources.ParquetSource(s"$dir/t").overwrite(Seq(1L, 2L).toDF("id"))
+    val v = FeatureView("dated", graft.sources.ParquetSource(s"$dir/t"),
+      entities = Seq(Feature("id", FInt64)),
+      features = Seq(
+        Feature("since", FDate, defaultValue = Some(java.sql.Date.valueOf("2024-01-01"))),
+        Feature("seen", FDatetime(None),
+          defaultValue = Some(java.sql.Timestamp.valueOf("2024-02-03 04:05:06.789"))),
+        Feature("tag", FString, defaultValue = Some("a \"b\"")),
+        Feature("n", FInt64, defaultValue = Some(7L))))
+    val back = ContractJson.fromJson(ContractJson.toJson(v))
+    assert(back == v)
+    val reg = s"$dir/contracts.json"
+    new graft.store.ContractStore().addView(v).saveTo(spark, reg)
+    val loaded = new graft.store.ContractStore().loadFrom(spark, reg)
+    def filled(s: graft.store.ContractStore) =
+      s.view("dated").baseWithDerived(spark).orderBy("id").collect().toSeq
+    val want = filled(new graft.store.ContractStore().addView(v))
+    assert(want.head.getDate(1) == java.sql.Date.valueOf("2024-01-01"))
+    assert(filled(new graft.store.ContractStore().addView(back)) == want)
+    assert(filled(loaded) == want)
+  }
+
+  test("a default with no JSON form (bytes, a list, a duration) is refused by toJson") {
+    for ((dtype, default) <- Seq[(graft.core.FeatureType, Any)](
+        FBinary -> Array[Byte](1, 2), FArray(FInt64) -> List(1L, 2L),
+        FTimedelta -> java.time.Duration.ofHours(1))) {
+      val e = intercept[IllegalArgumentException](ContractJson.toJson(view.copy(
+        features = Seq(Feature("f", dtype, defaultValue = Some(default))),
+        derived = Nil, aggregates = Nil)))
+      assert(e.getMessage.contains("'f'"))
+    }
+  }
 }
 
 class RegistrySpec extends AnyFunSuite {
@@ -2828,6 +2864,132 @@ class OnlineLookupSpec extends AnyFunSuite {
     assert(store2.onlineFeaturesFor(spark,
       Seq.empty[(Long, String)].toDF("id", "region"), Seq("dim2:v")).count() == 0)
   }
+
+  /** A bucketed-log store in the serving shape (16 buckets, three
+    * generations) under a view with an event timestamp. */
+  private def servingStore(): (graft.store.ContractStore, graft.sources.BucketedLogUpsertSource) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_online6").toString
+    val lsm = graft.sources.BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 16)
+    for (g <- 0 until 3)
+      lsm.upsert((0L until 200L).filter(_ % (g + 1) == 0).map(i =>
+        (i, java.sql.Timestamp.valueOf(s"2024-01-0${g + 1} 00:00:00"), i * 10.0 + g, s"s$g"))
+        .toDF("id", "ts", "price", "status"), Seq("id"))
+    val v = FeatureView("serving", lsm,
+      entities = Seq(Feature("id", FInt64)),
+      features = Seq(Feature("price", FFloat64), Feature("status", FString)),
+      eventTimestamp = Some(EventTimestamp("ts")))
+    (new graft.store.ContractStore().addView(v), lsm)
+  }
+
+  private def local(ids: Seq[Long]) = spark.createDataFrame(
+    java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
+
+  test("a 5-key lookup over driver rows runs 3 jobs, and a new 5-key set " +
+      "compiles no class") {
+    val (store, _) = servingStore()
+    val refs = Seq("serving:price", "serving:status")
+    // warm: the first lookup may compile its classes
+    store.onlineFeaturesFor(spark, local(Seq(1L, 2L, 3L, 4L, 5L)), refs).collect()
+    val (rows, jobs) = JobCount(spark)(
+      store.onlineFeaturesFor(spark, local(Seq(6L, 12L, 18L, 24L, 199L)), refs).collect())
+    assert(jobs == 3, s"a 5-key lookup ran $jobs jobs")
+    assert(rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
+      Map(6L -> 62.0, 12L -> 122.0, 18L -> 182.0, 24L -> 242.0, 199L -> 1990.0))
+    // the key filter's generated code does not depend on the key set
+    val (_, compiled) = CompileCount(spark)(
+      store.onlineFeaturesFor(spark, local(Seq(7L, 11L, 13L, 17L, 19L)), refs).collect())
+    assert(compiled == 0, s"a new key set compiled $compiled classes")
+  }
+
+  test("non-local probes (spark.range, a parquet read) return the rows a local " +
+      "probe returns") {
+    val (store, _) = servingStore()
+    val refs = Seq("serving:price", "serving:status")
+    def snap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val ids = (40L until 46L) :+ 500L
+    val expected = snap(store.onlineFeaturesFor(spark, local(ids), refs))
+    assert(expected.length == ids.length)
+    val ranged = spark.range(40L, 46L).union(spark.range(500L, 501L)).toDF("id")
+    assert(!graft.sources.DriverRows.isLocal(ranged))
+    assert(snap(store.onlineFeaturesFor(spark, ranged, refs)) == expected)
+    val pq = java.nio.file.Files.createTempDirectory("graft_online7").toString + "/probe"
+    local(ids).write.parquet(pq)
+    assert(snap(store.onlineFeaturesFor(spark, spark.read.parquet(pq), refs)) == expected)
+    // overflow: more keys than maxInlineKeys, local and not
+    assert(snap(store.onlineFeaturesFor(spark, ranged, refs, maxInlineKeys = 3)) == expected)
+    assert(snap(store.onlineFeaturesFor(spark, local(ids), refs, maxInlineKeys = 3)) == expected)
+  }
+
+  for ((kind, dtype, stored, mk) <- Seq[(String, graft.core.FeatureType,
+      org.apache.spark.sql.types.DataType, Int => Any)](
+      ("int", FInt32, org.apache.spark.sql.types.IntegerType, i => i),
+      ("long", FInt64, org.apache.spark.sql.types.LongType, i => i.toLong),
+      ("string", FString, org.apache.spark.sql.types.StringType, i => s"k$i")))
+    test(s"pruned lookups equal the full-scan path for $kind keys: duplicate, empty, " +
+        "overflowing, non-local and type-coerced probes") {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val dir = java.nio.file.Files.createTempDirectory("graft_online8").toString
+      val schema = StructType(Seq(StructField("id", stored),
+        StructField("ts", TimestampType), StructField("score", DoubleType)))
+      val lsm = graft.sources.BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 8)
+      for (g <- 0 until 3)
+        lsm.upsert(spark.createDataFrame(java.util.Arrays.asList((0 until 60)
+          .filter(_ % (g + 1) == 0).map(i => Row(mk(i),
+            java.sql.Timestamp.valueOf(s"2024-01-0${g + 1} 00:00:00"), i + g / 10.0)): _*),
+          schema), Seq("id"))
+      val v = FeatureView("keyed", lsm, entities = Seq(Feature("id", dtype)),
+        features = Seq(Feature("score", FFloat64)), eventTimestamp = Some(EventTimestamp("ts")))
+      val store = new graft.store.ContractStore().addView(v)
+      // the full-scan path: every row conformed, latest per key, joined
+      val latest = store.view("keyed").baseWithDerived(spark)
+        .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy("id").orderBy(col("ts").desc)))
+        .filter(col("rn") === 1).select("id", "score")
+      def snap(df: org.apache.spark.sql.DataFrame) =
+        df.select("id", "score").collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      def check(name: String, probe: org.apache.spark.sql.DataFrame, maxInline: Int = 1024) = {
+        val got = snap(store.onlineFeaturesFor(spark, probe, Seq("keyed:score"), maxInline))
+        assert(got == snap(probe.join(latest, Seq("id"), "left")), s"$kind, $name")
+        got
+      }
+      def probe(is: Seq[Int]) = spark.createDataFrame(
+        java.util.Arrays.asList(is.map(i => Row(mk(i))): _*),
+        StructType(Seq(StructField("id", stored))))
+      assert(check("distinct", probe(Seq(0, 3, 7, 59, 99))).count(_.endsWith("|null")) == 1)
+      assert(check("duplicates", probe(Seq(3, 3, 7, 3, 99))).length == 5)
+      assert(check("empty", probe(Nil)).isEmpty)
+      assert(check("overflow", probe(0 until 30), maxInline = 10).length == 30)
+      check("non-local", probe(Seq(0, 3, 7, 59, 99)).repartition(2))
+      check("non-local overflow", probe(0 until 30).repartition(2), maxInline = 10)
+      // a probe typed unlike the store: the bucket ids hash the cast probe
+      // and the key filter keeps isin's coercion
+      if (stored != StringType)
+        check("type-coerced", probe(Seq(4, 8, 99)).withColumn("id", col("id").cast(ShortType)))
+    }
+
+  test("the cast guard: a store whose key type differs from the declared type " +
+      "declines pruning and equals the full-scan path, for local and overflow probes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_online9").toString
+    val lsm = graft.sources.BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 16)
+    lsm.upsert(Seq(("01", 10.0), ("2", 20.0), ("003", 30.0)).toDF("id", "score"), Seq("id"))
+    val v = FeatureView("typed2", lsm, entities = Seq(Feature("id", FInt64)),
+      features = Seq(Feature("score", FFloat64)))
+    val store = new graft.store.ContractStore().addView(v)
+    val full = store.view("typed2").baseWithDerived(spark).select("id", "score")
+    for ((probe, maxInline) <- Seq(local(Seq(1L, 2L, 3L, 4L)) -> 1024,
+        local(Seq(1L, 2L, 3L, 4L, 1L)) -> 2, spark.range(1L, 5L).toDF("id") -> 1024)) {
+      val got = store.onlineFeaturesFor(spark, probe, Seq("typed2:score"), maxInline)
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq
+      val want = probe.join(full, Seq("id"), "left")
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq
+      assert(got == want)
+      assert(got.toMap.apply(1L).contains(10.0) && got.toMap.apply(3L).contains(30.0))
+    }
+  }
 }
 
 /** Kafka integration smoke: runs only when the spark-sql-kafka connector is
@@ -3376,6 +3538,54 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
     assert(files.length == 1, s"expected 1 data file in the generation, got ${files.length}")
     assert(src.read(spark).count() == 500)
+  }
+
+  private def partFiles(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    java.nio.file.Files.walk(root).forEach { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith("part-") && n.endsWith(".parquet")) out += root.relativize(p).toString
+    }
+    out.toSeq
+  }
+
+  test("a batch of driver rows upserts in ONE job with one file per touched " +
+      "bucket; other batches keep ≤ numBuckets files per generation; folds keep " +
+      "the bucket layout") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_blog10").toString + "/s"
+    val src = BucketedLogUpsertSource(dir, Seq("id"), numBuckets = 8, autoCompactEvery = 4)
+    // a non-local, fanned batch: the bucket exchange bounds its files
+    src.upsert(spark.range(0, 400).repartition(6)
+      .select(col("id"), (col("id") * 2L).as("v")), Seq("id"))
+    val gen0 = partFiles(s"$dir/__gen=0")
+    assert(gen0.nonEmpty && gen0.length <= 8, s"gen 0 wrote ${gen0.length} files")
+    // driver rows: one job, one file per touched bucket
+    val batch = Seq((3L, -3L), (5L, -5L), (11L, -11L), (1000L, 7L))
+    val touched = batch.map(_._1).toDF("id")
+      .select(pmod(xxhash64(col("id")), lit(8L)).cast("int")).distinct().count()
+    val (_, jobs) = JobCount(spark)(src.upsert(batch.toDF("id", "v"), Seq("id")))
+    assert(jobs == 1, s"a local-batch upsert ran $jobs jobs")
+    val gen1 = partFiles(s"$dir/__gen=1")
+    assert(gen1.length == touched, s"expected $touched files (one per bucket), got $gen1")
+    assert(gen1.map(_.split("/").head).distinct.length == gen1.length)
+    // every row sits in the bucket its key hashes to
+    val misplaced = spark.read.option("basePath", s"$dir/__gen=1").parquet(s"$dir/__gen=1")
+      .filter(col("__bucket") =!= pmod(xxhash64(col("id")), lit(8L)).cast("int")).count()
+    assert(misplaced == 0)
+    // two more appends reach the fold threshold: the fold rewrites through
+    // the same layout
+    src.upsert(Seq((3L, 33L)).toDF("id", "v"), Seq("id"))
+    src.upsert(Seq((4L, 44L)).toDF("id", "v"), Seq("id"))
+    val gens = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
+      .map(_.toString).filter(_.contains("__gen="))
+    assert(gens.length < 4, s"no fold ran: ${gens.toSeq}")
+    assert(partFiles(gens.max).forall(_.startsWith("__bucket=")), "the fold lost the bucket layout")
+    val out = src.read(spark).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out.size == 401 && out(3L) == 33L && out(4L) == 44L && out(5L) == -5L &&
+      out(1000L) == 7L && out(399L) == 798L)
+    assert(src.readForEntities(spark, Seq(3L, 1000L).toDF("id"))
+      .filter(col("id").isin(3L, 1000L)).count() == 2)
   }
 }
 
