@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, when}
+import graft.sources.StageAndSwap
 
 /** Caching / materialization / iteration plumbing (SURVEY §2.13).
   */
@@ -11,7 +12,8 @@ object Caching {
     * retrieval_job.py:2775-2817): if the cache path exists and is younger than
     * maxAge, read it; otherwise compute, write, and read back. Reading back
     * (rather than returning the computed frame) pins downstream plans to the
-    * materialized files, like the reference. */
+    * materialized files, like the reference. A refresh is a staged replace,
+    * so a `compute` that reads the stale cache still finds it. */
   def fileCached(spark: SparkSession, path: String,
       maxAge: Option[java.time.Duration] = None)(compute: => DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -19,9 +21,8 @@ object Caching {
     val fresh = fs.exists(p) && maxAge.forall { age =>
       System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime < age.toMillis
     }
-    if (!fresh) {
-      compute.write.mode("overwrite").parquet(path)
-    }
+    if (!fresh) StageAndSwap.replace(spark, path)(staging =>
+      compute.write.mode(SaveMode.Overwrite).parquet(staging))
     spark.read.parquet(path)
   }
 
@@ -52,13 +53,10 @@ object Caching {
   def compact(df: DataFrame, outPath: String, targetRecordsPerFile: Long,
       clusterBy: Seq[String] = Nil): Unit = {
     // cache before counting: the frame is read three times (count, range
-    // sampling, write) — and IN-PLACE compaction (outPath == the input's
-    // path) must not lazily re-read the files the overwrite deletes, so the
-    // write goes to a SIBLING staging dir that is swapped in afterwards.
-    // (Path(parent, name+suffix), never string concat: a trailing-slash
-    // outPath would nest the staging dir INSIDE dest, and the recursive
-    // delete would destroy both copies.) Don't evict a cache the caller
-    // already established.
+    // sampling, write). IN-PLACE compaction (outPath == the input's path)
+    // stays safe because the write is a staged replace: the old files are
+    // dropped only after the new ones are written. Don't evict a cache the
+    // caller already established.
     val wasCached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     if (!wasCached) df.persist()
     try {
@@ -68,19 +66,9 @@ object Caching {
         if (clusterBy.nonEmpty) df.repartitionByRange(files, clusterBy.map(col): _*)
           .sortWithinPartitions(clusterBy.map(col): _*)
         else df.repartition(files)
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      val dest = new org.apache.hadoop.fs.Path(outPath)
-      // the path's OWN filesystem, not the default one — outPath may live on
-      // s3a:// while fs.defaultFS is hdfs://
-      val fs = dest.getFileSystem(conf)
-      val staging = new org.apache.hadoop.fs.Path(
-        dest.getParent, dest.getName + "__graft_compact_tmp")
-      arranged.write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", targetRecordsPerFile)
-        .parquet(staging.toString)
-      fs.delete(dest, true)
-      if (!fs.rename(staging, dest))
-        throw new java.io.IOException(s"compact: rename $staging -> $dest failed")
+      StageAndSwap.replace(df.sparkSession, outPath)(staging =>
+        arranged.write.mode(SaveMode.Overwrite)
+          .option("maxRecordsPerFile", targetRecordsPerFile).parquet(staging))
     } finally if (!wasCached) { df.unpersist(); () }
   }
 

@@ -176,20 +176,6 @@ object Dedup {
     simhashBandPairs(sig, blockBy, bounds, maxHamming)
   }
 
-  /** Jaccard similarity of two precomputed distinct-shingle arrays. When a
-    * text column feeds multiple comparisons (any pairwise join), materialize
-    * the shingle set ONCE per document with [[shingleSet]] and compare with
-    * this — recomputing shingles per pair turns an O(pairs) join into
-    * O(pairs × doc_len). */
-  def jaccardFromSets(sa: Column, sb: Column): Column = {
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val uni = (size(sa) + size(sb) - size(array_intersect(sa, sb))).cast("double")
-    when(uni === 0, lit(0.0)).otherwise(inter / uni)
-  }
-
-  /** distinct k-gram shingle set of a text column. */
-  def shingleSet(text: Column, k: Int = 3): Column = array_distinct(shingles(text, k))
-
   /** distinct shingles hashed to a SORTED long array: the representation the
     * native merge-scan Jaccard kernel and inverted-index joins consume.
     * Jaccard over collision-free 64-bit hashes equals Jaccard over the string

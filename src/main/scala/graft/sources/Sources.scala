@@ -53,12 +53,9 @@ final case class ParquetSource(path: String) extends WritableSource {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
   def insert(df: DataFrame): Unit = df.write.mode(SaveMode.Append).parquet(path)
-  def overwrite(df: DataFrame): Unit = df.write.mode(SaveMode.Overwrite).parquet(path)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit =
-    // merge → stage to a sibling temp dir → ONE metadata-only rename swap;
-    // serialized per canonical path (see StageAndSwap for the protocol)
-    StageAndSwap.upsert(this, path, df, keys,
-      (d, p) => d.write.mode(SaveMode.Overwrite).parquet(p))
+  def overwrite(df: DataFrame): Unit =
+    StageAndSwap.replace(df.sparkSession, path)(p => df.write.mode(SaveMode.Overwrite).parquet(p))
+  def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.upsert(this, path, df, keys)
 }
 
 /** Hive-partitioned parquet dir (reference: PartitionedParquetFileSource,
@@ -72,21 +69,16 @@ final case class PartitionedParquetSource(path: String, partitionKeys: Seq[Strin
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
   def insert(df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).partitionBy(partitionKeys: _*).parquet(path)
-  def overwrite(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(path)
+  def overwrite(df: DataFrame): Unit = StageAndSwap.replace(df.sparkSession, path)(p =>
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(p))
   def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
     val spark = df.sparkSession
+    // only partitions present in df get rewritten (dynamic overwrite);
+    // within them, keep non-matching old rows
     val merged =
       if (!exists(spark)) df
-      else {
-        val old = read(spark)
-        // only partitions present in df get rewritten (dynamic overwrite);
-        // within them, keep non-matching old rows
-        val touched = df.select(partitionKeys.map(col): _*).distinct()
-        old.join(touched, partitionKeys, "left_semi")
-          .join(df.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          .unionByName(df)
-      }
+      else StageAndSwap.mergeByKey(read(spark).join(
+        df.select(partitionKeys.map(col): _*).distinct(), partitionKeys, "left_semi"), df, keys)
     // scoped to this write: a session-global mode would leak into every later
     // overwrite, which must drop the partitions its frame lacks
     merged.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
@@ -133,48 +125,31 @@ final case class BucketedParquetSource(path: String, bucketKeys: Seq[String],
     withBucket(df).repartition(col(B))
   def insert(df: DataFrame): Unit =
     distributed(df).write.mode(SaveMode.Append).partitionBy(B).parquet(path)
-  def overwrite(df: DataFrame): Unit = StageAndSwap.locked(df.sparkSession, path) {
-    val spark = df.sparkSession
-    // stage to a SIBLING dir and rename over dest (ADVICE r15): the former
-    // pre-delete destroyed the table before Spark's own
-    // cannot-overwrite-a-path-being-read guard could fire, so a
-    // read-modify-overwrite caller lost the table instead of getting the
-    // loud AnalysisException; staging also makes a mid-write crash leave
-    // the old table intact
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dest.getParent, dest.getName + "__tmp_overwrite")
-    distributed(df).write.mode(SaveMode.Overwrite).partitionBy(B).parquet(tmp.toString)
-    // partitionBy writes NO files for an empty frame, which would leave an
-    // unreadable (schema-less) dir — materialize the schema as one empty
-    // part file inside a concrete partition dir instead. A post-write
-    // listing, not a pre-write df.isEmpty: the probe was a whole extra job
-    // on every overwrite (optimization r15)
-    if (!GenLog.hasDataChildren(fs, tmp))
-      df.write.mode(SaveMode.Overwrite).parquet(s"$tmp/$B=0")
-    StageAndSwap.swapInto(spark, tmp.toString, path)
+  /** A staged replace ([[StageAndSwap.replace]]). partitionBy writes NO
+    * files for an empty frame, so an empty write gets the schema donor
+    * ([[GenLog.writeDonorIfEmpty]]) and the store stays readable. */
+  def overwrite(df: DataFrame): Unit = StageAndSwap.replace(df.sparkSession, path) { p =>
+    distributed(df).write.mode(SaveMode.Overwrite).partitionBy(B).parquet(p)
+    GenLog.writeDonorIfEmpty(df.sparkSession, df.schema, p, Seq(B))
   }
   def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
     require(bucketKeys.forall(keys.contains),
       s"bucket keys $bucketKeys must be contained in upsert keys $keys " +
         "(same key must land in the same bucket)")
     val spark = df.sparkSession
-    val newB = withBucket(df)
-    if (!exists(spark)) {
-      distributed(df).write.mode(SaveMode.Overwrite).partitionBy(B).parquet(path)
-    } else {
+    if (!exists(spark)) overwrite(df)
+    else {
+      val newB = withBucket(df)
       // ≤ numBuckets ints by construction — a bounded driver pull that buys
       // STATIC partition pruning on the old-side scan below
       val touched = newB.select(B).distinct().collect().map(_.getInt(0)).toSeq
       if (touched.nonEmpty) {
         val old = spark.read.parquet(path).filter(col(B).isin(touched: _*))
-        val merged = old
-          .join(df.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          .unionByName(newB)
-        // dynamic overwrite commits ONLY the partitions present in `merged`
-        // (exactly the touched buckets); scoped via writer option, not a
-        // session-global conf mutation
-        merged.repartition(col(B)) // ≤ touched-bucket files (see `distributed`)
+        // dynamic overwrite commits ONLY the partitions present in the
+        // merge (exactly the touched buckets); scoped via writer option, not
+        // a session-global conf mutation
+        StageAndSwap.mergeByKey(old, newB, keys)
+          .repartition(col(B)) // ≤ touched-bucket files (see `distributed`)
           .write.mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(B).parquet(path)
@@ -228,6 +203,20 @@ private[graft] object GenLog {
       dir: org.apache.hadoop.fs.Path): Boolean =
     fs.exists(dir) && fs.listStatus(dir).exists(s =>
       s.isDirectory || !s.getPath.getName.startsWith("_"))
+
+  /** The schema donor for a just-written dir that landed no data
+    * (partitionBy writes NO files for an empty frame, a zero-partition plan
+    * none at all): one empty schema-bearing file in the all-zero leaf of
+    * `partitionCols`, so the dir stays readable. Built from an empty RDD,
+    * never from the written frame — re-running that would re-run its whole
+    * upstream. */
+  def writeDonorIfEmpty(spark: SparkSession, schema: StructType, dir: String,
+      partitionCols: Seq[String]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!hasDataChildren(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
+        .write.mode(SaveMode.Overwrite).parquet(partitionCols.foldLeft(dir)((d, c) => s"$d/$c=0"))
+  }
 
   /** After an upsert's write landed no data in `gen`: drop the empty
     * generation and release its claim (an empty upsert is a NO-OP — it must
@@ -428,13 +417,16 @@ private[graft] object GenLog {
     * written (appends mint NEW generations; folds create new ones and
     * delete the old), so its recursive listing never changes — without the
     * cache every trigger would re-walk the LARGE base tier's files, an
-    * O(base file count) remote listing per threshold hit at 100 TB. */
+    * O(base file count) remote listing per threshold hit at 100 TB. Only a
+    * replace reuses a generation's path (`__gen=0`); it drops the entries
+    * of the generations it replaces. */
   private val sizes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def sizeOf(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Long =
     sizes.computeIfAbsent(fs.makeQualified(p).toString,
       _ => fs.getContentSummary(p).getLength)
-  /** Drop a deleted generation's cache entry (called by the folds). */
+  /** Drop a deleted generation's cache entry (called by the folds and the
+    * replace). */
   def forgetSize(spark: SparkSession, p: org.apache.hadoop.fs.Path): Unit = {
     val (fs, _) = fsOf(spark, p.toString)
     sizes.remove(fs.makeQualified(p).toString)
@@ -754,30 +746,19 @@ sealed abstract class GenLogStore extends WritableSource {
   /** Exact snapshot points currently retained, ascending. */
   def snapshots(spark: SparkSession): Seq[Long] = GenLog.snapshotGens(spark, path)
 
-  /** Has a just-written dir landed any data? */
-  private def landed(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    GenLog.hasDataChildren(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** The schema donor for a generation that landed no data (partitionBy
-    * writes NO files for an empty frame, a zero-partition plan none at
-    * all): one empty schema-bearing file in the layout's all-zero leaf, so
-    * the generation stays readable. Built from an empty RDD, never from the
-    * written frame — re-running that would re-run its whole upstream. */
-  private def writeDonor(spark: SparkSession, schema: StructType, dir: String): Unit =
-    spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
-      .write.mode(SaveMode.Overwrite).parquet(nested.foldLeft(dir)((d, f) => s"$d/${f.name}=0"))
-
-  def overwrite(df: DataFrame): Unit = StageAndSwap.locked(df.sparkSession, path) {
+  /** Replace the whole log with `df` as its generation 0 through the one
+    * staged replace ([[StageAndSwap.replace]]): generation 0, its schema
+    * donor and its writer stamp are all written in the staging dir, so a
+    * frame that reads this store still finds every old generation while it
+    * is written. The replaced generations' cached sizes are dropped, or the
+    * next trigger would weigh the tail against a base that is gone. */
+  def overwrite(df: DataFrame): Unit = StageAndSwap.replace(df.sparkSession, path) { staging =>
     val spark = df.sparkSession
-    val dest = new Path(path)
-    dest.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dest, true)
-    val dir = s"$path/$G=0"
+    val dir = s"$staging/$G=0"
     writeGen(df, SaveMode.Overwrite, dir)
-    if (!landed(spark, dir)) writeDonor(spark, df.schema, dir)
+    GenLog.writeDonorIfEmpty(spark, df.schema, dir, nested.map(_.name))
     GenLog.markWriter(spark, dir)
-    spark.catalog.refreshByPath(path)
+    GenLog.genDirs(spark, path).foreach(GenLog.forgetSize(spark, _))
   }
 
   def upsert(df: DataFrame, upsertKeys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
@@ -797,7 +778,8 @@ sealed abstract class GenLogStore extends WritableSource {
     // generations). Exception: the store's FIRST generation is kept as
     // the schema donor — a read of an all-empty store must return the
     // empty frame WITH schema, not a schema-inference error.
-    if (!GenLog.resolveEmptyGen(spark, path, gen)(writeDonor(spark, df.schema, dir))) return
+    if (!GenLog.resolveEmptyGen(spark, path, gen)(
+      GenLog.writeDonorIfEmpty(spark, df.schema, dir, nested.map(_.name)))) return
     GenLog.markWriter(spark, dir)
     spark.catalog.refreshByPath(path)
     // amortized auto-compaction bounds generations (and resolve cost) BY
@@ -850,7 +832,7 @@ sealed abstract class GenLogStore extends WritableSource {
     // materialize the fold FULLY before dropping any input generation
     // (self-overwrite discipline, same as Caching.compact)
     writeGen(resolved, SaveMode.Overwrite, staging.toString)
-    if (!landed(spark, staging.toString)) writeDonor(spark, resolved.schema, staging.toString)
+    GenLog.writeDonorIfEmpty(spark, resolved.schema, staging.toString, nested.map(_.name))
     if (!dest.getFileSystem(spark.sparkContext.hadoopConfiguration).rename(staging, dest))
       throw new java.io.IOException(s"$op: rename $staging -> $dest failed")
     GenLog.retireInputs(spark, path, dest.toString, inputs)
@@ -884,12 +866,6 @@ final case class LogUpsertSource(path: String, keys: Seq[String],
   protected def nested: Seq[StructField] = Nil
   protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit =
     (if (boundFiles) GenLog.boundGenFiles(df) else df).write.mode(mode).parquet(dir)
-}
-
-object LogUpsertSource {
-  /** Test hook kept at its historical address; counters now live in
-    * [[GenLog]], shared with [[BucketedLogUpsertSource]]. */
-  private[graft] def resetCountersForTest(): Unit = GenLog.resetCountersForTest()
 }
 
 /** LSM-composed store: [[BucketedParquetSource]]'s hash-bucket layout nested
@@ -983,15 +959,12 @@ final case class CsvSource(
     r.csv(path)
   }
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
-  def insert(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).option("sep", sep).option("header", header.toString).csv(path)
+  private def writer(df: DataFrame) =
+    df.write.option("sep", sep).option("header", header.toString)
+  def insert(df: DataFrame): Unit = writer(df).mode(SaveMode.Append).csv(path)
   def overwrite(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).option("sep", sep).option("header", header.toString).csv(path)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit =
-    // stage-and-swap like parquet/jsonl/orc — never a driver collect
-    StageAndSwap.upsert(this, path, df, keys,
-      (d, p) => d.write.mode(SaveMode.Overwrite).option("sep", sep)
-        .option("header", header.toString).csv(p))
+    StageAndSwap.replace(df.sparkSession, path)(p => writer(df).mode(SaveMode.Overwrite).csv(p))
+  def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.upsert(this, path, df, keys)
 }
 
 /** Delta Lake table (reference: DeltaFileSource, sources/local.py:887-1055 —
@@ -1095,10 +1068,9 @@ final case class JsonLinesSource(
   }
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
   def insert(df: DataFrame): Unit = writer(df).mode(SaveMode.Append).json(path)
-  def overwrite(df: DataFrame): Unit = writer(df).mode(SaveMode.Overwrite).json(path)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit =
-    StageAndSwap.upsert(this, path, df, keys,
-      (d, p) => writer(d).mode(SaveMode.Overwrite).json(p))
+  def overwrite(df: DataFrame): Unit =
+    StageAndSwap.replace(df.sparkSession, path)(p => writer(df).mode(SaveMode.Overwrite).json(p))
+  def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.upsert(this, path, df, keys)
 }
 
 /** ORC table — the other columnar format Spark ships a vectorized,
@@ -1108,44 +1080,52 @@ final case class OrcSource(path: String) extends WritableSource {
   def read(spark: SparkSession): DataFrame = spark.read.orc(path)
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
   def insert(df: DataFrame): Unit = df.write.mode(SaveMode.Append).orc(path)
-  def overwrite(df: DataFrame): Unit = df.write.mode(SaveMode.Overwrite).orc(path)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit =
-    StageAndSwap.upsert(this, path, df, keys,
-      (d, p) => d.write.mode(SaveMode.Overwrite).orc(p))
+  def overwrite(df: DataFrame): Unit =
+    StageAndSwap.replace(df.sparkSession, path)(p => df.write.mode(SaveMode.Overwrite).orc(p))
+  def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.upsert(this, path, df, keys)
 }
 
-/** The shared stage-and-swap upsert protocol: merge (old anti-join new ∪
-  * new), materialize to a temp dir, then SWAP the temp dir into place with
-  * one FileSystem.rename (the Caching.compact idiom). Self-overwrite-safe
-  * (the merge is fully materialized before the old files are dropped) at
-  * HALF the old cost: the previous protocol re-read the temp copy and
-  * wrote the whole table a second time, so every upsert paid two full
-  * materializations — measured at the ×100 streaming scale point, that
-  * second write dominated per-batch sink time (SCALE.md). The crash
-  * window (delete → rename, metadata-only) is strictly smaller than the
-  * old one (delete + full rewrite); full transactionality is the
-  * Delta/Iceberg commit log's job (COVERAGE §2.1). On object stores the
-  * rename is a server-side copy — still cheaper than a second
-  * compute+upload pass. One implementation (parquet/csv/json/orc all share
-  * it) so a protocol fix lands everywhere.
+/** The one replace protocol of every file store: "replace this table's
+  * contents" is written once here, and every `overwrite` — parquet,
+  * partitioned, bucketed, csv, jsonl, orc and both log stores — plus
+  * `Caching.compact`/`fileCached` is a single [[replace]] call with its own
+  * format writer. [[replace]] writes the new contents into ONE fresh
+  * sibling staging dir (`<name>__graft_replace`), then swaps it over the
+  * live path with one `FileSystem.rename` and refreshes Spark's cached
+  * file index. The old files stay untouched until the new ones are fully
+  * written, so a frame that reads the table it replaces (read-modify-
+  * overwrite, `INSERT OVERWRITE t SELECT … FROM t`) keeps its rows, and a
+  * write that fails leaves the old table as it was. [[upsert]] is the
+  * reference's algebra on top (sources/local.py:317-340): the store's own
+  * `overwrite` of [[mergeByKey]] (old rows whose keys the batch lacks ∪
+  * the batch), so a store states its writer once. Delta/Iceberg commit
+  * through their own log instead (COVERAGE §2.1).
   *
-  * Concurrency contract: the whole read-merge-write-swap sequence holds a
-  * per-canonical-path lock, so concurrent upserts to ONE path from this JVM
-  * serialize and the final table is their exact union (reference semantics:
-  * sources/local.py:317-340). The lock is intra-JVM only — locking just the
-  * swap would not help, since both writers would merge against the same old
-  * snapshot and the last swap would silently drop the other's rows.
+  * Crash window: the swap is `delete(dest)` then `rename(staging, dest)`,
+  * two metadata calls. A crash between them leaves no table at `path`
+  * and the complete new contents in the staging dir; recover by renaming
+  * it into place before the path is written again, since the next replace
+  * clears the staging dir first. On object stores the rename is a
+  * server-side copy. Rename-aside with an open-time recovery probe is not
+  * built yet.
+  *
+  * Concurrency contract: each replace, and each upsert's whole
+  * read-merge-write-swap, holds a per-canonical-path lock, so concurrent
+  * writes to ONE path from this JVM serialize and concurrent upserts end
+  * as their exact union. The lock is intra-JVM only — locking just the
+  * swap would not help, since both writers would merge against the same
+  * old snapshot and the last swap would silently drop the other's rows.
   * CROSS-process coordination is explicitly out of scope: that is the
   * Delta/Iceberg commit log's job (COVERAGE §2.1). */
-private[sources] object StageAndSwap {
+private[graft] object StageAndSwap {
   /** One monitor per qualified path; the map only ever grows by distinct
     * table paths touched by this JVM (bounded by the contract registry). */
   private val pathLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Run `body` holding this JVM's lock for `path` (qualified against the
     * path's OWN filesystem so `/x`, `file:/x` and `file:///x` share one
-    * monitor). */
-  private[sources] def locked[T](spark: SparkSession, path: String)(body: => T): T = {
+    * monitor). Re-entrant: an upsert's `overwrite` re-takes it. */
+  private[graft] def locked[T](spark: SparkSession, path: String)(body: => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val key = p.getFileSystem(conf).makeQualified(p).toString
@@ -1153,41 +1133,45 @@ private[sources] object StageAndSwap {
     monitor.synchronized(body)
   }
 
-  def upsert(src: WritableSource, path: String, df: DataFrame, keys: Seq[String],
-      write: (DataFrame, String) => Unit): Unit = locked(df.sparkSession, path) {
-    val spark = df.sparkSession
-    // existence probe, NOT try/catch around read: a transient read failure
-    // must propagate, or the swap below would destroy the old table
-    val merged =
-      if (!src.exists(spark)) df
-      else src.read(spark).join(df.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        .unionByName(df)
-    // SIBLING staging dir via Path(parent, name+suffix), never string
-    // concat: with a trailing-slash `path` the concat form nests the
-    // staging dir INSIDE dest, and swapInto's recursive delete would
-    // destroy both the old table and the freshly staged merge
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(dest.getParent, dest.getName + "__tmp_upsert")
-    write(merged, tmp.toString)
-    swapInto(spark, tmp.toString, path)
-  }
+  /** Replace `path`'s contents with what `write` puts in the staging dir it
+    * is handed, then swap that dir over `path`; throws (leaving the staging
+    * dir intact for recovery) if the rename is refused. */
+  def replace(spark: SparkSession, path: String)(write: String => Unit): Unit =
+    locked(spark, path) {
+      val dest = new org.apache.hadoop.fs.Path(path)
+      // the path's OWN filesystem, not FileSystem.get's defaultFS — dest may
+      // live on s3a://|abfss:// while fs.defaultFS is file:// or hdfs://,
+      // and delete/rename against the wrong fs throw "Wrong FS"
+      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // SIBLING staging dir via Path(parent, name+suffix), never string
+      // concat: with a trailing-slash `path` the concat form nests the
+      // staging dir INSIDE dest, and the swap's recursive delete would
+      // destroy both the old table and the freshly staged contents
+      val staging = new org.apache.hadoop.fs.Path(dest.getParent, dest.getName + "__graft_replace")
+      fs.delete(staging, true)
+      write(staging.toString)
+      fs.delete(dest, true)
+      if (!fs.rename(staging, dest))
+        throw new java.io.IOException(s"replace: rename $staging -> $path failed")
+      // the rename bypasses Spark's write path, so drop any cached file
+      // index a prior read of `path` established
+      spark.catalog.refreshByPath(path)
+    }
 
-  /** Drop `path` and rename `tmp` over it; throws (leaving `tmp` intact
-    * for recovery) if the rename is refused. */
-  private[sources] def swapInto(spark: SparkSession, tmp: String, path: String): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(path)
-    // the path's OWN filesystem, not FileSystem.get's defaultFS — dest may
-    // live on s3a://|abfss:// while fs.defaultFS is file:// or hdfs://,
-    // and delete/rename against the wrong fs throw "Wrong FS"
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dest, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dest))
-      throw new java.io.IOException(s"upsert swap: rename $tmp -> $path failed")
-    // the rename bypasses Spark's write path (the old second write went
-    // through InsertIntoHadoopFsRelationCommand, which refreshed for us),
-    // so drop any cached file index a prior read of `path` established
-    spark.catalog.refreshByPath(path)
-  }
+  /** Upsert on a whole-table store: overwrite it with the merge, under the
+    * path lock. Existence probe, NOT try/catch around read: a transient
+    * read failure must propagate, or the overwrite would drop the old
+    * rows. */
+  def upsert(src: WritableSource, path: String, df: DataFrame, keys: Seq[String]): Unit =
+    locked(df.sparkSession, path) {
+      val spark = df.sparkSession
+      src.overwrite(if (src.exists(spark)) mergeByKey(src.read(spark), df, keys) else df)
+    }
+
+  /** The upsert algebra, written once: `old`'s rows whose keys `df` lacks,
+    * plus every row of `df`. */
+  def mergeByKey(old: DataFrame, df: DataFrame, keys: Seq[String]): DataFrame =
+    old.join(df.select(keys.map(col): _*).distinct(), keys, "left_anti").unionByName(df)
 }
 
 /** Literal in-memory frame (reference: InMemorySource, sources/in_mem_source.py:61). */

@@ -262,7 +262,7 @@ class SourcesSpec extends AnyFunSuite {
       .map(r => (r.getAs[Number]("id").longValue, r.getString(1)))
     assert(out.toSeq == Seq((1L, "a"), (2L, "B"), (3L, "c")))
     // the stage dir must be gone after the swap
-    assert(!new java.io.File(dir + "__tmp_upsert").exists())
+    assert(!new java.io.File(dir + "__graft_replace").exists())
     // self-overwrite safety: a second upsert reading its own output
     src.upsert(Seq((1L, "A")).toDF("id", "v"), Seq("id"))
     assert(src.read(spark).count() == 3)

@@ -3180,7 +3180,7 @@ class LogUpsertSourceSpec extends AnyFunSuite {
     LogUpsertSource(dir, Seq("id")).upsert(Seq((1L, "old")).toDF("id", "v"), Seq("id"))
     // a 'restarted process': drop the cached counter so the next source
     // must re-seed from the directory listing
-    graft.sources.LogUpsertSource.resetCountersForTest()
+    graft.sources.GenLog.resetCountersForTest()
     val src2 = LogUpsertSource(dir, Seq("id"))
     src2.upsert(Seq((1L, "new")).toDF("id", "v"), Seq("id"))
     assert(src2.read(spark).head().getString(1) == "new",
@@ -3611,7 +3611,7 @@ class LogStoreClaimSpec extends AnyFunSuite {
       fs.create(new org.apache.hadoop.fs.Path(dir, "_claim_1"), false).close()
       // this process 'restarts': its counter re-seeds from the dir listing
       // (max __gen = 0), so WITHOUT the claim protocol it would mint 1 too
-      LogUpsertSource.resetCountersForTest()
+      GenLog.resetCountersForTest()
       src.upsert(Seq((2L, "b")).toDF("id", "v"), Seq("id"))
       def gens() = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
         .map(_.toString.split("/").last).filter(_.startsWith("__gen="))
