@@ -824,9 +824,7 @@ object SparkEntry {
 
     // --- random-hyperplane LSH embedding near-dup at a SECOND operating
     // point of the portable plane family: 5 planes / threshold 0.25 (finer
-    // buckets, looser verify) vs q68's 4 planes / 0.3. Fully hash-checked;
-    // the xxhash-derived-plane form ([[Dedup.embeddingNearDup]]) stays the
-    // generic path, spec-gated ---
+    // buckets, looser verify) vs q68's 4 planes / 0.3. Fully hash-checked ---
     Q("q33_embedding_neardup",
       (s, dir) => Dedup.embeddingNearDupPortable(t(s, dir, "embeddings"),
         "embedding", "vec_id", threshold = 0.25, planes = 5, dim = 64),
@@ -845,11 +843,7 @@ object SparkEntry {
         Dedup.canonicalize(docs, pairs, "doc_id").select("doc_id", "lang")
       },
       Some(s"""WITH RECURSIVE ${minhashCtes(0.6)},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a)
+          ${sqlClosureCtes("pairs", "comp")}
         SELECT d.doc_id, d.lang FROM documents d
         LEFT JOIN comp ON comp.id = d.doc_id
         WHERE comp.comp IS NULL OR comp.comp = d.doc_id""")),
@@ -1406,6 +1400,24 @@ object SparkEntry {
   // ---------- round 2: corpus-pipeline ops (decontamination, sampling,
   // LM counts, binning, repetition signals, oracle-checked LSH) ----------
 
+  /** [[Dedup.connectedComponents]] restated for the DuckDB oracle over an
+    * undirected edge relation `edges(id_a, id_b)`: `sym` holds both
+    * directions and `reach` is its recursive transitive closure (the
+    * statement needs `WITH RECURSIVE`). */
+  private def sqlReachCtes(edges: String): String =
+    s"""sym AS (SELECT id_a AS a, id_b AS b FROM $edges
+            UNION SELECT id_b, id_a FROM $edges),
+          reach AS (SELECT a, b FROM sym
+            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)"""
+
+  /** each node of `reach` with the smallest id it reaches: `(id, comp)` */
+  private def sqlComponents: String = "SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a"
+
+  /** [[sqlReachCtes]] plus an `out(id, comp)` CTE of [[sqlComponents]]. */
+  private def sqlClosureCtes(edges: String, out: String): String =
+    s"""${sqlReachCtes(edges)},
+          $out AS ($sqlComponents)"""
+
   /** q67's portable hash family restated for the DuckDB oracle as a CTE
     * chain ending in `pairs(id_a, id_b, jaccard)`: must stay in lockstep
     * with [[Dedup.portableCoeffs]] / [[Dedup.PortableP]]. Shared by q67
@@ -1843,11 +1855,8 @@ object SparkEntry {
         Dedup.nearDuplicatesPortable(t(s, dir, "documents"), "text", "doc_id",
           threshold = 0.5, bands = 4, k = 3)),
       Some(s"""WITH RECURSIVE ${minhashCtes()},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-        SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a""")),
+          ${sqlReachCtes("pairs")}
+        $sqlComponents""")),
 
     // --- MERGEABLE distinct-count sketches at a SECOND portable operating
     // point: per-LANGUAGE vocabulary registers at lgK=6 (coarser sketch,
@@ -2678,11 +2687,7 @@ object SparkEntry {
             WHERE id_a % 5 = 0 AND id_b % 5 = 0),
           surv AS MATERIALIZED (SELECT gnew.* FROM gnew
             WHERE doc_id NOT IN (SELECT doc_id FROM cdrop)),
-          sym AS (SELECT id_a AS a, id_b AS b FROM np
-            UNION SELECT id_b, id_a FROM np),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("np", "cc")},
           comp AS (SELECT surv.doc_id, coalesce(cc.comp, surv.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM surv LEFT JOIN cc ON cc.id = surv.doc_id),
@@ -3132,11 +3137,7 @@ object SparkEntry {
         .groupBy("comp").agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters")),
       Some(s"""WITH RECURSIVE ${minhashCtes()},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "comp")},
           sizes AS (SELECT comp, count(*) AS cluster_size FROM comp GROUP BY comp)
         SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1""")),
 
@@ -3335,11 +3336,7 @@ object SparkEntry {
           .select("doc_id", "cluster_size", "weight")
       },
       Some(s"""WITH RECURSIVE ${minhashCtes()},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "comp")},
           sizes AS (SELECT comp, count(*) AS sz FROM comp GROUP BY comp)
         SELECT d.doc_id,
           coalesce(sz, 1) AS cluster_size,
@@ -4172,11 +4169,7 @@ object SparkEntry {
           .select("doc_id", "source", "lang", "n_chars")
       },
       Some(s"""WITH RECURSIVE ${minhashCtes()},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           d AS (SELECT doc_id, source, lang, n_chars,
               coalesce(cc.comp, doc_id) AS comp
             FROM documents LEFT JOIN cc ON cc.id = doc_id),
@@ -4397,11 +4390,7 @@ object SparkEntry {
           .select("doc_id", "component", "split")
       },
       Some(s"""WITH RECURSIVE ${minhashCtes()},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           d AS (SELECT doc_id, coalesce(cc.comp, doc_id) AS component
             FROM documents LEFT JOIN cc ON cc.id = doc_id)
         SELECT doc_id, component,
@@ -4533,7 +4522,7 @@ object SparkEntry {
           mappingKeys = Map("evt_type" -> "event_type"))
         graft.streaming.Streaming.stagedWindowAggRun(
           s, raw, "ts", "event_type", "value",
-          pipeline = graft.streaming.Streaming.contractPipeline(view))
+          pipeline = view.conform)
       },
       Some("""SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
           AS window_start,
@@ -4637,11 +4626,7 @@ object SparkEntry {
             FROM m) WHERE (mask & 63) = 0),
           kept AS (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
@@ -4762,11 +4747,7 @@ object SparkEntry {
           .select("doc_id", "component", "split")
       },
       Some(s"""WITH RECURSIVE ${minhashCtes(0.5, 4, 3)},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           dtok AS (SELECT doc_id, lang, list_filter(
               string_split_regex(lower(trim(text)), '\\s+'),
               xq -> length(xq) > 0) AS ws
@@ -5023,11 +5004,7 @@ object SparkEntry {
             FROM m) WHERE (mask & 63) = 0),
           kept AS MATERIALIZED (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
@@ -5252,11 +5229,7 @@ object SparkEntry {
             WHERE source <> 'src19'
               AND doc_id NOT IN (SELECT doc_id FROM cont)),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
@@ -5323,11 +5296,7 @@ object SparkEntry {
               coalesce(agg.text_clean, '') AS text
             FROM w0 LEFT JOIN agg USING (doc_id) WHERE w0.source <> 'src19'),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
-          sym AS (SELECT id_a AS a, id_b AS b FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-          reach AS (SELECT a, b FROM sym
-            UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
-          cc AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
+          ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(list_filter(string_split_regex(lower(trim(kept.text)), '\\s+'),
                 xk -> length(xk) > 0)) AS BIGINT) AS n_tok

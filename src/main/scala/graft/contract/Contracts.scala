@@ -2,8 +2,9 @@ package graft.contract
 
 import graft.core.FeatureType
 import graft.expr.Expr
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
 /** Constraint ADT (reference: aligned/schemas/constraints.py:76-262), lowered
   * to boolean Columns exactly like the reference's
@@ -46,7 +47,10 @@ final case class DerivedFeature(
     dtype: FeatureType,
     expr: Expr,
     dependingOn: Seq[String],
-    depth: Int = 1)
+    depth: Int = 1) {
+  /** the feature's column, cast to its declared type */
+  def column: Column = expr.toColumn.cast(dtype.sparkType)
+}
 
 /** Aggregation IR (schemas/derivied_feature.py:79-137): what to aggregate,
   * grouped by the view's entities, over an optional trailing time window. */
@@ -117,12 +121,55 @@ final case class FeatureView(
     entities.map(_.name) ++ features.map(_.name) ++ derived.map(_.name) ++
       aggregates.map(_.name) ++ eventTimestamp.map(_.name).toSeq
 
+  /** The contract chain every read, lookup, stream batch and SQL write of
+    * this view runs (FileFullJob, local/job.py:218-292; the stream worker,
+    * worker.py:172-204), as narrow projections over `df`: rename source
+    * columns to contract names → fill missing declared columns → ensure
+    * types → derive in topological rounds. No aggregates. */
+  def conform(df: DataFrame): DataFrame = {
+    val declared = entities ++ features
+    // rename source columns to contract names (ColumnFeatureMappable, local/job.py:259-271)
+    val renamed = mappingKeys.foldLeft(df) { case (acc, (from, to)) =>
+      if (acc.columns.contains(from)) acc.withColumnRenamed(from, to) else acc
+    }
+    // fill missing optional columns with defaults/null (FillMissingColumnsJob,
+    // retrieval_job.py:2488-2538)
+    val filled = declared.foldLeft(renamed) { (acc, f) =>
+      if (acc.columns.contains(f.name)) acc
+      else acc.withColumn(f.name, lit(f.defaultValue.orNull).cast(f.dtype.sparkType))
+    }
+    // ensure-types: cast ONLY on mismatch (EnsureTypesJob, retrieval_job.py:2866-2955);
+    // string-encoded arrays/structs are JSON-decoded, not cast
+    // (retrieval_job.py:2928-2941). "Enforced by casting, not rejection"
+    // (strict=False, SURVEY §1.3): try_cast nulls malformed values instead of
+    // failing the job under ANSI
+    val actual = filled.schema.fields.map(f => f.name -> f.dataType).toMap
+    val typed = declared.foldLeft(filled) { (acc, f) =>
+      val t = f.dtype.sparkType
+      actual.get(f.name) match {
+        case Some(a) if a == t => acc
+        case Some(StringType) if t.isInstanceOf[ArrayType] || t.isInstanceOf[StructType] =>
+          acc.withColumn(f.name, from_json(col(f.name), t))
+        case Some(_) => acc.withColumn(f.name, col(f.name).try_cast(t.sql))
+        case None => acc
+      }
+    }
+    // derived features in topological rounds (retrieval_job.py:2345-2388);
+    // skip any already present in the source (Transformation.should_skip)
+    FeatureView.derivedRounds(derived, s"view '$name'").foldLeft(typed) { (acc, round) =>
+      val todo = round.filterNot(d => acc.columns.contains(d.name))
+      if (todo.isEmpty) acc else acc.withColumns(todo.map(d => d.name -> d.column).toMap)
+    }
+  }
+}
+
+object FeatureView {
   /** Derived features batched topologically (retrieval_request.py:204-231):
     * each round only references base columns or columns produced by earlier
     * rounds. Computed from the dependency graph — the `depth` field is a
-    * hint, not trusted. Throws on cycles / unknown dependencies among derived
-    * features. */
-  def derivedRounds: Seq[Seq[DerivedFeature]] = {
+    * hint, not trusted. Throws on cycles / unknown dependencies among the
+    * derived features; `owner` names them in the message. */
+  def derivedRounds(derived: Seq[DerivedFeature], owner: String): Seq[Seq[DerivedFeature]] = {
     val derivedNames = derived.map(_.name).toSet
     var remaining = derived
     var emitted = Set.empty[String]
@@ -132,7 +179,7 @@ final case class FeatureView(
         _.dependingOn.filter(derivedNames.contains).forall(emitted.contains))
       if (ready.isEmpty)
         throw new IllegalStateException(
-          s"cyclic or unresolvable derived features in view '$name': ${blocked.map(_.name).mkString(", ")}")
+          s"cyclic or unresolvable derived features in $owner: ${blocked.map(_.name).mkString(", ")}")
       rounds += ready
       emitted ++= ready.map(_.name)
       remaining = blocked

@@ -299,30 +299,6 @@ object Dedup {
       df, textCol, idCol, threshold, k)
       .select("id_a", "id_b", "jaccard")
 
-  /** Embedding-cosine near-dup: candidate pairs from random-hyperplane LSH
-    * buckets, verified by exact cosine ≥ threshold. Deterministic
-    * pseudo-random hyperplanes derived from xxhash64(dim, bit). */
-  def embeddingNearDup(
-      df: DataFrame, vecCol: String, idCol: String,
-      threshold: Double = 0.95, planes: Int = 16): DataFrame = {
-    val sigBits = (0 until planes).map { p =>
-      // hyperplane component for dim i: hash(p, i) mapped to [-1, 1]
-      val dot = aggregate(
-        zip_with(col("vec"), sequence(lit(0), size(col("vec")) - 1),
-          (v, i) => v.cast("double") * ((xxhash64(lit(p), i) % 1000).cast("double") / 1000.0)),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot > 0, shiftleft(lit(1L), p)).otherwise(0L)
-    }
-    val withSig = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("bucket", sigBits.reduce(_ bitwiseOR _))
-    val a = withSig.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = withSig.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", Similarity.cosine(col("vec_a"), col("vec_b")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
-
   /** INCREMENTAL exact dedup: drop new-batch rows whose normalized text
     * already exists in the corpus, then exact-dedup within the batch — the
     * daily-ingest shape (dedup a day's crawl against the accumulated corpus
@@ -420,8 +396,8 @@ object Dedup {
   /** Embedding near-dup with the PORTABLE plane matrix: sign-of-dot LSH
     * bucketing (one narrow map — the plane matrix is plan-time literals, no
     * md5 at runtime), bucket equi-join, exact-cosine verification. Fully
-    * deterministic → DuckDB-hash-checkable, unlike [[embeddingNearDup]]'s
-    * xxhash-derived planes. `dim` must match the vector width. */
+    * deterministic → DuckDB-hash-checkable. `dim` must match the vector
+    * width. */
   def embeddingNearDupPortable(
       df: DataFrame, vecCol: String, idCol: String,
       threshold: Double, planes: Int, dim: Int): DataFrame = {
@@ -503,7 +479,7 @@ object Dedup {
 
   /** Connected components over near-duplicate PAIRS → cluster ids: the step
     * that turns pairwise edges (from [[nearDuplicates]] /
-    * [[embeddingNearDup]] / simhash banding) into dedup GROUPS, so a
+    * [[embeddingNearDupPortable]] / simhash banding) into dedup GROUPS, so a
     * pipeline can keep one canonical document per cluster.
     *
     * Union-find is driver-bound, so this is distributed min-label

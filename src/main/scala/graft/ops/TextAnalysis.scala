@@ -66,29 +66,6 @@ object TextAnalysis {
     (lenOk + wordOk + punctOk + digitOk) / 4.0
   }
 
-  /** n-gram-heuristic language ID over a small built-in profile: scores each
-    * language by hits of its most characteristic words/characters. Covers the
-    * test corpus languages (en/es/de/fr/zh); extensible map. */
-  def langId(text: Column): Column = {
-    val t = lower(text)
-    // presence-count = |distinct(tokens) ∩ stopwords| — one tokenization for
-    // all languages (see langIdDeterministic scaladoc)
-    val tokens = array_distinct(split(t, "\\s+"))
-    def hits(words: Seq[String]): Column = size(array_intersect(tokens, lit(words.toArray)))
-    val zh = when(t.rlike("[\\u4e00-\\u9fff]"), 100).otherwise(0)
-    val en = hits(Seq("the", "and", "of", "to", "is", "that", "with", "for"))
-    val es = hits(Seq("el", "la", "los", "las", "es", "una", "que", "por", "con"))
-    val de = hits(Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für"))
-    val fr = hits(Seq("le", "la", "les", "est", "et", "une", "dans", "pour", "que", "des"))
-    val scores = map(
-      lit("zh"), zh, lit("en"), en, lit("es"), es, lit("de"), de, lit("fr"), fr)
-    // argmax over the map; ties resolved by iteration order via map_entries sort
-    val entries = map_entries(scores)
-    val best = array_max(transform(entries, e => e.getField("value")))
-    when(best <= 0, lit("unknown")).otherwise(
-      element_at(filter(entries, e => e.getField("value") === best), 1).getField("key"))
-  }
-
   /** Rolling-hash document fingerprint: polynomial rolling hash over word
     * tokens (order-sensitive, content-defined). Deterministic across runs.
     * Arithmetic is BOUNDED mod 2⁴⁰ (acc·31 + h stays < 2⁴⁶) — the raw
@@ -113,10 +90,11 @@ object TextAnalysis {
     aggregate(hashes, lit(7L), (acc, h) => pmod(acc * lit(31L) + h, lit(M)))
   }
 
-  /** Deterministic language-ID with a fixed priority chain (zh → en → es →
-    * de → fr): a language wins if its stopword/charset score is positive and
-    * >= every other score. Same shape as [[langId]] but with an explicit,
-    * engine-reproducible tie-break.
+  /** n-gram-heuristic language ID over a small built-in profile (en/es/de/fr
+    * stopwords, a zh charset probe) with a fixed priority chain (zh → en →
+    * es → de → fr): a language wins if its stopword/charset score is
+    * positive and >= every other score — an explicit, engine-reproducible
+    * tie-break.
     *
     * A stopword score counts PRESENT words (0/1 each), so it equals
     * |distinct(tokens) ∩ stopwords|: ONE whitespace tokenization shared by

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Batch source abstraction (reference: BatchDataSource,
   * aligned/data_source/batch_data_source.py:136-344). A source produces a
@@ -62,15 +62,38 @@ final case class ParquetSource(path: String) extends WritableSource {
   * sources/local.py:502-727). Spark reads hive partitioning natively and
   * prunes partitions from pushed-down predicates; upsert rewrites only the
   * touched partitions via dynamic partition overwrite (the scalable analog of
-  * the reference's per-partition rewrite at local.py:658-707). */
+  * the reference's per-partition rewrite at local.py:658-707).
+  *
+  * partitionBy writes no data file for an empty frame, and a dir with none
+  * has no schema to infer. An empty overwrite therefore keeps the frame's
+  * read schema (data columns, then partition columns) in a hidden
+  * `_graft_schema.json` that `read` consults only while the dir holds no
+  * data; an all-zero donor leaf would add a fake partition value. */
 final case class PartitionedParquetSource(path: String, partitionKeys: Seq[String])
     extends WritableSource {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  private val schemaFile = new Path(path, "_graft_schema.json")
+  def read(spark: SparkSession): DataFrame = {
+    val fs = schemaFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(schemaFile) && !GenLog.hasDataChildren(fs, schemaFile.getParent)) {
+      val in = fs.open(schemaFile)
+      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(path)
+    } else spark.read.parquet(path)
+  }
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
   def insert(df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).partitionBy(partitionKeys: _*).parquet(path)
-  def overwrite(df: DataFrame): Unit = StageAndSwap.replace(df.sparkSession, path)(p =>
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(p))
+  def overwrite(df: DataFrame): Unit = StageAndSwap.replace(df.sparkSession, path) { p =>
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionKeys: _*).parquet(p)
+    val dir = new Path(p)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    if (!GenLog.hasDataChildren(fs, dir)) {
+      val data = df.schema.filterNot(f => partitionKeys.contains(f.name))
+      val out = fs.create(new Path(dir, schemaFile.getName), true)
+      try out.write(StructType(data ++ partitionKeys.map(df.schema(_))).json.getBytes("UTF-8"))
+      finally out.close()
+    }
+  }
   def upsert(df: DataFrame, keys: Seq[String]): Unit = StageAndSwap.locked(df.sparkSession, path) {
     val spark = df.sparkSession
     // only partitions present in df get rewritten (dynamic overwrite);

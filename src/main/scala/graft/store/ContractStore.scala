@@ -313,11 +313,12 @@ final class ContractStore {
     * default is REJECTED loudly too (a NULL-keyed row poisons every
     * later UPSERT merge); a contract-declared EVENT TIMESTAMP the
     * SELECT omits is REJECTED (PIT semantics die silently without it);
-    * other missing columns fill with their declared defaults, and dtype
-    * mismatches try_cast — the EnsureTypes discipline applied at write
-    * time, so the artifact on disk is contract-typed no matter what the
-    * SELECT emitted. Columns land in contract declaration order (parquet
-    * readers see one stable layout). At 100 TB both writes are one
+    * other missing columns fill with their declared defaults and dtype
+    * mismatches conform exactly as a read conforms them
+    * ([[FeatureView.conform]]: try_cast, JSON strings decoded into
+    * array/struct columns), so the artifact on disk is contract-typed no
+    * matter what the SELECT emitted. Columns land in contract declaration
+    * order (parquet readers see one stable layout). At 100 TB both writes are one
     * narrow projection over the SELECT's plan — conformance adds no
     * shuffle and no extra pass. */
   def executeSqlWrite(spark: SparkSession, sql: String): String = {
@@ -360,16 +361,12 @@ final class ContractStore {
           s"the contract-declared event timestamp '$ts' of '${v.name}' — " +
           "emit it in the SELECT (PIT reads need it on every row)")
       }
-      var out = df
-      declared.foreach { f =>
-        if (!out.columns.contains(f.name))
-          out = out.withColumn(f.name, lit(f.defaultValue.orNull).cast(f.dtype.sparkType))
-        else if (out.schema(f.name).dataType != f.dtype.sparkType)
-          out = out.withColumn(f.name, col(f.name).try_cast(f.dtype.sparkType.sql))
-      }
+      // derived columns are not stored, so the view conforms without them:
+      // a derived expression over a column the write cannot carry must not
+      // fail the write
       val order = declared.map(_.name) ++
         v.eventTimestamp.map(_.name).filter(df.columns.contains)
-      out.select(order.map(col): _*)
+      v.copy(derived = Nil).conform(df).select(order.map(col): _*)
     }
     def writable(v: FeatureView): graft.sources.WritableSource = v.source match {
       case w: graft.sources.WritableSource => w
@@ -449,19 +446,10 @@ final class ContractStore {
   def combinedFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
       derived: Seq[graft.contract.DerivedFeature],
       factTs: String = "event_timestamp"): DataFrame = {
-    var df = featuresFor(spark, entities, refs, factTs)
-    val derivedNames = derived.map(_.name).toSet
-    var remaining = derived
-    var emitted = Set.empty[String]
-    while (remaining.nonEmpty) {
-      val (ready, blocked) = remaining.partition(
-        _.dependingOn.filter(derivedNames.contains).forall(emitted.contains))
-      require(ready.nonEmpty, s"cyclic cross-view derived features: ${blocked.map(_.name)}")
-      df = df.withColumns(ready.map(d => d.name -> d.expr.toColumn.cast(d.dtype.sparkType)).toMap)
-      emitted ++= ready.map(_.name)
-      remaining = blocked
-    }
-    df
+    FeatureView.derivedRounds(derived, "the cross-view set")
+      .foldLeft(featuresFor(spark, entities, refs, factTs)) { (df, round) =>
+        df.withColumns(round.map(d => d.name -> d.column).toMap)
+      }
   }
 
   /** "view:feature" (or "project:view:feature") refs grouped by view
@@ -602,7 +590,7 @@ final class ContractStore {
                   .exists(stored => keys.forall(k =>
                     stored.find(_.name == k).map(_.dataType).contains(
                       v.entities.find(_.name == k).get.dtype.sparkType))) =>
-            vs.derivedFrom(spark, b.readForEntities(spark, probe))
+            v.conform(b.readForEntities(spark, probe))
           case _ => vs.baseWithDerived(spark)
         }
         val filtered =
@@ -661,56 +649,11 @@ object ContractStore {
 /** Per-view query surface (reference: FeatureViewStore, feature_store.py:1461+). */
 final class ViewStore(store: ContractStore, val view: FeatureView) {
 
-  /** Scan → rename → fill missing optional columns → cast to contract dtypes →
-    * derive (topological rounds) — the FileFullJob pipeline
-    * (local/job.py:218-292) as one DataFrame plan. No aggregates. */
-  def baseWithDerived(spark: SparkSession): DataFrame = {
-    val src = view.materializedSource.getOrElse(view.source)
-    derivedFrom(spark, src.read(spark))
-  }
-
-  /** The conform pipeline over an ALREADY-SCANNED raw frame — split out so
-    * pruned scans (onlineFeaturesFor's bucket-pruned point lookup) run the
-    * identical rename/fill/cast/derive chain as the full read. */
-  private[store] def derivedFrom(spark: SparkSession, raw: DataFrame): DataFrame = {
-    var df = raw
-    // rename source columns to contract names (ColumnFeatureMappable, local/job.py:259-271)
-    view.mappingKeys.foreach { case (from, to) =>
-      if (df.columns.contains(from)) df = df.withColumnRenamed(from, to)
-    }
-    // fill missing optional columns with defaults/null (FillMissingColumnsJob,
-    // retrieval_job.py:2488-2538)
-    (view.entities ++ view.features).foreach { f =>
-      if (!df.columns.contains(f.name))
-        df = df.withColumn(f.name, lit(f.defaultValue.orNull).cast(f.dtype.sparkType))
-    }
-    // ensure-types: cast ONLY on mismatch (EnsureTypesJob, retrieval_job.py:2866-2955);
-    // string-encoded arrays/structs are JSON-decoded, not cast
-    // (retrieval_job.py:2928-2941)
-    val declared = (view.entities ++ view.features).map(f => f.name -> f.dtype.sparkType).toMap
-    val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    declared.foreach { case (n, t) =>
-      fields.get(n) match {
-        case Some(actual) if actual == t => ()
-        case Some(org.apache.spark.sql.types.StringType)
-            if t.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-               t.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-          df = df.withColumn(n, from_json(col(n), t))
-        // "enforced by casting, not rejection" (strict=False, SURVEY §1.3):
-        // try_cast nulls malformed values instead of failing the job (ANSI)
-        case Some(_) => df = df.withColumn(n, col(n).try_cast(t.sql))
-        case None => ()
-      }
-    }
-    // derived features in topological rounds (retrieval_job.py:2345-2388);
-    // skip any already present in the source (Transformation.should_skip)
-    view.derivedRounds.foreach { round =>
-      val todo = round.filterNot(d => df.columns.contains(d.name))
-      if (todo.nonEmpty)
-        df = df.withColumns(todo.map(d => d.name -> d.expr.toColumn.cast(d.dtype.sparkType)).toMap)
-    }
-    df
-  }
+  /** Scan → [[FeatureView.conform]] (rename → fill → ensure types →
+    * derive): the FileFullJob pipeline (local/job.py:218-292) as one
+    * DataFrame plan. No aggregates. */
+  def baseWithDerived(spark: SparkSession): DataFrame =
+    view.conform(view.materializedSource.getOrElse(view.source).read(spark))
 
   /** rows with the view's event timestamp in [start, end)
     * (all_between_dates, batch_data_source.py:229). The range filter applies

@@ -73,39 +73,10 @@ object Streaming {
     stream.withWatermark(ts, delay).dropDuplicatesWithinWatermark(keys)
 
   /** The per-batch contract pipeline (worker.py:172-204): rename → fill
-    * missing → ensure types → derive. Same code path as batch — it is all
-    * DataFrame ops, so the batch ViewStore logic applies unchanged. */
-  def contractPipeline(view: FeatureView)(df: DataFrame): DataFrame = {
-    var out = df
-    view.mappingKeys.foreach { case (from, to) =>
-      if (out.columns.contains(from)) out = out.withColumnRenamed(from, to)
-    }
-    (view.entities ++ view.features).foreach { f =>
-      if (!out.columns.contains(f.name))
-        out = out.withColumn(f.name, lit(f.defaultValue.orNull).cast(f.dtype.sparkType))
-    }
-    // ensure-types exactly like the batch path (ViewStore.baseWithDerived):
-    // try_cast nulls malformed values instead of failing the stream under
-    // ANSI; string-encoded arrays/structs are JSON-decoded, not cast
-    val declared = (view.entities ++ view.features).map(f => f.name -> f.dtype.sparkType).toMap
-    out.schema.fields.foreach { f =>
-      declared.get(f.name).foreach { t =>
-        if (f.dataType != t) out = (f.dataType, t) match {
-          case (org.apache.spark.sql.types.StringType, at)
-              if at.isInstanceOf[org.apache.spark.sql.types.ArrayType] ||
-                 at.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-            out.withColumn(f.name, from_json(col(f.name), t))
-          case _ => out.withColumn(f.name, col(f.name).try_cast(t.sql))
-        }
-      }
-    }
-    view.derivedRounds.foreach { round =>
-      val todo = round.filterNot(d => out.columns.contains(d.name))
-      if (todo.nonEmpty)
-        out = out.withColumns(todo.map(d => d.name -> d.expr.toColumn.cast(d.dtype.sparkType)).toMap)
-    }
-    out
-  }
+    * missing → ensure types → derive. The same code path as batch: it is
+    * [[graft.contract.FeatureView.conform]], the chain every batch read,
+    * online lookup and SQL write of the view runs. */
+  def contractPipeline(view: FeatureView)(df: DataFrame): DataFrame = view.conform(df)
 
   /** Watermarked sliding-window aggregation (replaces StreamAggregationJob's
     * checkpoint-file recompute, retrieval_job.py:2541-2650). */
@@ -274,15 +245,17 @@ object Streaming {
 
   /** Run a stream through the contract pipeline into an online sink, firing
     * triggers per micro-batch (worker.py:212-260 in Structured-Streaming
-    * form). Sink writes are per-batch upserts on the entity keys — the
-    * foreachBatch online-store shape. */
+    * form). Each micro-batch conforms through the same code path as a batch
+    * read ([[graft.contract.FeatureView.conform]]). Sink writes are
+    * per-batch upserts on the entity keys — the foreachBatch online-store
+    * shape. */
   def runWorker(
       stream: DataFrame, view: FeatureView,
       sink: (DataFrame, Long) => Unit,
       triggers: Seq[EventTrigger] = Nil,
       checkpointDir: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    val pipeline = contractPipeline(view)(stream)
+    val pipeline = view.conform(stream)
     var writer: DataStreamWriter[org.apache.spark.sql.Row] = pipeline.writeStream
       .outputMode("append")
       .trigger(trigger)
@@ -680,8 +653,9 @@ object Streaming {
     *     arithmetic, so incremental state accumulation is order-independent
     *     and bit-equal to the one-shot batch sum.
     *
-    * `pipeline` — typically [[contractPipeline]] of a view: rename → fill →
-    * ensure-types → derive, the worker's per-batch contract stage — runs
+    * `pipeline` — typically a view's [[graft.contract.FeatureView.conform]]:
+    * rename → fill → ensure-types → derive, the worker's per-batch contract
+    * stage — runs
     * between readStream and the watermark, so tsCol/keyCol/valueCol name
     * POST-pipeline columns; tsCol must also exist pre-pipeline (it orders
     * the staging chunks). Emits (window_start = epoch seconds, keyCol,

@@ -230,6 +230,22 @@ class SourcesSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("an empty partitioned overwrite reads back empty with its schema; later writes land") {
+    val src = graft.sources.PartitionedParquetSource(tmpDir() + "/pe", Seq("part"))
+    val df = Seq((1L, "p1", "a")).toDF("id", "part", "v")
+    src.overwrite(df.limit(0))
+    val empty = src.read(spark)
+    assert(empty.isEmpty)
+    // the read shape: data columns, then the partition column
+    assert(empty.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> LongType, "v" -> StringType, "part" -> StringType))
+    src.upsert(df, Seq("id"))
+    src.insert(Seq((2L, "p2", "b")).toDF("id", "part", "v"))
+    assert(src.read(spark).orderBy("id").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("part"), r.getAs[String]("v"))).toSeq ==
+      Seq((1L, "p1", "a"), (2L, "p2", "b")))
+  }
+
   test("partitioned parquet upsert leaves the session's overwrite mode alone") {
     // a fresh session, so no earlier test's conf state shows through
     val s = spark.newSession()
@@ -649,10 +665,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
   }
 
-  test("embeddingNearDup (xxhash planes) finds planted near-dups with exact cosines") {
-    // 12 base vectors + noisy copies of 3 of them; the xxhash-plane LSH
-    // production form (q33 now gates the portable-plane variant) must
-    // surface every planted pair with a correct exact-cosine verify
+  test("embeddingNearDupPortable finds planted near-dups with exact cosines") {
+    // 12 base vectors + noisy copies of 3 of them; the portable-plane LSH
+    // must surface every planted pair with a correct exact-cosine verify
     val rnd = new scala.util.Random(7)
     val base = (0 until 12).map(i => i.toLong -> Array.fill(16)(rnd.nextGaussian().toFloat))
     val noisy = (0 until 3).map { i =>
@@ -660,8 +675,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       (100L + i) -> v
     }
     val df = (base ++ noisy).map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
-    val got = Dedup.embeddingNearDup(df, "embedding", "vec_id",
-        threshold = 0.9, planes = 3)
+    val got = Dedup.embeddingNearDupPortable(df, "embedding", "vec_id",
+        threshold = 0.9, planes = 3, dim = 16)
       .select("id_a", "id_b", "cosine").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     for (i <- 0 until 3)
