@@ -338,24 +338,50 @@ object SparkEntry {
     events(s, dir).filter(col("event_type") === "click")
       .groupBy("user_id", "ts").agg(max(col("value")).as("click_value"))
 
-  private val timeQueries: Seq[Q] = Seq(
-    // --- backward as-of join (JoinAsofJob, SURVEY §2.5) ---
-    Q("q9_asof_last_click",
-      (s, dir) => {
-        val p = purchases(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
-        Joins.asofJoin(p, clicksByTs(s, dir), "ts", "ts", Seq("user_id"))
-          .select(col("event_id"), col("user_id"), col("ts").cast("long").as("ts_sec"),
-            col("purchase_value"), col("click_value").as("last_click_value"))
-      },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'purchase'),
+  /** Oracle CTE `name(event_id, user_id, ts[, value])` of the purchase
+    * events, [[purchases]] restated with ts cast to the µs TIMESTAMP Spark
+    * reads. */
+  private def sqlPurchasesCte(name: String = "p", withValue: Boolean = false): String =
+    s"""$name AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts${if (withValue) ", value" else ""}
+                FROM events WHERE event_type = 'purchase')"""
+
+  /** Purchases joined as-of to [[clicksByTs]] per user (q9 backward, q95
+    * forward, q127 nearest), as (event_id, user_id, ts_sec,
+    * purchase_value, `out`). */
+  private def purchaseClickAsof(out: String, tolerance: Option[java.time.Duration] = None,
+      direction: String = "backward"): (SparkSession, String) => DataFrame = (s, dir) => {
+    val p = purchases(s, dir)
+      .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
+    Joins.asofJoin(p, clicksByTs(s, dir), "ts", "ts", Seq("user_id"), tolerance,
+        direction = direction)
+      .select(col("event_id"), col("user_id"), col("ts").cast("long").as("ts_sec"),
+        col("purchase_value"), col("click_value").as(out))
+  }
+
+  /** [[purchaseClickAsof]] restated for the oracle: the clicks of a
+    * purchase's user that satisfy `on`, first by `order`. */
+  private def sqlPurchaseClickAsof(out: String, on: String, order: String): String =
+    s"""WITH ${sqlPurchasesCte(withValue = true)},
           c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS click_value
                 FROM events WHERE event_type = 'click' GROUP BY 1, 2)
         SELECT p.event_id, p.user_id, epoch_us(p.ts) // 1000000 AS ts_sec,
-          p.value AS purchase_value, c.click_value AS last_click_value
-        FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts <= p.ts
-        QUALIFY row_number() OVER (PARTITION BY p.event_id ORDER BY c.ts DESC NULLS LAST) = 1""")),
+          p.value AS purchase_value, c.click_value AS $out
+        FROM p LEFT JOIN c ON c.user_id = p.user_id $on
+        QUALIFY row_number() OVER (PARTITION BY p.event_id ORDER BY $order) = 1"""
+
+  /** Oracle CTEs `p(event_id, user_id, ts)` of purchases and
+    * `c(user_id, ts, value)` of every click, for the windowed click
+    * features of a purchase. */
+  private def sqlPurchaseClickCtes: String =
+    s"""${sqlPurchasesCte()},
+          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
+                FROM events WHERE event_type = 'click')"""
+
+  private val timeQueries: Seq[Q] = Seq(
+    // --- backward as-of join (JoinAsofJob, SURVEY §2.5) ---
+    Q("q9_asof_last_click", purchaseClickAsof("last_click_value"),
+      Some(sqlPurchaseClickAsof("last_click_value", "AND c.ts <= p.ts",
+        "c.ts DESC NULLS LAST"))),
 
     // --- point-in-time lookup through the ContractStore, with TTL (SURVEY §3.1) ---
     Q("q10_pit_last_view",
@@ -376,10 +402,9 @@ object SparkEntry {
         store.featuresFor(s, facts, Seq("user_views:value"))
           .select(col("event_id"), col("user_id"), col("value").as("last_view_value"))
       },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
+      Some(s"""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
                 FROM events WHERE event_type = 'view'),
-          pp AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events WHERE event_type = 'purchase'),
+          ${sqlPurchasesCte("pp")},
           v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS value
                 FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         SELECT pp.event_id, pp.user_id, v.value AS last_view_value
@@ -410,10 +435,7 @@ object SparkEntry {
         store.featuresFor(s, facts, Seq("user_clicks:n_clicks_24h", "user_clicks:sum_clicks_24h"))
           .select("event_id", "user_id", "n_clicks_24h", "sum_clicks_24h")
       },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'click')
+      Some(s"""WITH $sqlPurchaseClickCtes
         SELECT p.event_id, p.user_id, count(c.value) AS n_clicks_24h,
           CAST(sum(CAST(c.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_clicks_24h
         FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts <= p.ts
@@ -738,26 +760,10 @@ object SparkEntry {
       (s, dir) => t(s, dir, "documents").select(
         col("doc_id"), col("lang"),
         TextAnalysis.langIdDeterministic(col("text")).as("predicted_lang")),
-      Some {
-        def hits(words: Seq[String]) =
-          words.map(w => s"CAST(regexp_matches(t, '(^|\\s)$w(\\s|$$)') AS INT)").mkString(" + ")
-        val en = hits(Seq("the", "and", "of", "to", "is", "that", "with", "for"))
-        val es = hits(Seq("el", "la", "los", "las", "es", "una", "que", "por", "con"))
-        val de = hits(Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit"))
-        val fr = hits(Seq("le", "les", "est", "et", "une", "dans", "pour", "des"))
-        s"""WITH sc AS (SELECT doc_id, lang,
-            CASE WHEN regexp_matches(t, '[\\x{4e00}-\\x{9fff}]') THEN 100 ELSE 0 END AS zh,
-            $en AS en, $es AS es, $de AS de, $fr AS fr
+      Some(s"""WITH sc AS (SELECT doc_id, lang, $sqlLangScores
           FROM (SELECT doc_id, lang, lower(text) AS t FROM documents))
-        SELECT doc_id, lang,
-          CASE WHEN zh > 0 AND zh >= greatest(en, es, de, fr) THEN 'zh'
-            WHEN en > 0 AND en >= greatest(es, de, fr) THEN 'en'
-            WHEN es > 0 AND es >= greatest(de, fr) THEN 'es'
-            WHEN de > 0 AND de >= fr THEN 'de'
-            WHEN fr > 0 THEN 'fr'
-            ELSE 'unknown' END AS predicted_lang
-        FROM sc"""
-      }),
+        SELECT doc_id, lang, ${sqlLangPick("predicted_lang")}
+        FROM sc""")),
 
     // --- rolling-hash document fingerprint (portable md5 variant) ---
     Q("q29_fingerprint",
@@ -1114,10 +1120,7 @@ object SparkEntry {
           .select(col("event_id"), col("user_id"), col("n_clicks_24h"),
             col("value").as("last_view_value"))
       },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'click'),
+      Some(s"""WITH $sqlPurchaseClickCtes,
           v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS value
                 FROM events WHERE event_type = 'view' GROUP BY 1, 2),
           agg AS (SELECT p.event_id, count(c.value) AS n_clicks_24h
@@ -1352,10 +1355,7 @@ object SparkEntry {
             Seq("n_clicks", "view_value"))))
           .select("event_id", "user_id", "n_clicks", "view_value", "clicks_x_view")
       },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'click'),
+      Some(s"""WITH $sqlPurchaseClickCtes,
           v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS view_value
                 FROM events WHERE event_type = 'view' GROUP BY 1, 2),
           agg AS (SELECT p.event_id, count(c.value) AS n_clicks
@@ -1418,6 +1418,280 @@ object SparkEntry {
     s"""${sqlReachCtes(edges)},
           $out AS ($sqlComponents)"""
 
+  /** Gopher's word/line split (q152) over `from`: `ws` holds the
+    * lower-cased whitespace words, `ls` the trimmed non-empty lines. */
+  private def sqlGopherSplit(cols: String, from: String = "documents"): String =
+    s"""SELECT $cols, list_filter(
+              string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws,
+            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
+              l -> length(l) > 0) AS ls
+            FROM $from"""
+
+  /** Gopher's per-doc counts (q152) over a [[sqlGopherSplit]] relation;
+    * `stopHits` adds the English-stopword count that rule 64 reads. */
+  private def sqlGopherMetrics(from: String, stopHits: Boolean = false): String = {
+    val stop = if (!stopHits) "" else """,
+              CAST(len(list_filter(['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'],
+                sw -> list_contains(ws, sw))) AS BIGINT) AS stop_hits"""
+    s"""SELECT doc_id,
+              CAST(len(ws) AS BIGINT) AS n_words,
+              CAST(len(ls) AS BIGINT) AS n_lines,
+              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
+              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
+              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
+              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
+                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
+              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
+                AS BIGINT) AS ellipsis_cnt,
+              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt$stop
+            FROM $from"""
+  }
+
+  /** Ids of the [[sqlGopherMetrics]] CTE `m` that pass Gopher rules 1-32
+    * (the recipe gate: minWords 20, the stopword rule masked out);
+    * `stopRule` also sums rule 64 into the mask before `& 63` drops it. */
+  private def sqlGopherGate(stopRule: Boolean = false): String = {
+    val stop = if (!stopRule) "" else """
+              + CASE WHEN stop_hits < 2 THEN 64 ELSE 0 END"""
+    s"""SELECT doc_id FROM (SELECT doc_id,
+              CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
+              + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
+                  OR CAST(sum_len AS DOUBLE) / n_words > 10.0 THEN 2 ELSE 0 END
+              + CASE WHEN n_words > 0
+                  AND CAST(hash_cnt + dots_cnt AS DOUBLE) / n_words >= 0.1 THEN 4 ELSE 0 END
+              + CASE WHEN n_lines > 0
+                  AND CAST(bullet_cnt AS DOUBLE) / n_lines >= 0.9 THEN 8 ELSE 0 END
+              + CASE WHEN n_lines > 0
+                  AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
+              + CASE WHEN n_words = 0
+                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END$stop AS mask
+            FROM m) WHERE (mask & 63) = 0"""
+  }
+
+  /** DSIR's hashed-unigram bucket stats toward the lang='en' target
+    * (q151): `tok` explodes the `ws` words of `docs`, `tb` hashes each word
+    * into one of 4096 md5 buckets and `bs` scores each bucket by its
+    * add-one target ratio, scaled to an integer. */
+  private def sqlDsirBucketCtes(docs: String, tok: String = "tok"): String =
+    s"""$tok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM $docs),
+          tb AS (SELECT doc_id, tgt,
+              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM $tok),
+          bs AS (SELECT b,
+              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
+            FROM tb GROUP BY b)"""
+
+  /** q151's DSIR scoring over the whole corpus: `r(doc_id, dsir_score,
+    * rn, total)` ranks every document by its summed bucket score, highest
+    * first, ties by id. */
+  private def sqlDsirRankCtes: String =
+    s"""d AS (SELECT doc_id, lang, list_filter(
+              string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws
+            FROM documents),
+          ${sqlDsirBucketCtes("d")},
+          ds AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS dsir_score
+            FROM tb JOIN bs USING (b) GROUP BY doc_id),
+          al AS (SELECT d.doc_id, CAST(coalesce(ds.dsir_score, 0) AS BIGINT) AS dsir_score
+            FROM d LEFT JOIN ds ON ds.doc_id = d.doc_id),
+          r AS (SELECT doc_id, dsir_score,
+              row_number() OVER (ORDER BY dsir_score DESC, doc_id) AS rn,
+              count(*) OVER () AS total FROM al)"""
+
+  /** The recipe's threshold-DSIR stage (q151b's cut at 50%) over `docs`,
+    * ending in `sel(doc_id)`: the docs whose summed bucket score reaches
+    * the score of the last doc in the top half. `materialize` pins `al`
+    * and `sel` for statements that read them again. */
+  private def sqlDsirSelectCtes(docs: String, tok: String = "tok",
+      materialize: Boolean = false): String = {
+    val m = if (materialize) " MATERIALIZED" else ""
+    s"""${sqlDsirBucketCtes(docs, tok)},
+          dsc AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS score
+            FROM tb JOIN bs USING (b) GROUP BY doc_id),
+          al AS$m (SELECT $docs.doc_id, CAST(coalesce(score, 0) AS BIGINT) AS score
+            FROM $docs LEFT JOIN dsc USING (doc_id)),
+          rk AS (SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
+              count(*) OVER () AS total FROM al),
+          thr AS (SELECT min(score) AS thr FROM rk
+            WHERE rn <= (total * 50 + 99) // 100),
+          sel AS$m (SELECT doc_id FROM al WHERE score >= (SELECT thr FROM thr))"""
+  }
+
+  /** Keep-best canonicalization over `comp(doc_id, component, n_tok)`:
+    * each component's longest doc, lowest id on ties. */
+  private def sqlKeepBest: String =
+    """SELECT doc_id, component FROM (SELECT doc_id, component,
+              row_number() OVER (PARTITION BY component
+                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1"""
+
+  /** The leakage-safe split router (q163): a component's md5 coin sends
+    * 80% of components to 'train', the rest to 'test'. */
+  private def sqlComponentSplit(component: String): String =
+    s"""CASE WHEN CAST(concat('0x', substr(md5(CAST($component AS VARCHAR)), 1, 8))
+              AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test' END"""
+
+  /** The static hourly per-event-type aggregate that the streaming
+    * window-store gates (q165, q212, q212b) must reproduce. */
+  private def sqlHourlyEventAgg: String =
+    """SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
+            AS window_start,
+          event_type, CAST(count(*) AS BIGINT) AS n_events,
+          CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        FROM events GROUP BY 1, 2"""
+
+  /** `r` after a registry JSON round trip, so the recipe gates execute
+    * what serialization preserved. */
+  private def recipeRoundTrip(r: graft.contract.CurationRecipe): graft.contract.CurationRecipe = {
+    import graft.contract.ContractJson.{recipeFromValue, recipeToJson}
+    recipeFromValue(graft.expr.JsonValue.parseObject(recipeToJson(r)))
+  }
+
+  /** The file-store round-trip gates' rows: documents' doc_id, lang,
+    * source and n_chars. */
+  private def storeDocs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+
+  /** A store's read back in [[storeDocs]]' columns, n_chars as a long
+    * whatever type the file format inferred. */
+  private def storeDocsOut(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), col("lang"), col("source"), col("n_chars").cast("long").as("n_chars"))
+
+  /** The 2×2 PCA of the first two embedding dims (q240) up to its one
+    * Jacobi rotation: `q` holds each row's dims, `ev` the rotated
+    * diagonal `f00`/`f11` beside the rotation's `cc`/`ss` and the means. */
+  private def sqlPcaRotationCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+          FROM embeddings WHERE embedding IS NOT NULL),
+        q AS (SELECT vec_id, v[1] AS x1, v[2] AS x2,
+            CAST(floor(v[1]*1048576.0) AS BIGINT) AS q1,
+            CAST(floor(v[2]*1048576.0) AS BIGINT) AS q2 FROM e),
+        m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+            CAST(sum(q1) AS BIGINT) AS s1, CAST(sum(q2) AS BIGINT) AS s2,
+            CAST(sum(q1*q1) AS BIGINT) AS s11, CAST(sum(q1*q2) AS BIGINT) AS s12,
+            CAST(sum(q2*q2) AS BIGINT) AS s22 FROM q),
+        c AS (SELECT n,
+            (CAST(s11 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s1 AS DOUBLE)/n))/1099511627776.0 AS c00,
+            (CAST(s12 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c01,
+            (CAST(s22 AS DOUBLE)/n - (CAST(s2 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c11,
+            CAST(s1 AS DOUBLE)/n/1048576.0 AS m1,
+            CAST(s2 AS DOUBLE)/n/1048576.0 AS m2 FROM m),
+        r AS (SELECT *, (c11 - c00)/(2.0*c01) AS theta FROM c),
+        t1 AS (SELECT *, CASE WHEN theta = 0.0 THEN 1.0 ELSE
+            (CASE WHEN theta > 0.0 THEN 1.0 ELSE -1.0 END)
+              / (abs(theta) + sqrt(theta*theta + 1.0)) END AS t FROM r),
+        cs AS (SELECT *, 1.0/sqrt(t*t + 1.0) AS cc FROM t1),
+        cs2 AS (SELECT *, t*cc AS ss FROM cs),
+        rot AS (SELECT *,
+            cc*c00 - ss*c01 AS b00, ss*c00 + cc*c01 AS b01,
+            cc*c01 - ss*c11 AS b10, ss*c01 + cc*c11 AS b11 FROM cs2),
+        ev AS (SELECT *, cc*b00 - ss*b10 AS f00, ss*b01 + cc*b11 AS f11 FROM rot)"""
+
+  /** Clicks left-outer joined by the streaming runtime to the same
+    * user's purchases within the next hour (q187, q187b). */
+  private def clickConversionOuter(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Streaming.stagedOuterIntervalJoinRun(
+      s, events(s, dir).select("ts", "user_id", "event_type", "event_id"),
+      tsCol = "ts", keys = Seq("user_id"), idCol = "event_id",
+      leftPred = "event_type = 'click'",
+      rightPred = "event_type = 'purchase'", after = "1 hour")
+
+  /** [[clickConversionOuter]] as a static LEFT JOIN: -1 marks a click
+    * with no conversion. */
+  private def sqlClickConversionOuter: String =
+    """SELECT a.user_id, a.event_id AS a_id,
+          coalesce(b.event_id, -1) AS b_id_key,
+          epoch_us(CAST(b.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP)) AS lag_us
+        FROM events a LEFT JOIN events b ON a.user_id = b.user_id
+          AND b.event_type = 'purchase'
+          AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
+          AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR
+        WHERE a.event_type = 'click'"""
+
+  /** Every event delivered twice, collapsed on event_id by the streaming
+    * dedup (q176, q176b). */
+  private def doubleDeliveryDedup(s: SparkSession, dir: String): DataFrame = {
+    val e = events(s, dir).select("ts", "user_id", "event_type", "value", "event_id")
+    graft.streaming.Streaming.stagedDedupRun(s, e.unionAll(e), "ts", Seq("event_id"))
+      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        col("user_id"), col("event_type"), col("value"))
+  }
+
+  /** [[doubleDeliveryDedup]]'s expected store: the events table itself. */
+  private def sqlEventsById: String =
+    """SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
+          user_id, event_type, value FROM events"""
+
+  /** q188's contaminated runs: `g` holds each doc's word 3-gram hashes by
+    * position, `bench` the grams of the eval docs (doc_id % 97 = 0), and
+    * `m(doc_id, pos, grp)` each corpus doc's matching positions, with
+    * consecutive positions sharing one `grp`. */
+  private def sqlContaminationRunCtes: String =
+    s"""w AS (SELECT doc_id, list_filter(
+              string_split_regex(lower(trim(text)), '\\s+'),
+              xf -> length(xf) > 0) AS ws
+            FROM documents),
+          g0 AS (SELECT doc_id, ws,
+              unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS pos FROM w),
+          g AS (SELECT doc_id, pos, CAST(concat('0x',
+              substr(md5(array_to_string(ws[pos:pos+2], ' ')), 1, 14)) AS BIGINT)
+                % ${Dedup.PortableP} AS h
+            FROM g0),
+          bench AS (SELECT DISTINCT h FROM g WHERE doc_id % 97 = 0),
+          m AS (SELECT g.doc_id, g.pos,
+              g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS grp
+            FROM g JOIN bench USING (h) WHERE g.doc_id % 97 <> 0)"""
+
+  /** The token prefix sum of [[graft.ml.MLOps.tokenShards]] (q117):
+    * `o(doc_id, n_tok, pre)`, with `pre` the tokens of every doc before
+    * this one in md5 order. */
+  private def sqlTokenPrefixCtes: String =
+    """t AS (SELECT doc_id,
+            CAST(len(list_filter(string_split_regex(trim(text), '\s+'), tws -> length(tws) > 0)) AS BIGINT) AS n_tok,
+            CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+              % 1000000 AS u
+          FROM documents),
+          o AS (SELECT doc_id, n_tok,
+            coalesce(sum(n_tok) OVER (ORDER BY u, doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
+          FROM t)"""
+
+  /** [[TextAnalysis.langIdDeterministic]]'s per-language scores over a
+    * lower-cased text column `t`: `zh` is 100 when any CJK character
+    * occurs, and en/es/de/fr count whole-word stopword hits. */
+  private def sqlLangScores: String = {
+    def hits(words: Seq[String]) =
+      words.map(w => s"CAST(regexp_matches(t, '(^|\\s)$w(\\s|$$)') AS INT)").mkString(" + ")
+    val en = hits(Seq("the", "and", "of", "to", "is", "that", "with", "for"))
+    val es = hits(Seq("el", "la", "los", "las", "es", "una", "que", "por", "con"))
+    val de = hits(Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit"))
+    val fr = hits(Seq("le", "les", "est", "et", "une", "dans", "pour", "des"))
+    s"""CASE WHEN regexp_matches(t, '[\\x{4e00}-\\x{9fff}]') THEN 100 ELSE 0 END AS zh,
+            $en AS en, $es AS es, $de AS de, $fr AS fr"""
+  }
+
+  /** The language [[sqlLangScores]] picks, as column `out`: the highest
+    * positive score, ties going to the earlier of zh, en, es, de, fr. */
+  private def sqlLangPick(out: String): String =
+    s"""CASE WHEN zh > 0 AND zh >= greatest(en, es, de, fr) THEN 'zh'
+            WHEN en > 0 AND en >= greatest(es, de, fr) THEN 'en'
+            WHEN es > 0 AND es >= greatest(de, fr) THEN 'es'
+            WHEN de > 0 AND de >= fr THEN 'de'
+            WHEN fr > 0 THEN 'fr'
+            ELSE 'unknown' END AS $out"""
+
+  /** `w(doc_id, w)`: the lower-cased whitespace words of `from`'s text,
+    * the tokenization every shingle oracle starts from. */
+  private def sqlWordsCte(from: String = "documents"): String =
+    s"""w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
+            FROM $from)"""
+
+  /** [[sqlWordsCte]] plus `g(doc_id, gs)`: each doc's distinct word
+    * `k`-shingles as portable 56-bit md5 hashes mod [[Dedup.PortableP]]. */
+  private def sqlShingleHashCtes(k: Int): String =
+    s"""${sqlWordsCte()},
+          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
+                substr(md5(array_to_string(w[i:i+${k - 1}], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
+              for i in generate_series(1, greatest(len(w)-${k - 1}, 0))]) AS gs
+            FROM w)"""
+
   /** q67's portable hash family restated for the DuckDB oracle as a CTE
     * chain ending in `pairs(id_a, id_b, jaccard)`: must stay in lockstep
     * with [[Dedup.portableCoeffs]] / [[Dedup.PortableP]]. Shared by q67
@@ -1436,7 +1710,7 @@ object SparkEntry {
       val cols = (0 until rpb).map(r => s"CAST(s${j * rpb + r} AS VARCHAR)").mkString(", ", ", ", "")
       s"SELECT doc_id, $j AS band, concat_ws('_'$cols) AS bucket FROM sigs"
     }.mkString("\n          UNION ALL ")
-    s"""w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w FROM $from),
+    s"""${sqlWordsCte(from)},
         g AS (SELECT doc_id, [array_to_string(w[i:i+${k - 1}], ' ')
             for i in generate_series(1, greatest(len(w)-${k - 1}, 0))] AS grams FROM w),
         h AS (SELECT doc_id, list_transform(grams,
@@ -1728,12 +2002,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 97 === 0),
           "text", "doc_id", n = 3)
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
-          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
-                substr(md5(array_to_string(w[i:i+2], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
-              for i in generate_series(1, greatest(len(w)-2, 0))]) AS gs
-            FROM w),
+      Some(s"""WITH ${sqlShingleHashCtes(3)},
           bench AS (SELECT DISTINCT unnest(gs) AS h FROM g WHERE doc_id % 97 = 0),
           corpus AS (SELECT doc_id, unnest(gs) AS h FROM g WHERE doc_id % 97 <> 0)
         SELECT corpus.doc_id, count(*) AS n_shared
@@ -2166,12 +2435,7 @@ object SparkEntry {
     // shuffle moves (hash, id) pairs, never text, never doc pairs ---
     Q("q82_selfoverlap",
       (s, dir) => TextAnalysis.selfOverlap(t(s, dir, "documents"), "text", "doc_id", k = 8),
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
-          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
-                substr(md5(array_to_string(w[i:i+7], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
-              for i in generate_series(1, greatest(len(w)-7, 0))]) AS gs
-            FROM w),
+      Some(s"""WITH ${sqlShingleHashCtes(8)},
           e AS (SELECT doc_id, unnest(gs) AS h FROM g),
           o AS (SELECT h, min(doc_id) AS owner FROM e GROUP BY h)
         SELECT e.doc_id, count(*) AS n_grams,
@@ -2192,8 +2456,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 2 === 1),
           "text", "doc_id")
       },
-      Some("""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
+      Some(s"""WITH ${sqlWordsCte()},
           g AS (SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ')
               for i in generate_series(1, greatest(len(w)-1, 0))]) AS gram FROM w),
           cnt AS (SELECT gram, CAST(count(*) AS BIGINT) AS cnt
@@ -2328,8 +2591,7 @@ object SparkEntry {
           .withColumn("novelty_rate",
             col("n_novel").cast("double") / col("n_new_distinct").cast("double"))
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
+      Some(s"""WITH ${sqlWordsCte()},
           g AS (SELECT doc_id, [CAST(concat('0x',
                 substr(md5(array_to_string(w[i:i+1], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
               for i in generate_series(1, greatest(len(w)-1, 0))] AS gs
@@ -2430,23 +2692,9 @@ object SparkEntry {
     // --- FORWARD as-of join (polars join_asof strategy="forward"; q9 is
     // backward): for each purchase, the NEXT click within 2 hours ---
     Q("q95_asof_next_click",
-      (s, dir) => {
-        val p = purchases(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
-        Joins.asofJoin(p, clicksByTs(s, dir), "ts", "ts", Seq("user_id"),
-          tolerance = Some(java.time.Duration.ofHours(2)), direction = "forward")
-          .select(col("event_id"), col("user_id"), col("ts").cast("long").as("ts_sec"),
-            col("purchase_value"), col("click_value").as("next_click_value"))
-      },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS click_value
-                FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        SELECT p.event_id, p.user_id, epoch_us(p.ts) // 1000000 AS ts_sec,
-          p.value AS purchase_value, c.click_value AS next_click_value
-        FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts >= p.ts
-          AND c.ts <= p.ts + INTERVAL 2 HOUR
-        QUALIFY row_number() OVER (PARTITION BY p.event_id ORDER BY c.ts ASC NULLS LAST) = 1""")),
+      purchaseClickAsof("next_click_value", Some(java.time.Duration.ofHours(2)), "forward"),
+      Some(sqlPurchaseClickAsof("next_click_value",
+        "AND c.ts >= p.ts AND c.ts <= p.ts + INTERVAL 2 HOUR", "c.ts ASC NULLS LAST"))),
 
     // --- CAPSTONE 2 (round-3 chain): drop boilerplate-heavy docs
     // (selfOverlap dup_frac ≥ 0.5) → rebalance the domain mixture →
@@ -2465,12 +2713,7 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_chunks"), sum(col("chunk_len")).as("total_len"))
           .withColumnRenamed("(doc_id % 10)", "bucket")
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
-          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
-                substr(md5(array_to_string(w[i:i+7], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
-              for i in generate_series(1, greatest(len(w)-7, 0))]) AS gs
-            FROM w),
+      Some(s"""WITH ${sqlShingleHashCtes(8)},
           e AS (SELECT doc_id, unnest(gs) AS h FROM g),
           o AS (SELECT h, min(doc_id) AS owner FROM e GROUP BY h),
           ov AS (SELECT e.doc_id,
@@ -2645,36 +2888,10 @@ object SparkEntry {
     * (q191), so the two restatements cannot drift. Heavy CTEs are
     * MATERIALIZED: inlined references through the recursive CC chain
     * re-evaluate multiplicatively (the q178 lesson). */
-  private def sqlIngestCtes: String = s"""nb AS (SELECT doc_id, lang, text, list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws,
-            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-              l -> length(l) > 0) AS ls
-            FROM documents WHERE doc_id % 5 = 0),
-          m AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt
-            FROM nb),
-          gm AS (SELECT doc_id FROM (SELECT doc_id,
-              CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
-              + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
-                  OR CAST(sum_len AS DOUBLE) / n_words > 10.0 THEN 2 ELSE 0 END
-              + CASE WHEN n_words > 0
-                  AND CAST(hash_cnt + dots_cnt AS DOUBLE) / n_words >= 0.1 THEN 4 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(bullet_cnt AS DOUBLE) / n_lines >= 0.9 THEN 8 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
-              + CASE WHEN n_words = 0
-                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END AS mask
-            FROM m) WHERE (mask & 63) = 0),
+  private def sqlIngestCtes: String =
+    s"""nb AS (${sqlGopherSplit("doc_id, lang, text", "documents WHERE doc_id % 5 = 0")}),
+          m AS (${sqlGopherMetrics("nb")}),
+          gm AS (${sqlGopherGate()}),
           gnew AS MATERIALIZED (SELECT nb.* FROM nb JOIN gm USING (doc_id)),
           uni AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0
             UNION ALL SELECT doc_id, text FROM gnew),
@@ -2691,9 +2908,7 @@ object SparkEntry {
           comp AS (SELECT surv.doc_id, coalesce(cc.comp, surv.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM surv LEFT JOIN cc ON cc.id = surv.doc_id),
-          canon AS (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1)"""
+          canon AS ($sqlKeepBest)"""
 
   private val pipelineQueries5: Seq[Q] = Seq(
     // --- SCD TYPE-2 from a changelog: purchases as per-user value updates →
@@ -2709,8 +2924,7 @@ object SparkEntry {
             col("valid_to").cast("long").as("valid_to_sec"),
             col("value"), col("is_current"))
       },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'purchase')
+      Some(s"""WITH ${sqlPurchasesCte(withValue = true)}
         SELECT user_id, event_id,
           epoch_us(ts) // 1000000 AS valid_from_sec,
           epoch_us(lead(ts) OVER w) // 1000000 AS valid_to_sec,
@@ -2723,8 +2937,7 @@ object SparkEntry {
     Q("q102_containment",
       (s, dir) => Dedup.containmentPairs(t(s, dir, "documents"), "text", "doc_id",
         threshold = 0.6, k = 3),
-      Some("""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
+      Some(s"""WITH ${sqlWordsCte()},
           g AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
               for i in generate_series(1, greatest(len(w)-2, 0))]) AS gs FROM w),
           s AS (SELECT doc_id, gs, len(gs) AS z FROM g WHERE len(gs) > 0),
@@ -2797,12 +3010,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 97 === 0),
           "text", "doc_id", n = 3, mBits = 1 << 16, numProbes = 3)
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
-          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
-                substr(md5(array_to_string(w[i:i+2], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
-              for i in generate_series(1, greatest(len(w)-2, 0))]) AS gs
-            FROM w),
+      Some(s"""WITH ${sqlShingleHashCtes(3)},
           bench AS (SELECT DISTINCT unnest(gs) AS h FROM g WHERE doc_id % 97 = 0),
           corpus AS (SELECT doc_id, unnest(gs) AS h FROM g WHERE doc_id % 97 <> 0)
         SELECT corpus.doc_id, count(*) AS n_shared
@@ -2818,8 +3026,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1),
           "text", "doc_id", threshold = 0.5, k = 3)
       },
-      Some("""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
+      Some(s"""WITH ${sqlWordsCte()},
           g AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
               for i in generate_series(1, greatest(len(w)-2, 0))]) AS gs FROM w),
           s AS (SELECT doc_id, gs, len(gs) AS z FROM g WHERE len(gs) > 0),
@@ -3022,15 +3229,7 @@ object SparkEntry {
           targetTokens = 2000, buckets = 16)
           .select(col("doc_id"), col("__n").as("n_tok"), col("shard"))
       },
-      Some("""WITH t AS (SELECT doc_id,
-            CAST(len(list_filter(string_split_regex(trim(text), '\s+'), tws -> length(tws) > 0)) AS BIGINT) AS n_tok,
-            CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-              % 1000000 AS u
-          FROM documents),
-          o AS (SELECT doc_id, n_tok,
-            coalesce(sum(n_tok) OVER (ORDER BY u, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-          FROM t)
+      Some(s"""WITH $sqlTokenPrefixCtes
         SELECT doc_id, n_tok, CAST(pre // 2000 AS BIGINT) AS shard FROM o""")),
 
     // --- SNAPSHOT DIFF (pre-promotion audit): added/removed/changed/
@@ -3235,24 +3434,10 @@ object SparkEntry {
     // for each purchase the closest click within ±1 h, exact-µs distance,
     // ties to the earlier (backward) row ---
     Q("q127_asof_nearest",
-      (s, dir) => {
-        val p = purchases(s, dir)
-          .select(col("event_id"), col("user_id"), col("ts"), col("value").as("purchase_value"))
-        Joins.asofJoin(p, clicksByTs(s, dir), "ts", "ts", Seq("user_id"),
-          tolerance = Some(java.time.Duration.ofHours(1)), direction = "nearest")
-          .select(col("event_id"), col("user_id"), col("ts").cast("long").as("ts_sec"),
-            col("purchase_value"), col("click_value").as("nearest_click_value"))
-      },
-      Some("""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value
-                FROM events WHERE event_type = 'purchase'),
-          c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS click_value
-                FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        SELECT p.event_id, p.user_id, epoch_us(p.ts) // 1000000 AS ts_sec,
-          p.value AS purchase_value, c.click_value AS nearest_click_value
-        FROM p LEFT JOIN c ON c.user_id = p.user_id
-          AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts + INTERVAL 1 HOUR
-        QUALIFY row_number() OVER (PARTITION BY p.event_id
-          ORDER BY abs(epoch_us(c.ts) - epoch_us(p.ts)) ASC NULLS LAST, c.ts ASC) = 1""")),
+      purchaseClickAsof("nearest_click_value", Some(java.time.Duration.ofHours(1)), "nearest"),
+      Some(sqlPurchaseClickAsof("nearest_click_value",
+        "AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts + INTERVAL 1 HOUR",
+        "abs(epoch_us(c.ts) - epoch_us(p.ts)) ASC NULLS LAST, c.ts ASC"))),
 
     // --- TIME-based CV folds: event-time quantile bins (exact epoch cuts
     // broadcast) — the temporal split next to the random/group routers;
@@ -3823,22 +4008,7 @@ object SparkEntry {
     Q("q151_dsir_select",
       (s, dir) => graft.ml.MLOps.dsirSelect(t(s, dir, "documents"), "text", "doc_id",
         targetPred = col("lang") === "en", buckets = 4096, scale = 1000000L, keepPct = 25),
-      Some("""WITH d AS (SELECT doc_id, lang, list_filter(
-              string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS ws
-            FROM documents),
-          tok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM d),
-          tb AS (SELECT doc_id, tgt,
-              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM tok),
-          bs AS (SELECT b,
-              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
-            FROM tb GROUP BY b),
-          ds AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS dsir_score
-            FROM tb JOIN bs USING (b) GROUP BY doc_id),
-          al AS (SELECT d.doc_id, CAST(coalesce(ds.dsir_score, 0) AS BIGINT) AS dsir_score
-            FROM d LEFT JOIN ds ON ds.doc_id = d.doc_id),
-          r AS (SELECT doc_id, dsir_score,
-              row_number() OVER (ORDER BY dsir_score DESC, doc_id) AS rn,
-              count(*) OVER () AS total FROM al)
+      Some(s"""WITH $sqlDsirRankCtes
         SELECT doc_id, dsir_score, CAST(rn AS BIGINT) AS "rank",
           rn <= (total * 25 + 99) // 100 AS selected FROM r""")),
 
@@ -3852,22 +4022,7 @@ object SparkEntry {
       (s, dir) => graft.ml.MLOps.dsirSelectByThreshold(t(s, dir, "documents"),
         "text", "doc_id", targetPred = col("lang") === "en",
         buckets = 4096, scale = 1000000L, keepPct = 25),
-      Some("""WITH d AS (SELECT doc_id, lang, list_filter(
-              string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS ws
-            FROM documents),
-          tok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM d),
-          tb AS (SELECT doc_id, tgt,
-              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM tok),
-          bs AS (SELECT b,
-              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
-            FROM tb GROUP BY b),
-          ds AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS dsir_score
-            FROM tb JOIN bs USING (b) GROUP BY doc_id),
-          al AS (SELECT d.doc_id, CAST(coalesce(ds.dsir_score, 0) AS BIGINT) AS dsir_score
-            FROM d LEFT JOIN ds ON ds.doc_id = d.doc_id),
-          r AS (SELECT doc_id, dsir_score,
-              row_number() OVER (ORDER BY dsir_score DESC, doc_id) AS rn,
-              count(*) OVER () AS total FROM al),
+      Some(s"""WITH $sqlDsirRankCtes,
           t AS (SELECT min(dsir_score) AS thr FROM r
             WHERE rn <= (total * 25 + 99) // 100)
         SELECT doc_id, dsir_score, dsir_score >= (SELECT thr FROM t) AS selected
@@ -3881,25 +4036,8 @@ object SparkEntry {
     Q("q152_gopher_filter",
       (s, dir) => TextAnalysis.gopherFilter(t(s, dir, "documents"), "text", "doc_id",
         minWords = 20),
-      Some("""WITH d AS (SELECT doc_id, text, list_filter(
-              string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS ws,
-            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-              l -> length(l) > 0) AS ls
-            FROM documents),
-          m AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt,
-              CAST(len(list_filter(['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'],
-                sw -> list_contains(ws, sw))) AS BIGINT) AS stop_hits
-            FROM d),
+      Some(s"""WITH d AS (${sqlGopherSplit("doc_id, text")}),
+          m AS (${sqlGopherMetrics("d", stopHits = true)}),
           x AS (SELECT doc_id, n_words,
               CASE WHEN n_words = 0 THEN NULL
                 ELSE CAST(sum_len AS DOUBLE) / n_words END AS mean_word_len,
@@ -3967,60 +4105,16 @@ object SparkEntry {
         graft.ml.MLOps.tokenBudget(corpus, "lang", tok, 100000L,
           Map("en" -> 4L, "de" -> 2L, "es" -> 2L, "fr" -> 1L, "zh" -> 1L))
       },
-      Some("""WITH d0 AS (SELECT doc_id, lang, text, list_filter(
-              string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS ws,
-            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-              l -> length(l) > 0) AS ls
-            FROM documents),
-          m AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt,
-              CAST(len(list_filter(['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'],
-                sw -> list_contains(ws, sw))) AS BIGINT) AS stop_hits
-            FROM d0),
-          gm AS (SELECT doc_id FROM (SELECT doc_id,
-              CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
-              + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
-                  OR CAST(sum_len AS DOUBLE) / n_words > 10.0 THEN 2 ELSE 0 END
-              + CASE WHEN n_words > 0
-                  AND CAST(hash_cnt + dots_cnt AS DOUBLE) / n_words >= 0.1 THEN 4 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(bullet_cnt AS DOUBLE) / n_lines >= 0.9 THEN 8 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
-              + CASE WHEN n_words = 0
-                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END
-              + CASE WHEN stop_hits < 2 THEN 64 ELSE 0 END AS mask
-            FROM m) WHERE (mask & 63) = 0),
+      Some(s"""WITH d0 AS (${sqlGopherSplit("doc_id, lang, text")}),
+          m AS (${sqlGopherMetrics("d0", stopHits = true)}),
+          gm AS (${sqlGopherGate(stopRule = true)}),
           kept AS (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
-          tok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM kept),
-          tb AS (SELECT doc_id, tgt,
-              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM tok),
-          bs AS (SELECT b,
-              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
-            FROM tb GROUP BY b),
-          dsc AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS score
-            FROM tb JOIN bs USING (b) GROUP BY doc_id),
-          al AS (SELECT kept.doc_id, CAST(coalesce(score, 0) AS BIGINT) AS score
-            FROM kept LEFT JOIN dsc USING (doc_id)),
-          rk AS (SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
-              count(*) OVER () AS total FROM al),
-          thr AS (SELECT min(score) AS thr FROM rk
-            WHERE rn <= (total * 50 + 99) // 100),
-          sel AS (SELECT doc_id FROM al WHERE score >= (SELECT thr FROM thr)),
+          ${sqlDsirSelectCtes("kept")},
           corpus AS (SELECT kept.* FROM kept JOIN sel USING (doc_id)),
           wt(lang, rw) AS (VALUES ('en', CAST(4 AS BIGINT)), ('de', 2), ('es', 2),
             ('fr', 1), ('zh', 1)),
           t AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(len(list_filter(string_split_regex(trim(text), '\s+'), tws -> length(tws) > 0))) AS BIGINT) AS n_tokens
+              CAST(sum(len(list_filter(string_split_regex(trim(text), '\\s+'), tws -> length(tws) > 0))) AS BIGINT) AS n_tokens
             FROM corpus GROUP BY lang)
         SELECT t.lang, n_docs, n_tokens,
           CAST(rw AS DOUBLE) / CAST(sum(rw) OVER () AS DOUBLE) AS weight,
@@ -4301,43 +4395,13 @@ object SparkEntry {
             (col("__nd").cast("double") / col("n_docs").cast("double"))
               .as("near_dup_frac"))
       },
-      Some {
-        def hits(words: Seq[String]) =
-          words.map(w => s"CAST(regexp_matches(t, '(^|\\s)$w(\\s|$$)') AS INT)").mkString(" + ")
-        val en = hits(Seq("the", "and", "of", "to", "is", "that", "with", "for"))
-        val es = hits(Seq("el", "la", "los", "las", "es", "una", "que", "por", "con"))
-        val de = hits(Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit"))
-        val fr = hits(Seq("le", "les", "est", "et", "une", "dans", "pour", "des"))
-        s"""WITH ${minhashCtes()},
+      Some(s"""WITH ${minhashCtes()},
           nd AS (SELECT DISTINCT id FROM
             (SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs)),
-          lang AS (SELECT doc_id,
-              CASE WHEN zh > 0 AND zh >= greatest(en, es, de, fr) THEN 'zh'
-                WHEN en > 0 AND en >= greatest(es, de, fr) THEN 'en'
-                WHEN es > 0 AND es >= greatest(de, fr) THEN 'es'
-                WHEN de > 0 AND de >= fr THEN 'de'
-                WHEN fr > 0 THEN 'fr'
-                ELSE 'unknown' END AS plang
-            FROM (SELECT doc_id,
-              CASE WHEN regexp_matches(t, '[\\x{4e00}-\\x{9fff}]') THEN 100 ELSE 0 END AS zh,
-              $en AS en, $es AS es, $de AS de, $fr AS fr
+          lang AS (SELECT doc_id, ${sqlLangPick("plang")}
+            FROM (SELECT doc_id, $sqlLangScores
               FROM (SELECT doc_id, lower(text) AS t FROM documents))),
-          gm AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt
-            FROM (SELECT doc_id, text, list_filter(
-                string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws,
-              list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-                l -> length(l) > 0) AS ls
-              FROM documents)),
+          gm AS (${sqlGopherMetrics(s"(${sqlGopherSplit("doc_id, text")})")}),
           gp AS (SELECT doc_id,
               CASE WHEN n_words >= 20 AND n_words <= 100000
                 AND n_words > 0 AND CAST(sum_len AS DOUBLE) / n_words >= 3.0
@@ -4373,8 +4437,7 @@ object SparkEntry {
           CAST(n_gp AS DOUBLE) / CAST(n_docs AS DOUBLE) AS gopher_pass_frac,
           CAST(n_dup AS DOUBLE) / CAST(n_docs AS DOUBLE) AS exact_dup_frac,
           CAST(n_nd AS DOUBLE) / CAST(n_docs AS DOUBLE) AS near_dup_frac
-        FROM card JOIN dw ON dw.source = card.source"""
-      }),
+        FROM card JOIN dw ON dw.source = card.source""")),
 
     // --- LEAKAGE-SAFE train/test split: route whole near-dup COMPONENTS
     // through one md5 coin — a test doc's near-duplicate can never sit in
@@ -4394,9 +4457,7 @@ object SparkEntry {
           d AS (SELECT doc_id, coalesce(cc.comp, doc_id) AS component
             FROM documents LEFT JOIN cc ON cc.id = doc_id)
         SELECT doc_id, component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80
-            THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("component")} AS split
         FROM d""")),
 
     // --- TRAINED-WEIGHT linear scoring under the oracle gate: the
@@ -4524,11 +4585,7 @@ object SparkEntry {
           s, raw, "ts", "event_type", "value",
           pipeline = view.conform)
       },
-      Some("""SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
-          AS window_start,
-        event_type, CAST(count(*) AS BIGINT) AS n_events,
-        CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2"""),
+      Some(sqlHourlyEventAgg),
       family = "stream"),
 
     // --- The SECOND streaming-runtime modality under the gate: CUSTOM
@@ -4588,71 +4645,24 @@ object SparkEntry {
         val r = graft.contract.CurationRecipe(name = "q166_recipe",
           gopherMinWords = 20, dsirTargetCol = Some("lang"),
           dsirTargetValue = "en", dsirKeepPct = 50)
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.run(t(s, dir, "documents"))
           .select("doc_id", "component", "split")
       },
-      Some(s"""WITH RECURSIVE d0 AS (SELECT doc_id, lang, text, list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws,
-            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-              l -> length(l) > 0) AS ls
-            FROM documents),
-          m AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt
-            FROM d0),
-          gm AS (SELECT doc_id FROM (SELECT doc_id,
-              CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
-              + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
-                  OR CAST(sum_len AS DOUBLE) / n_words > 10.0 THEN 2 ELSE 0 END
-              + CASE WHEN n_words > 0
-                  AND CAST(hash_cnt + dots_cnt AS DOUBLE) / n_words >= 0.1 THEN 4 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(bullet_cnt AS DOUBLE) / n_lines >= 0.9 THEN 8 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
-              + CASE WHEN n_words = 0
-                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END AS mask
-            FROM m) WHERE (mask & 63) = 0),
+      Some(s"""WITH RECURSIVE d0 AS (${sqlGopherSplit("doc_id, lang, text")}),
+          m AS (${sqlGopherMetrics("d0")}),
+          gm AS (${sqlGopherGate()}),
           kept AS (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
           ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
-          canon AS (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1),
+          canon AS ($sqlKeepBest),
           ckept AS (SELECT kept.* FROM kept JOIN canon USING (doc_id)),
-          tok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM ckept),
-          tb AS (SELECT doc_id, tgt,
-              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM tok),
-          bs AS (SELECT b,
-              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
-            FROM tb GROUP BY b),
-          dsc AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS score
-            FROM tb JOIN bs USING (b) GROUP BY doc_id),
-          al AS (SELECT ckept.doc_id, CAST(coalesce(score, 0) AS BIGINT) AS score
-            FROM ckept LEFT JOIN dsc USING (doc_id)),
-          rk AS (SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
-              count(*) OVER () AS total FROM al),
-          thr AS (SELECT min(score) AS thr FROM rk
-            WHERE rn <= (total * 50 + 99) // 100),
-          sel AS (SELECT doc_id FROM al WHERE score >= (SELECT thr FROM thr))
+          ${sqlDsirSelectCtes("ckept")}
         SELECT canon.doc_id, canon.component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80
-            THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("canon.component")} AS split
         FROM canon JOIN sel USING (doc_id)"""),
       family = "recipe"),
 
@@ -4740,9 +4750,7 @@ object SparkEntry {
       (s, dir) => {
         val r = graft.contract.CurationRecipe(name = "q171_recipe",
           gopherRuleMask = 0L, ccnetRefCol = Some("lang"), ccnetRefValue = "en")
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.run(t(s, dir, "documents"))
           .select("doc_id", "component", "split")
       },
@@ -4755,9 +4763,7 @@ object SparkEntry {
           comp AS (SELECT d.doc_id, coalesce(cc.comp, d.doc_id) AS component,
               CAST(len(d.ws) AS BIGINT) AS n_tok
             FROM dtok d LEFT JOIN cc ON cc.id = d.doc_id),
-          canon AS (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1),
+          canon AS ($sqlKeepBest),
           ckept AS (SELECT dtok.* FROM dtok JOIN canon USING (doc_id)),
           ref AS (SELECT unnest(ws) AS w0 FROM ckept WHERE lang = 'en'),
           freq AS (SELECT w0, CAST(count(*) AS BIGINT) AS n FROM ref GROUP BY w0),
@@ -4778,9 +4784,7 @@ object SparkEntry {
               (SELECT max(s0) FROM cum, nn WHERE cum >= (2 * n + 2) // 3) AS s2),
           lmkeep AS (SELECT sc.doc_id FROM sc, cuts c WHERE sc.lm_milli >= c.s2)
         SELECT canon.doc_id, canon.component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80
-            THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("canon.component")} AS split
         FROM canon JOIN lmkeep USING (doc_id)"""),
       family = "recipe"),
 
@@ -4882,25 +4886,13 @@ object SparkEntry {
     // verdict. b_id_key = -1 materializes "no conversion" as an
     // upsertable training label. Oracle = the static LEFT JOIN under the
     // same time bound ---
-    Q("q187_streaming_outer_join_run",
-      (s, dir) => graft.streaming.Streaming.stagedOuterIntervalJoinRun(
-        s, events(s, dir).select("ts", "user_id", "event_type", "event_id"),
-        tsCol = "ts", keys = Seq("user_id"), idCol = "event_id",
-        leftPred = "event_type = 'click'",
-        rightPred = "event_type = 'purchase'", after = "1 hour"),
+    Q("q187_streaming_outer_join_run", clickConversionOuter,
       // chunk count stays at the default 3 DELIBERATELY (optimization r16):
       // trimming to 2 saved ~1 s of per-batch engine constants at sf0.1 and
       // x10 but cost +10 s at x100 — fewer watermark advances mean the
       // join state evicts in bigger waves; measured both ways, see
       // OPTIMIZATION_r16.md and SCALE_CURVE_x100_streaming_r16.json
-      Some("""SELECT a.user_id, a.event_id AS a_id,
-          coalesce(b.event_id, -1) AS b_id_key,
-          epoch_us(CAST(b.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP)) AS lag_us
-        FROM events a LEFT JOIN events b ON a.user_id = b.user_id
-          AND b.event_type = 'purchase'
-          AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
-          AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        WHERE a.event_type = 'click'"""),
+      Some(sqlClickConversionOuter),
       family = "stream"),
 
     // --- The FIFTH streaming-runtime modality: Spark's BUILT-IN stateful
@@ -4911,15 +4903,8 @@ object SparkEntry {
     // matter which physical copy wins), the stream collapses them on the
     // event_id key, and the final store must be exactly the original
     // table — which IS the oracle ---
-    Q("q176_streaming_dedup_run",
-      (s, dir) => {
-        val e = events(s, dir).select("ts", "user_id", "event_type", "value", "event_id")
-        graft.streaming.Streaming.stagedDedupRun(s, e.unionAll(e), "ts", Seq("event_id"))
-          .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"))
-      },
-      Some("""SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-          user_id, event_type, value FROM events"""),
+    Q("q176_streaming_dedup_run", doubleDeliveryDedup,
+      Some(sqlEventsById),
       family = "stream"),
 
     // --- The SIXTH streaming-runtime modality: SESSION WINDOWS
@@ -4967,50 +4952,19 @@ object SparkEntry {
         val r = graft.contract.CurationRecipe(name = "q178_recipe",
           gopherMinWords = 20, ccnetRefCol = Some("lang"), ccnetRefValue = "en",
           dsirTargetCol = Some("lang"), dsirTargetValue = "en", dsirKeepPct = 50)
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.runAudit(t(s, dir, "documents"))
       },
-      Some(s"""WITH RECURSIVE d0 AS (SELECT doc_id, lang, text, list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS ws,
-            list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-              l -> length(l) > 0) AS ls
-            FROM documents),
-          m AS (SELECT doc_id,
-              CAST(len(ws) AS BIGINT) AS n_words,
-              CAST(len(ls) AS BIGINT) AS n_lines,
-              CAST(coalesce(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT) AS hash_cnt,
-              CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS dots_cnt,
-              CAST(len(list_filter(ls, l -> starts_with(l, '- ') OR starts_with(l, '* ')
-                OR starts_with(l, '• '))) AS BIGINT) AS bullet_cnt,
-              CAST(len(list_filter(ls, l -> ends_with(l, '...') OR ends_with(l, '…')))
-                AS BIGINT) AS ellipsis_cnt,
-              CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alpha_cnt
-            FROM d0),
-          gm AS MATERIALIZED (SELECT doc_id FROM (SELECT doc_id,
-              CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
-              + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
-                  OR CAST(sum_len AS DOUBLE) / n_words > 10.0 THEN 2 ELSE 0 END
-              + CASE WHEN n_words > 0
-                  AND CAST(hash_cnt + dots_cnt AS DOUBLE) / n_words >= 0.1 THEN 4 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(bullet_cnt AS DOUBLE) / n_lines >= 0.9 THEN 8 ELSE 0 END
-              + CASE WHEN n_lines > 0
-                  AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
-              + CASE WHEN n_words = 0
-                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END AS mask
-            FROM m) WHERE (mask & 63) = 0),
+      Some(s"""WITH RECURSIVE d0 AS (${sqlGopherSplit("doc_id, lang, text")}),
+          m AS (${sqlGopherMetrics("d0")}),
+          gm AS MATERIALIZED (${sqlGopherGate()}),
           kept AS MATERIALIZED (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
           ${minhashCtes(0.5, 4, 3, from = "kept")},
           ${sqlClosureCtes("pairs", "cc")},
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
-          canon AS MATERIALIZED (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1),
+          canon AS MATERIALIZED ($sqlKeepBest),
           ckept AS MATERIALIZED (SELECT kept.* FROM kept JOIN canon USING (doc_id)),
           lref AS (SELECT unnest(ws) AS w0 FROM ckept WHERE lang = 'en'),
           lfreq AS MATERIALIZED (SELECT w0, CAST(count(*) AS BIGINT) AS n FROM lref GROUP BY w0),
@@ -5031,21 +4985,7 @@ object SparkEntry {
               (SELECT max(s0) FROM lcum, lnn WHERE cum >= (2 * n + 2) // 3) AS s2),
           lmkeep AS MATERIALIZED (SELECT lsc.doc_id FROM lsc, lcuts c WHERE lsc.lm_milli >= c.s2),
           lmk AS MATERIALIZED (SELECT ckept.* FROM ckept JOIN lmkeep USING (doc_id)),
-          ttok AS (SELECT doc_id, lang = 'en' AS tgt, unnest(ws) AS w FROM lmk),
-          tb AS (SELECT doc_id, tgt,
-              CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT) % 4096 AS b FROM ttok),
-          bs AS (SELECT b,
-              ((count(CASE WHEN tgt THEN 1 END) + 1) * 1000000) // (count(*) + 1) AS sc
-            FROM tb GROUP BY b),
-          dsc AS (SELECT doc_id, CAST(sum(sc) AS BIGINT) AS score
-            FROM tb JOIN bs USING (b) GROUP BY doc_id),
-          al AS MATERIALIZED (SELECT lmk.doc_id, CAST(coalesce(score, 0) AS BIGINT) AS score
-            FROM lmk LEFT JOIN dsc USING (doc_id)),
-          rk AS (SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn,
-              count(*) OVER () AS total FROM al),
-          thr AS (SELECT min(score) AS thr FROM rk
-            WHERE rn <= (total * 50 + 99) // 100),
-          sel AS MATERIALIZED (SELECT doc_id FROM al WHERE score >= (SELECT thr FROM thr))
+          ${sqlDsirSelectCtes("lmk", "ttok", materialize = true)}
         SELECT d.doc_id,
           CASE WHEN gm.doc_id IS NULL THEN 'gate'
                WHEN canon.doc_id IS NULL THEN 'near_dup'
@@ -5054,9 +4994,7 @@ object SparkEntry {
                ELSE 'kept' END AS stage,
           CASE WHEN gm.doc_id IS NOT NULL AND canon.doc_id IS NOT NULL
                 AND lmkeep.doc_id IS NOT NULL AND sel.doc_id IS NOT NULL
-            THEN CASE WHEN CAST(concat('0x',
-                  substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
-                AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test' END
+            THEN ${sqlComponentSplit("canon.component")}
           END AS split
         FROM documents d
         LEFT JOIN gm ON gm.doc_id = d.doc_id
@@ -5119,9 +5057,7 @@ object SparkEntry {
         val docs = t(s, dir, "documents")
         val r = graft.contract.CurationRecipe(name = "q181_recipe",
           gopherMinWords = 20)
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.runIncremental(
           docs.filter(col("doc_id") % 5 =!= 0),
           docs.filter(col("doc_id") % 5 === 0))
@@ -5129,8 +5065,7 @@ object SparkEntry {
       },
       Some(s"""WITH RECURSIVE ${sqlIngestCtes}
         SELECT doc_id, component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("component")} AS split
         FROM canon"""),
       family = "recipe"),
 
@@ -5151,8 +5086,7 @@ object SparkEntry {
       },
       Some(s"""WITH RECURSIVE ${sqlIngestCtes},
           spl AS (SELECT doc_id,
-              CASE WHEN CAST(concat('0x', substr(md5(CAST(component AS VARCHAR)), 1, 8))
-                AS BIGINT) % 100 < 80 THEN 'train' ELSE 'test' END AS split
+              ${sqlComponentSplit("component")} AS split
             FROM canon)
         SELECT nb.doc_id,
           CASE WHEN gm.doc_id IS NULL THEN 'gate'
@@ -5206,9 +5140,7 @@ object SparkEntry {
         val r = graft.contract.CurationRecipe(name = "q190_recipe",
           decontamCol = Some("source"), decontamValue = "src19",
           decontamN = 3, gopherRuleMask = 0L)
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.run(t(s, dir, "documents"))
           .select("doc_id", "component", "split")
       },
@@ -5233,13 +5165,9 @@ object SparkEntry {
           comp AS (SELECT kept.doc_id, coalesce(cc.comp, kept.doc_id) AS component,
               CAST(len(ws) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
-          canon AS (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1)
+          canon AS ($sqlKeepBest)
         SELECT canon.doc_id, canon.component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80
-            THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("canon.component")} AS split
         FROM canon"""),
       family = "recipe"),
 
@@ -5255,9 +5183,7 @@ object SparkEntry {
         val r = graft.contract.CurationRecipe(name = "q192_recipe",
           decontamCol = Some("source"), decontamValue = "src19",
           decontamN = 3, decontamMode = "excise", gopherRuleMask = 0L)
-        val roundTripped = graft.contract.ContractJson.recipeFromValue(
-          graft.expr.JsonValue.parseObject(
-            graft.contract.ContractJson.recipeToJson(r)))
+        val roundTripped = recipeRoundTrip(r)
         roundTripped.run(t(s, dir, "documents"))
           .select("doc_id", "text", "component", "split")
       },
@@ -5301,13 +5227,9 @@ object SparkEntry {
               CAST(len(list_filter(string_split_regex(lower(trim(kept.text)), '\\s+'),
                 xk -> length(xk) > 0)) AS BIGINT) AS n_tok
             FROM kept LEFT JOIN cc ON cc.id = kept.doc_id),
-          canon AS (SELECT doc_id, component FROM (SELECT doc_id, component,
-              row_number() OVER (PARTITION BY component
-                ORDER BY n_tok DESC, doc_id ASC) AS rn FROM comp) WHERE rn = 1)
+          canon AS ($sqlKeepBest)
         SELECT canon.doc_id, kept.text, canon.component,
-          CASE WHEN CAST(concat('0x', substr(md5(CAST(canon.component AS VARCHAR)), 1, 8))
-              AS BIGINT) % 100 < 80
-            THEN 'train' ELSE 'test' END AS split
+          ${sqlComponentSplit("canon.component")} AS split
         FROM canon JOIN kept USING (doc_id)"""),
       family = "recipe"),
 
@@ -5347,12 +5269,7 @@ object SparkEntry {
             .select(col("lang").as("benchmark"), col("text")),
           "text", "doc_id", "benchmark", n = 3)
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), xf -> length(xf) > 0) AS w
-            FROM documents),
-          g AS (SELECT doc_id, list_distinct([CAST(concat('0x',
-                substr(md5(array_to_string(w[i:i+2], ' ')), 1, 14)) AS BIGINT) % ${Dedup.PortableP}
-              for i in generate_series(1, greatest(len(w)-2, 0))]) AS gs
-            FROM w),
+      Some(s"""WITH ${sqlShingleHashCtes(3)},
           bench AS (SELECT DISTINCT benchmark, h FROM (
             SELECT d.lang AS benchmark, unnest(g.gs) AS h
             FROM g JOIN documents d USING (doc_id) WHERE d.doc_id % 97 = 0)),
@@ -5374,20 +5291,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 97 === 0),
           "text", "doc_id", n = 3)
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              xf -> length(xf) > 0) AS ws
-            FROM documents),
-          g0 AS (SELECT doc_id, ws,
-              unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS pos FROM w),
-          g AS (SELECT doc_id, pos, CAST(concat('0x',
-              substr(md5(array_to_string(ws[pos:pos+2], ' ')), 1, 14)) AS BIGINT)
-                % ${Dedup.PortableP} AS h
-            FROM g0),
-          bench AS (SELECT DISTINCT h FROM g WHERE doc_id % 97 = 0),
-          m AS (SELECT g.doc_id, g.pos,
-              g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS grp
-            FROM g JOIN bench USING (h) WHERE g.doc_id % 97 <> 0)
+      Some(s"""WITH $sqlContaminationRunCtes
         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
           CAST(max(pos) + 2 AS BIGINT) AS span_end,
           CAST(max(pos) + 2 - min(pos) + 1 AS BIGINT) AS span_tokens
@@ -5405,20 +5309,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 97 === 0),
           "text", "doc_id", n = 3)
       },
-      Some(s"""WITH w AS (SELECT doc_id, list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              xf -> length(xf) > 0) AS ws
-            FROM documents),
-          g0 AS (SELECT doc_id, ws,
-              unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS pos FROM w),
-          g AS (SELECT doc_id, pos, CAST(concat('0x',
-              substr(md5(array_to_string(ws[pos:pos+2], ' ')), 1, 14)) AS BIGINT)
-                % ${Dedup.PortableP} AS h
-            FROM g0),
-          bench AS (SELECT DISTINCT h FROM g WHERE doc_id % 97 = 0),
-          m AS (SELECT g.doc_id, g.pos,
-              g.pos - row_number() OVER (PARTITION BY g.doc_id ORDER BY g.pos) AS grp
-            FROM g JOIN bench USING (h) WHERE g.doc_id % 97 <> 0),
+      Some(s"""WITH $sqlContaminationRunCtes,
           spans AS (SELECT doc_id, min(pos) AS span_start, max(pos) + 2 AS span_end
             FROM m GROUP BY doc_id, grp),
           wd AS (SELECT doc_id, unnest(ws) AS word,
@@ -5987,12 +5878,11 @@ object SparkEntry {
       (s, dir) => {
         val work = java.nio.file.Files.createTempDirectory("graft_part").toString
         val src = graft.sources.PartitionedParquetSource(s"$work/docs_part", Seq("lang"))
-        val docs = t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+        val docs = storeDocs(s, dir)
         src.overwrite(docs)
         src.upsert(docs.filter(col("lang") === "en" && col("doc_id") % 10 === 0)
           .withColumn("n_chars", col("n_chars") + 1000L), Seq("doc_id"))
-        src.read(s).select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
+        storeDocsOut(src.read(s))
       },
       Some("""SELECT doc_id, lang, source,
           CASE WHEN lang = 'en' AND doc_id % 10 = 0 THEN n_chars + 1000
@@ -6009,12 +5899,11 @@ object SparkEntry {
       (s, dir) => {
         val work = java.nio.file.Files.createTempDirectory("graft_bkt").toString
         val src = graft.sources.BucketedParquetSource(s"$work/docs_bkt", Seq("doc_id"), 16)
-        val docs = t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+        val docs = storeDocs(s, dir)
         src.overwrite(docs)
         src.upsert(docs.filter(col("doc_id") % 7 === 0)
           .withColumn("source", lit("patched")), Seq("doc_id"))
-        src.read(s).select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
+        storeDocsOut(src.read(s))
       },
       Some("""SELECT doc_id, lang,
           CASE WHEN doc_id % 7 = 0 THEN 'patched' ELSE source END AS source,
@@ -6031,15 +5920,14 @@ object SparkEntry {
       (s, dir) => {
         val work = java.nio.file.Files.createTempDirectory("graft_logq").toString
         val src = graft.sources.LogUpsertSource(s"$work/docs_log", Seq("doc_id"))
-        val docs = t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+        val docs = storeDocs(s, dir)
         src.upsert(docs, Seq("doc_id"))
         val patch = docs.filter(col("doc_id") % 5 === 0)
           .withColumn("n_chars", col("n_chars") * 2L)
         src.upsert(patch, Seq("doc_id"))
         src.upsert(patch, Seq("doc_id")) // at-least-once redelivery
         src.compact(s)                   // fold to one generation
-        src.read(s).select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
+        storeDocsOut(src.read(s))
       },
       Some("""SELECT doc_id, lang, source,
           CASE WHEN doc_id % 5 = 0 THEN n_chars * 2 ELSE n_chars END AS n_chars
@@ -6056,7 +5944,7 @@ object SparkEntry {
         val work = java.nio.file.Files.createTempDirectory("graft_lsmq").toString
         val src = graft.sources.BucketedLogUpsertSource(s"$work/docs_lsm",
           Seq("doc_id"), numBuckets = 16, autoCompactEvery = 4)
-        val docs = t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+        val docs = storeDocs(s, dir)
         src.upsert(docs, Seq("doc_id"))
         // eight key-sliced patch rounds: each round m rewrites the rows with
         // doc_id % 8 == m, so auto-compaction fires inside the sequence and
@@ -6064,8 +5952,7 @@ object SparkEntry {
         for (m <- 0L until 8L)
           src.upsert(docs.filter(pmod(col("doc_id"), lit(8L)) === m)
             .withColumn("n_chars", col("n_chars") * 2L + m), Seq("doc_id"))
-        src.read(s).select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
+        storeDocsOut(src.read(s))
       },
       Some("""SELECT doc_id, lang, source,
           n_chars * 2 + (doc_id % 8) AS n_chars
@@ -6125,14 +6012,13 @@ object SparkEntry {
         // fold would subsume generation 1 and readAt(1) would loudly refuse
         val src = graft.sources.LogUpsertSource(s"$work/docs_tt", Seq("doc_id"),
           autoCompactEvery = 100)
-        val docs = t(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+        val docs = storeDocs(s, dir)
         src.upsert(docs, Seq("doc_id"))                                   // gen 0
         src.upsert(docs.filter(col("doc_id") % 3 === 0)
           .withColumn("n_chars", col("n_chars") * 2L), Seq("doc_id"))     // gen 1
         src.upsert(docs.filter(col("doc_id") % 3 === 1)
           .withColumn("n_chars", col("n_chars") * 3L), Seq("doc_id"))     // gen 2
-        src.readAt(s, 1L).select(col("doc_id"), col("lang"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
+        storeDocsOut(src.readAt(s, 1L))
       },
       Some("""SELECT doc_id, lang, source,
           CASE WHEN doc_id % 3 = 0 THEN n_chars * 2 ELSE n_chars END AS n_chars
@@ -6333,11 +6219,7 @@ object SparkEntry {
       (s, dir) => graft.streaming.Streaming.stagedRestartRecoveryRun(
         s, events(s, dir).select("ts", "event_type", "value"),
         "ts", "event_type", "value"),
-      Some("""SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
-            AS window_start,
-          event_type, CAST(count(*) AS BIGINT) AS n_events,
-          CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2"""),
+      Some(sqlHourlyEventAgg),
       family = "stream"),
 
     // --- ranked-retrieval quality (MLOps.rankingMetrics): nDCG@10, RR and
@@ -6510,15 +6392,7 @@ object SparkEntry {
         .select(col("doc_id"), col("n_tok"), col("tokens_before"),
           col("start_seq"), col("end_seq"), col("n_seqs_spanned"),
           col("is_split").cast("int").as("is_split")),
-      Some("""WITH t AS (SELECT doc_id,
-            CAST(len(list_filter(string_split_regex(trim(text), '\s+'), tws -> length(tws) > 0)) AS BIGINT) AS n_tok,
-            CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-              % 1000000 AS u
-          FROM documents),
-          o AS (SELECT doc_id, n_tok,
-            coalesce(sum(n_tok) OVER (ORDER BY u, doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS pre
-          FROM t)
+      Some(s"""WITH $sqlTokenPrefixCtes
         SELECT doc_id, n_tok, CAST(pre AS BIGINT) AS tokens_before,
           CASE WHEN n_tok = 0 THEN NULL
             ELSE CAST(pre // 512 AS BIGINT) END AS start_seq,
@@ -7067,31 +6941,7 @@ FROM q, g5 g""")),
     Q("q240_pca_project",
       (s, dir) => Similarity.pcaProject(t(s, dir, "embeddings"),
         "embedding", "vec_id", dim = 2, nComponents = 1),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        q AS (SELECT vec_id, v[1] AS x1, v[2] AS x2,
-            CAST(floor(v[1]*1048576.0) AS BIGINT) AS q1,
-            CAST(floor(v[2]*1048576.0) AS BIGINT) AS q2 FROM e),
-        m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-            CAST(sum(q1) AS BIGINT) AS s1, CAST(sum(q2) AS BIGINT) AS s2,
-            CAST(sum(q1*q1) AS BIGINT) AS s11, CAST(sum(q1*q2) AS BIGINT) AS s12,
-            CAST(sum(q2*q2) AS BIGINT) AS s22 FROM q),
-        c AS (SELECT n,
-            (CAST(s11 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s1 AS DOUBLE)/n))/1099511627776.0 AS c00,
-            (CAST(s12 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c01,
-            (CAST(s22 AS DOUBLE)/n - (CAST(s2 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c11,
-            CAST(s1 AS DOUBLE)/n/1048576.0 AS m1,
-            CAST(s2 AS DOUBLE)/n/1048576.0 AS m2 FROM m),
-        r AS (SELECT *, (c11 - c00)/(2.0*c01) AS theta FROM c),
-        t1 AS (SELECT *, CASE WHEN theta = 0.0 THEN 1.0 ELSE
-            (CASE WHEN theta > 0.0 THEN 1.0 ELSE -1.0 END)
-              / (abs(theta) + sqrt(theta*theta + 1.0)) END AS t FROM r),
-        cs AS (SELECT *, 1.0/sqrt(t*t + 1.0) AS cc FROM t1),
-        cs2 AS (SELECT *, t*cc AS ss FROM cs),
-        rot AS (SELECT *,
-            cc*c00 - ss*c01 AS b00, ss*c00 + cc*c01 AS b01,
-            cc*c01 - ss*c11 AS b10, ss*c01 + cc*c11 AS b11 FROM cs2),
-        ev AS (SELECT *, cc*b00 - ss*b10 AS f00, ss*b01 + cc*b11 AS f11 FROM rot),
+      Some(s"""WITH $sqlPcaRotationCtes,
         w0 AS (SELECT *,
             CASE WHEN f11 > f00 THEN ss ELSE cc END AS w1raw,
             CASE WHEN f11 > f00 THEN cc ELSE 0.0 - ss END AS w2raw FROM ev),
@@ -7111,31 +6961,7 @@ FROM q, g5 g""")),
     Q("q240b_pca_two_components",
       (s, dir) => Similarity.pcaProject(t(s, dir, "embeddings"),
         "embedding", "vec_id", dim = 2, nComponents = 2),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        q AS (SELECT vec_id, v[1] AS x1, v[2] AS x2,
-            CAST(floor(v[1]*1048576.0) AS BIGINT) AS q1,
-            CAST(floor(v[2]*1048576.0) AS BIGINT) AS q2 FROM e),
-        m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-            CAST(sum(q1) AS BIGINT) AS s1, CAST(sum(q2) AS BIGINT) AS s2,
-            CAST(sum(q1*q1) AS BIGINT) AS s11, CAST(sum(q1*q2) AS BIGINT) AS s12,
-            CAST(sum(q2*q2) AS BIGINT) AS s22 FROM q),
-        c AS (SELECT n,
-            (CAST(s11 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s1 AS DOUBLE)/n))/1099511627776.0 AS c00,
-            (CAST(s12 AS DOUBLE)/n - (CAST(s1 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c01,
-            (CAST(s22 AS DOUBLE)/n - (CAST(s2 AS DOUBLE)/n)*(CAST(s2 AS DOUBLE)/n))/1099511627776.0 AS c11,
-            CAST(s1 AS DOUBLE)/n/1048576.0 AS m1,
-            CAST(s2 AS DOUBLE)/n/1048576.0 AS m2 FROM m),
-        r AS (SELECT *, (c11 - c00)/(2.0*c01) AS theta FROM c),
-        t1 AS (SELECT *, CASE WHEN theta = 0.0 THEN 1.0 ELSE
-            (CASE WHEN theta > 0.0 THEN 1.0 ELSE -1.0 END)
-              / (abs(theta) + sqrt(theta*theta + 1.0)) END AS t FROM r),
-        cs AS (SELECT *, 1.0/sqrt(t*t + 1.0) AS cc FROM t1),
-        cs2 AS (SELECT *, t*cc AS ss FROM cs),
-        rot AS (SELECT *,
-            cc*c00 - ss*c01 AS b00, ss*c00 + cc*c01 AS b01,
-            cc*c01 - ss*c11 AS b10, ss*c01 + cc*c11 AS b11 FROM cs2),
-        ev AS (SELECT *, cc*b00 - ss*b10 AS f00, ss*b01 + cc*b11 AS f11 FROM rot),
+      Some(s"""WITH $sqlPcaRotationCtes,
         wsel AS (SELECT *,
             CASE WHEN f11 > f00 THEN ss ELSE cc END AS a1,
             CASE WHEN f11 > f00 THEN cc ELSE 0.0 - ss END AS a2,
@@ -7279,21 +7105,9 @@ FROM q, g5 g""")),
     // unmatched-row flush included ---
     Q("q187b_outer_join_rocksdb",
       (s, dir) => graft.streaming.Streaming.withStateStoreProvider(
-        s, graft.streaming.Streaming.RocksDbProvider) {
-        graft.streaming.Streaming.stagedOuterIntervalJoinRun(
-          s, events(s, dir).select("ts", "user_id", "event_type", "event_id"),
-          tsCol = "ts", keys = Seq("user_id"), idCol = "event_id",
-          leftPred = "event_type = 'click'",
-          rightPred = "event_type = 'purchase'", after = "1 hour")
-      }, // chunks stays 3 — see q187's chunk note (x100 regression)
-      Some("""SELECT a.user_id, a.event_id AS a_id,
-          coalesce(b.event_id, -1) AS b_id_key,
-          epoch_us(CAST(b.ts AS TIMESTAMP)) - epoch_us(CAST(a.ts AS TIMESTAMP)) AS lag_us
-        FROM events a LEFT JOIN events b ON a.user_id = b.user_id
-          AND b.event_type = 'purchase'
-          AND CAST(b.ts AS TIMESTAMP) >= CAST(a.ts AS TIMESTAMP)
-          AND CAST(b.ts AS TIMESTAMP) <= CAST(a.ts AS TIMESTAMP) + INTERVAL 1 HOUR
-        WHERE a.event_type = 'click'"""),
+        s, graft.streaming.Streaming.RocksDbProvider)(clickConversionOuter(s, dir)),
+      // chunks stays 3 — see q187's chunk note (x100 regression)
+      Some(sqlClickConversionOuter),
       family = "stream"),
 
     // --- The FOURTEENTH streaming-runtime modality: q212's restart gate
@@ -7308,11 +7122,7 @@ FROM q, g5 g""")),
       (s, dir) => graft.streaming.Streaming.stagedCrashRecoveryRun(
         s, events(s, dir).select("ts", "event_type", "value"),
         "ts", "event_type", "value"),
-      Some("""SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT)
-            AS window_start,
-          event_type, CAST(count(*) AS BIGINT) AS n_events,
-          CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2"""),
+      Some(sqlHourlyEventAgg),
       family = "stream"),
 
     // --- SQL WRITE path (ContractStore.executeSqlWrite): two INSERTs
@@ -7417,14 +7227,8 @@ FROM q, g5 g""")),
     // double-delivery input and oracle as q176 ---
     Q("q176b_dedup_rocksdb",
       (s, dir) => graft.streaming.Streaming.withStateStoreProvider(
-        s, graft.streaming.Streaming.RocksDbProvider) {
-        val e = events(s, dir).select("ts", "user_id", "event_type", "value", "event_id")
-        graft.streaming.Streaming.stagedDedupRun(s, e.unionAll(e), "ts", Seq("event_id"))
-          .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"))
-      },
-      Some("""SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-          user_id, event_type, value FROM events"""),
+        s, graft.streaming.Streaming.RocksDbProvider)(doubleDeliveryDedup(s, dir)),
+      Some(sqlEventsById),
       family = "stream"),
 
     // --- LoadedAtSource (batch_data_source.py:1288-1338): the load-stamp

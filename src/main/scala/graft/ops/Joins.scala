@@ -246,54 +246,4 @@ object Joins {
     * the accumulated entity columns. */
   def combine(entityFrame: DataFrame, parts: Seq[(DataFrame, Seq[String])]): DataFrame =
     parts.foldLeft(entityFrame) { case (acc, (part, keys)) => acc.join(part, keys, "left") }
-
-  /** Scale-path as-of join: UNION + single sort instead of join + dedup.
-    *
-    * [[asofJoin]] materializes (fact × every earlier feature row of the same
-    * key) before the rank filter — with F features per key that is O(facts·F)
-    * intermediate rows, which explodes for high-fan-in keys at 100 TB. This
-    * variant tags both inputs, shuffles ONCE on the `by` keys, sorts by
-    * (ts, tag) per key and carries the latest feature struct forward with
-    * `last(ignoreNulls)` — O(facts + features) rows, no explosion, and the
-    * sort feeds Spark's single window pass.
-    *
-    * Semantics match [[asofJoin]] (backward, inclusive, left-keep; feature
-    * rows with null timestamps rank below any timestamped match) with one
-    * documented divergence: `tolerance` is applied AFTER selecting the latest
-    * match (stale match → null) rather than falling back to an older-but-
-    * in-window row — for monotone "latest state" features the two agree.
-    */
-  def asofJoinSorted(
-      left: DataFrame,
-      right: DataFrame,
-      leftTs: String,
-      rightTs: String,
-      by: Seq[String],
-      tolerance: Option[java.time.Duration] = None,
-      rightPrefix: String = ""): DataFrame = {
-    val rightVals = right.columns.filterNot(c => by.contains(c) || c == rightTs).toSeq
-    // feature rows: tag 0 (sort BEFORE facts at equal ts → inclusive <=);
-    // the feature payload travels as one struct so all values come from the
-    // same feature row; the feature ts rides along for tolerance checks
-    val r2 = right.select(
-      by.map(col) :+ col(rightTs).as("__ts") :+ lit(0).as("__tag") :+
-        struct((rightVals.map(col) :+ col(rightTs).as("__fts")): _*).as("__fv"): _*)
-    val l2 = left
-      .withColumn("__ts", col(leftTs)).withColumn("__tag", lit(1))
-    val unioned = l2.unionByName(r2, allowMissingColumns = true)
-    val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("__ts").asc_nulls_first, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = unioned.withColumn("__last_fv", last(col("__fv"), ignoreNulls = true).over(w))
-    val facts = carried.filter(col("__tag") === 1)
-    val stale: Column = tolerance match {
-      case Some(t) =>
-        col("__last_fv").isNotNull && col("__last_fv.__fts").isNotNull &&
-          col("__last_fv.__fts") < col(leftTs) - expr(s"INTERVAL ${t.getSeconds} SECOND")
-      case None => lit(false)
-    }
-    val outCols = left.columns.map(col).toSeq ++ rightVals.map(c =>
-      when(stale, lit(null)).otherwise(col(s"__last_fv.$c")).as(rightPrefix + c))
-    facts.select(outCols: _*)
-  }
 }

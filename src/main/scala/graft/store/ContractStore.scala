@@ -261,14 +261,16 @@ final class ContractStore {
           // deleted artifact, and silently-empty results would mask it —
           // those keep the loud read error, as do contract-less views
           // (no declared columns = no schema to present).
+          // It runs through the same conform + aggregate tail as a read,
+          // so derived and aggregate columns show before the first write too.
           val schema = org.apache.spark.sql.types.StructType(
             (declared.map(f =>
               org.apache.spark.sql.types.StructField(f.name, f.dtype.sparkType)) ++
              v.eventTimestamp.map(ts =>
               org.apache.spark.sql.types.StructField(ts.name,
                 org.apache.spark.sql.types.TimestampType))))
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          view(v.name).allFrom(v.conform(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)), None)
             .createOrReplaceTempView(v.name)
         } else view(v.name).all(spark).createOrReplaceTempView(v.name)
       }
@@ -322,9 +324,7 @@ final class ContractStore {
     * narrow projection over the SELECT's plan — conformance adds no
     * shuffle and no extra pass. */
   def executeSqlWrite(spark: SparkSession, sql: String): String = {
-    val insertInto = """(?is)^\s*INSERT\s+INTO\s+(\w+)\s*(\([\w\s,]*\))?\s*(SELECT.*|VALUES.*|WITH.*|TABLE.*)$""".r
-    val insertOver = """(?is)^\s*INSERT\s+OVERWRITE\s+(\w+)\s*(\([\w\s,]*\))?\s*(SELECT.*|VALUES.*|WITH.*|TABLE.*)$""".r
-    val upsertInto = """(?is)^\s*UPSERT\s+INTO\s+(\w+)\s*(\([\w\s,]*\))?\s*(SELECT.*|VALUES.*|WITH.*|TABLE.*)$""".r
+    val write = """(?is)^\s*(INSERT\s+INTO|INSERT\s+OVERWRITE|UPSERT\s+INTO)\s+(\w+)\s*(\([\w\s,]*\))?\s*(SELECT.*|VALUES.*|WITH.*|TABLE.*)$""".r
     val ctas = """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+(.*)$""".r
     // optional `(col, …)` list → rename the SELECT's output positionally
     def applyColumnList(viewName: String, colList: String, df: DataFrame): DataFrame =
@@ -374,26 +374,21 @@ final class ContractStore {
         s"executeSqlWrite: view '${v.name}' source ${other.getClass.getSimpleName} is not writable")
     }
     sql match {
-      case insertInto(viewName, colList, select) =>
+      case write(verb, viewName, colList, select) =>
         val v = viewsMap.getOrElse(viewName, throw new NoSuchElementException(
           s"executeSqlWrite: unknown view '$viewName'"))
-        writable(v).insert(conformTo(v,
-          applyColumnList(viewName, colList, executeSql(spark, select))))
-        viewName
-      case insertOver(viewName, colList, select) =>
-        val v = viewsMap.getOrElse(viewName, throw new NoSuchElementException(
-          s"executeSqlWrite: unknown view '$viewName'"))
-        writable(v).overwrite(conformTo(v,
-          applyColumnList(viewName, colList, executeSql(spark, select))))
-        viewName
-      case upsertInto(viewName, colList, select) =>
-        val v = viewsMap.getOrElse(viewName, throw new NoSuchElementException(
-          s"executeSqlWrite: unknown view '$viewName'"))
+        val op = verb.toUpperCase(java.util.Locale.ROOT).split("\\s+").mkString(" ")
         val keys = v.entities.map(_.name)
-        require(keys.nonEmpty, s"executeSqlWrite: UPSERT INTO '$viewName' " +
-          "needs entity keys on the contract — declare entities or use INSERT")
-        writable(v).upsert(conformTo(v,
-          applyColumnList(viewName, colList, executeSql(spark, select))), keys)
+        if (op == "UPSERT INTO")
+          require(keys.nonEmpty, s"executeSqlWrite: UPSERT INTO '$viewName' " +
+            "needs entity keys on the contract — declare entities or use INSERT")
+        val target = writable(v)
+        val df = conformTo(v, applyColumnList(viewName, colList, executeSql(spark, select)))
+        op match {
+          case "INSERT INTO" => target.insert(df)
+          case "INSERT OVERWRITE" => target.overwrite(df)
+          case _ => target.upsert(df, keys)
+        }
         viewName
       case ctas(name, path, select) =>
         require(!viewsMap.contains(name),
@@ -676,8 +671,9 @@ final class ViewStore(store: ContractStore, val view: FeatureView) {
     allFrom(baseWithDerived(spark), limit)
 
   /** aggregation/limit tail of [[all]], reusable with a pre-filtered base
-    * ([[between]]). */
-  private def allFrom(base: DataFrame, limit: Option[Int]): DataFrame = {
+    * ([[between]]) or an empty one (a SQL write target before its first
+    * write, [[ContractStore.executeSql]]). */
+  private[store] def allFrom(base: DataFrame, limit: Option[Int]): DataFrame = {
     var df = base
     if (view.aggregates.nonEmpty) {
       val keys = view.entities.map(_.name)
@@ -702,7 +698,7 @@ final class ViewStore(store: ContractStore, val view: FeatureView) {
           val ordered = slidingGs.sortBy(_._1.everyInterval.map(_.getSeconds).getOrElse(Long.MaxValue))
           val results = ordered.map { case (w, aggs) => Aggregations.sliding(df, keys, ts, aggs, w) }
           df = results.reduceLeft((acc, next) =>
-            Joins.asofJoinSorted(acc, next, "window_ts", "window_ts", keys))
+            Joins.pointInTimeSorted(acc, next, keys, "window_ts", "window_ts"))
         }
       }
     }

@@ -468,12 +468,39 @@ object Streaming {
   }
 
   /** Handle the shared harness of one staged runtime gate hands its body:
-    * the work dir and the staged file-stream source (one micro-batch per
-    * chunk, so state genuinely carries across batches). */
+    * the work dir, the staged file-stream source (one micro-batch per
+    * chunk, so state genuinely carries across batches) and the store sink
+    * at the gate's `width` (SPARK_GRAFT_GATE_WIDTH, parsed once per gate). */
   private final class StagedGate(val work: java.nio.file.Path,
-      spark: SparkSession, schema: org.apache.spark.sql.types.StructType) {
+      spark: SparkSession, schema: org.apache.spark.sql.types.StructType, width: Int) {
     def source: DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(work.resolve("in").toString)
+
+    /** Sink-side batch narrowing: one task at the deterministic width-1 gate
+      * (tiny store, task constants dominate), untouched at scale widths where
+      * a batch is corpus-shaped and coalesce(1) would single-thread the whole
+      * upsert chain. */
+    def narrow(df: DataFrame): DataFrame = if (width == 1) df.coalesce(1) else df
+
+    /** The gate's store sink: each micro-batch's `project`ed rows, [[narrow]]ed,
+      * upsert into `store` on `keys` through [[idempotentBatchSink]], whose
+      * commit log lives in the work dir. */
+    def upsertSink(store: graft.sources.WritableSource, keys: Seq[String],
+        project: DataFrame => DataFrame = identity): (DataFrame, Long) => Unit =
+      idempotentBatchSink({ (batch, _) =>
+        // ONE action per micro-batch (optimization r15): the former
+        // persist + isEmpty probe ran a whole extra job per batch — and the
+        // probe's executeTake(1) re-computed the full stateful pipeline, so
+        // it COST more than the upsert it guarded (per-batch timing
+        // decomposition: isEmpty 0.15-1.3 s/batch vs upsert 0.11-0.38 s).
+        // Empty watermark-finalize batches are NO-OPS on the log stores
+        // (GenLog.resolveEmptyGen: the empty generation is dropped and its
+        // claim released — unless it is the store's FIRST generation, kept
+        // as the schema donor), so they neither advance the log nor pull
+        // the O(tail) auto-compaction forward, and the final read is
+        // unchanged.
+        store.upsert(narrow(project(batch)), keys)
+      }, work.resolve("commitlog").toString)(spark)
   }
 
   /** The staged gates' online store: a [[graft.sources.LogUpsertSource]] —
@@ -515,13 +542,6 @@ object Streaming {
     * opaque Spark error deep in the gate lifecycle). */
   private[graft] def parseGateWidth(raw: Option[String]): Int =
     parsePositiveInt("SPARK_GRAFT_GATE_WIDTH", raw, default = 1)
-
-  /** Sink-side batch narrowing: one task at the deterministic width-1 gate
-    * (tiny store, task constants dominate), untouched at scale widths where
-    * a batch is corpus-shaped and coalesce(1) would single-thread the whole
-    * upsert chain. */
-  private def gateCoalesce(df: DataFrame): DataFrame =
-    if (parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH")) == 1) df.coalesce(1) else df
 
   /** Run `body` with session confs pinned, restoring each key's previous
     * value (unsetting it if it had none) on every exit, exceptions
@@ -567,7 +587,7 @@ object Streaming {
     // gates pin — so only scale measurements should set this
     val gateWidth = parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH"))
     withConfs(spark, "spark.sql.shuffle.partitions" -> gateWidth.toString) {
-      body(new StagedGate(work, spark, df.schema))
+      body(new StagedGate(work, spark, df.schema, gateWidth))
     }
   }
 
@@ -577,31 +597,17 @@ object Streaming {
     * drains under `Trigger.AvailableNow` (still one micro-batch per staged
     * chunk under `maxFilesPerTrigger=1`, and the watermark's trailing
     * eviction batch runs before the query terminates, so no batch can
-    * race the drain), and the store source is returned. [[gateCoalesce]]
-    * on the batch: at the default width-1 gate the store is tiny and one
-    * task per upsert beats a fan-out; at scale widths a micro-batch is
+    * race the drain), and the store source is returned. The sink
+    * [[StagedGate.narrow]]s each batch: at the default width-1 gate the
+    * store is tiny and one task per upsert beats a fan-out; at scale widths a micro-batch is
     * millions of rows and a forced coalesce(1) single-threads the whole
     * sink chain — measured at ×100 state density as part of the q176/q177
     * residual (SCALE.md). */
   private def runUpsertStream(spark: SparkSession, streamed: DataFrame,
       project: DataFrame => DataFrame, keys: Seq[String],
-      work: java.nio.file.Path, outputMode: String = "update"): graft.sources.WritableSource = {
-    val store = gateStore(work, "store", keys)
-    val upsert = idempotentBatchSink({ (batch, _) =>
-      // ONE action per micro-batch (optimization r15): the former
-      // persist + isEmpty probe ran a whole extra job per batch — and the
-      // probe's executeTake(1) re-computed the full stateful pipeline, so
-      // it COST more than the upsert it guarded (per-batch timing
-      // decomposition: isEmpty 0.15-1.3 s/batch vs upsert 0.11-0.38 s).
-      // Empty watermark-finalize batches are NO-OPS on the log stores
-      // (GenLog.resolveEmptyGen: the empty generation is dropped and its
-      // claim released — unless it is the store's FIRST generation, kept
-      // as the schema donor), so they neither advance the log nor pull
-      // the O(tail) auto-compaction forward, and the final read is
-      // unchanged.
-      store.upsert(gateCoalesce(project(batch)), keys)
-      },
-      work.resolve("commitlog").toString)(spark)
+      g: StagedGate, outputMode: String = "update"): graft.sources.WritableSource = {
+    val store = gateStore(g.work, "store", keys)
+    val upsert = g.upsertSink(store, keys, project)
     // Update mode runs no no-data micro-batch: there such a batch only
     // EVICTS state and emits nothing, yet it still pays a state commit and
     // a sink call. Every update-mode gate is a streaming aggregation (a
@@ -617,7 +623,7 @@ object Streaming {
       val q = streamed.writeStream
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .option("checkpointLocation", g.work.resolve("ckpt").toString)
         .foreachBatch { (b: DataFrame, id: Long) => upsert(b, id) }
         .start()
       try q.awaitTermination() finally q.stop()
@@ -668,7 +674,7 @@ object Streaming {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark,
         windowAgg(pipeline(g.source), tsCol, keyCol, valueCol, windowDur, lateness),
-        windowRows(keyCol), Seq("window_start", keyCol), g.work)
+        windowRows(keyCol), Seq("window_start", keyCol), g)
     }
     windowResult(spark, store, keyCol)
   }
@@ -730,7 +736,7 @@ object Streaming {
       held.foreach(f => java.nio.file.Files.move(f.toPath, hold.resolve(f.getName)))
       def lifecycle() = runUpsertStream(spark,
         windowAgg(g.source, tsCol, keyCol, valueCol, windowDur, lateness),
-        windowRows(keyCol), Seq("window_start", keyCol), g.work)
+        windowRows(keyCol), Seq("window_start", keyCol), g)
       lifecycle() // phase 1: partial corpus, graceful stop
       // the outage: late chunks arrive while no query is running
       held.foreach(f => java.nio.file.Files.move(hold.resolve(f.getName), f.toPath))
@@ -801,12 +807,7 @@ object Streaming {
       val project = windowRows(keyCol) _
       val keys = Seq("window_start", keyCol)
       val st = gateStore(g.work, "store", keys)
-      val upsert = idempotentBatchSink({ (batch, _) =>
-        // no isEmpty probe: it cost a whole extra pipeline execution per
-        // batch (see runUpsertStream); empty batches mint tolerated empty
-        // generations
-        st.upsert(gateCoalesce(project(batch)), keys)
-      }, g.work.resolve("commitlog").toString)(spark)
+      val upsert = g.upsertSink(st, keys, project)
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val q1 = agg.writeStream.outputMode("update")
         .option("checkpointLocation", g.work.resolve("ckpt").toString)
@@ -829,7 +830,7 @@ object Streaming {
       // phase 2: fresh query, same checkpoint/commitlog/store paths (all
       // derive from g.work) — replay of the torn batch is absorbed, the
       // rest of the corpus drains
-      runUpsertStream(spark, agg, project, keys, g.work)
+      runUpsertStream(spark, agg, project, keys, g)
     }
     windowResult(spark, store, keyCol)
   }
@@ -866,7 +867,7 @@ object Streaming {
         .groupBy(col(keyCol), col("hll_bucket"))
         .agg(max(col("__rho")).as("hll_reg"))
       runUpsertStream(spark, regs, identity,
-        Seq(keyCol, "hll_bucket"), g.work)
+        Seq(keyCol, "hll_bucket"), g)
     }
     graft.ops.Aggregations.hllPortableEstimate(store.read(spark), Seq(keyCol), lgK)
   }
@@ -911,7 +912,7 @@ object Streaming {
         .groupBy(col(keyCol), col("cms_depth"), col("cms_slot"))
         .agg(count(lit(1)).as("cms_n"))
       runUpsertStream(spark, counters, identity,
-        Seq(keyCol, "cms_depth", "cms_slot"), g.work)
+        Seq(keyCol, "cms_depth", "cms_slot"), g)
     }
     store.read(spark)
   }
@@ -930,7 +931,7 @@ object Streaming {
       chunks: Int = 3, workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, statefulLatest(g.source, keys, tsCol, tieCol),
-        identity, keys, g.work)
+        identity, keys, g)
     }
     store.read(spark)
   }
@@ -971,7 +972,7 @@ object Streaming {
       // incoming batch — dedup the batch itself (est is a pure function of
       // the pair, so any representative row is THE row)
       runUpsertStream(spark, pairs, _.dropDuplicates("id_a", "id_b"),
-        Seq("id_a", "id_b"), g.work, outputMode = "append")
+        Seq("id_a", "id_b"), g, outputMode = "append")
     }
     require(acc.value == 0L, s"stagedNearDupRun: ${acc.value} bucket evictions " +
       s"at maxPerBucket=$maxPerBucket — the batch-oracle equivalence requires " +
@@ -995,7 +996,7 @@ object Streaming {
       workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, rows, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, dedupStream(g.source, keys, tsCol, delay),
-        identity, keys, g.work, outputMode = "append")
+        identity, keys, g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1040,7 +1041,7 @@ object Streaming {
       runUpsertStream(spark, agg,
         b => b.select(unix_micros(col("session_window.start")).as("session_start"),
           col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("session_start", keyCol), g.work, outputMode = "append")
+        Seq("session_start", keyCol), g, outputMode = "append")
     }
     store.read(spark).select(col("session_start"), col(keyCol),
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
@@ -1082,7 +1083,7 @@ object Streaming {
         .select(keys.map(col) :+ col("a_id") :+ col("b_id") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id"),
-        g.work, outputMode = "append")
+        g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1162,7 +1163,7 @@ object Streaming {
           coalesce(col("b_id"), lit(-1L)).as("b_id_key") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id_key"),
-        g.work, outputMode = "append")
+        g, outputMode = "append")
     }
     // the sentinels cannot reach the store (see above): the left one never
     // evicts, the right one never matches — nothing to filter out
@@ -1210,7 +1211,7 @@ object Streaming {
         " version) before enriching")
     val store = withStagedGate(spark, rows, orderCol, chunks, workDir) { g =>
       runUpsertStream(spark, g.source.join(broadcast(dim), joinKeys, "left"),
-        identity, Seq(idCol), g.work, outputMode = "append")
+        identity, Seq(idCol), g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1242,16 +1243,13 @@ object Streaming {
       // fires before it inside the same cached batch and is idempotent by
       // upsert-on-idCol alone — a trigger emit is a per-row routing, not a
       // second ledger
-      val mainSink = idempotentBatchSink({ (batch, _) =>
-        // no isEmpty probes here or in the trigger sink: each probe was an
-        // extra job per batch (runWorker already persists the batch for its
-        // two consumers); empty batches mint tolerated empty generations
-        mainStore.upsert(gateCoalesce(batch), Seq(idCol))
-      }, g.work.resolve("commitlog").toString)(spark)
+      // no isEmpty probe in the trigger sink either: runWorker already
+      // persists the batch for its two consumers
+      val mainSink = g.upsertSink(mainStore, Seq(idCol))
       val q = runWorker(g.source, view,
         sink = mainSink,
         triggers = Seq(EventTrigger(condition,
-          matched => trigStore.upsert(gateCoalesce(matched), Seq(idCol)))),
+          matched => trigStore.upsert(g.narrow(matched), Seq(idCol)))),
         checkpointDir = Some(g.work.resolve("ckpt").toString),
         trigger = Trigger.ProcessingTime(0L))
       try q.processAllAvailable() finally q.stop()

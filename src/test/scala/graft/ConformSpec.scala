@@ -88,4 +88,15 @@ class ConformSpec extends AnyFunSuite {
       Seq("id", "label", "tags", "score", "region").zip(expectedTypes) :+ ("ts" -> TimestampType))
     check("executeSqlWrite", store.view("sqlw").baseWithDerived(spark))
   }
+
+  test("a SQL write target shows the same columns before and after its first INSERT") {
+    val store = new graft.store.ContractStore().addView(FeatureView("sqlshape",
+      graft.sources.ParquetSource(s"${tmp()}/sqlshape"),
+      entities = Seq(Feature("id", FInt64)), features = Seq(Feature("x", FFloat64)),
+      derived = Seq(DerivedFeature("x2", FFloat64, Ref("x") * Lit(2.0), Seq("x")))))
+    def columns = store.executeSql(spark, "SELECT * FROM sqlshape").columns.toSeq
+    assert(columns == Seq("id", "x", "x2"), "before the first INSERT")
+    store.executeSqlWrite(spark, "INSERT INTO sqlshape SELECT 1L AS id, 1.5D AS x")
+    assert(columns == Seq("id", "x", "x2"), "after the first INSERT")
+  }
 }

@@ -258,7 +258,7 @@ class ScalePathSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("asofJoinSorted equals asofJoin on randomized data") {
+  test("pointInTimeSorted equals asofJoin on randomized data") {
     val rnd = new scala.util.Random(42)
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
     // unique (key, minute) feature timestamps → deterministic ties-free compare
@@ -270,25 +270,25 @@ class ScalePathSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("fact_id", "v").collect().map(r => (r.getLong(0), Option(r.get(1)))).toMap
     val a = Joins.asofJoin(facts, feats, "ts", "ts", Seq("k"))
-    val b = Joins.asofJoinSorted(facts, feats, "ts", "ts", Seq("k"))
+    val b = Joins.pointInTimeSorted(facts, feats, Seq("k"), "ts", "ts")
     assert(canon(a) == canon(b))
     // with tolerance, on monotone data the two also agree
     val tol = Some(java.time.Duration.ofMinutes(60))
     val at = Joins.asofJoin(facts, feats, "ts", "ts", Seq("k"), tolerance = tol)
-    val bt = Joins.asofJoinSorted(facts, feats, "ts", "ts", Seq("k"), tolerance = tol)
+    val bt = Joins.pointInTimeSorted(facts, feats, Seq("k"), "ts", "ts", ttl = tol)
     assert(canon(at) == canon(bt))
   }
 
-  test("asofJoinSorted: null-ts features are a fallback, not a winner") {
+  test("pointInTimeSorted: null-ts features fall back, never win") {
     val facts = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 100L))
       .toDF("k", "ts", "fact_id")
     val feats = Seq(
       (1L, Option(java.sql.Timestamp.valueOf("2024-01-01 09:00:00")), "timestamped"),
       (1L, None: Option[java.sql.Timestamp], "untimestamped"))
       .toDF("k", "ts", "v")
-    val out = Joins.asofJoinSorted(facts, feats, "ts", "ts", Seq("k"))
+    val out = Joins.pointInTimeSorted(facts, feats, Seq("k"), "ts", "ts")
     assert(out.head().getAs[String]("v") == "timestamped")
-    val onlyNull = Joins.asofJoinSorted(facts, feats.filter($"ts".isNull), "ts", "ts", Seq("k"))
+    val onlyNull = Joins.pointInTimeSorted(facts, feats.filter($"ts".isNull), Seq("k"), "ts", "ts")
     assert(onlyNull.head().getAs[String]("v") == "untimestamped")
   }
 
