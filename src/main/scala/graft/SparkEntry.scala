@@ -402,9 +402,7 @@ object SparkEntry {
         store.featuresFor(s, facts, Seq("user_views:value"))
           .select(col("event_id"), col("user_id"), col("value").as("last_view_value"))
       },
-      Some(s"""WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
-                FROM events WHERE event_type = 'view'),
-          ${sqlPurchasesCte("pp")},
+      Some(s"""WITH ${sqlPurchasesCte("pp")},
           v AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(value) AS value
                 FROM events WHERE event_type = 'view' GROUP BY 1, 2)
         SELECT pp.event_id, pp.user_id, v.value AS last_view_value
@@ -1448,11 +1446,8 @@ object SparkEntry {
   }
 
   /** Ids of the [[sqlGopherMetrics]] CTE `m` that pass Gopher rules 1-32
-    * (the recipe gate: minWords 20, the stopword rule masked out);
-    * `stopRule` also sums rule 64 into the mask before `& 63` drops it. */
-  private def sqlGopherGate(stopRule: Boolean = false): String = {
-    val stop = if (!stopRule) "" else """
-              + CASE WHEN stop_hits < 2 THEN 64 ELSE 0 END"""
+    * (the recipe gate: minWords 20, the stopword rule masked out). */
+  private def sqlGopherGate(): String =
     s"""SELECT doc_id FROM (SELECT doc_id,
               CASE WHEN n_words < 20 OR n_words > 100000 THEN 1 ELSE 0 END
               + CASE WHEN n_words = 0 OR CAST(sum_len AS DOUBLE) / n_words < 3.0
@@ -1464,9 +1459,8 @@ object SparkEntry {
               + CASE WHEN n_lines > 0
                   AND CAST(ellipsis_cnt AS DOUBLE) / n_lines >= 0.3 THEN 16 ELSE 0 END
               + CASE WHEN n_words = 0
-                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END$stop AS mask
+                  OR CAST(alpha_cnt AS DOUBLE) / n_words < 0.8 THEN 32 ELSE 0 END AS mask
             FROM m) WHERE (mask & 63) = 0"""
-  }
 
   /** DSIR's hashed-unigram bucket stats toward the lang='en' target
     * (q151): `tok` explodes the `ws` words of `docs`, `tb` hashes each word
@@ -4106,8 +4100,8 @@ object SparkEntry {
           Map("en" -> 4L, "de" -> 2L, "es" -> 2L, "fr" -> 1L, "zh" -> 1L))
       },
       Some(s"""WITH d0 AS (${sqlGopherSplit("doc_id, lang, text")}),
-          m AS (${sqlGopherMetrics("d0", stopHits = true)}),
-          gm AS (${sqlGopherGate(stopRule = true)}),
+          m AS (${sqlGopherMetrics("d0")}),
+          gm AS (${sqlGopherGate()}),
           kept AS (SELECT d0.* FROM d0 JOIN gm USING (doc_id)),
           ${sqlDsirSelectCtes("kept")},
           corpus AS (SELECT kept.* FROM kept JOIN sel USING (doc_id)),

@@ -206,9 +206,13 @@ private[graft] object ParquetFooter {
   * runs no Spark job, so the lookup and upsert paths use those rows
   * directly instead of moving them through an exchange. */
 private[graft] object DriverRows {
-  def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+  /** The frame's rows on the driver, when its optimized plan holds them. */
+  def relation(df: DataFrame): Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l)
+      case _ => None
+    }
+  def isLocal(df: DataFrame): Boolean = relation(df).isDefined
 }
 
 /** Shared generation-log machinery under [[GenLogStore]]: monotonic per-path
@@ -341,6 +345,12 @@ private[graft] object GenLog {
     * range, writer nonces. */
   final case class GenInfo(dir: org.apache.hadoop.fs.Path, gen: Long,
       lo: Long, hi: Long, nonces: Seq[String])
+
+  /** One pinned look at a store ([[GenLogStore.pinned]]): its checked
+    * generations and the stored data schema from one footer (None when no
+    * generation holds a data file). A read, a fold or a lookup lists the
+    * store and opens the footer once, through this. */
+  final case class Pinned(infos: Seq[GenInfo], schema: Option[StructType])
 
   /** ONE listing pass per generation dir (the metadata feeding the nonce
     * check, the effective-generation resolve order, and time travel —
@@ -613,10 +623,11 @@ private[graft] object GenLog {
 /** The generation-log protocol of both log stores, written once:
   * [[LogUpsertSource]] and [[BucketedLogUpsertSource]] differ only in the
   * layout under each `__gen=N` dir — how one generation's rows are written
-  * ([[writeGen]]) and which hive partition columns nest under `__gen`
-  * ([[nested]]). Everything else has one owner here: the generation scan,
-  * the append, `overwrite`, `readAt`, and the fold that [[compact]] and
-  * [[compactTail]] run over different pinned input sets.
+  * ([[writeGen]], and [[writeAppend]] for an upsert's batch) and which hive
+  * partition columns nest under `__gen` ([[nested]]). Everything else has
+  * one owner here: the generation scan, the append, `overwrite`, `readAt`,
+  * and the fold that [[compact]] and [[compactTail]] run over different
+  * pinned input sets.
   *
   * Every upsert APPENDS its batch under a new `__gen=N` hive partition and
   * the read resolves keys to their LATEST generation — the Delta/Iceberg
@@ -676,6 +687,9 @@ sealed abstract class GenLogStore extends WritableSource {
   def autoCompactEvery: Int
   /** Write `df` as one generation under `dir` in this store's layout. */
   protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit
+  /** Write an upsert's batch as the new generation `dir`; by default in
+    * the layout of [[writeGen]]. */
+  protected def writeAppend(df: DataFrame, dir: String): Unit = writeGen(df, SaveMode.Append, dir)
   /** The hive partition columns this layout nests under `__gen`. */
   protected def nested: Seq[StructField]
 
@@ -697,11 +711,11 @@ sealed abstract class GenLogStore extends WritableSource {
         "(ParquetSource / PartitionedParquetSource) for insert-style views.")
 
   /** The store's generations, after the single-writer check every read and
-    * fold runs first. */
-  protected def scanChecked(spark: SparkSession): Seq[GenLog.GenInfo] = {
+    * fold runs first, with the stored data schema of one footer. */
+  private[graft] def pinned(spark: SparkSession): GenLog.Pinned = {
     val infos = GenLog.scanStore(spark, path)
     GenLog.assertSingleWriter(path, infos)
-    infos
+    GenLog.Pinned(infos, footerSchema(spark, infos))
   }
 
   /** The stored data schema from ONE parquet footer — the first data file
@@ -726,18 +740,17 @@ sealed abstract class GenLogStore extends WritableSource {
   }
 
   /** The stored data schema without the layout columns; None when the
-    * store is empty/absent or the footer read races a fold. The
-    * point-lookup guard in ContractStore calls this per online lookup. */
+    * store is empty/absent or the listing races a fold. */
   private[graft] def storedSchema(spark: SparkSession): Option[StructType] =
-    scala.util.Try(footerSchema(spark, GenLog.scanStore(spark, path))).toOption.flatten
+    scala.util.Try(pinned(spark).schema).toOption.flatten
 
   /** The ONE generation scan: `dirs` under the store root, read with the
-    * footer's data schema plus the layout columns, so no read, lookup or
-    * fold launches a schema-inference job. With no footer to read it falls
-    * back to stock inference and its loud error. */
-  protected def scan(spark: SparkSession, infos: Seq[GenLog.GenInfo], dirs: Seq[Path]): DataFrame = {
+    * pinned footer's data schema plus the layout columns, so no read, lookup
+    * or fold launches a schema-inference job. With no footer to read it
+    * falls back to stock inference and its loud error. */
+  protected def scan(spark: SparkSession, pin: GenLog.Pinned, dirs: Seq[Path]): DataFrame = {
     val reader = spark.read.option("basePath", path)
-    footerSchema(spark, infos).fold(reader)(s => reader.schema(StructType(s ++ layout)))
+    pin.schema.fold(reader)(s => reader.schema(StructType(s ++ layout)))
       .parquet(dirs.map(_.toString): _*)
   }
 
@@ -746,9 +759,9 @@ sealed abstract class GenLogStore extends WritableSource {
     GenLog.resolveLatest(raw, GenLog.effectiveGens(infos), keys, layout.map(_.name))
 
   def read(spark: SparkSession): DataFrame = {
-    val infos = scanChecked(spark)
-    if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
-    resolve(scan(spark, infos, infos.map(_.dir)), infos)
+    val pin = pinned(spark)
+    if (pin.infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
+    resolve(scan(spark, pin, pin.infos.map(_.dir)), pin.infos)
   }
 
   /** TIME TRAVEL (the Delta `versionAsOf` idea on the generation log): the
@@ -762,8 +775,8 @@ sealed abstract class GenLogStore extends WritableSource {
     * VACUUM-retention trade. [[snapshots]] lists the points currently
     * readable. */
   def readAt(spark: SparkSession, gen: Long): DataFrame = {
-    val infos = scanChecked(spark)
-    resolve(scan(spark, infos, GenLog.dirsAt(path, infos, gen)), infos)
+    val pin = pinned(spark)
+    resolve(scan(spark, pin, GenLog.dirsAt(path, pin.infos, gen)), pin.infos)
   }
 
   /** Exact snapshot points currently retained, ascending. */
@@ -791,7 +804,7 @@ sealed abstract class GenLogStore extends WritableSource {
     val spark = df.sparkSession
     val gen = GenLog.claimGen(spark, path)
     val dir = s"$path/$G=$gen"
-    writeGen(df, SaveMode.Append, dir)
+    writeAppend(df, dir)
     // an EMPTY batch writes no data files. Detected by ONE cheap listing —
     // never a per-batch isEmpty job, whose executeTake(1) re-ran the whole
     // upstream pipeline. An empty upsert is then a NO-OP: the dir is
@@ -841,10 +854,10 @@ sealed abstract class GenLogStore extends WritableSource {
   private def fold(spark: SparkSession, op: String, minInputs: Int)(
       pick: Seq[GenLog.GenInfo] => Seq[GenLog.GenInfo]): Unit = StageAndSwap.locked(spark, path) {
     if (!exists(spark)) return
-    val infos = scanChecked(spark)
-    val inputs = pick(infos)
+    val pin = pinned(spark)
+    val inputs = pick(pin.infos)
     if (inputs.length < minInputs) return
-    val resolved = resolve(scan(spark, infos, inputs.map(_.dir)), infos)
+    val resolved = resolve(scan(spark, pin, inputs.map(_.dir)), pin.infos)
     val gen = GenLog.claimGen(spark, path)
     val dest = new Path(s"$path/$G=$gen")
     // staging lives OUTSIDE the store dir: a crash-leftover dir named
@@ -907,10 +920,23 @@ final case class LogUpsertSource(path: String, keys: Seq[String],
   * pruned after every fold. At 100 TB, size
   * `numBuckets` so a bucket's live rows ≈ a few GB; lookup cost is then
   * O(live-bucket + its log tail), flat in store size (spec-measured).
+  *
+  * Level 0: an upsert of driver rows ([[DriverRows]], the serving shape)
+  * planned below [[BucketedLogUpsertSource.TailBatchBytes]] is written by
+  * one task as one file under `__gen=N/__bucket=-1`, the TAIL bucket
+  * ([[BucketedLogUpsertSource.TailBucket]]), instead of one file per
+  * touched hash bucket. Every lookup reads the tail beside its probed
+  * buckets, so latest-wins per key still sees every row of the key. The
+  * folds read the tail like any other partition and write their output
+  * through [[writeGen]], which re-buckets those rows: a fold's generation
+  * holds no tail. Overwrites and larger or non-local batches keep the
+  * hash-bucket layout. A reader that predates the tail prunes it away and
+  * misses its rows, so a store with tail files needs this reader.
   * (VERDICT r14 #3; reference upsert semantics: sources/local.py:317-340.) */
 final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     numBuckets: Int = 8,
     autoCompactEvery: Int = GenLog.defaultAutoCompactEvery) extends GenLogStore {
+  import BucketedLogUpsertSource.{TailBatchBytes, TailBucket}
   require(numBuckets > 0, s"numBuckets must be > 0, got $numBuckets")
   require(autoCompactEvery >= 2,
     s"autoCompactEvery must be >= 2, got $autoCompactEvery")
@@ -925,11 +951,11 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
   // with the writer's parallelism instead of the layout. One narrow
   // shuffle on the tiny bucket id bounds it to ≤ numBuckets files per
   // generation at any scale; the append stays O(batch). A batch of driver
-  // rows ([[DriverRows]], the small-upsert shape) planned below one
-  // generation file's bytes skips that shuffle: one task writes it through
-  // `coalesce(1)`, and partitionBy still lands one file per touched bucket
-  // — one job instead of two. A larger driver batch keeps the exchange, so
-  // its bucketing, sort and write stay spread over up to numBuckets tasks.
+  // rows ([[DriverRows]]) planned below one generation file's bytes skips
+  // that shuffle: one task writes it through `coalesce(1)`, and
+  // partitionBy still lands one file per touched bucket — one job instead
+  // of two. A larger driver batch keeps the exchange, so its bucketing,
+  // sort and write stay spread over up to numBuckets tasks.
   protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit = {
     val bucketed = withBucket(df)
     val small = DriverRows.isLocal(df) &&
@@ -938,22 +964,39 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
       .write.mode(mode).partitionBy(B).parquet(dir)
   }
 
+  /** Level 0 (see the class doc): driver rows planned below
+    * [[BucketedLogUpsertSource.TailBatchBytes]] land as one file in the
+    * tail bucket. An empty batch of driver rows writes nothing, so the
+    * upsert's empty-generation rule sees no data and drops it. */
+  override protected def writeAppend(df: DataFrame, dir: String): Unit =
+    DriverRows.relation(df) match {
+      case Some(rows) if rows.stats.sizeInBytes < TailBatchBytes =>
+        if (rows.data.nonEmpty)
+          df.coalesce(1).write.mode(SaveMode.Append).parquet(s"$dir/$B=$TailBucket")
+      case _ => writeGen(df, SaveMode.Append, dir)
+    }
+
   /** The point-lookup path: latest rows for exactly the keys present in
-    * `entities` — scans ONLY those keys' buckets across the generations,
-    * then resolves latest-wins on the pruned sliver. The bucket ids come
-    * from the same `withBucket` expression the writes use: for a probe of
-    * driver rows ([[DriverRows]]) the optimizer evaluates it while
-    * optimizing and the ids are deduped on the driver, so no job runs;
-    * any other probe runs a small distinct-collect (≤ numBuckets ints). A
-    * key always hashes to the same bucket, so per-key resolution over the
-    * pruned frame equals resolution over the full store. Rows for OTHER
-    * keys sharing a probed bucket are filtered by the caller's key
-    * join/predicate (onlineFeaturesFor layers its IN-list pushdown on
-    * top). */
-  def readForEntities(spark: SparkSession, entities: DataFrame): DataFrame = {
-    val infos = scanChecked(spark)
-    if (infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
-    val raw = scan(spark, infos, infos.map(_.dir))
+    * `entities` — scans ONLY those keys' buckets and the tail bucket across
+    * the generations, then resolves latest-wins on the pruned sliver. The
+    * bucket ids come from the same `withBucket` expression the writes use:
+    * for a probe of driver rows ([[DriverRows]]) the optimizer evaluates it
+    * while optimizing and the ids are deduped on the driver, so no job
+    * runs; any other probe runs a small distinct-collect (≤ numBuckets
+    * ints). A key always hashes to the same bucket, and a tail row may hold
+    * any key, so per-key resolution over the pruned frame equals resolution
+    * over the full store. The resolve leaves one row per key. Rows for
+    * OTHER keys sharing a probed bucket are filtered by the caller's key
+    * join/predicate (onlineFeaturesFor layers its key predicate on top). */
+  def readForEntities(spark: SparkSession, entities: DataFrame): DataFrame =
+    readForEntities(spark, entities, pinned(spark))
+
+  /** [[readForEntities]] over an already pinned listing, so a caller that
+    * checked the stored schema lists the store and opens a footer once. */
+  private[graft] def readForEntities(spark: SparkSession, entities: DataFrame,
+      pin: GenLog.Pinned): DataFrame = {
+    if (pin.infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
+    val raw = scan(spark, pin, pin.infos.map(_.dir))
     // xxhash64 is TYPE-sensitive (hash(1: int) != hash(1L)): probe values
     // must hash with the STORE's own key types or the pruning silently
     // selects the wrong buckets — cast the probe frame to the stored
@@ -967,8 +1010,17 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     val bucketIds = withBucket(probes).select(B)
     val ids = (if (local) bucketIds else bucketIds.distinct()).collect()
       .map(_.getInt(0)).distinct.toIndexedSeq
-    resolve(raw.filter(if (ids.isEmpty) lit(false) else col(B).isin(ids: _*)), infos)
+    resolve(raw.filter(if (ids.isEmpty) lit(false) else col(B).isin(ids :+ TailBucket: _*)),
+      pin.infos)
   }
+}
+
+object BucketedLogUpsertSource {
+  /** The tail bucket id: level 0 of the store (see the class doc). */
+  val TailBucket: Int = -1
+  /** The planned bytes below which an upsert of driver rows goes to the
+    * tail bucket as one file. */
+  val TailBatchBytes: Long = 1L << 20
 }
 
 final case class CsvSource(

@@ -327,13 +327,13 @@ final class ContractStore {
     val write = """(?is)^\s*(INSERT\s+INTO|INSERT\s+OVERWRITE|UPSERT\s+INTO)\s+(\w+)\s*(\([\w\s,]*\))?\s*(SELECT.*|VALUES.*|WITH.*|TABLE.*)$""".r
     val ctas = """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+(.*)$""".r
     // optional `(col, …)` list → rename the SELECT's output positionally
-    def applyColumnList(viewName: String, colList: String, df: DataFrame): DataFrame =
+    def applyColumnList(op: String, viewName: String, colList: String, df: DataFrame): DataFrame =
       Option(colList).map(_.stripPrefix("(").stripSuffix(")")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
         case None | Some(Seq()) => df
         case Some(names) =>
           require(names.length == df.columns.length,
-            s"executeSqlWrite: INSERT INTO $viewName (${names.mkString(", ")}) " +
+            s"executeSqlWrite: $op $viewName (${names.mkString(", ")}) " +
               s"lists ${names.length} column(s) but the SELECT emits " +
               s"${df.columns.length} — the list maps positionally, arity must match")
           df.toDF(names: _*)
@@ -383,7 +383,7 @@ final class ContractStore {
           require(keys.nonEmpty, s"executeSqlWrite: UPSERT INTO '$viewName' " +
             "needs entity keys on the contract — declare entities or use INSERT")
         val target = writable(v)
-        val df = conformTo(v, applyColumnList(viewName, colList, executeSql(spark, select)))
+        val df = conformTo(v, applyColumnList(op, viewName, colList, executeSql(spark, select)))
         op match {
           case "INSERT INTO" => target.insert(df)
           case "INSERT OVERWRITE" => target.overwrite(df)
@@ -513,12 +513,13 @@ final class ContractStore {
     * feature row per requested entity, read from the view's materialized
     * source with the entity keys PUSHED INTO THE SCAN. Where the reference
     * round-trips a key-value store, the Spark-native shape bakes the
-    * (bounded) key list into the plan as an IN/OR predicate — `.explain`
-    * shows it under `PushedFilters`, so the columnar scan prunes row-groups
-    * and hive partitions server-side and reads only the matching slivers.
-    * A materialized source partitioned or bucketed by the entity key makes
-    * this a true point read at 100 TB; the predicate pushdown is
-    * plan-asserted in OnlineLookupSpec.
+    * (bounded) key set into the plan as a set-membership predicate
+    * ([[ContractStore.keyPredicate]]) — `.explain` shows long, string and
+    * timestamp keys under `PushedFilters`, so the columnar scan prunes
+    * row-groups and hive partitions server-side and reads only the
+    * matching slivers. A materialized source partitioned or bucketed by the
+    * entity key makes this a true point read at 100 TB; the predicate
+    * pushdown is plan-asserted in OnlineLookupSpec.
     *
     * `entities` must be BOUNDED (point lookups are, by contract — the
     * reference caps its redis pipeline batches the same way). Beyond
@@ -527,11 +528,20 @@ final class ContractStore {
     * row-group pruning. An entity frame whose rows are already on the
     * driver (`createDataFrame(rows)`, `Seq(...).toDF`) has its keys
     * deduped and, on a bucketed-log store, its bucket ids derived there,
-    * with no job: the lookup runs only the jobs of its answer. Rows carry
-    * the latest value per entity
+    * with no job. Rows carry the latest value per entity
     * (last-writer-wins on the event timestamp, exact ties broken
     * arbitrarily — online-store semantics); entities absent from the view
-    * surface as nulls, like a missing HMGET key. */
+    * surface as nulls, like a missing HMGET key.
+    *
+    * On a bucketed-log store ([[graft.sources.BucketedLogUpsertSource]])
+    * an entity frame of driver rows within `maxInlineKeys` keys, keyed by
+    * long, int, short, byte, string, date or timestamp columns, is answered
+    * on the driver: the latest rows of the probed keys are collected in one
+    * action HERE, when `onlineFeaturesFor` is called, and left-joined to
+    * the entity rows on the driver. The returned frame holds its rows, so
+    * its `collect` runs no job, and it does not see writes made after the
+    * call. A null key never matches. Every other lookup returns a lazy
+    * plan that reads the store when it runs. */
   def onlineFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
       maxInlineKeys: Int = 1024): DataFrame = {
     val byView = featuresByView(refs)
@@ -569,75 +579,161 @@ final class ContractStore {
         // plain log store would window over every emission per lookup
         // (VERDICT r14 #3). Applies only when the store's keys are the
         // view's entity names untouched by renames AND the store's physical
-        // key types equal the declared entity types (storedSchema: ONE
-        // parquet footer opened on the driver, no job): a store whose keys
-        // need a conformance cast could hold a
-        // value ("01") whose cast image (1) hashes to a DIFFERENT bucket
-        // than the probe's ("1") — pruning would silently miss it where the
-        // full-scan path's post-cast filter matches.
+        // key types equal the declared entity types (the pinned listing's
+        // footer schema: ONE listing and ONE footer opened on the driver,
+        // shared with the read, no job): a store whose keys need a
+        // conformance cast could hold a value ("01") whose cast image (1)
+        // hashes to a DIFFERENT bucket than the probe's ("1") — pruning
+        // would silently miss it where the full-scan path's post-cast
+        // filter matches. A listing that races a fold falls back too.
         val src = v.materializedSource.getOrElse(v.source)
-        val base = src match {
+        val lsm = src match {
           case b: graft.sources.BucketedLogUpsertSource
               if b.keys.sorted == keys.sorted &&
                 v.mappingKeys.forall { case (f, t2) =>
-                  !b.keys.contains(f) && !b.keys.contains(t2) } &&
-                b.storedSchema(spark)
-                  .exists(stored => keys.forall(k =>
-                    stored.find(_.name == k).map(_.dataType).contains(
-                      v.entities.find(_.name == k).get.dtype.sparkType))) =>
-            v.conform(b.readForEntities(spark, probe))
-          case _ => vs.baseWithDerived(spark)
+                  !b.keys.contains(f) && !b.keys.contains(t2) } =>
+            scala.util.Try(b.pinned(spark)).toOption
+              .filter(_.schema.exists(stored => keys.forall(k =>
+                stored.find(_.name == k).map(_.dataType).contains(
+                  v.entities.find(_.name == k).get.dtype.sparkType))))
+              .map(pin => v.conform(b.readForEntities(spark, probe, pin)))
+          case _ => None
         }
+        val base = lsm.getOrElse(vs.baseWithDerived(spark))
+        val baseTypes = keys.map(k => base.schema.find(_.name == k).map(_.dataType))
         val filtered =
           if (overflow)
             base.join(broadcast(probe), keys, "left_semi")
           else if (keyRows.isEmpty) // empty entity frame: nothing to read
             base.filter(lit(false))
-          else if (keys.lengthCompare(1) == 0)
-            base.filter(ContractStore.keyIn(keys.head, keyFrame.schema.head.dataType,
-              base.schema.find(_.name == keys.head).map(_.dataType), keyRows.map(_.get(0))))
           else
-            base.filter(keyRows.map { r =>
-              keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.get(i)) }
-                .reduce(_ && _)
-            }.reduce(_ || _))
-        val latest = v.eventTimestamp match {
-          case Some(ts) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keys.map(col): _*).orderBy(col(ts.name).desc)
-            filtered.withColumn("__graft_rn", row_number().over(w))
-              .filter(col("__graft_rn") === 1).drop("__graft_rn")
-          case None => filtered
+            base.filter(ContractStore.keyPredicate(keys, keyFrame.schema.map(_.dataType),
+              baseTypes, keyRows.toSeq))
+        val answer = (keys ++ wanted).map(col)
+        if (lsm.isDefined && !overflow && graft.sources.DriverRows.isLocal(acc) &&
+            ContractStore.driverJoinable(acc, keys, baseTypes))
+          // the resolve already leaves one row per key: no event-ts window
+          ContractStore.leftJoinOnDriver(spark, acc, filtered.select(answer: _*), keys)
+        else {
+          val latest = v.eventTimestamp match {
+            case Some(ts) =>
+              val w = org.apache.spark.sql.expressions.Window
+                .partitionBy(keys.map(col): _*).orderBy(col(ts.name).desc)
+              filtered.withColumn("__graft_rn", row_number().over(w))
+                .filter(col("__graft_rn") === 1).drop("__graft_rn")
+            case None => filtered
+          }
+          acc.join(latest.select(answer: _*), keys, "left")
         }
-        acc.join(latest.select((keys ++ wanted).map(col): _*), keys, "left")
       }
     }
   }
 }
 
 object ContractStore {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.catalyst.CatalystTypeConverters
+  import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, InSet, Literal}
   import org.apache.spark.sql.types._
+  import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
 
-  /** The single-key lookup predicate. When the probe's key type equals the
-    * view's (the conformed `base` column) and is a long, string or
-    * timestamp, an `InSet` of the collected values: its generated code
-    * references the value set instead of inlining it, so a new key set
-    * reuses the compiled classes (an `isin` of 10 or fewer values becomes
-    * an `In` that inlines every literal and compiles afresh per key set).
-    * It still pushes to the scan as `In(k, …)`. Every other case keeps
-    * `isin`: floating-point, binary and complex keys, whose driver-side
-    * equality can differ from Spark's; int-like and date keys, whose
-    * `InSet` code inlines the values as a switch; and probes whose type
-    * needs a coercion. */
-  private[store] def keyIn(key: String, probeType: DataType, baseType: Option[DataType],
-      values: Seq[Any]): Column = probeType match {
-    case LongType | StringType | TimestampType | TimestampNTZType
-        if baseType.contains(probeType) =>
-      org.apache.spark.sql.GraftColumnBridge.toColumn(
-        org.apache.spark.sql.catalyst.expressions.InSet(
-          org.apache.spark.sql.GraftColumnBridge.toExpr(col(key)),
-          values.map(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
-    case _ => col(key).isin(values: _*)
+  /** Key types whose values compare equal as Catalyst set members and, after
+    * [[driverKey]], as driver objects exactly when Spark's `=` holds. */
+  private def exactEquality(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType | StringType | DateType |
+        TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+  private def integral(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  /** A key value as the driver compares it: integers widened to long,
+    * as Spark widens them to compare. */
+  private def driverKey(v: Any): Any = v match {
+    case b: java.lang.Byte => b.longValue
+    case s: java.lang.Short => s.longValue
+    case i: java.lang.Integer => i.longValue
+    case other => other
+  }
+
+  /** Can [[leftJoinOnDriver]] stand in for Spark's left join of `acc` on
+    * `keys`: every key is one of `acc`'s columns by its exact name, and
+    * its type and the answer's compare on the driver as Spark compares
+    * them (equal types, or two integer types). */
+  private[store] def driverJoinable(acc: DataFrame, keys: Seq[String],
+      baseTypes: Seq[Option[DataType]]): Boolean =
+    keys.zip(baseTypes).forall {
+      case (k, Some(t)) =>
+        acc.schema.find(_.name == k).exists(f => exactEquality(t) &&
+          (f.dataType == t || (integral(f.dataType) && integral(t))))
+      case _ => false
+    }
+
+  /** `acc.join(answer, keys, "left")` computed on the driver: `acc` holds
+    * its rows on the driver, and `answer` (keys, then features, at most one
+    * row per key) is collected in one action. The result has the join's
+    * columns — keys, `acc`'s other columns, then the nullable features — and
+    * holds its rows, so collecting it runs no job. */
+  private[store] def leftJoinOnDriver(spark: SparkSession, acc: DataFrame, answer: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val accIdx = keys.map(acc.schema.fieldIndex)
+    val rest = acc.schema.fields.indices.filterNot(accIdx.contains)
+    val features = answer.schema.fields.drop(keys.length)
+    val byKey: Map[Seq[Any], Row] = answer.collect().map(r =>
+      keys.indices.map(i => driverKey(r.get(i))) -> r).toMap
+    val none = Seq.fill(features.length)(null)
+    val rows = acc.collect().map { r: Row =>
+      val key = accIdx.map(i => r.get(i))
+      val hit = if (key.contains(null)) None else byKey.get(key.map(driverKey))
+      Row.fromSeq(key ++ rest.map(r.get) ++
+        hit.fold[Seq[Any]](none)(_.toSeq.drop(keys.length)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      accIdx.map(acc.schema(_)) ++ rest.map(acc.schema(_)) ++ features.map(_.copy(nullable = true))))
+  }
+
+  /** The lookup's key predicate: the rows of `base` whose `keys` equal one
+    * of the probe's key rows. Its generated code must not depend on the
+    * key set, so a new key set reuses the compiled classes:
+    *   - a single long, string or timestamp key: an `InSet` of the values,
+    *     whose code references the value set (an `isin` of 10 or fewer
+    *     values becomes an `In` that inlines every literal). It pushes to
+    *     the scan as `In(k, …)`.
+    *   - int, short, byte and date keys, and composite keys of the types
+    *     above: one `InSet` over the key struct, whose code also references
+    *     its set (an `InSet` of an int-like or date column inlines its
+    *     values as a switch). A composite's long, string and timestamp
+    *     columns add their own `InSet`, which pushes to the scan. A probe
+    *     row with a null key matches nothing, as under `=`.
+    * Every other case keeps `isin` (one key) or an OR of per-row
+    * conjunctions: floating-point, binary and complex keys, whose
+    * driver-side equality can differ from Spark's, and probes whose type
+    * differs from the base's, which need the comparison's coercion. */
+  private[store] def keyPredicate(keys: Seq[String], probeTypes: Seq[DataType],
+      baseTypes: Seq[Option[DataType]], rows: Seq[Row]): Column = {
+    def pushable(t: DataType) = t match {
+      case LongType | StringType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    // always a HashSet: the generated code casts the set to its runtime
+    // class, and a default immutable Set of four or fewer values is a
+    // Set1..Set4, so a new key-set size would compile afresh
+    def inSet(e: Expression, values: Seq[Any]) = toColumn(InSet(e,
+      scala.collection.immutable.HashSet.from(values.map(CatalystTypeConverters.convertToCatalyst))))
+    val same = probeTypes.zip(baseTypes).forall { case (p, b) => b.contains(p) && exactEquality(p) }
+    val live = rows.filterNot(_.anyNull)
+    if (same && keys.length == 1 && pushable(probeTypes.head))
+      inSet(toExpr(col(keys.head)), live.map(_.get(0)))
+    else if (same) {
+      val struct = CreateNamedStruct(keys.flatMap(k => Seq(Literal(k), toExpr(col(k)))))
+      keys.zip(probeTypes).zipWithIndex.collect { case ((k, t), i) if pushable(t) =>
+        inSet(toExpr(col(k)), live.map(_.get(i)))
+      }.foldLeft(inSet(struct, live))(_ && _)
+    } else if (keys.length == 1) col(keys.head).isin(rows.map(_.get(0)): _*)
+    else rows.map(r => keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.get(i)) }
+      .reduce(_ && _)).reduce(_ || _)
   }
 }
 

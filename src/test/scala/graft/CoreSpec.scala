@@ -2380,6 +2380,17 @@ class SqlWriteSpec extends AnyFunSuite {
     assert(e.getMessage.contains("positionally"))
   }
 
+  test("a column-list arity error names the verb that ran") {
+    val store = freshStore(java.nio.file.Files.createTempDirectory("graft_sqlw_spec").toString)
+    for (verb <- Seq("INSERT INTO", "INSERT OVERWRITE", "UPSERT INTO")) {
+      val e = intercept[IllegalArgumentException] {
+        store.executeSqlWrite(spark, s"$verb tgt (id) SELECT id, name FROM src")
+      }
+      assert(e.getMessage.contains(s"executeSqlWrite: $verb tgt (id) lists 1 column(s)"),
+        e.getMessage)
+    }
+  }
+
   test("omitted entity key with no default and omitted event timestamp are rejected") {
     val work = java.nio.file.Files.createTempDirectory("graft_sqlw_spec").toString
     val store = freshStore(work)

@@ -2798,9 +2798,11 @@ class OnlineLookupSpec extends AnyFunSuite {
     val rows = (0L until 300L).map(i =>
       (i, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), i * 1.0))
     val newer = Seq((1L, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), 111.0))
-    // same data in an LSM store and a plain parquet store
+    // same data in an LSM store and a plain parquet store; the LSM store's
+    // bulk rows are written non-locally (hash buckets), the newer row is
+    // driver rows (the tail bucket)
     val lsm = graft.sources.BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 16)
-    lsm.upsert(rows.toDF("id", "ts", "score"), Seq("id"))
+    lsm.upsert(rows.toDF("id", "ts", "score").repartition(2), Seq("id"))
     lsm.upsert(newer.toDF("id", "ts", "score"), Seq("id"))
     val pq = graft.sources.ParquetSource(s"$dir/pq")
     pq.overwrite(rows.toDF("id", "ts", "score"))
@@ -2818,9 +2820,13 @@ class OnlineLookupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> Option(r.get(r.fieldIndex("score")))).toMap
     assert(snap(viaLsm) == snap(viaPq), "LSM lookup diverged from the plain store")
     assert(snap(viaLsm)(1L).contains(111.0) && snap(viaLsm)(999L).isEmpty)
-    // physics: the LSM plan scanned a strict subset of the store's partitions
-    val scans = PlanScans.fileScans(viaLsm)
-    assert(scans.nonEmpty, "no file scan in the lookup plan")
+    // driver rows are answered when the lookup is called: no file scan is
+    // left in the returned frame
+    assert(PlanScans.fileScans(viaLsm).isEmpty && graft.sources.DriverRows.isLocal(viaLsm),
+      s"the lookup returned a plan that still reads the store:\n${viaLsm.queryExecution.executedPlan}")
+    // physics: the store read scans a strict subset of the store's partitions
+    val scans = PlanScans.fileScans(lsm.readForEntities(spark, probe))
+    assert(scans.nonEmpty, "no file scan in the store read")
     val lookedAt = scans.map(_.selectedPartitions.partitionCount).min
     val total = PlanScans.fileScans(lsm.read(spark))
       .head.selectedPartitions.partitionCount
@@ -2884,7 +2890,7 @@ class OnlineLookupSpec extends AnyFunSuite {
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
 
-  test("a 5-key lookup over driver rows runs 3 jobs, and a new 5-key set " +
+  test("a 5-key lookup over driver rows runs 2 jobs, and a new 5-key set " +
       "compiles no class") {
     val (store, _) = servingStore()
     val refs = Seq("serving:price", "serving:status")
@@ -2892,7 +2898,7 @@ class OnlineLookupSpec extends AnyFunSuite {
     store.onlineFeaturesFor(spark, local(Seq(1L, 2L, 3L, 4L, 5L)), refs).collect()
     val (rows, jobs) = JobCount(spark)(
       store.onlineFeaturesFor(spark, local(Seq(6L, 12L, 18L, 24L, 199L)), refs).collect())
-    assert(jobs == 3, s"a 5-key lookup ran $jobs jobs")
+    assert(jobs == 2, s"a 5-key lookup ran $jobs jobs")
     assert(rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap ==
       Map(6L -> 62.0, 12L -> 122.0, 18L -> 182.0, 24L -> 242.0, 199L -> 1990.0))
     // the key filter's generated code does not depend on the key set
@@ -3371,7 +3377,9 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
       "pruning) and return exactly the full-read rows for those keys") {
     val dir = java.nio.file.Files.createTempDirectory("graft_blog3").toString + "/s"
     val src = BucketedLogUpsertSource(dir, Seq("id"), numBuckets = 16)
-    src.upsert((0L until 400L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    // a non-local write lands in the hash buckets; the driver rows of the
+    // second write land in the tail bucket, which every lookup also reads
+    src.upsert((0L until 400L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2), Seq("id"))
     src.upsert(Seq((7L, "u1")).toDF("id", "v"), Seq("id"))
     val probe = Seq(7L, 31L).toDF("id")
     val pruned = src.readForEntities(spark, probe)
@@ -3388,7 +3396,8 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
     val total = PlanScans.fileScans(src.read(spark))
       .head.selectedPartitions.partitionCount
     assert(sel < total, s"lookup scanned $sel of $total partitions — no pruning")
-    assert(sel <= 2 * 2, s"two probed keys must touch ≤2 buckets × gens, got $sel")
+    assert(sel <= 2 + 1, s"two probed keys must touch ≤2 buckets of the bucketed " +
+      s"generation plus the tail of the other, got $sel")
   }
 
   test("auto-compaction folds to ONE generation, preserves the bucket layout, " +
@@ -3477,15 +3486,21 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_blog9").toString + "/s"
     val src = BucketedLogUpsertSource(dir, Seq("id"), numBuckets = 4, autoCompactEvery = 100)
     src.upsert((0L until 100L).map(i => (i, i * 2)).toDF("id", "v"), Seq("id"))
-    val gen0 = s"$dir/__gen=0"
-    // raw generation contents: exactly one copy of the batch, properly bucketed
-    assert(spark.read.parquet(gen0).count() == 100,
-      "spurious duplicate rows in the generation - the empty guard misfired")
-    val bucketDirs = java.nio.file.Files.list(java.nio.file.Paths.get(gen0)).toArray
-      .map(_.toString.split("/").last).filter(_.startsWith("__bucket="))
-    assert(bucketDirs.length == 4)
-    // and every row sits in the bucket its key hashes to (lookups rely on it)
-    val misplaced = spark.read.option("basePath", gen0).parquet(gen0)
+    // a non-local batch: hash buckets
+    src.upsert(spark.range(100, 200).repartition(3).select(col("id"), (col("id") * 2L).as("v")),
+      Seq("id"))
+    def bucketDirs(gen: String) = java.nio.file.Files.list(java.nio.file.Paths.get(gen)).toArray
+      .map(_.toString.split("/").last).filter(_.startsWith("__bucket=")).toSeq
+    // raw generation contents: exactly one copy of each batch; the driver
+    // rows in the tail bucket only
+    for (gen <- Seq(s"$dir/__gen=0", s"$dir/__gen=1"))
+      assert(spark.read.parquet(gen).count() == 100,
+        s"spurious duplicate rows in $gen - the empty guard misfired")
+    assert(bucketDirs(s"$dir/__gen=0") == Seq("__bucket=-1"))
+    val gen1 = s"$dir/__gen=1"
+    assert(bucketDirs(gen1).length == 4)
+    // and every bucketed row sits in the bucket its key hashes to (lookups rely on it)
+    val misplaced = spark.read.option("basePath", gen1).parquet(gen1)
       .withColumn("__expect", pmod(xxhash64(col("id")), lit(4L)).cast("int"))
       .filter(col("__bucket") =!= col("__expect")).count()
     assert(misplaced == 0, s"$misplaced rows in the wrong bucket dir")
@@ -3548,8 +3563,8 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
     out.toSeq
   }
 
-  test("a batch of driver rows upserts in ONE job with one file per touched " +
-      "bucket; other batches keep ≤ numBuckets files per generation; folds keep " +
+  test("a small batch of driver rows upserts in ONE job as one tail-bucket file; " +
+      "other batches keep ≤ numBuckets files per generation; folds keep " +
       "the bucket layout") {
     val dir = java.nio.file.Files.createTempDirectory("graft_blog10").toString + "/s"
     val src = BucketedLogUpsertSource(dir, Seq("id"), numBuckets = 8, autoCompactEvery = 4)
@@ -3558,19 +3573,13 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
       .select(col("id"), (col("id") * 2L).as("v")), Seq("id"))
     val gen0 = partFiles(s"$dir/__gen=0")
     assert(gen0.nonEmpty && gen0.length <= 8, s"gen 0 wrote ${gen0.length} files")
-    // driver rows: one job, one file per touched bucket
+    // driver rows: one job, one file in the tail bucket
     val batch = Seq((3L, -3L), (5L, -5L), (11L, -11L), (1000L, 7L))
-    val touched = batch.map(_._1).toDF("id")
-      .select(pmod(xxhash64(col("id")), lit(8L)).cast("int")).distinct().count()
     val (_, jobs) = JobCount(spark)(src.upsert(batch.toDF("id", "v"), Seq("id")))
     assert(jobs == 1, s"a local-batch upsert ran $jobs jobs")
     val gen1 = partFiles(s"$dir/__gen=1")
-    assert(gen1.length == touched, s"expected $touched files (one per bucket), got $gen1")
-    assert(gen1.map(_.split("/").head).distinct.length == gen1.length)
-    // every row sits in the bucket its key hashes to
-    val misplaced = spark.read.option("basePath", s"$dir/__gen=1").parquet(s"$dir/__gen=1")
-      .filter(col("__bucket") =!= pmod(xxhash64(col("id")), lit(8L)).cast("int")).count()
-    assert(misplaced == 0)
+    assert(gen1.length == 1 && gen1.head.startsWith("__bucket=-1/"),
+      s"expected one file in the tail bucket, got $gen1")
     // two more appends reach the fold threshold: the fold rewrites through
     // the same layout
     src.upsert(Seq((3L, 33L)).toDF("id", "v"), Seq("id"))
@@ -3578,7 +3587,8 @@ class BucketedLogUpsertSourceSpec extends AnyFunSuite {
     val gens = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray
       .map(_.toString).filter(_.contains("__gen="))
     assert(gens.length < 4, s"no fold ran: ${gens.toSeq}")
-    assert(partFiles(gens.max).forall(_.startsWith("__bucket=")), "the fold lost the bucket layout")
+    assert(partFiles(gens.max).forall(f => f.startsWith("__bucket=") &&
+      !f.startsWith("__bucket=-1/")), "the fold lost the bucket layout")
     val out = src.read(spark).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.size == 401 && out(3L) == 33L && out(4L) == 44L && out(5L) == -5L &&
       out(1000L) == 7L && out(399L) == 798L)
