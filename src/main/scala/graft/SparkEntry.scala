@@ -5953,11 +5953,11 @@ object SparkEntry {
         FROM documents""")),
 
     // --- ONLINE lookup over the LSM store (q139 discipline, VERDICT r14
-    // #3): the same latest-row point lookup, but the view's source is a
-    // BucketedLogUpsertSource so onlineFeaturesFor routes through the
-    // bucket-PRUNED readForEntities path (partition pruning spec-asserted
-    // in OnlineLookupSpec; this gates the VALUES against DuckDB). ts
-    // derives from the unique o_orderkey so "latest" is deterministic ---
+    // #3): the view's source is a BucketedLogUpsertSource, so the lookup
+    // takes its bucket-PRUNED latestFor path; the `range` entities are not
+    // driver rows, so the plan stays lazy with one window, the generation
+    // resolve (pruning spec-asserted in OnlineLookupSpec; this gates VALUES
+    // against DuckDB). ts = the unique o_orderkey: "latest" is deterministic ---
     Q("q247_lsm_online_lookup",
       (s, dir) => {
         val work = java.nio.file.Files.createTempDirectory("graft_lsmol").toString

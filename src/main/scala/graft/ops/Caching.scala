@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, when}
 import graft.sources.StageAndSwap
+import scala.jdk.CollectionConverters._
 
 /** Caching / materialization / iteration plumbing (SURVEY §2.13).
   */
@@ -77,13 +78,6 @@ object Caching {
     * Each chunk is at most `chunkSize` rows. */
   def chunked(df: DataFrame, chunkSize: Int): Iterator[Seq[Row]] =
     df.toLocalIterator().asScala.grouped(chunkSize)
-
-  private implicit class JIter[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
-    }
-  }
 
   /** Wall-clock metric logging around an action (TimeMetricLoggerJob,
     * retrieval_job.py:2843-2862). */

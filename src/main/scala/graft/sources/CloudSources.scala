@@ -93,12 +93,11 @@ final case class CloudDelegateSource(
   }
 }
 
-/** Named S3 parquet wrapper (the reference's most-used cloud source shape,
-  * AwsS3DataSource, sources/s3.py:118-200) — a [[CloudDelegateSource]]
-  * with the config/key surfaced as typed fields. */
-final case class S3ParquetSource(config: AwsS3Config, key: String) extends WritableSource {
-  val path: String = config.url(key)
-  private val inner = CloudDelegateSource(config.configure, ParquetSource(path))
+/** A typed wrapper that forwards every read and write to the source it
+  * wraps, `inner`, so each wrapper states only its fields and its inner
+  * source. */
+sealed trait Forwarding extends WritableSource {
+  protected def inner: WritableSource
   def read(spark: SparkSession): DataFrame = inner.read(spark)
   override def exists(spark: SparkSession): Boolean = inner.exists(spark)
   def insert(df: DataFrame): Unit = inner.insert(df)
@@ -106,18 +105,21 @@ final case class S3ParquetSource(config: AwsS3Config, key: String) extends Writa
   def upsert(df: DataFrame, keys: Seq[String]): Unit = inner.upsert(df, keys)
 }
 
+/** Named S3 parquet wrapper (the reference's most-used cloud source shape,
+  * AwsS3DataSource, sources/s3.py:118-200) — a [[CloudDelegateSource]]
+  * with the config/key surfaced as typed fields. */
+final case class S3ParquetSource(config: AwsS3Config, key: String) extends Forwarding {
+  val path: String = config.url(key)
+  protected val inner: WritableSource = CloudDelegateSource(config.configure, ParquetSource(path))
+}
+
 /** Named Azure parquet wrapper (reference: AzureBlobParquetDataSource,
   * sources/azure_blob_storage.py) — the [[S3ParquetSource]] symmetry;
   * typed fields make it registry-serializable. */
 final case class AzureBlobParquetSource(config: AzureBlobConfig, blobPath: String)
-    extends WritableSource {
+    extends Forwarding {
   val path: String = config.url(blobPath)
-  private val inner = CloudDelegateSource(config.configure, ParquetSource(path))
-  def read(spark: SparkSession): DataFrame = inner.read(spark)
-  override def exists(spark: SparkSession): Boolean = inner.exists(spark)
-  def insert(df: DataFrame): Unit = inner.insert(df)
-  def overwrite(df: DataFrame): Unit = inner.overwrite(df)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit = inner.upsert(df, keys)
+  protected val inner: WritableSource = CloudDelegateSource(config.configure, ParquetSource(path))
 }
 
 /** Unity Catalog table source (reference: UnityCatalog → schema → table
@@ -141,15 +143,10 @@ final case class UnityCatalogSchema(catalog: String, schema: String) {
   def table(tableName: String): UCTableSource = UCTableSource(catalog, schema, tableName)
 }
 final case class UCTableSource(catalog: String, schema: String, table: String)
-    extends WritableSource {
+    extends Forwarding {
   /** Backtick-quoted so hyphenated catalog/schema names survive. */
   val fullName: String = s"`$catalog`.`$schema`.`$table`"
-  private val inner = IcebergSource(fullName)
-  def read(spark: SparkSession): DataFrame = inner.read(spark)
-  override def exists(spark: SparkSession): Boolean = inner.exists(spark)
-  def insert(df: DataFrame): Unit = inner.insert(df)
-  def overwrite(df: DataFrame): Unit = inner.overwrite(df)
-  def upsert(df: DataFrame, keys: Seq[String]): Unit = inner.upsert(df, keys)
+  protected val inner: IcebergSource = IcebergSource(fullName)
   def mergeSql(sourceView: String, keys: Seq[String]): String =
     inner.mergeSql(sourceView, keys)
 }

@@ -109,6 +109,23 @@ final case class PartitionedParquetSource(path: String, partitionKeys: Seq[Strin
   }
 }
 
+/** The bucket layout both bucketed stores write, an on-disk format that a
+  * reader prunes by: `__bucket = pmod(xxhash64(bucketKeys), numBuckets)`. */
+sealed trait HashBuckets {
+  def numBuckets: Int
+  protected def bucketKeys: Seq[String]
+  require(numBuckets > 0, s"numBuckets must be > 0, got $numBuckets")
+  protected final val B = "__bucket"
+  protected def withBucket(df: DataFrame): DataFrame =
+    df.withColumn(B, pmod(xxhash64(bucketKeys.map(col): _*), lit(numBuckets.toLong)).cast("int"))
+  // hash write-distribution on the bucket (optimization r15, guide §6 /
+  // Iceberg write.distribution-mode=hash): an N-partition input written
+  // straight through partitionBy emits up to N files PER BUCKET; one narrow
+  // shuffle on the tiny bucket id bounds every write to ≤ numBuckets files
+  protected def distributed(df: DataFrame): DataFrame =
+    withBucket(df).repartition(col(B))
+}
+
 /** Hash-bucketed parquet dir: hive-partitioned on `__bucket =
   * pmod(xxhash64(bucketKeys), numBuckets)` so an upsert reads and rewrites
   * ONLY the buckets its keys land in — O(touched buckets), not O(store).
@@ -133,19 +150,9 @@ final case class PartitionedParquetSource(path: String, partitionKeys: Seq[Strin
   * what was written. bucketKeys must be a subset of every upsert's keys
   * (same key ⇒ same bucket, or the anti-join would miss the old copy). */
 final case class BucketedParquetSource(path: String, bucketKeys: Seq[String],
-    numBuckets: Int = 8) extends WritableSource {
-  require(numBuckets > 0, s"numBuckets must be > 0, got $numBuckets")
-  private val B = "__bucket"
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn(B, pmod(xxhash64(bucketKeys.map(col): _*), lit(numBuckets.toLong)).cast("int"))
+    numBuckets: Int = 8) extends WritableSource with HashBuckets {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path).drop(B)
   override def exists(spark: SparkSession): Boolean = PathProbe.exists(spark, path)
-  // hash write-distribution on the bucket (optimization r15, guide §6 /
-  // Iceberg write.distribution-mode=hash): an N-partition input written
-  // straight through partitionBy emits up to N files PER BUCKET; one narrow
-  // shuffle on the tiny bucket id bounds every write to ≤ numBuckets files
-  private def distributed(df: DataFrame): DataFrame =
-    withBucket(df).repartition(col(B))
   def insert(df: DataFrame): Unit =
     distributed(df).write.mode(SaveMode.Append).partitionBy(B).parquet(path)
   /** A staged replace ([[StageAndSwap.replace]]). partitionBy writes NO
@@ -624,10 +631,11 @@ private[graft] object GenLog {
   * [[LogUpsertSource]] and [[BucketedLogUpsertSource]] differ only in the
   * layout under each `__gen=N` dir — how one generation's rows are written
   * ([[writeGen]], and [[writeAppend]] for an upsert's batch) and which hive
-  * partition columns nest under `__gen` ([[nested]]). Everything else has
-  * one owner here: the generation scan, the append, `overwrite`, `readAt`,
-  * and the fold that [[compact]] and [[compactTail]] run over different
-  * pinned input sets.
+  * partition columns nest under `__gen` ([[nested]]). Every generation goes
+  * through [[writeGen]] whatever its size, except the bucketed layout's
+  * level 0, its one small-batch rule. Everything else has one owner here:
+  * the generation scan, the append, `overwrite`, `readAt`, and the fold
+  * that [[compact]] and [[compactTail]] run over different pinned input sets.
   *
   * Every upsert APPENDS its batch under a new `__gen=N` hive partition and
   * the read resolves keys to their LATEST generation — the Delta/Iceberg
@@ -685,6 +693,10 @@ sealed abstract class GenLogStore extends WritableSource {
   def path: String
   def keys: Seq[String]
   def autoCompactEvery: Int
+  require(autoCompactEvery >= 2,
+    s"autoCompactEvery must be >= 2 (1 would fold the whole store on every " +
+      s"append, re-creating the O(store)-per-batch cost this store removes), " +
+      s"got $autoCompactEvery")
   /** Write `df` as one generation under `dir` in this store's layout. */
   protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit
   /** Write an upsert's batch as the new generation `dir`; by default in
@@ -712,7 +724,7 @@ sealed abstract class GenLogStore extends WritableSource {
 
   /** The store's generations, after the single-writer check every read and
     * fold runs first, with the stored data schema of one footer. */
-  private[graft] def pinned(spark: SparkSession): GenLog.Pinned = {
+  private[sources] def pinned(spark: SparkSession): GenLog.Pinned = {
     val infos = GenLog.scanStore(spark, path)
     GenLog.assertSingleWriter(path, infos)
     GenLog.Pinned(infos, footerSchema(spark, infos))
@@ -738,11 +750,6 @@ sealed abstract class GenLogStore extends WritableSource {
     infos.iterator.flatMap(i => firstFile(i.dir)).nextOption()
       .map(f => ParquetFooter.read(spark, f)._2)
   }
-
-  /** The stored data schema without the layout columns; None when the
-    * store is empty/absent or the listing races a fold. */
-  private[graft] def storedSchema(spark: SparkSession): Option[StructType] =
-    scala.util.Try(pinned(spark).schema).toOption.flatten
 
   /** The ONE generation scan: `dirs` under the store root, read with the
     * pinned footer's data schema plus the layout columns, so no read, lookup
@@ -895,10 +902,6 @@ final case class LogUpsertSource(path: String, keys: Seq[String],
     // exchange per micro-batch AND per fold — measured at the ×10 curve
     // as +1-5 s on every gate before the opt-out.
     boundFiles: Boolean = true) extends GenLogStore {
-  require(autoCompactEvery >= 2,
-    s"autoCompactEvery must be >= 2 (1 would fold the whole store on every " +
-      s"append, re-creating the O(store)-per-batch cost this store removes), " +
-      s"got $autoCompactEvery")
   protected def nested: Seq[StructField] = Nil
   protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit =
     (if (boundFiles) GenLog.boundGenFiles(df) else df).write.mode(mode).parquet(dir)
@@ -929,40 +932,22 @@ final case class LogUpsertSource(path: String, keys: Seq[String],
   * buckets, so latest-wins per key still sees every row of the key. The
   * folds read the tail like any other partition and write their output
   * through [[writeGen]], which re-buckets those rows: a fold's generation
-  * holds no tail. Overwrites and larger or non-local batches keep the
-  * hash-bucket layout. A reader that predates the tail prunes it away and
-  * misses its rows, so a store with tail files needs this reader.
+  * holds no tail. Level 0 is the only small-batch rule: overwrites, folds
+  * and larger or non-local batches are hash-distributed ([[writeGen]]). A
+  * reader that predates the tail prunes it away and misses its rows, so a
+  * store with tail files needs this reader.
   * (VERDICT r14 #3; reference upsert semantics: sources/local.py:317-340.) */
 final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     numBuckets: Int = 8,
-    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery) extends GenLogStore {
+    autoCompactEvery: Int = GenLog.defaultAutoCompactEvery)
+    extends GenLogStore with HashBuckets {
   import BucketedLogUpsertSource.{TailBatchBytes, TailBucket}
-  require(numBuckets > 0, s"numBuckets must be > 0, got $numBuckets")
-  require(autoCompactEvery >= 2,
-    s"autoCompactEvery must be >= 2, got $autoCompactEvery")
-  private val B = "__bucket"
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn(B, pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int"))
+  protected def bucketKeys: Seq[String] = keys
   protected def nested: Seq[StructField] = Seq(StructField(B, IntegerType))
-  // hash write-distribution on the bucket (optimization r15; the Iceberg
-  // write.distribution-mode=hash default, guide §6): an N-partition batch
-  // written straight through partitionBy emits up to N files PER BUCKET
-  // per generation — file count (and every later fold/read/listing) grows
-  // with the writer's parallelism instead of the layout. One narrow
-  // shuffle on the tiny bucket id bounds it to ≤ numBuckets files per
-  // generation at any scale; the append stays O(batch). A batch of driver
-  // rows ([[DriverRows]]) planned below one generation file's bytes skips
-  // that shuffle: one task writes it through `coalesce(1)`, and
-  // partitionBy still lands one file per touched bucket — one job instead
-  // of two. A larger driver batch keeps the exchange, so its bucketing,
-  // sort and write stay spread over up to numBuckets tasks.
-  protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit = {
-    val bucketed = withBucket(df)
-    val small = DriverRows.isLocal(df) &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes < GenLog.TargetGenFileBytes
-    (if (small) bucketed.coalesce(1) else bucketed.repartition(col(B)))
-      .write.mode(mode).partitionBy(B).parquet(dir)
-  }
+  /** Hash-distributed on the bucket (`distributed`): a generation's file
+    * count is bounded by the layout, not by the writer's parallelism. */
+  protected def writeGen(df: DataFrame, mode: SaveMode, dir: String): Unit =
+    distributed(df).write.mode(mode).partitionBy(B).parquet(dir)
 
   /** Level 0 (see the class doc): driver rows planned below
     * [[BucketedLogUpsertSource.TailBatchBytes]] land as one file in the
@@ -988,14 +973,27 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     * over the full store. The resolve leaves one row per key. Rows for
     * OTHER keys sharing a probed bucket are filtered by the caller's key
     * join/predicate (onlineFeaturesFor layers its key predicate on top). */
-  def readForEntities(spark: SparkSession, entities: DataFrame): DataFrame =
-    readForEntities(spark, entities, pinned(spark))
+  def readForEntities(spark: SparkSession, entities: DataFrame): DataFrame = {
+    val pin = pinned(spark)
+    if (pin.infos.isEmpty) spark.read.parquet(path) // loud, consistent error
+    else pruned(spark, entities, pin)
+  }
 
-  /** [[readForEntities]] over an already pinned listing, so a caller that
-    * checked the stored schema lists the store and opens a footer once. */
-  private[graft] def readForEntities(spark: SparkSession, entities: DataFrame,
-      pin: GenLog.Pinned): DataFrame = {
-    if (pin.infos.isEmpty) return spark.read.parquet(path) // loud, consistent error
+  /** The online lookup's store half: [[readForEntities]] over ONE pinned
+    * listing, whose footer also checks the key types (no job). None when
+    * the store holds no data file, the listing races a fold, or a stored
+    * key type differs from `declaredKeyTypes`: a key needing a conformance
+    * cast could hold "01", whose cast image 1 hashes to another bucket than
+    * the probe's, so pruning would miss a row the full-scan path finds. */
+  private[graft] def latestFor(spark: SparkSession, probe: DataFrame,
+      declaredKeyTypes: Map[String, DataType]): Option[DataFrame] =
+    scala.util.Try(pinned(spark)).toOption
+      .filter(_.schema.exists(stored => keys.forall(k =>
+        stored.find(_.name == k).map(_.dataType) == declaredKeyTypes.get(k))))
+      .map(pruned(spark, probe, _))
+
+  /** [[readForEntities]] over a pinned listing that holds a generation. */
+  private def pruned(spark: SparkSession, entities: DataFrame, pin: GenLog.Pinned): DataFrame = {
     val raw = scan(spark, pin, pin.infos.map(_.dir))
     // xxhash64 is TYPE-sensitive (hash(1: int) != hash(1L)): probe values
     // must hash with the STORE's own key types or the pruning silently

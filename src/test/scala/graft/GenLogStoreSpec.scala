@@ -46,8 +46,6 @@ class GenLogStoreSpec extends AnyFunSuite {
       def check(stage: String): Unit = {
         val stock = spark.read.parquet(dir).schema
         val data = StructType(stock.filterNot(f => l.cols.contains(f.name)))
-        assert(src.storedSchema(spark).map(_.map(f => f.name -> f.dataType)) ==
-          Some(data.map(f => f.name -> f.dataType)), s"$stage: footer vs stock")
         assert(src.read(spark).schema == data, s"$stage: read schema vs stock")
         assert(src.readAt(spark, src.snapshots(spark).last).schema == data, stage)
       }
@@ -72,7 +70,6 @@ class GenLogStoreSpec extends AnyFunSuite {
     // the serving call shape: a local frame of probe keys
     val probe = spark.createDataFrame(java.util.Arrays.asList(Seq(1L, 7L, 31L).map(Row(_)): _*),
       StructType(Seq(StructField("id", LongType))))
-    assert(JobCount(spark)(lsm.storedSchema(spark))._2 == 0)
     assert(JobCount(spark)(lsm.read(spark))._2 == 0)
     assert(JobCount(spark)(log.read(spark))._2 == 0)
     assert(JobCount(spark)(log.readAt(spark, 1L))._2 == 0)

@@ -2766,7 +2766,7 @@ class OnlineLookupSpec extends AnyFunSuite {
     assert(online == pit)
   }
 
-  test("composite entity keys push an OR-of-conjunctions predicate") {
+  test("composite entity keys push a struct InSet beside a per-column In") {
     val dir = java.nio.file.Files.createTempDirectory("graft_online2").toString + "/t"
     val src = graft.sources.ParquetSource(dir)
     src.overwrite(Seq((1L, "eu", 1.0), (1L, "us", 2.0), (2L, "eu", 3.0))

@@ -181,6 +181,31 @@ class TailBucketSpec extends AnyFunSuite {
         (9L, "d", Some(9.0)), (777L, "e", None)))
   }
 
+  test("a non-local and an overflowing lookup on the bucketed store each plan one " +
+      "row_number window, the generation resolve, and equal the full-scan path") {
+    val dir = tmp()
+    val s = shapes.find(_.name == "long").get
+    val lsm = BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 8, autoCompactEvery = 100)
+    lsm.upsert(rows(dataSchema(s), batch(s, 0 until 100, 0)).repartition(2), Seq("id"))
+    lsm.upsert(rows(dataSchema(s), batch(s, Seq(5, 300), 1)), Seq("id"))
+    val store = new graft.store.ContractStore().addView(view(s, lsm))
+    val latest = store.view("v_long").baseWithDerived(spark)
+      .withColumn("rn", row_number().over(Window.partitionBy("id").orderBy(col("ts").desc)))
+      .filter(col("rn") === 1).select("id", "score")
+    def snap(df: DataFrame) = df.select("id", "score").collect().map(_.toSeq).toSet
+    def windows(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }.length
+    val keys = (0 until 30).map(_.toLong) ++ Seq(300L, 999L)
+    val probe = rows(StructType(Seq(StructField("id", LongType))), keys.map(Row(_)))
+    for ((name, p, maxInline) <- Seq(("non-local", probe.repartition(2), 1024),
+        ("overflowing", probe, 10))) {
+      val df = store.onlineFeaturesFor(spark, p, Seq("v_long:score"), maxInline)
+      assert(windows(df) == 1, s"$name: ${df.queryExecution.optimizedPlan}")
+      assert(snap(df) == snap(p.join(latest, Seq("id"), "left")), name)
+    }
+  }
+
   for (name <- Seq("int", "date", "composite", "long"))
     test(s"a new key set compiles no class for $name keys, on the bucketed and a plain store") {
       val s = shapes.find(_.name == name).get
