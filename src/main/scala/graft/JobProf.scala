@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import scala.util.control.NonFatal
 
 /** Dev tool: run selected queries once (noop sink, same session shape as
   * [[Bench]]) with a listener that prints every Spark JOB's wall time and
@@ -34,12 +33,7 @@ object JobProf {
             f"[jobprof] job=${je.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3fs  $cs")
         }
     })
-    // same warmup as Bench so job times aren't session startup
-    for (tbl <- Seq("orders", "lineitem", "events", "documents", "embeddings")) {
-      try spark.read.parquet(s"$sfDir/$tbl.parquet")
-        .write.format("noop").mode("overwrite").save()
-      catch { case NonFatal(_) => () }
-    }
+    Bench.warmup(spark, sfDir) // so job times aren't session startup
     args.foreach { n =>
       System.err.println(s"\n########## $n ##########")
       val t0 = System.nanoTime()

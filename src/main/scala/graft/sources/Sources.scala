@@ -998,12 +998,13 @@ final case class BucketedLogUpsertSource(path: String, keys: Seq[String],
     // xxhash64 is TYPE-sensitive (hash(1: int) != hash(1L)): probe values
     // must hash with the STORE's own key types or the pruning silently
     // selects the wrong buckets — cast the probe frame to the stored
-    // schema (the scan's footer schema) before bucketing
+    // schema (the scan's footer schema) before bucketing; try_cast, as a
+    // value that does not fit equals no stored key (ANSI's cast throws)
     val stored = raw.schema.map(f => f.name -> f.dataType).toMap
     val probeKeys = entities.select(keys.map(col): _*)
     val local = DriverRows.isLocal(probeKeys)
     val probes = keys.foldLeft(if (local) probeKeys else probeKeys.distinct()) {
-      (df, k) => stored.get(k).map(t => df.withColumn(k, col(k).cast(t))).getOrElse(df)
+      (df, k) => stored.get(k).map(t => df.withColumn(k, col(k).try_cast(t))).getOrElse(df)
     }
     val bucketIds = withBucket(probes).select(B)
     val ids = (if (local) bucketIds else bucketIds.distinct()).collect()

@@ -511,46 +511,35 @@ final class ContractStore {
   /** ONLINE point lookup (reference contract: RedisSource's pipelined
     * per-entity HMGET, sources/redis.py:181-307, 218-224): the LATEST
     * feature row per requested entity, read from the view's materialized
-    * source with the entity keys PUSHED INTO THE SCAN. Where the reference
-    * round-trips a key-value store, the Spark-native shape bakes the
-    * (bounded) key set into the plan as a set-membership predicate
-    * ([[ContractStore.keyPredicate]]) — `.explain` shows long, string and
-    * timestamp keys under `PushedFilters`, so the columnar scan prunes
-    * row-groups and hive partitions server-side and reads only the
-    * matching slivers. A materialized source partitioned or bucketed by the
-    * entity key makes this a true point read at 100 TB; the predicate
-    * pushdown is plan-asserted in OnlineLookupSpec.
+    * source with the entity keys PUSHED INTO THE SCAN as a set-membership
+    * predicate ([[ContractStore.keyPredicate]]) — `.explain` shows long,
+    * string and timestamp keys under `PushedFilters`, so the columnar scan
+    * prunes row-groups and hive partitions server-side (plan-asserted in
+    * OnlineLookupSpec). A source partitioned or bucketed by the entity key
+    * makes this a true point read at 100 TB.
     *
-    * `entities` must be BOUNDED (point lookups are, by contract — the
-    * reference caps its redis pipeline batches the same way). Beyond
-    * `maxInlineKeys` distinct keys the lookup degrades to a broadcast
-    * semi-join: still one scan and no driver-side literals, just no
-    * row-group pruning. An entity frame whose rows are already on the
-    * driver (`createDataFrame(rows)`, `Seq(...).toDF`) has its keys
-    * deduped and, on a bucketed-log store, its bucket ids derived there,
-    * with no job. Rows carry the latest value per entity; entities absent
-    * from the view surface as nulls, like a missing HMGET key. The pruned
-    * bucketed-log path (below) takes the generation resolve's one row per
-    * key, the latest write; every other base, and a bucketed-log store
-    * that path declines, runs one `row_number` window for the latest event
-    * timestamp per key (exact ties broken arbitrarily — online semantics).
+    * One rule, by where the entity rows live. Rows already on the driver
+    * (`createDataFrame(rows)`, `Seq(...).toDF`; `DriverRows.isLocal`) give
+    * every distinct key there, with no job and no cap. Any other frame must
+    * be BOUNDED, as the reference caps its redis pipeline batches: past
+    * [[ContractStore.MaxInlineKeys]] distinct keys it degrades to a
+    * broadcast semi-join, still one scan, just no row-group pruning.
+    * Entities absent from the view surface as nulls, like a missing HMGET
+    * key; a null key never matches.
     *
     * A bucketed-log store ([[graft.sources.BucketedLogUpsertSource]])
     * whose keys the view names unrenamed, with the declared key types,
-    * takes the pruned path. There an entity frame of driver rows within
-    * `maxInlineKeys` keys, keyed by long, int, short, byte, string, date or
-    * timestamp columns, is answered on the driver: the latest rows of the
-    * probed keys are collected in one action HERE, when
-    * `onlineFeaturesFor` is called, and left-joined to the entity rows on
-    * the driver. The returned frame holds its rows, so its `collect` runs
-    * no job, and it does not see writes made after the call. A null key
-    * never matches. Every other lookup returns a lazy plan that reads the
-    * store when it runs. */
-  def onlineFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
-      maxInlineKeys: Int = 1024): DataFrame = {
-    val byView = featuresByView(refs)
-
-    byView.foldLeft(entities) { case (acc, (viewName, wantedRaw)) =>
+    * takes the pruned path: its generation resolve leaves the latest write
+    * per key. There driver rows keyed by long, int, short, byte, string,
+    * date or timestamp columns are answered HERE, at any key count: the
+    * latest rows of the probed keys are collected in one action and
+    * left-joined to the entity rows on the driver, so the returned frame's
+    * `collect` runs no job and does not see later writes. Every other base
+    * runs one `row_number` window for the latest event timestamp per key
+    * (exact ties broken arbitrarily — online semantics), and every other
+    * lookup returns a lazy plan that reads the store when it runs. */
+  def onlineFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String]): DataFrame = {
+    featuresByView(refs).foldLeft(entities) { case (acc, (viewName, wantedRaw)) =>
       val wanted = wantedRaw.filterNot(acc.columns.contains)
       if (wanted.isEmpty) acc else {
         val v = viewsMap(viewName)
@@ -558,32 +547,22 @@ final class ContractStore {
         val keys = v.entities.map(_.name)
         require(keys.nonEmpty, s"online lookup needs entity keys on view $viewName")
         val keyFrame = acc.select(keys.map(col): _*)
-        // bounded-by-contract: up to maxInlineKeys+1 distinct keys — the +1
-        // detects overflow without counting the whole frame. Key rows already
-        // on the driver (the serving shape, DriverRows) are collected by a
-        // local scan and deduped here, with no job; any other entity frame
-        // runs the distinct-limit-collect
-        val localKeys =
-          if (graft.sources.DriverRows.isLocal(keyFrame)) Some(keyFrame.collect().distinct)
-          else None
-        val keyRows = localKeys.fold(
-          keyFrame.distinct().limit(maxInlineKeys + 1).collect())(_.take(maxInlineKeys + 1))
-        val overflow = keyRows.length > maxInlineKeys
-        // every distinct probe key as a frame: the collected rows when they
-        // are all of them (a local frame, so neither the bucket-id
-        // derivation nor the semi-join re-runs the entity frame's lineage);
-        // an overflowing frame that is not local keeps its distributed
-        // distinct — its collected subset is incomplete
+        // the distinct probe keys: driver rows by a local scan, with no job
+        // and no cap; any other frame by a distinct-limit-collect of up to
+        // MaxInlineKeys + 1 keys, the +1 detecting overflow without a count
+        val local = graft.sources.DriverRows.isLocal(keyFrame)
+        val keyRows = if (local) keyFrame.collect().distinct
+          else keyFrame.distinct().limit(ContractStore.MaxInlineKeys + 1).collect()
+        val overflow = !local && keyRows.length > ContractStore.MaxInlineKeys
+        // the probe keys as a frame: the collected rows, a local frame that
+        // re-runs no lineage, or an overflowing frame's distributed distinct
         val probe =
-          if (overflow && localKeys.isEmpty) keyFrame.distinct()
-          else spark.createDataFrame(
-            java.util.Arrays.asList(localKeys.getOrElse(keyRows): _*), keyFrame.schema)
+          if (overflow) keyFrame.distinct()
+          else spark.createDataFrame(java.util.Arrays.asList(keyRows: _*), keyFrame.schema)
         // LSM point-lookup fast path: a bucketed-log store prunes the scan
-        // to the probed keys' buckets BEFORE the latest-wins resolve — a
-        // plain log store would window over every emission per lookup
-        // (VERDICT r14 #3). The view must address the store by its own key
-        // names, untouched by renames; the store decides the rest
-        // (BucketedLogUpsertSource.latestFor)
+        // to the probed keys' buckets BEFORE the latest-wins resolve. The
+        // view must address the store by its own key names, untouched by
+        // renames; the store decides the rest (latestFor)
         val lsm = v.materializedSource.getOrElse(v.source) match {
           case b: graft.sources.BucketedLogUpsertSource
               if b.keys.sorted == keys.sorted &&
@@ -596,13 +575,9 @@ final class ContractStore {
         val base = lsm.getOrElse(vs.baseWithDerived(spark))
         val baseTypes = keys.map(k => base.schema.find(_.name == k).map(_.dataType))
         val filtered =
-          if (overflow)
-            base.join(broadcast(probe), keys, "left_semi")
-          else if (keyRows.isEmpty) // empty entity frame: nothing to read
-            base.filter(lit(false))
-          else
-            base.filter(ContractStore.keyPredicate(keys, keyFrame.schema.map(_.dataType),
-              baseTypes, keyRows.toSeq))
+          if (overflow) base.join(broadcast(probe), keys, "left_semi")
+          else base.filter(ContractStore.keyPredicate(keys, keyFrame.schema.map(_.dataType),
+            baseTypes, keyRows.toSeq))
         // the bucketed resolve already leaves one row per key, and neither
         // the key filter nor the semi-join adds rows; any other base keeps
         // its latest event-ts row per key
@@ -615,7 +590,7 @@ final class ContractStore {
           case _ => filtered
         }
         val answer = latest.select((keys ++ wanted).map(col): _*)
-        if (lsm.isDefined && !overflow && graft.sources.DriverRows.isLocal(acc) &&
+        if (lsm.isDefined && graft.sources.DriverRows.isLocal(acc) &&
             ContractStore.driverJoinable(acc, keys, baseTypes))
           ContractStore.leftJoinOnDriver(spark, acc, answer, keys)
         else acc.join(answer, keys, "left")
@@ -630,6 +605,11 @@ object ContractStore {
   import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, Expression, InSet, Literal}
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
+
+  /** How many distinct keys of an entity frame that is not driver rows
+    * [[ContractStore.onlineFeaturesFor]] inlines into its key predicate;
+    * past it, the lookup is a broadcast semi-join. */
+  private[graft] val MaxInlineKeys: Int = 1024
 
   /** Key types whose values compare equal as Catalyst set members and, after
     * [[driverKey]], as driver objects exactly when Spark's `=` holds. */
@@ -701,11 +681,13 @@ object ContractStore {
     *     (an `InSet` of an int-like or date column would inline its values
     *     as a switch; the struct's code references its set). A single key
     *     that has its own `InSet` needs no struct.
-    * A probe row with a null key matches nothing, as under `=`. Every
-    * other case keeps `isin` (one key) or an OR of per-row
+    * An integer probe of another width joins the sets in the base's type;
+    * a value that does not fit, a null key or an empty probe matches
+    * nothing. Every other case keeps `isin` (one key) or an OR of per-row
     * conjunctions: floating-point, binary and complex keys, whose
     * driver-side equality can differ from Spark's, and probes whose type
-    * differs from the base's, which need the comparison's coercion. */
+    * differs otherwise from the base's, which need the comparison's
+    * coercion. */
   private[store] def keyPredicate(keys: Seq[String], probeTypes: Seq[DataType],
       baseTypes: Seq[Option[DataType]], rows: Seq[Row]): Column = {
     def pushable(t: DataType) = t match {
@@ -717,18 +699,35 @@ object ContractStore {
     // Set1..Set4, so a new key-set size would compile afresh
     def inSet(e: Expression, values: Seq[Any]) = toColumn(InSet(e,
       scala.collection.immutable.HashSet.from(values.map(CatalystTypeConverters.convertToCatalyst))))
-    val same = probeTypes.zip(baseTypes).forall { case (p, b) => b.contains(p) && exactEquality(p) }
-    val live = rows.filterNot(_.anyNull)
-    if (same) {
-      val columns = keys.zip(probeTypes).zipWithIndex.collect { case ((k, t), i) if pushable(t) =>
-        inSet(toExpr(col(k)), live.map(_.get(i)))
+    def asBase(v: Any, t: DataType): Option[Any] = (driverKey(v), t) match {
+      case (l: Long, IntegerType) => Option.when(l.isValidInt)(l.toInt)
+      case (l: Long, ShortType) => Option.when(l.isValidShort)(l.toShort)
+      case (l: Long, ByteType) => Option.when(l.isValidByte)(l.toByte)
+      case (other, _) => Some(other)
+    }
+    val bySet = probeTypes.zip(baseTypes).forall { case (p, b) =>
+      b.contains(p) && exactEquality(p) || integral(p) && b.exists(integral) }
+    if (rows.isEmpty) lit(false)
+    else if (bySet) {
+      val live = rows.filterNot(_.anyNull).flatMap { r =>
+        val vs = baseTypes.zipWithIndex.map { case (t, i) => asBase(r.get(i), t.get) }
+        Option.when(vs.forall(_.isDefined))(Row.fromSeq(vs.flatten))
+      }
+      val columns = keys.zip(baseTypes.flatten).zipWithIndex.collect {
+        case ((k, t), i) if pushable(t) => inSet(toExpr(col(k)), live.map(_.get(i)))
       }
       val struct = if (keys.length == 1 && columns.nonEmpty) None else Some(inSet(
         CreateNamedStruct(keys.flatMap(k => Seq(Literal(k), toExpr(col(k))))), live))
       (struct ++ columns).reduce(_ && _)
     } else if (keys.length == 1) col(keys.head).isin(rows.map(_.get(0)): _*)
-    else rows.map(r => keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.get(i)) }
-      .reduce(_ && _)).reduce(_ || _)
+    else {
+      // balanced: a left-deep chain of ~600 rows overflows Catalyst's stack
+      def any(cs: Seq[Column]): Column =
+        if (cs.length == 1) cs.head
+        else cs.splitAt(cs.length / 2) match { case (l, r) => any(l) || any(r) }
+      any(rows.map(r => keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.get(i)) }
+        .reduce(_ && _)).toIndexedSeq)
+    }
   }
 }
 

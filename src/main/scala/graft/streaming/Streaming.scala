@@ -1055,6 +1055,15 @@ object Streaming {
     Option(events.agg(max(col(tsCol))).head().getTimestamp(0))
       .map(t => new java.sql.Timestamp(t.getTime + 30L * 86400000L))
 
+  /** The interval-join gates' branches of one source: keys + (a_ts, a_id)
+    * of the rows passing `leftPred`, keys + (b_ts, b_id) of `rightPred`'s. */
+  private def intervalBranches(src: DataFrame, tsCol: String, keys: Seq[String],
+      idCol: String, leftPred: String, rightPred: String): (DataFrame, DataFrame) = {
+    def branch(pred: String, side: String) = src.filter(expr(pred))
+      .select(keys.map(col) :+ col(tsCol).as(s"${side}_ts") :+ col(idCol).as(s"${side}_id"): _*)
+    (branch(leftPred, "a"), branch(rightPred, "b"))
+  }
+
   /** STREAM-STREAM JOIN runtime gate (q175): [[intervalJoin]] — two
     * watermarked branches of one live source, inner-joined on entity keys
     * with a time-bound — run as a REAL streaming job over staged
@@ -1073,11 +1082,7 @@ object Streaming {
       leftPred: String, rightPred: String, after: String = "1 hour",
       chunks: Int = 3, workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
-      val src = g.source
-      val l = src.filter(expr(leftPred))
-        .select(keys.map(col) :+ col(tsCol).as("a_ts") :+ col(idCol).as("a_id"): _*)
-      val r = src.filter(expr(rightPred))
-        .select(keys.map(col) :+ col(tsCol).as("b_ts") :+ col(idCol).as("b_id"): _*)
+      val (l, r) = intervalBranches(g.source, tsCol, keys, idCol, leftPred, rightPred)
       val joined = intervalJoin(l, r, keys, "a_ts", "b_ts",
           before = "0 seconds", after = after, lateness = "1 minute")
         .select(keys.map(col) :+ col("a_id") :+ col("b_id") :+
@@ -1151,11 +1156,7 @@ object Streaming {
             lit(ts) + expr(s"INTERVAL $after") + expr("INTERVAL 1 HOUR"))))
     }
     val store = withStagedGate(spark, staged, tsCol, chunks, workDir) { g =>
-      val src = g.source
-      val l = src.filter(expr(leftPred))
-        .select(keys.map(col) :+ col(tsCol).as("a_ts") :+ col(idCol).as("a_id"): _*)
-      val r = src.filter(expr(rightPred))
-        .select(keys.map(col) :+ col(tsCol).as("b_ts") :+ col(idCol).as("b_id"): _*)
+      val (l, r) = intervalBranches(g.source, tsCol, keys, idCol, leftPred, rightPred)
       val joined = intervalJoin(l, r, keys, "a_ts", "b_ts",
           before = "0 seconds", after = after, lateness = "1 minute",
           joinType = "leftOuter")

@@ -2786,9 +2786,15 @@ class OnlineLookupSpec extends AnyFunSuite {
   test("beyond maxInlineKeys the lookup degrades to a broadcast semi-join") {
     val (v, _) = mkView()
     val store = new graft.store.ContractStore().addView(v)
-    val many = (1L to 50L).toDF("id")
-    val q = store.onlineFeaturesFor(spark, many, Seq("scores:score"), maxInlineKeys = 10)
-    assert(q.count() == 50)
+    // only a frame that is not driver rows can overflow the bound
+    val n = graft.store.ContractStore.MaxInlineKeys + 26L
+    val many = spark.range(1L, n + 1).toDF("id")
+    val q = store.onlineFeaturesFor(spark, many, Seq("scores:score"))
+    assert(q.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+    }.nonEmpty, s"no semi-join:\n${q.queryExecution.optimizedPlan}")
+    assert(q.count() == n)
     assert(q.filter(col("id") === 1L).select("score").collect().head.getDouble(0) == 30.0)
   }
 
@@ -2869,6 +2875,24 @@ class OnlineLookupSpec extends AnyFunSuite {
       Seq.empty[(Long, String)].toDF("id", "region"), Seq("dim2:v")).count() == 0)
   }
 
+  test("a thousand composite keys with a floating-point column filter by a predicate " +
+      "Catalyst can plan, equal to the join") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_online10").toString + "/t"
+    val src = graft.sources.ParquetSource(dir)
+    src.overwrite((0L until 3000L).map(i => (i, i / 2.0, i * 10.0)).toDF("id", "w", "v"))
+    val v = FeatureView("fdim", src,
+      entities = Seq(Feature("id", FInt64), Feature("w", FFloat64)),
+      features = Seq(Feature("v", FFloat64)))
+    val store = new graft.store.ContractStore().addView(v)
+    // every other key is absent: its w is off by a quarter
+    val probe = (0L until 1000L).map(i => (i, i / 2.0 + (i % 2) / 4.0)).toDF("id", "w")
+    def snap(df: org.apache.spark.sql.DataFrame) = df.select("id", "w", "v").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), Option(r.get(2)))).sortBy(_._1).toSeq
+    val got = snap(store.onlineFeaturesFor(spark, probe, Seq("fdim:v")))
+    assert(got == snap(probe.join(src.read(spark), Seq("id", "w"), "left")))
+    assert(got.count(_._3.isEmpty) == 500)
+  }
+
   /** A bucketed-log store in the serving shape (16 buckets, three
     * generations) under a view with an event timestamp. */
   private def servingStore(): (graft.store.ContractStore, graft.sources.BucketedLogUpsertSource) = {
@@ -2922,9 +2946,15 @@ class OnlineLookupSpec extends AnyFunSuite {
     val pq = java.nio.file.Files.createTempDirectory("graft_online7").toString + "/probe"
     local(ids).write.parquet(pq)
     assert(snap(store.onlineFeaturesFor(spark, spark.read.parquet(pq), refs)) == expected)
-    // overflow: more keys than maxInlineKeys, local and not
-    assert(snap(store.onlineFeaturesFor(spark, ranged, refs, maxInlineKeys = 3)) == expected)
-    assert(snap(store.onlineFeaturesFor(spark, local(ids), refs, maxInlineKeys = 3)) == expected)
+    // overflow: more keys than MaxInlineKeys. Only a frame that is not
+    // driver rows overflows; driver rows of the same keys are answered on
+    // the driver, and both equal each other
+    val many = (0L until graft.store.ContractStore.MaxInlineKeys + 10L) :+ 500L
+    val manyExpected = snap(store.onlineFeaturesFor(spark, local(many), refs))
+    assert(manyExpected.length == many.length)
+    val manyRanged = spark.range(0L, graft.store.ContractStore.MaxInlineKeys + 10L)
+      .union(spark.range(500L, 501L)).toDF("id")
+    assert(snap(store.onlineFeaturesFor(spark, manyRanged, refs)) == manyExpected)
   }
 
   for ((kind, dtype, stored, mk) <- Seq[(String, graft.core.FeatureType,
@@ -2955,8 +2985,8 @@ class OnlineLookupSpec extends AnyFunSuite {
         .filter(col("rn") === 1).select("id", "score")
       def snap(df: org.apache.spark.sql.DataFrame) =
         df.select("id", "score").collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      def check(name: String, probe: org.apache.spark.sql.DataFrame, maxInline: Int = 1024) = {
-        val got = snap(store.onlineFeaturesFor(spark, probe, Seq("keyed:score"), maxInline))
+      def check(name: String, probe: org.apache.spark.sql.DataFrame) = {
+        val got = snap(store.onlineFeaturesFor(spark, probe, Seq("keyed:score")))
         assert(got == snap(probe.join(latest, Seq("id"), "left")), s"$kind, $name")
         got
       }
@@ -2966,13 +2996,21 @@ class OnlineLookupSpec extends AnyFunSuite {
       assert(check("distinct", probe(Seq(0, 3, 7, 59, 99))).count(_.endsWith("|null")) == 1)
       assert(check("duplicates", probe(Seq(3, 3, 7, 3, 99))).length == 5)
       assert(check("empty", probe(Nil)).isEmpty)
-      assert(check("overflow", probe(0 until 30), maxInline = 10).length == 30)
       check("non-local", probe(Seq(0, 3, 7, 59, 99)).repartition(2))
-      check("non-local overflow", probe(0 until 30).repartition(2), maxInline = 10)
+      // past MaxInlineKeys: a frame that is not driver rows overflows, and
+      // driver rows of as many keys are answered on the driver
+      val many = 0 until graft.store.ContractStore.MaxInlineKeys + 76
+      assert(check("overflow", probe(many ++ Seq(3, 3, 99)).repartition(3)).length ==
+        many.length + 3)
+      check("driver rows past the bound", probe(many))
       // a probe typed unlike the store: the bucket ids hash the cast probe
       // and the key filter keeps isin's coercion
       if (stored != StringType)
         check("type-coerced", probe(Seq(4, 8, 99)).withColumn("id", col("id").cast(ShortType)))
+      // a wider probe: a key past the int range matches nothing
+      if (stored == IntegerType)
+        assert(check("type-widened", Seq(4L, 8L, 99L, 1L << 40, -1L).toDF("id"))
+          .count(_.endsWith("|null")) == 3)
     }
 
   test("the cast guard: a store whose key type differs from the declared type " +
@@ -2984,9 +3022,11 @@ class OnlineLookupSpec extends AnyFunSuite {
       features = Seq(Feature("score", FFloat64)))
     val store = new graft.store.ContractStore().addView(v)
     val full = store.view("typed2").baseWithDerived(spark).select("id", "score")
-    for ((probe, maxInline) <- Seq(local(Seq(1L, 2L, 3L, 4L)) -> 1024,
-        local(Seq(1L, 2L, 3L, 4L, 1L)) -> 2, spark.range(1L, 5L).toDF("id") -> 1024)) {
-      val got = store.onlineFeaturesFor(spark, probe, Seq("typed2:score"), maxInline)
+    // the overflow probe is not driver rows: only such a frame overflows
+    for (probe <- Seq(local(Seq(1L, 2L, 3L, 4L)), local(Seq(1L, 2L, 3L, 4L, 1L)),
+        spark.range(1L, 5L).toDF("id"),
+        spark.range(1L, graft.store.ContractStore.MaxInlineKeys + 50L).toDF("id"))) {
+      val got = store.onlineFeaturesFor(spark, probe, Seq("typed2:score"))
         .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq
       val want = probe.join(full, Seq("id"), "left")
         .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq

@@ -77,6 +77,7 @@ class TailBucketSpec extends AnyFunSuite {
       def snap(df: DataFrame) =
         df.select((keys :+ "score").map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
       def probe(is: Seq[Int]) = rows(keySchema(s), is.map(i => Row.fromSeq(s.key(i))))
+      val many = 0 until graft.store.ContractStore.MaxInlineKeys + 76
       val nullProbes = rows(keySchema(s), keys.indices.map(n =>
         Row.fromSeq(s.key(1).zipWithIndex.map { case (v, j) => if (j == n) null else v })) ++
         Seq(Row.fromSeq(s.key(3))))
@@ -86,8 +87,8 @@ class TailBucketSpec extends AnyFunSuite {
           .withColumn("rn", row_number().over(Window.partitionBy(keys.map(col): _*)
             .orderBy(col("ts").desc)))
           .filter(col("rn") === 1).select((keys :+ "score").map(col): _*)
-        def same(name: String, p: DataFrame, maxInline: Int = 1024) = {
-          val got = snap(store.onlineFeaturesFor(spark, p, ref, maxInline))
+        def same(name: String, p: DataFrame) = {
+          val got = snap(store.onlineFeaturesFor(spark, p, ref))
           assert(got == snap(p.join(latest, keys, "left")), s"${s.name}, $phase, $name")
           got
         }
@@ -96,10 +97,14 @@ class TailBucketSpec extends AnyFunSuite {
         assert(same("duplicates", probe(Seq(3, 3, 7, 3, 999))).length == 5)
         assert(same("null keys", nullProbes).count(_.endsWith("|null")) == keys.length)
         assert(same("empty", probe(Nil)).isEmpty)
-        assert(same("overflow", probe(0 until 30), maxInline = 10).length == 30)
         same("non-local", probe(Seq(0, 3, 7, 59, 200, 999)).repartition(2))
-        same("non-local overflow", probe(0 until 30).repartition(2), maxInline = 10)
         s.coerce.foreach(c => same("type-coerced", c(probe(Seq(4, 8, 200, 999)))))
+        // past MaxInlineKeys: a frame that is not driver rows overflows, and
+        // driver rows of as many keys (type-coerced where the shape has a
+        // coercion) are answered on the driver
+        assert(same("overflow", probe(many ++ Seq(3, 3, 200)).repartition(3)).length ==
+          many.length + 3)
+        same("driver rows past the bound", s.coerce.fold(probe(many))(_(probe(many))))
       }
       // generation 0: written non-locally, so into the hash buckets
       lsm.upsert(rows(dataSchema(s), batch(s, 0 until 60, 0)).repartition(2), keys)
@@ -181,6 +186,35 @@ class TailBucketSpec extends AnyFunSuite {
         (9L, "d", Some(9.0)), (777L, "e", None)))
   }
 
+  test("a driver-row lookup past MaxInlineKeys is answered when it is called: 2 jobs, " +
+      "a local frame whose collect runs none, equal to the full-scan path") {
+    val dir = tmp()
+    val s = shapes.find(_.name == "long").get
+    val lsm = BucketedLogUpsertSource(s"$dir/lsm", Seq("id"), 16, autoCompactEvery = 100)
+    lsm.upsert(rows(dataSchema(s), batch(s, 0 until 2000, 0)).repartition(2), Seq("id"))
+    lsm.upsert(rows(dataSchema(s), batch(s, Seq(5, 3000), 1)), Seq("id"))
+    val store = new graft.store.ContractStore().addView(view(s, lsm))
+    val latest = store.view("v_long").baseWithDerived(spark)
+      .withColumn("rn", row_number().over(Window.partitionBy("id").orderBy(col("ts").desc)))
+      .filter(col("rn") === 1).select("id", "score")
+    def probe(is: Seq[Int]) =
+      rows(StructType(Seq(StructField("id", LongType))), is.map(i => Row(i.toLong)))
+    // 1100 keys: 1096 stored ones, one only in the tail, three absent
+    val keys = (0 until 1096) ++ Seq(3000, 5000, 5001, 5002)
+    assert(keys.length > graft.store.ContractStore.MaxInlineKeys)
+    // warm: the first lookup may compile its classes
+    store.onlineFeaturesFor(spark, probe(0 until 1100 by 2), Seq("v_long:score")).collect()
+    val (df, called) =
+      JobCount(spark)(store.onlineFeaturesFor(spark, probe(keys), Seq("v_long:score")))
+    val (got, collected) = JobCount(spark)(df.collect())
+    assert(called == 2 && collected == 0 && DriverRows.isLocal(df),
+      s"the call ran $called jobs and its collect $collected; returned a local frame: " +
+        DriverRows.isLocal(df))
+    def snap(rs: Seq[Row]) = rs.map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1)
+    assert(snap(got.toSeq) == snap(probe(keys).join(latest, Seq("id"), "left").collect().toSeq))
+    assert(got.length == 1100 && got.count(_.isNullAt(1)) == 3)
+  }
+
   test("a non-local and an overflowing lookup on the bucketed store each plan one " +
       "row_number window, the generation resolve, and equal the full-scan path") {
     val dir = tmp()
@@ -196,11 +230,13 @@ class TailBucketSpec extends AnyFunSuite {
     def windows(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.length
-    val keys = (0 until 30).map(_.toLong) ++ Seq(300L, 999L)
-    val probe = rows(StructType(Seq(StructField("id", LongType))), keys.map(Row(_)))
-    for ((name, p, maxInline) <- Seq(("non-local", probe.repartition(2), 1024),
-        ("overflowing", probe, 10))) {
-      val df = store.onlineFeaturesFor(spark, p, Seq("v_long:score"), maxInline)
+    def probe(keys: Seq[Long]) =
+      rows(StructType(Seq(StructField("id", LongType))), keys.map(Row(_))).repartition(2)
+    // only a frame that is not driver rows can overflow MaxInlineKeys
+    val many = (0L until graft.store.ContractStore.MaxInlineKeys + 30L) ++ Seq(300L, 9999L)
+    for ((name, p) <- Seq(("non-local", probe((0L until 30L) ++ Seq(300L, 999L))),
+        ("overflowing", probe(many)))) {
+      val df = store.onlineFeaturesFor(spark, p, Seq("v_long:score"))
       assert(windows(df) == 1, s"$name: ${df.queryExecution.optimizedPlan}")
       assert(snap(df) == snap(p.join(latest, Seq("id"), "left")), name)
     }
